@@ -1,13 +1,27 @@
 package graft
 
+import java.io.FileNotFoundException
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
-/** Canonical readers for the driver-generated parquet tables (`TESTDATA.md`).
+/** Canonical readers for the driver-generated parquet tables (`TESTDATA.md`)
+  * and for the warehouse tables the pipeline writes.
   *
-  * All readers return lazy plans, so filters/projections composed on top are
-  * pushed down to the parquet scan by Catalyst (verify with
-  * `.explain("formatted")`: `PushedFilters` / `ReadSchema`).
+  * Every parquet open in the program goes through [[read]], which takes the
+  * schema from one file footer on the driver: an open is lazy and launches
+  * no Spark job (`spark.read.parquet` alone runs one job to infer the
+  * schema). Filters/projections composed on top are pushed down to the
+  * parquet scan by Catalyst (verify with `.explain("formatted")`:
+  * `PushedFilters` / `ReadSchema`).
   *
   * `events.parquet` has shipped with two `ts` physical types across testdata
   * generations: nanosecond timestamps (pandas default), which Spark's parquet
@@ -37,8 +51,55 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, sfDir)
-      case n        => spark.read.parquet(s"$sfDir/$n.parquet")
+      case n        => read(spark, s"$sfDir/$n.parquet")
     }
+
+  /** Opens the parquet table at `path` (a file, or a directory of files
+    * with optional `key=value` partition directories) without a Spark
+    * job. The schema is the one Spark's own inference would produce:
+    * like it (without `mergeSchema`), it trusts the footer of the first
+    * data file in path order, and takes the Spark schema JSON stored
+    * there, else converts the parquet schema under the session's conf
+    * (`nanosAsLong`, `inferTimestampNTZ`, ...). Partition columns still
+    * come from Spark's partition discovery. The footer is read on every
+    * call, so a table rewritten between opens is seen as it is now. A
+    * missing path, or one without data files, opens through
+    * `spark.read.parquet` so its errors are Spark's. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val first =
+      try dataFiles(conf, path).minByOption(_.getPath.toString)
+      catch { case _: FileNotFoundException => None }
+    first match {
+      case Some(st) =>
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, footer(conf, st)),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The data files under a parquet path, as Spark's file index lists
+    * them: the path itself if it is a file, else every file below it,
+    * skipping `_`/`.`-prefixed names (`_SUCCESS`, checksums, markers)
+    * but descending into `key=value` partition directories. */
+  private def dataFiles(conf: Configuration, path: String): Seq[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(name: String): Boolean =
+      name.startsWith(".") || name.startsWith("_") && !name.contains("=")
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    walk(fs.getFileStatus(root))
+  }
+
+  private def footer(conf: Configuration, st: FileStatus): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    try r.getFooter finally r.close()
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")
@@ -101,20 +162,9 @@ object Tables {
     * parquet test directories, which have no catalog entry. */
   def statsRowCount(spark: SparkSession, sfDir: String,
       name: String): Long = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(s"$sfDir/$name.parquet")
-    val fs = root.getFileSystem(conf)
-    val parts =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).toSeq.filter(st =>
-          st.isFile && st.getPath.getName.endsWith(".parquet"))
-      else Seq(fs.getFileStatus(root))
-    parts.map { st =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      try r.getRecordCount finally r.close()
+    dataFiles(conf, s"$sfDir/$name.parquet").map { st =>
+      footer(conf, st).getBlocks.asScala.map(_.getRowCount).sum
     }.sum
   }
 
@@ -149,7 +199,7 @@ object Tables {
     // Runtime-settable (not a static conf); the driver's Verify/Bench
     // sessions don't set it at build time, so set it here idempotently.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = read(spark, s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType => // ns-int64 generation: exact integer ns -> us
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

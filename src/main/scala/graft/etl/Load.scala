@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Warehouse-load semantics of the reference
   * (dags/scritps/load_to_bigquery.py), re-expressed as Spark batch
   * functions. The two sinks are `historical_rates` (append-only,
@@ -95,7 +97,7 @@ object Load {
   def upsertLatestPartitioned(spark: SparkSession, tablePath: String,
       incoming: DataFrame, keys: Seq[String], tsCol: String,
       tieCol: String, partCol: String): Unit = {
-    val current = spark.read.parquet(tablePath)
+    val current = Tables.read(spark, tablePath)
     val cols = current.columns
     val batch = incoming.select(cols.toIndexedSeq.map(col): _*)
     val touched = batch.select(col(partCol)).distinct()

@@ -10,6 +10,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, max, min, sum}
 
+import graft.Tables
+
 /** A registered materialized summary: `summaryPath` holds the per-dims
   * mergeable partial (cnt, sum, min, max over `valCol`) of the table at
   * `basePath` — the layout `streaming/IncrementalAgg` maintains. */
@@ -196,7 +198,7 @@ case class SummaryRewrite(session: SparkSession) extends Rule[LogicalPlan] {
         if (!groupOk || parts.exists(_.isEmpty) || aggParts.isEmpty) agg
         else {
           val summary = dimFilters.foldLeft(
-            session.read.parquet(spec.summaryPath))(
+            Tables.read(session, spec.summaryPath))(
             (df, f) => df.where(rebase(f)))
           val grouped =
             if (groupAttrs.isEmpty)

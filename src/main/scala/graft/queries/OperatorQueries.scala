@@ -404,7 +404,7 @@ object OperatorQueries {
     if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[SummaryRewrite]))
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+ SummaryRewrite(s)
-    s.read.parquet(basePath)
+    Tables.read(s, basePath)
       .where($"source" =!= "src0")
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"),

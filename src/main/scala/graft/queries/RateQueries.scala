@@ -409,7 +409,7 @@ object RateQueries {
       .withColumn("bucket", ($"o_custkey" % 16).cast("int"))
     Load.upsertLatestPartitioned(s, tablePath, incoming,
       Seq("o_custkey"), "o_orderdate", "o_orderkey", "bucket")
-    s.read.parquet(tablePath)
+    Tables.read(s, tablePath)
       .select($"o_custkey",
         $"o_orderkey".as("chosen_orderkey"),
         date_format($"o_orderdate", fmt).as("chosen_orderdate_s"),

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 
+import graft.Tables
+
 /** Warehouse layout sinks — where 100 TB performance is actually won
   * (SURVEY.md §4): a date/key-partitioned layout gives partition
   * pruning (static + dynamic) on every downstream scan; bucketed +
@@ -62,7 +64,7 @@ object Layout {
     val dest = new org.apache.hadoop.fs.Path(path)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     AtomicSwap.recover(fs, dest)
-    val compacted = spark.read.parquet(path).coalesce(nFiles)
+    val compacted = Tables.read(spark, path).coalesce(nFiles)
     AtomicSwap.swapIn(fs, dest) { stg =>
       compacted.write.mode("overwrite").parquet(stg.toString)
     }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
+import graft.Tables
 import graft.sources.AtomicSwap
 
 /** Incremental aggregate-view maintenance: a per-key (count, sum, min,
@@ -94,7 +95,7 @@ object IncrementalAgg {
     val part = partial(batch, keyCol, valCol)
     val next =
       if (fs.exists(dest))
-        merge(spark.read.parquet(path).select(part.columns.toIndexedSeq.map(col): _*),
+        merge(Tables.read(spark, path).select(part.columns.toIndexedSeq.map(col): _*),
           part, keyCol)
       else part
     // markers are pruned to the most recent 64: batch ids are monotonic

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
+import graft.Tables
 import graft.sources.AtomicSwap
 
 /** Watermarked tumbling-window aggregation with an EXPLICIT late-data
@@ -107,7 +108,7 @@ object LateDataWindow {
     val part = partial(ontime, tsCol, typeCol, valCol, windowDur)
     val next =
       if (fs.exists(dest))
-        merge(spark.read.parquet(aggPath)
+        merge(Tables.read(spark, aggPath)
           .select(part.columns.toIndexedSeq.map(col): _*), part)
       else part
     val batchMax: Long = Option(

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.Row
 
+import graft.Tables
 import graft.etl.Load
 import graft.sources.AtomicSwap
 
@@ -51,7 +52,7 @@ object MicroBatch {
     AtomicSwap.recover(fs, dest)
     val next =
       if (fs.exists(dest))
-        Load.upsertLatest(spark.read.parquet(currentPath)
+        Load.upsertLatest(Tables.read(spark, currentPath)
           .select(batch.columns.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*),
           batch, keys, tsCol, tieCol)
       else

@@ -1,0 +1,138 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, TimestampType}
+
+import graft.streaming.MicroBatch
+
+/** `Tables.read` opens a parquet table from a driver-side footer read:
+  * the same schema and rows as `spark.read.parquet`, and no Spark job. */
+class TablesReadSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private val sf = "/root/testdata/sf0.001"
+  private val dir = Files.createTempDirectory("graft_tables_read").toString
+
+  /** Jobs started while `body` runs. The listener bus is asynchronous, so
+    * earlier jobs' events are let drain before listening and this body's
+    * are let arrive before counting (the settle pattern of
+    * `SimilaritySpec`). */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Thread.sleep(500)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      Thread.sleep(500)
+      (a, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toString).sorted
+
+  /** A two-batch `historical_rates` (hive `batch_id=` partitions) and a
+    * `current_rates` snapshot upserted from both batches. */
+  private lazy val warehouse: Seq[String] = {
+    val hist = s"$dir/historical_rates.parquet"
+    val cur = s"$dir/current_rates.parquet"
+    def ts(s: String) = Timestamp.valueOf(s)
+    val batches = Seq(
+      Seq(("USD", "EGP", 47.65, ts("2025-11-10 14:00:00"), ts("2025-11-10 14:05:00")),
+        ("USD", "EUR", 0.86, ts("2025-11-10 14:00:00"), ts("2025-11-10 14:05:00"))),
+      Seq(("USD", "EGP", 47.70, ts("2025-11-10 15:00:00"), ts("2025-11-10 15:05:00")),
+        ("EUR", "GBP", 0.88, ts("2025-11-10 15:00:00"), ts("2025-11-10 15:05:00"))))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val df = b.toDF("base_currency", "target_currency", "rate",
+        "timestamp", "retrieved_at")
+      MicroBatch.appendHistoricalBatch(df, hist, i + 1L)
+      MicroBatch.upsertParquet(spark, df, cur,
+        Seq("base_currency", "target_currency"), "timestamp", "rate")
+    }
+    Seq(hist, cur)
+  }
+
+  test("Tables.read: every table opens with spark.read.parquet's schema " +
+      "and rows, and launches no job") {
+    val paths = Tables.names.map(n => s"$sf/$n.parquet") ++ warehouse
+    paths.foreach { path =>
+      val (got, jobs) = jobsDuring(Tables.read(spark, path))
+      assert(jobs == 0, s"opening $path launched $jobs job(s)")
+      val want = spark.read.parquet(path)
+      assert(got.schema.fields.toSeq == want.schema.fields.toSeq, path)
+      assert(rows(got) == rows(want), path)
+    }
+    val hist = Tables.read(spark, warehouse.head)
+    assert(hist.schema.last == StructField("batch_id", IntegerType, nullable = true))
+    assert(hist.count() == 4)
+    assert(Tables.read(spark, warehouse(1)).count() == 3)
+    // the listener is live: the inferring open it replaces does run a job
+    assert(jobsDuring(spark.read.parquet(s"$sf/orders.parquet"))._2 >= 1)
+  }
+
+  test("Tables.read: a missing or data-less path fails as spark.read.parquet does") {
+    val empty = Files.createDirectories(Paths.get(dir, "empty.parquet"))
+    Files.createFile(empty.resolve("_SUCCESS"))
+    Seq(s"$dir/missing.parquet", empty.toString).foreach { path =>
+      val got = intercept[Exception](Tables.read(spark, path))
+      val want = intercept[Exception](spark.read.parquet(path))
+      assert(got.getClass == want.getClass && got.getMessage == want.getMessage)
+    }
+  }
+
+  test("Tables.events: an INT64 TIMESTAMP(NANOS) ts opens with no job and " +
+      "converts as ts div 1000 micros") {
+    val sfNanos = Files.createTempDirectory("graft_events_nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val nanos = Seq(1700000000123456789L, 1700000001000000999L,
+      1700000002999999999L)
+    val conf = new Configuration()
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new Path(s"$sfNanos/events.parquet"), conf)).withType(schema)
+      .withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try nanos.zipWithIndex.foreach { case (ns, i) =>
+      writer.write(groups.newGroup().append("event_id", i.toLong).append("ts", ns))
+    } finally writer.close()
+
+    val (events, jobs) = jobsDuring(Tables.events(spark, sfNanos))
+    assert(jobs == 0, s"opening events launched $jobs job(s)")
+    assert(events.schema("ts").dataType == TimestampType)
+    val micros = events.orderBy($"event_id")
+      .select(unix_micros($"ts")).as[Long].collect().toSeq
+    assert(micros == nanos.map(_ / 1000))
+  }
+
+  test("lint: Tables.scala is the only program file calling .read.parquet(") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"${root.toAbsolutePath} is not the source tree")
+    val call = """\.read\s*\.parquet\(""".r
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "Tables.scala")
+      .filter(p => call.findFirstIn(Files.readString(p)).isDefined)
+      .toSeq
+    assert(offenders.isEmpty,
+      s"open parquet tables through Tables.read, not .read.parquet: $offenders")
+  }
+}
