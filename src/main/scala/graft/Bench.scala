@@ -89,22 +89,9 @@ import org.apache.spark.sql.SparkSession
   *     "single_task" — the r10/r11 class of scale defect (AQE or a
   *     1-file input collapsing a hot stage onto one core) becomes a
   *     machine-checkable artifact field instead of a log forensic;
-  *   - STALL-MODE exclusion from vs_baseline (round-20, r19 verdict
-  *     item 1b): deadlined samples and entries whose every timed
-  *     window showed run ≫ cpu at an anomalous reading are listed
-  *     under "stall_excluded" and filtered out of the published
-  *     ratio — r19's artifact of record put four 47-120 s stall
-  *     samples into vs_baseline (21.756) while its own drift probes
-  *     read 1.05/1.29; a ratio built on samples that measure the
-  *     host's block-manager stalls is disinformation. Their raw
-  *     numbers stay in "queries" — the exclusion is from the ratio,
-  *     never from the record;
-  *   - mid-warm stall abort + observed-cost fit (round-20, item 1a):
-  *     the warm pass aborts when 6 consecutive warms read ≥ 10× their
-  *     baseline (the probes are blind to this mode), and the post-warm
-  *     fit-shrink prices each entry at the worse of probe-scaled
-  *     baseline and observed-warm/3 — a stall window now shrinks the
-  *     timed set instead of silently eating the sweeps' budget;
+  *   - `vs_baseline` excludes `deadlined` entries; raw numbers stay in
+  *     `queries` (a deadlined sample is the lower bound of a run that
+  *     never finished, not a plan measurement);
   *   - emit the JSON line on stdout AND to bench_out.json, because the
   *     stdout line drowns in sbt log noise ("parsed": null in r01);
   *   - split the total into production vs verification subtotals: the
@@ -182,44 +169,6 @@ object Bench {
     rawsNewestFirst.iterator.flatMap(rotationRecord(_))
       .takeWhile(!_._2).size
 
-  /** Pure DEGRADED-TIER cross-check (r20 verdict item 1): on a run
-    * with no healthy sweep (`sweeps_completed: 0`, or every completed
-    * sweep self-flagged), a sample >= `factor`x its SAME-SUBSTRATE
-    * degraded-tier denominator is a co-location-window artifact, not a
-    * plan measurement — the r20 driver artifact published 10 samples
-    * at 13-69x their tier denominators (all ~1-1.5 s in the tier
-    * record hours earlier) because the window was CPU-shaped and the
-    * run>>cpu stall signature never fired. Returns the entries to
-    * exclude from the headline ratios (their raw numbers stay in
-    * "queries"; the exclusion is published under "tier_excluded").
-    * With any healthy sweep in hand the lower-median already prefers
-    * healthy samples, so the cross-check stands down. `minSec` keeps
-    * sub-second jitter out of the signal. */
-  private[graft] def tierExcludedEntries(results: Map[String, Double],
-      tierKv: Map[String, Double], anyHealthySweep: Boolean,
-      factor: Double = 3.0, minSec: Double = 1.0): Set[String] =
-    if (anyHealthySweep) Set.empty
-    else results.collect { case (n, v) if v >= minSec &&
-      tierKv.get(n).exists(t => t > 0 && v / t >= factor) => n }.toSet
-
-  /** Pure decision predicate for the startup-degraded shard HEAL —
-    * restore the rotation slice iff the post-warm-up probe reads
-    * healthy (same 1.5x CPU / 1.6x mem thresholds as the startup
-    * test — r19 lowered mem from 5x: the r18 session was ALU-flat
-    * with calibm at 2.0x and the old threshold never fired), there is
-    * something to restore, AND the budget arithmetic fits:
-    * restored-entry warm pass (<= `healWarmSec`) + pre-sweep quiesce
-    * and probe overhead (~60 s) + two predicted FULL-shard sweeps +
-    * the inter-sweep gap (~30 s). `estSweepSec` is None when the
-    * baseline doesn't credibly predict the full shard — no predictor,
-    * no heal (a blind restore is how budgets blow mid-sweep). */
-  private[graft] def healFits(reCpu: Double, reMem: Double,
-      restoredCount: Int, estSweepSec: Option[Double],
-      elapsedSec: Double, healWarmSec: Double, budgetSec: Double): Boolean =
-    reCpu <= 1.5 && reMem <= 1.6 && restoredCount > 0 &&
-      estSweepSec.exists(est =>
-        elapsedSec + healWarmSec + 60.0 + 2 * est + 30.0 <= budgetSec)
-
   /** Pure shrink for the post-warm budget fit (r19, verdict item 2):
     * when two predicted sweeps of the warmed timed set no longer fit
     * the remaining budget, drop entries — rotation slice first, then
@@ -259,32 +208,6 @@ object Bench {
       windows.collectFirst { case (n, a, b) if midMs >= a && midMs <= b => n }
     }.toSet
 
-  /** Pure per-entry STALL-MODE attribution (r19 verdict item 1b): an
-    * entry is in stall mode when EVERY one of its timed windows shows
-    * the substrate-stall signature — the ≥ 2 s stages inside the
-    * window total ≥ `minRunSec` of executor wall-time at ≥ `factor`×
-    * their executor CPU-time. That is the shape the r19 CC attribution
-    * pinned (stage run 134.6 s, cpu 8.9 s, 32 tasks, ALU probes flat):
-    * task threads parked on block-manager / IO waits, measuring the
-    * host's stall window, not the plan. "EVERY window" is the
-    * conservative arm: with ≥ 2 sweeps the published lower-median
-    * already sheds a single stalled sample, so only an entry whose
-    * every sample stalled can publish a stall reading. Events outside all
-    * windows (warm-up, settle, gaps) are ignored, same scoping as
-    * [[attributeSingleTask]]. Extracted pure so `BenchRotationSpec`
-    * pins the rule on synthetic logs. */
-  private[graft] def stallModeEntries(
-      windows: Seq[(String, Long, Long)],
-      events: Seq[(Long, Double, Double)],
-      minRunSec: Double = 5.0, factor: Double = 6.0): Set[String] =
-    windows.groupBy(_._1).collect { case (n, ws) if ws.forall {
-      case (_, a, b) =>
-        val es = events.filter(e => e._1 >= a && e._1 <= b)
-        val run = es.map(_._2).sum
-        val cpu = es.map(_._3).sum
-        run >= minRunSec && run >= factor * math.max(cpu, 0.1)
-    } => n }.toSet
-
   @volatile private var calibSink = 0L // defeats dead-code elimination
 
   private def lcgSpin(iters: Long): Long = {
@@ -300,11 +223,8 @@ object Bench {
   /** Fixed-cost CPU probe: `threads` concurrent LCG spins of 2e8 steps
     * each. Pure integer ALU work — no allocation, no I/O — so its wall
     * time moves ONLY with machine load/contention, never with any code
-    * in this repo. `private[graft]` so [[HostProbe]] (the
-    * healthy-window watcher's probe main) reuses the identical
-    * instrument — a watcher probing with different code would detect
-    * a different window than the bench measures. */
-  private[graft] def calibrate(threads: Int): Double = {
+    * in this repo. */
+  private def calibrate(threads: Int): Double = {
     val t0 = System.nanoTime()
     val ts = (1 to threads).map { _ =>
       new Thread(() => { calibSink = lcgSpin(200000000L) })
@@ -340,7 +260,7 @@ object Bench {
       a
     }
 
-  private[graft] def calibrateMem(): Double = {
+  private def calibrateMem(): Double = {
     val arrays = memProbeArrays // allocated once, reused every sweep
     val t0 = System.nanoTime()
     val ts = arrays.map { a =>
@@ -407,14 +327,6 @@ object Bench {
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "470").toDouble
     val nSweeps = sys.env.getOrElse("SPARK_GRAFT_BENCH_SWEEPS", "2").toInt
-    // Warm-up runs against the MEASURED dir (round-11 revert of the
-    // round-9 sf0.001 shortcut): under AQE, physical plans — and so
-    // the generated whole-stage-codegen classes — are NOT
-    // data-size-independent (different broadcast/coalesce decisions at
-    // 1/100th the bytes → different generated code). An sf0.001
-    // warm-up left sweep 1 loading fresh sf0.1 codegen classes into a
-    // saturated C2 queue, so entries ran INTERPRETED for whole stages.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
 
     // SPARK_GRAFT_BENCH_SKIP: comma-separated entries excluded from the
     // run entirely (warm-up AND sweeps) — the A/B attribution knob for
@@ -463,33 +375,6 @@ object Bench {
         .findFirstMatchIn(text).map(_.group(1))
       baseSf.contains(sfDir) && baseCpus.contains(cpus)
     }
-    // ----- DEGRADED-TIER record (r20 verdict item 1): the same-substrate
-    // denominator set recorded in r20 (BASELINE_BENCH_DEGRADED.json,
-    // 276/276, 3 sweeps on the calibm~1.7x tier). Two uses: (a) on a
-    // run with NO healthy sweep, any sample >= 3x its same-tier
-    // denominator is a co-location-window artifact (r20's driver run
-    // published 13-69x samples — agg_percentiles 70.5 s vs 1.53 tier —
-    // that the run>>cpu stall signature missed because the window was
-    // CPU-shaped); such samples are excluded from the headline ratios
-    // and published under "tier_excluded". (b) "vs_degraded_tier" is
-    // emitted beside vs_baseline so a degraded-host run has a
-    // same-substrate comparison in the artifact itself.
-    val tierPath = Paths.get("BASELINE_BENCH_DEGRADED.json")
-    val tierText: Option[String] =
-      if (Files.exists(tierPath)) Some(Files.readString(tierPath))
-      else None
-    val tierKv: Map[String, Double] = tierText.map { text =>
-      """"([a-z0-9_]+)":\s*([0-9.]+)""".r.findAllMatchIn(text)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }.getOrElse(Map.empty)
-    val tierConfigMatches: Boolean = tierText.exists { text =>
-      val tSf = """"sf":\s*"([^"]+)"""".r
-        .findFirstMatchIn(text).map(_.group(1))
-      val tCpus = """"cpus":\s*"?([0-9]+)"?""".r
-        .findFirstMatchIn(text).map(_.group(1))
-      tSf.contains(sfDir) && tCpus.contains(cpus)
-    }
-
     // ----- timed-catalog shard (round-12). Round index = max committed
     // BENCH_r{N}.json + 1 — deterministic, survives re-runs within a
     // round (same N → same shard → comparable re-runs).
@@ -560,30 +445,19 @@ object Bench {
     }
     System.err.println(
       s"[bench] rotation group $rotationG derived via $rotationSrc")
-    // Startup degradation probe (round-12): the r11 session ran BOTH
-    // LCG probes at ~1.8x baseline before any repo code executed — on
-    // such a host two full sweeps of the sharded catalog cannot fit
-    // 470 s no matter how the harness is arranged. Measure the host
-    // FIRST (the probes cost ~1 s total) and, when it reads badly
-    // degraded, drop the rotation slice and time the CORE entries
-    // only: a complete 2-sweep core artifact beats a 1-sweep sharded
-    // one. The startup readings are published as "calib0" so a reader
-    // sees the decision's evidence in the artifact.
-    // MIN of two probes 3 s apart: a one-off startup blip (an sbt-host
-    // GC, a compile-daemon tail) inflates one reading and passes; a
-    // real bandwidth-starved window persists for minutes and inflates
-    // both (observed: a genuinely starving host read 2.48x here and
-    // 3.9x by sweep time — the shrink was correct).
+    // Startup probe, published as "calib0": the session's host reading
+    // before any repo code runs, and the drift that scales the warm
+    // budget's sweep reserve. MIN of two probes 3 s apart: a one-off
+    // startup blip (an sbt-host GC, a compile-daemon tail) inflates one
+    // reading and passes; a real bandwidth-starved window persists for
+    // minutes and inflates both.
     val calib0 = {
-      // FRESH-JVM BIAS FIX (r22, the HostProbe r21 fix applied to the
-      // bench's own startup probe): a cold JVM's first calibrateMem
+      // FRESH-JVM BIAS FIX (r22): a cold JVM's first calibrateMem
       // readings run 1.5-2.2x the warmed value (probe-array
-      // allocation/paging and GC settling bill as bandwidth), so
-      // calib0 over-fired the startup-degraded core-only shard on
-      // healthy hosts (r21 carry item: startup 0.045 vs in-sweep
-      // 0.022). Two discarded warm-up triples bring the instruments
-      // to the steady state the 1.5x/1.6x thresholds were calibrated
-      // on; the measured min-of-two pair below is unchanged.
+      // allocation/paging and GC settling bill as bandwidth; r21:
+      // startup 0.045 vs in-sweep 0.022). Two discarded warm-up
+      // triples bring the instruments to the steady state the sweep
+      // probes read; the measured min-of-two pair below is unchanged.
       calibrate(1); calibrate(cpus.toInt); calibrateMem()
       calibrateMem()
       Thread.sleep(1000)
@@ -592,51 +466,18 @@ object Bench {
       val b = (calibrate(1), calibrate(cpus.toInt), calibrateMem())
       (math.min(a._1, b._1), math.min(a._2, b._2), math.min(a._3, b._3))
     }
-    // Two hazards, two probes: the LCG factor sees CPU contention; the
-    // bandwidth factor sees the starvation mode the LCG is BLIND to
-    // (cache-resident — a starved host has read 0.1-1.9 GB/s with LCG
-    // probes within 15% of baseline). Memory readings are noisier, so
-    // its threshold is wider.
-    val degradeCpu =
-      if (!baselineConfigMatches) 1.0
-      else baseKv.get("calibn_sec").filter(_ > 0)
-        .map(calib0._2 / _).getOrElse(1.0)
-    val degradeMem =
-      if (!baselineConfigMatches) 1.0
-      else baseKv.get("calibm_sec").filter(_ > 0)
-        .map(calib0._3 / _).getOrElse(1.0)
-    val degradeFactor = math.max(degradeCpu, degradeMem)
-    // `degraded` is a DECISION, revisited once after warm-up (the heal
-    // block below): the startup probe fires while the sbt/compile tail
-    // is still settling, so it over-detects (r14: calib0 1.75x, both
-    // sweeps then AT baseline — the rotation slice was dropped for
-    // nothing, r14 verdict item 5).
-    //
-    // r19: the mem threshold dropped 5.0 -> 1.6. The r18 final run's
-    // degradation mode was ALU-flat / bandwidth-2.0x — the old
-    // threshold never fired, the full 158-entry shard was attempted
-    // on a starved host, and the driver got a partial artifact with
-    // 140 cold timings. calibm is noisier than the LCG (hence wider
-    // than the 1.5x CPU bar) but the min-of-two-probes estimator
-    // absorbs one-off spikes; sustained 1.6x bandwidth means warmed
-    // entries will read ~1.2x+ anyway, so a core-only shard (plus the
-    // heal revisit when the window passes) is the right spend.
-    var degraded = !benchAll && (degradeCpu > 1.5 || degradeMem > 1.6)
-    var shardHealed = false
     def inRotation(n: String): Boolean =
       math.floorMod(
         scala.util.hashing.MurmurHash3.stringHash(n), rotationK) == rotationG
-    def shardNames(dropRotation: Boolean): Seq[String] =
+    var timedNames: Seq[String] =
       if (benchAll || baseCore.isEmpty) names
       else {
         val core = baseCore.toSet
         // entries with no baseline record are NEW this round: always
         // time them, so fresh code gets a number the round it lands
         val known = baseKv.keySet
-        names.filter(n => core(n) || !known(n) ||
-          (!dropRotation && inRotation(n)))
+        names.filter(n => core(n) || !known(n) || inRotation(n))
       }
-    var timedNames: Seq[String] = shardNames(dropRotation = degraded)
     // this round's rotation slice — the entries whose staleness the
     // rotation exists to bound; "rotation_timed" in the artifact is
     // the fact the next run's group-advance decision needs
@@ -669,9 +510,7 @@ object Bench {
     System.err.println(f"[bench] round $roundIdx: timing " +
       f"${timedNames.size}/${names.size} entries (core ${baseCore.size}, " +
       f"rotation group $rotationG/$rotationK" +
-      (if (benchAll) ", BENCH_ALL" else "") +
-      (if (degraded) f", DEGRADED host ${degradeFactor}%.2fx: core only"
-       else "") + ")")
+      (if (benchAll) ", BENCH_ALL" else "") + ")")
 
     // Stage-attribution listener: when a timed query stalls, the log
     // must say WHERE (driver wait vs task CPU vs task count) — the
@@ -694,15 +533,6 @@ object Bench {
     // artifact joins the two at the end, when the bus has drained.
     val singleTaskEvents =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
-    // Numeric stage costs for the STALL-MODE detector (r19 verdict
-    // item 1b): (midpointMs, runSec, cpuSec) for every ≥ 2 s stage.
-    // The canonical substrate-stall signature — pinned by the r19 CC
-    // attribution (stage run 134.6 s, cpu 8.9 s, ALU probes flat) —
-    // is task wall-clock ≫ task CPU: threads parked on block-manager
-    // / IO waits, not executing plans. Attribution is post-hoc by
-    // timed window, same scoping as single_task.
-    val stageCostEvents =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double, Double)]()
     val timedWindows =
       new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
     def newSession(): SparkSession = {
@@ -727,12 +557,6 @@ object Bench {
               i.completionTime.foreach(end =>
                 singleTaskEvents.add((end - dur / 2,
                   f"stage ${i.stageId} ${dur / 1000.0}%.1f s")))
-            if (dur >= 2000) {
-              val m = i.taskMetrics
-              i.completionTime.foreach(end =>
-                stageCostEvents.add((end - dur / 2,
-                  m.executorRunTime / 1e3, m.executorCpuTime / 1e9)))
-            }
           }
         })
       s
@@ -745,9 +569,8 @@ object Bench {
     // (period 2 s) once the deadline passes — a single cancel can land
     // between two of an iterative entry's jobs and miss. A deadlined
     // entry records its elapsed time (~deadline) as a LOWER BOUND —
-    // still counted in totals and vs_baseline so the artifact can't
-    // look better by dropping its worst entries — and is listed under
-    // "deadlined" in the JSON.
+    // still counted in totals and listed under "deadlined" in the JSON,
+    // but kept out of vs_baseline (a lower bound is not a ratio term).
     val queryDeadlineSec =
       sys.env.getOrElse("SPARK_GRAFT_QUERY_DEADLINE_SEC", "120").toDouble
     val deadlined =
@@ -763,7 +586,7 @@ object Bench {
     // treat a cancelled warm as NOT warmed (r19 ADVICE: an entry whose
     // warm runOnce was cancelled mid-execution is partially warmed yet
     // was absent from the skipped list, a residual cold-timed path).
-    def runOnce(name: String, dir: String, attribute: Boolean,
+    def runOnce(name: String, attribute: Boolean,
         deadlineSec: Double = queryDeadlineSec,
         cancelSink: java.util.Set[String] = null): Double = {
       if (attribute) stageLog.clear()
@@ -779,7 +602,7 @@ object Bench {
       }
       watchdog.schedule(killer, (deadlineSec * 1000).toLong, 2000L)
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, dir)
+      try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         killer.cancel()
@@ -849,9 +672,15 @@ object Bench {
     // Concurrent warm pass over `entries` (8 threads, costliest first
     // within each `priority` tier — LOWER tiers warm first, so when
     // the deadline truncates, the un-warmed tail is the highest tier;
-    // hard deadline `budget`); returns the names left un-warmed. Used
-    // by the main warm-up and by the shard-heal block's warm of the
-    // restored rotation entries.
+    // hard deadline `budget`); returns the names left un-warmed.
+    //
+    // Warms against the MEASURED dir, always (round-11 revert of the
+    // round-9 sf0.001 shortcut): under AQE, physical plans — and so
+    // the generated whole-stage-codegen classes — are NOT
+    // data-size-independent (different broadcast/coalesce decisions at
+    // 1/100th the bytes → different generated code). An sf0.001
+    // warm-up left sweep 1 loading fresh sf0.1 codegen classes into a
+    // saturated C2 queue, so entries ran INTERPRETED for whole stages.
     //
     // Costliest first, DATA-DRIVEN: when the deadline truncates the
     // warm-up, the un-warmed tail must be the CHEAP entries
@@ -867,11 +696,10 @@ object Bench {
     // driver's r19 run published drift 1.05/1.29 around 50-145x entry
     // samples), so the only instrument that sees a stall window is
     // the work itself. The warm pass IS that instrument: its per-entry
-    // costs feed the post-warm fit-shrink and the mid-warm abort.
+    // costs feed the post-warm fit-shrink.
     val warmObserved =
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-    def warmConcurrent(entries: Seq[String], dir: String,
-        budget: Double,
+    def warmConcurrent(entries: Seq[String], budget: Double,
         priority: String => Int = _ => 0): Seq[String] = {
       val w0 = System.nanoTime()
       val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -881,32 +709,6 @@ object Bench {
       // never-time-cold drop covers the partially-warmed path too.
       val cancelled =
         java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      // Mid-warm stall abort (r19 verdict item 1a): when the last 6
-      // COMPLETED warms each ran >= 10x their baseline cost (8-way
-      // warm contention on a healthy host reads 2-4x; the r19 stall
-      // windows read 20-145x), the host is inside a stall window —
-      // stop warming so the window shrinks the timed set instead of
-      // eating the sweeps' budget. Ratio floor 0.2 s on the base cost
-      // keeps sub-100ms entries' jitter out of the signal. Only armed
-      // when the baseline credibly prices the entries, and NEVER under
-      // BENCH_ALL (r20 tier run: a stall window at warm time aborted
-      // the pass 51 s into a 900 s budget and 261 entries entered
-      // sweep 1 cold — a re-record run has an operator-sized budget
-      // and exists to produce WARMED numbers; for it, warming through
-      // the window is strictly better than cold sweeps).
-      val stallStreak = new java.util.concurrent.atomic.AtomicInteger(0)
-      // Completed-warm counter for the COLD-START GRACE (r21): the
-      // first 8-thread waves of a fresh session warm the costliest
-      // entries while whole-stage codegen floods the C2 queue — on a
-      // HEALTHY host this session's launch-adjacent warms read 14-55 s
-      // against 0.5-2.6 s baselines (10-30x), tripping the streak and
-      // cold-dropping ~100 entries twice in one session. A stall
-      // WINDOW persists; the launch transient by construction hits
-      // only the first warms. Warms count toward the streak only
-      // after 16 have completed (two full 8-thread waves).
-      val warmsDone = new java.util.concurrent.atomic.AtomicInteger(0)
-      @volatile var stallAbort = false
-      val stallAbortArmed = !benchAll
       val warmThreads = (1 to 8).map { _ =>
         new Thread(() => {
           // NO unpersist in here: warm-up entries run CONCURRENTLY, and
@@ -921,8 +723,7 @@ object Bench {
           // skipped list yet cold, up to 8 entries (one per thread)
           // silently leaking past the never-time-cold drop
           var n: String =
-            if (!stallAbort && (System.nanoTime() - w0) / 1e9 < budget)
-              queue.poll()
+            if ((System.nanoTime() - w0) / 1e9 < budget) queue.poll()
             else null
           while (n != null) {
             // Per-entry deadline = REMAINING warm budget (+30 s
@@ -938,40 +739,19 @@ object Bench {
             // entries that matter still warm fully.
             val remain = budget - (System.nanoTime() - w0) / 1e9
             val e0 = System.nanoTime()
-            runOnce(n, dir, attribute = false,
+            runOnce(n, attribute = false,
               deadlineSec = math.min(queryDeadlineSec,
                 math.max(40.0, remain + 30.0)),
               cancelSink = cancelled)
             val warmSec = (System.nanoTime() - e0) / 1e9
             if (!cancelled.contains(n)) warmObserved.put(n, warmSec)
-            val graceOver = warmsDone.incrementAndGet() > 16
-            baseKv.get(n)
-              .filter(_ => baselineConfigMatches && stallAbortArmed &&
-                graceOver)
-              .foreach { b =>
-                // absolute >= 5 s floor (r20 ADVICE): cost-descending
-                // warm order clusters sub-100 ms entries at the tail,
-                // and 6 of them at ~2 s each (codegen/JIT + 8-way
-                // contention) would satisfy the ratio test on a
-                // healthy host; a real stall window inflates entries
-                // to tens of seconds, far past the floor
-                if (warmSec >= 5.0 && warmSec >= 10.0 * math.max(b, 0.2)) {
-                  if (stallStreak.incrementAndGet() >= 6 && !stallAbort) {
-                    stallAbort = true
-                    System.err.println(f"[bench] MID-WARM STALL: 6 " +
-                      "consecutive warms at >= 10x baseline — aborting " +
-                      "the warm pass, remaining entries drop cold")
-                  }
-                } else stallStreak.set(0)
-              }
             // Per-entry warm wall-time (r16 verdict item 2): when the
             // deadline truncates a warm pass, the log must say what
             // consumed the budget — r16 hit the 100 s deadline having
             // warmed only 68 of 159 entries and nothing recorded why.
             System.err.println(f"[bench] warm $n $warmSec%.1f s (pass " +
               f"${(System.nanoTime() - w0) / 1e9}%.1f/$budget%.0f s)")
-            n = if (!stallAbort &&
-                  (System.nanoTime() - w0) / 1e9 < budget) queue.poll()
+            n = if ((System.nanoTime() - w0) / 1e9 < budget) queue.poll()
                 else null
           }
         })
@@ -1045,7 +825,7 @@ object Bench {
       // measure, the rotation slice just has its staleness bounded
       // and can wait a round.
       val rotationSet = rotationSlice.toSet
-      val skippedNames = warmConcurrent(timedNames, warmDir, warmBudget,
+      val skippedNames = warmConcurrent(timedNames, warmBudget,
         priority = n => if (rotationSet(n)) 1 else 0)
       val skipped = skippedNames.size
       unwarmed = skipped
@@ -1082,9 +862,9 @@ object Bench {
       var pass2Cut = 0
       if (skipped == 0 && warmRemain > 25.0) {
         val top = timedNames.sortBy(n => -costRank(n)).take(16)
-        pass2Cut = warmConcurrent(top, warmDir, warmRemain).size
+        pass2Cut = warmConcurrent(top, warmRemain).size
       }
-      System.err.println(f"[bench] warm-up sweep ($warmDir, 8 threads, " +
+      System.err.println(f"[bench] warm-up sweep ($sfDir, 8 threads, " +
         f"budget $warmBudget%.0f s) " +
         f"${(System.nanoTime() - w0) / 1e9}%.1f s; elapsed $elapsedSec%.1f s" +
         (if (skipped > 0) s"; $skipped entries un-warmed (deadline)" else "") +
@@ -1122,64 +902,7 @@ object Bench {
       val settle =
         timedNames.sortBy(costRank).drop(timedNames.size / 2).take(3)
       settle.foreach(n =>
-        runOnce(n, sfDir, attribute = false, deadlineSec = 15.0))
-    }
-    // Startup-degraded shard HEAL (r14 verdict item 5): the r14 run's
-    // calib0 read 1.75x so the rotation slice was dropped at startup —
-    // then BOTH sweeps calibrated at baseline and the run finished
-    // with 241 s of slack; the two r13-flagged entries sitting in that
-    // slice went unmeasured for nothing. The startup probe fires ~30 s
-    // after an sbt compile storm and over-detects; the decision is
-    // revisited exactly ONCE, here — after warm-up + restart + settle,
-    // the last untimed point before sweep 1 — and the slice is
-    // restored when (a) the host now probes healthy (same 1.5x CPU /
-    // 1.6x mem thresholds as the startup test, r19) and (b) the budget
-    // arithmetic fits: restored-entry warm pass + quiesce/probe
-    // overhead + two predicted FULL-shard sweeps + inter-sweep gap.
-    // Restored entries get a short concurrent warm so they don't enter
-    // sweep 1 cold (they were excluded from the main warm-up).
-    if (degraded && !benchAll && baseCore.nonEmpty) {
-      val re = probeCal()
-      val reCpu = baseCalN.map(re._2 / _).getOrElse(1.0)
-      val reMem = baseCalM.map(re._3 / _).getOrElse(1.0)
-      val full = shardNames(dropRotation = false)
-      val restored = full.filterNot(timedNames.toSet)
-      val baseSumFull = full.flatMap(baseKv.get).sum
-      val covered = baselineConfigMatches &&
-        full.count(baseKv.contains) >= full.size * 0.9
-      val estSweep =
-        if (covered && baseSumFull > 0)
-          // worst of the two drifts, like every other sweep predictor
-          // (a reMem=1.55 host under both heal thresholds would
-          // otherwise under-predict the restored sweeps ~1.55x)
-          Some(1.3 * math.max(0.8, math.max(reCpu, reMem)) * baseSumFull)
-        else None // no credible predictor -> no heal (conservative)
-      val healWarmBudget = 45.0
-      if (healFits(reCpu, reMem, restored.size, estSweep, elapsedSec,
-          healWarmBudget, budgetSec)) {
-        System.err.println(f"[bench] startup degradation HEALED (cal " +
-          f"now $reCpu%.2fx cpu / $reMem%.2fx mem): restoring " +
-          f"${restored.size} rotation entries, warm <= " +
-          f"$healWarmBudget%.0f s")
-        timedNames = full
-        degraded = false
-        shardHealed = true
-        // restored entries the heal warm pass could not cover are
-        // dropped again, same never-time-cold rule as the main pass
-        val healSkipped = warmConcurrent(restored, sfDir, healWarmBudget)
-        if (healSkipped.nonEmpty) {
-          val dropSet = healSkipped.toSet
-          timedNames = timedNames.filterNot(dropSet)
-          warmDropped += healSkipped.size
-          System.err.println(s"[bench] heal warm pass left " +
-            s"${healSkipped.size} entries cold: dropped from timed set")
-        }
-      } else {
-        System.err.println(f"[bench] startup degradation stands (cal " +
-          f"$reCpu%.2fx/$reMem%.2fx, restorable=${restored.size}, " +
-          f"est_sweep=${estSweep.fold("n/a")(e => f"$e%.0f s")}, " +
-          f"elapsed=$elapsedSec%.0f s): core-only shard kept")
-      }
+        runOnce(n, attribute = false, deadlineSec = 15.0))
     }
     // Post-warm budget fit (r19, verdict item 2b): even a fully-warmed
     // timed set can blow the budget on a degraded host — warmed
@@ -1265,9 +988,9 @@ object Bench {
 
     // Degraded-sweep self-exclusion (round-13 verdict item 2): the r13
     // artifact's sweep 2 calibrated at 13x baseline (co-located load
-    // began mid-run), silently turning min-of-2 into min-of-1 — the
-    // harness detected degradation at STARTUP (calib0) but not
-    // mid-run. Now every sweep is health-checked against the baseline
+    // began mid-run), silently turning min-of-2 into min-of-1 — a
+    // startup probe cannot see degradation that begins mid-run.
+    // Every sweep is health-checked against the baseline
     // calibn_sec both BEFORE and AFTER it runs (degradation can begin
     // mid-sweep); a sweep reading >1.5x on either probe has its
     // samples FLAGGED, is listed under "degraded_sweeps", and a
@@ -1470,7 +1193,7 @@ object Bench {
             val clamp = math.min(queryDeadlineSec,
               math.max(20.0, budgetSec - elapsedSec - 10.0))
             sweepSamples +=
-              ((n, runOnce(n, sfDir, attribute = true, deadlineSec = clamp)))
+              ((n, runOnce(n, attribute = true, deadlineSec = clamp)))
             // NO per-query unpersist here: spreading the cleaner's RPCs
             // through the sweep cost ~100 s/sweep of untimed gaps; the
             // between-sweep unpersist + gc absorbs the same work where
@@ -1532,51 +1255,18 @@ object Bench {
     val calibN = medCal(_._2)
     val calibM = medCal(_._3)
 
-    // Post-hoc attributions (give the async listener bus a moment to
-    // drain first): single-task scale defects, and the STALL-MODE set
-    // (r19 verdict item 1b) — computed BEFORE the ratio block so
-    // stalled samples can be excluded from vs_baseline. An entry is
-    // excluded when (a) it was deadlined (its number is a lower bound
-    // of an unfinished run — 4 such samples made r19's published
-    // 21.756 disinformation), or (b) every timed window showed the
-    // run ≫ cpu stall signature AND its published number is
-    // anomalous (≥ 3 s and ≥ 3× its baseline) — the anomaly guard
-    // keeps a legitimately IO-shaped entry on a healthy host inside
-    // the ratio. Excluded entries keep their numbers in "queries"
-    // (facts are facts) and are listed under "stall_excluded".
+    // Post-hoc single-task attribution (give the async listener bus a
+    // moment to drain first).
     Thread.sleep(1000)
     val singleTask: Set[String] = attributeSingleTask(
       timedWindows.asScala.toSeq, singleTaskEvents.asScala.toSeq)
-    val resultMap = results.toMap
-    val stallExcluded: Set[String] = {
-      val byWindow = stallModeEntries(
-        timedWindows.asScala.toSeq, stageCostEvents.asScala.toSeq)
-      val anomalous = byWindow.filter { n =>
-        resultMap.get(n).exists(v => v >= 3.0 &&
-          baseKv.get(n).forall(b => b <= 0 || v / b >= 3.0))
-      }
-      (anomalous ++ deadlined.asScala).filter(resultMap.contains)
-    }
-    if (stallExcluded.nonEmpty)
-      System.err.println(s"[bench] ${stallExcluded.size} stall-mode " +
+    // Deadlined samples are lower bounds of runs that never finished:
+    // they stay in "queries" but are kept out of vs_baseline.
+    val ratioExcluded: Set[String] = deadlined.asScala.toSet
+    if (ratioExcluded.nonEmpty)
+      System.err.println(s"[bench] ${ratioExcluded.size} deadlined " +
         s"entries EXCLUDED from vs_baseline: " +
-        stallExcluded.toSeq.sorted.mkString(","))
-    // Degraded-tier cross-check (r20 verdict item 1): with NO healthy
-    // sweep in hand, any sample >= 3x its same-substrate tier
-    // denominator is window arithmetic, not a plan measurement —
-    // excluded from the headline ratios alongside the stall set (raw
-    // numbers stay in "queries"). Disjoint from stall_excluded in the
-    // artifact so a reader sees which detector fired.
-    val tierExcluded: Set[String] =
-      if (!tierConfigMatches) Set.empty
-      else tierExcludedEntries(resultMap, tierKv, healthySweeps > 0)
-        .diff(stallExcluded)
-    if (tierExcluded.nonEmpty)
-      System.err.println(s"[bench] ${tierExcluded.size} entries >= 3x " +
-        s"their degraded-tier denominator on a 0-healthy-sweep run — " +
-        s"EXCLUDED from vs_baseline: " +
-        tierExcluded.toSeq.sorted.mkString(","))
-    val ratioExcluded: Set[String] = stallExcluded ++ tierExcluded
+        ratioExcluded.toSeq.sorted.mkString(","))
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -1633,20 +1323,6 @@ object Bench {
       }
     def ratio3(name: String, v: Option[Double]): String =
       v.map(r => s""","$name":${math.rint(r * 1000) / 1000}""").getOrElse("")
-    // Same-substrate ratio (r20 verdict item 1): vs the degraded-tier
-    // record, so a degraded-host run carries its own like-for-like
-    // comparison — a sample 2x the HEALTHY baseline but 0.7x the tier
-    // is the substrate, not the plan. Shares the exclusion set with
-    // vs_baseline.
-    val vsTier: Option[Double] =
-      if (!tierConfigMatches) None
-      else {
-        val shared = results.collect {
-          case (k, v) if v >= 0 && tierKv.contains(k) &&
-            !verificationOnly(k) && !ratioExcluded(k) => (v, tierKv(k)) }
-        val s = shared.map(_._2).sum
-        if (s > 0) Some(shared.map(_._1).sum / s) else None
-      }
     // The probe-drift factors calm divides out, published alongside it
     // (r18 ADVICE): calm is DIAGNOSTIC — it attributes, it does not
     // gate — and a reader must see how much was divided out to weigh
@@ -1660,7 +1336,6 @@ object Bench {
     val extra = ratio3("vs_baseline", vsBaseline) +
       ratio3("vs_baseline_cal", vsBaselineCal) +
       ratio3("vs_baseline_calm", vsBaselineCalm) +
-      ratio3("vs_degraded_tier", vsTier) +
       ratio3("drift_cpu", driftCpu) +
       ratio3("drift_mem", driftMem)
     // Per-entry outliers, pre-digested: entries reading >= 3x their
@@ -1693,8 +1368,6 @@ object Bench {
         s""""calib0":[${math.rint(calib0._1 * 1000) / 1000},""" +
         s"""${math.rint(calib0._2 * 1000) / 1000},""" +
         s"""${math.rint(calib0._3 * 1000) / 1000}],""" +
-        s""""degraded_shard":$degraded,""" +
-        s""""shard_healed":$shardHealed,""" +
         s""""partial":$partial,"sweeps_completed":$sweepsCompleted,""" +
         s""""healthy_sweeps":$healthySweeps,""" +
         s""""degraded_sweeps":${degradedSweeps.sorted.mkString("[", ",", "]")},""" +
@@ -1710,8 +1383,6 @@ object Bench {
         s""""rotation_age":$rotAge,""" +
         s""""skip_list":${strArr(skipList.toSeq.sorted)},""" +
         s""""single_task":${strArr(singleTask)},""" +
-        s""""stall_excluded":${strArr(stallExcluded)},""" +
-        s""""tier_excluded":${strArr(tierExcluded)},""" +
         s""""regressions":${regressions.mkString("[", ",", "]")},""" +
         s""""deadlined":${strArr(deadlined.asScala)}""" +
         s"""$extra,"sf":"$sfDir"}"""

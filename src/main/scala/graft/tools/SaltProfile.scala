@@ -33,7 +33,7 @@ import graft.operators.SaltedJoin
   *
   * Round-7 follow-up: the r6 FULL bench recorded 2.48s against the
   * freshly-pinned 0.86s baseline (2.9x) with zero source change to the
-  * operator. Quiet-session QueryProfile median the same day: 1.04s
+  * operator. Quiet-session profiler median the same day: 1.04s
   * (min 0.94). Attribution: bench-session heap pressure — r6's bench
   * ran the then-37s multimodal_gif_frames entry 4x (warm-up + 3 timed),
   * allocating ~5000 quantized GIF frames per pass; with the media

@@ -99,29 +99,6 @@ class BenchRotationSpec extends AnyFunSuite {
       Set.empty[String])
   }
 
-  test("heal decision: the r14 scenario heals (healthy re-probe, ample " +
-      "slack), the r11 bandwidth-starved host does not") {
-    // r14 shape: startup blip passed, re-probe at baseline, ~150 s
-    // elapsed after warm-up/restart, predicted full sweep ~55 s,
-    // 470 s budget -> 150 + 45 + 60 + 110 + 30 = 395 <= 470: HEAL
-    assert(Bench.healFits(1.0, 1.0, 44, Some(55.0), 150.0, 45.0, 470.0))
-    // persistent degradation (r11's 1.8x): never heal, whatever fits
-    assert(!Bench.healFits(1.8, 1.0, 44, Some(55.0), 150.0, 45.0, 470.0))
-    // bandwidth-starved mode the CPU probe is blind to — r19 lowered
-    // the mem threshold to 1.6x (the r18 host read 2.0x and the old
-    // 5x bar never fired)
-    assert(!Bench.healFits(1.0, 6.0, 44, Some(55.0), 150.0, 45.0, 470.0))
-    assert(!Bench.healFits(1.0, 2.0, 44, Some(55.0), 150.0, 45.0, 470.0))
-    // no credible predictor (baseline doesn't cover the shard): no heal
-    assert(!Bench.healFits(1.0, 1.0, 44, None, 150.0, 45.0, 470.0))
-    // nothing to restore: no-op
-    assert(!Bench.healFits(1.0, 1.0, 0, Some(55.0), 150.0, 45.0, 470.0))
-    // thin slack: 250 elapsed + 45 + 60 + 2*55 + 30 = 495 > 470
-    assert(!Bench.healFits(1.0, 1.0, 44, Some(55.0), 250.0, 45.0, 470.0))
-    // boundary: exactly equal fits (<=), both probes AT threshold
-    assert(Bench.healFits(1.5, 1.6, 1, Some(55.0), 225.0, 45.0, 470.0))
-  }
-
   test("post-warm budget shrink: rotation entries drop first, " +
       "costliest first, core survives") {
     val timed = Seq("core_a", "core_b", "rot_x", "rot_y", "new_z")
@@ -179,55 +156,5 @@ class BenchRotationSpec extends AnyFunSuite {
     // builder BENCH_ALL newer than the stuck driver artifact: advances
     assert(Bench.nextRotationGroup(Seq(benchAll, stuckDriver), 4) ===
       Some(2))
-  }
-
-  test("degraded-tier cross-check: >= 3x the same-substrate denominator " +
-      "on a 0-healthy-sweep run is excluded; healthy sweeps stand down") {
-    val tier = Map("agg_percentiles" -> 1.53, "roundtrip_csv" -> 1.41,
-      "cheap" -> 0.2, "calibn_sec" -> 0.34)
-    // the r20 driver-run shape: 70.5 s against a 1.53 s tier denominator
-    val results = Map("agg_percentiles" -> 70.5, "roundtrip_csv" -> 1.2,
-      "cheap" -> 0.9, "unknown_entry" -> 50.0)
-    assert(Bench.tierExcludedEntries(results, tier,
-      anyHealthySweep = false) === Set("agg_percentiles"),
-      "70.5 vs 1.53 excluded; 1.2 vs 1.41 kept; sub-1s jitter kept; " +
-        "no tier denominator -> no cross-check")
-    // any healthy sweep: lower-median already prefers healthy samples
-    assert(Bench.tierExcludedEntries(results, tier,
-      anyHealthySweep = true) === Set.empty[String])
-    // boundary: exactly 3.0x at >= 1 s is excluded
-    assert(Bench.tierExcludedEntries(Map("q" -> 3.0), Map("q" -> 1.0),
-      anyHealthySweep = false) === Set("q"))
-    // a zero/absent denominator can never divide
-    assert(Bench.tierExcludedEntries(Map("q" -> 9.0), Map("q" -> 0.0),
-      anyHealthySweep = false) === Set.empty[String])
-  }
-
-  test("stall-mode attribution: run >> cpu in EVERY window flags the " +
-      "entry; one healthy window acquits it; warm-up events ignored") {
-    // the r19 CC signature: stage run 134.6 s, cpu 8.9 s — run/cpu 15x
-    val windows = Seq(
-      ("stalled", 1000L, 10000L),            // one window, stalled
-      ("mixed", 20000L, 30000L), ("mixed", 40000L, 50000L),
-      ("healthy", 60000L, 70000L),
-      ("quiet", 80000L, 81000L))             // no >=2 s stages at all
-    val events = Seq(
-      (500L, 200.0, 2.0),       // warm-up stage: outside every window
-      (5000L, 134.6, 8.9),      // stalled's window: run/cpu 15x
-      (25000L, 90.0, 3.0),      // mixed window 1: stalled
-      (45000L, 12.0, 11.5),     // mixed window 2: cpu-bound -> acquit
-      (65000L, 30.0, 28.0))     // healthy: run ~ cpu
-    assert(Bench.stallModeEntries(windows, events) === Set("stalled"))
-    // a fast entry with NO recorded stages is never stall-mode (the
-    // forall must not vacuously flag stage-free windows as stalled):
-    // run = 0 < minRunSec
-    assert(!Bench.stallModeEntries(windows, events).contains("quiet"))
-    // below the absolute floor: a 3 s run at 20x cpu is noise, not a
-    // stall verdict
-    assert(Bench.stallModeEntries(Seq(("tiny", 0L, 1000L)),
-      Seq((500L, 3.0, 0.15))) === Set.empty[String])
-    // no windows: nothing flagged
-    assert(Bench.stallModeEntries(Seq.empty, events) ===
-      Set.empty[String])
   }
 }

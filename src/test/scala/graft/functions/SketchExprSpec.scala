@@ -346,6 +346,26 @@ class SketchExprSpec extends SparkTestBase with Matchers {
     natSimhash(df) shouldBe refSimhash(df)
   }
 
+  test("simhash63 / simhash63_md5 are non-null on every edge text, so " +
+      "simhashBandIndex's coalesce(kernel, 0) never fires") {
+    val df = corpus(edgeTexts) // includes "", "   " and the emoji row
+    for (kernel <- Seq("simhash63", "simhash63_md5")) {
+      val raw = df.select($"doc_id",
+          call_function(kernel, TextOps.tokens($"text")).as("fp"))
+        .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+      raw.size shouldBe edgeTexts.size
+      withClue(s"$kernel null on: ") {
+        raw.collect { case (id, null) => edgeTexts(id.toInt) } shouldBe empty
+      }
+      // a null kernel value would surface here as fp = 0 (a false band
+      // collision) instead of the raw value
+      val banded = Dedup.simhashBandIndex(df, "doc_id", "text", kernel)
+        .select($"doc_id", $"fp").distinct()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      banded shouldBe raw.map { case (id, v) => id -> v.asInstanceOf[Long] }
+    }
+  }
+
   // rep_stats reference: the per-n gram-array column algebra it replaces
   private def refRepStats(df: DataFrame): Map[Long, Seq[Long]] = {
     val toks = TextOps.tokens($"text")

@@ -13,21 +13,11 @@ sharding contract:
 """
 import json, os, sys
 
+OUT_PATH = "BASELINE_BENCH.json"
+
 def main(bench_path, core_path, note):
     b = json.load(open(bench_path))
     core = json.load(open(core_path))
-    # r20 (r19 verdict item 2 fallback): GRAFT_ALLOW_DEGRADED=1 relaxes
-    # the sweep-health refusals to record an explicitly-LABELED
-    # degraded-tier denominator set (same-substrate ratios beat no
-    # ratios) — but NEVER over the healthy baseline file: the degraded
-    # tier must go to a different GRAFT_BASELINE_OUT.
-    out_path = os.environ.get("GRAFT_BASELINE_OUT", "BASELINE_BENCH.json")
-    tier = os.environ.get("GRAFT_BASELINE_TIER")
-    allow_degraded = os.environ.get("GRAFT_ALLOW_DEGRADED") == "1"
-    if allow_degraded and out_path == "BASELINE_BENCH.json":
-        sys.exit("refusing: GRAFT_ALLOW_DEGRADED requires a non-default "
-                 "GRAFT_BASELINE_OUT (the healthy baseline is never "
-                 "overwritten by a degraded-tier record)")
     if b.get("partial"):
         sys.exit("refusing: bench run is partial")
     # round-18: SPARK_GRAFT_BENCH_SKIP runs exist only for A/B drift
@@ -35,31 +25,20 @@ def main(bench_path, core_path, note):
     # (JIT profiles, cache pressure) exactly as a real round runs it
     if b.get("skip_list"):
         sys.exit(f"refusing: diagnostic skip-list run {b['skip_list']}")
-    # round-15: a startup-degraded run drops the rotation slice and
-    # times the core entries only — it can pass every sweep-health
-    # check below (r14 did: degraded_shard:true, 2 healthy sweeps)
-    # yet recording it would leave the rotation entries with no
-    # denominator at all
-    if b.get("degraded_shard"):
-        sys.exit("refusing: degraded_shard run (rotation slice dropped)")
     if b.get("rotation_timed") is False:
         sys.exit("refusing: rotation slice was not timed")
     if b.get("sweeps_completed", 0) < 2:
         sys.exit("refusing: need >= 2 completed sweeps")
     # round-14: sweeps that calibrated >1.5x baseline are flagged in
     # the artifact — a baseline must come from healthy sweeps only
-    if b.get("degraded_sweeps") and not allow_degraded:
+    if b.get("degraded_sweeps"):
         sys.exit(f"refusing: degraded sweeps {b['degraded_sweeps']}")
-    # round-20: stall-mode / deadlined samples are excluded from the
-    # run's own ratio — recording them as denominators would bake a
-    # host stall window into every future comparison (NOT relaxed by
-    # the degraded tier: a stalled sample is wrong at every tier)
-    if b.get("stall_excluded"):
-        sys.exit(f"refusing: stall-mode samples {b['stall_excluded']}")
+    # round-20: deadlined samples are excluded from the run's own ratio
+    # — recording them as denominators would bake a host stall window
+    # into every future comparison
     if b.get("deadlined"):
         sys.exit(f"refusing: deadlined samples {b['deadlined']}")
-    if (b.get("healthy_sweeps", b.get("sweeps_completed", 0)) < 2
-            and not allow_degraded):
+    if b.get("healthy_sweeps", b.get("sweeps_completed", 0)) < 2:
         sys.exit("refusing: need >= 2 healthy sweeps")
     # a routine sharded round passes the two checks above yet covers
     # only ~2/3 of the catalog; recording it would leave the rotation
@@ -91,16 +70,8 @@ def main(bench_path, core_path, note):
         "source": note,
         "queries": queries,
     }
-    if tier:
-        out["tier"] = tier
-        # the run's own probe drift readings travel with the tier so a
-        # reader can place these denominators on the substrate scale
-        for k in ("drift_cpu", "drift_mem", "degraded_sweeps",
-                  "healthy_sweeps"):
-            if b.get(k) is not None:
-                out[f"run_{k}"] = b[k]
-    json.dump(out, open(out_path, "w"), indent=1, sort_keys=False)
-    print(f"wrote {out_path}: {len(queries)} queries, "
+    json.dump(out, open(OUT_PATH, "w"), indent=1, sort_keys=False)
+    print(f"wrote {OUT_PATH}: {len(queries)} queries, "
           f"{len(core)} core, production {b['production_sec']:.1f}s, "
           f"calib1 {b['calib1_sec']} calibn {b['calibn_sec']} "
           f"calibm {b.get('calibm_sec')}")
