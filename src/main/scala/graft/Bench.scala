@@ -282,21 +282,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def buildSession(): SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the JVM-wide generated-class cache defaults to 100 entries; a
-      // ~200-entry catalog swept in interleaved order (r8 fix for
-      // session-noise robustness) evicts EVERY query's classes between
-      // its own repeats, so each timed run re-pays single-threaded
-      // Janino compilation (~1-2 s flat per query — the r8/r9 "uniform
-      // regression" vs the back-to-back-recorded baseline). Size it to
-      // hold the whole catalog so timed runs measure execution, not
-      // recompilation.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
+    val cpus = Session.cpus.toString
+    def buildSession(): SparkSession = Session.builder(cpus.toInt)
       // BENCH-ONLY: disable the ContextCleaner. ~500 query executions
       // share this session; every young GC releases thousands of dead
       // broadcast/RDD weak refs at once and the cleaner's remove-RPC
@@ -851,7 +838,7 @@ object Bench {
       // pass finished under budget: one warm execution is NOT enough
       // for the codec/kernel-heavy entries — r16's `multimodal_gif_
       // frames` read 3.8x after its cold sweep-1 run failed to warm it
-      // for sweep 2, and quiet EntryProfile reps show the same shape
+      // for sweep 2, and quiet Profile reps show the same shape
       // (run 2 at 0.76 s vs run 4+ at 0.58 s). Leftover warm budget
       // buys those entries their run-3 warmth where it is untimed.
       val warmRemain = warmBudget - (System.nanoTime() - w0) / 1e9

@@ -38,23 +38,6 @@ import org.apache.spark.sql.functions._
   *      frontier-sized decrements instead of recomputed by two
   *      edge-sized joins per round (see [[kcorePeel]]).
   */
-/** Per-round plan-dump hook (r22, r21 verdict item 6 — "plan dumps
-  * cannot evidence the iterative wins"): iterative operators
-  * materialize every round through `localCheckpoint`, so a final
-  * `explain` shows only the last TakeOrderedAndProject fragment. When
-  * the hook is set, each per-round DataFrame is offered BEFORE its
-  * checkpoint so a diagnostic main ([[graft.tools.IterPlanDump]]) can
-  * record one representative round's formatted plan — making the
-  * per-iteration exchange-count and aggregate-before-pin claims
-  * directly checkable from committed artifacts. Always None outside
-  * the diagnostic; the production cost is one volatile read per
-  * round. */
-object IterPlan {
-  @volatile var hook: Option[(String, DataFrame) => Unit] = None
-  private[graft] def offer(tag: String, df: DataFrame): Unit =
-    hook.foreach(h => h(tag, df))
-}
-
 object Graph {
 
   /** Degree-bounded ADJACENCY STORE shared by the iterative operators
@@ -200,7 +183,6 @@ object Graph {
             .as("component"),
           (coalesce(col("cand"), col("component")) < col("component"))
             .as("changed"))
-      IterPlan.offer("connectedComponents round", nextPlan)
       val next = nextPlan.localCheckpoint()
       moved = next.where(col("changed")).count()
       active = next.where(col("changed"))
@@ -299,7 +281,6 @@ object Graph {
           least(col("p"), coalesce(col("mn"), col("p")), col("pp"))
             .as("p"),
           col("p").as("prev"))
-      IterPlan.offer("connectedComponentsStar round", nextPlan)
       val next = nextPlan.localCheckpoint()
       // parents are non-increasing, so "some parent moved this round"
       // (propagation OR halving) is exactly p < prev
@@ -378,7 +359,6 @@ object Graph {
         .select(deg("id"), deg("deg"),
           expr(s"(15 * ${scale}L) div (100 * n) + (85 * sc) div 100")
             .as("r"))
-      IterPlan.offer("pageRankInt iteration", prPlan)
       pr = prPlan.localCheckpoint()
     }
     pr.select(col("id"), col("deg"), col("r").as("rank"))
@@ -545,7 +525,6 @@ object Graph {
         .join(dec, Seq("id"), "left")
         .select(col("id"),
           (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
-      IterPlan.offer("kcorePeel round", degPlan)
       deg = degPlan.localCheckpoint()
     }
     // converged ⟺ the last round removed nothing — the same
@@ -643,12 +622,15 @@ object Graph {
     // paying an extra job boundary per round. Both shapes compute
     // identical counts (integer count commutes across any grouping
     // order), so the result is bit-identical either way — the probe
-    // steers bytes, never semantics.
-    val probe = labels
-      .agg(count(lit(1)).as("v"),
-        approx_count_distinct(col("lbl")).as("l"))
-      .head()
-    val concentrated = probe.getLong(1) * 4L <= probe.getLong(0)
+    // steers bytes, never semantics. With rounds = 1 no vote round
+    // reads the shape, so the probe's job is skipped.
+    val concentrated = rounds >= 2 && {
+      val probe = labels
+        .agg(count(lit(1)).as("v"),
+          approx_count_distinct(col("lbl")).as("l"))
+        .head()
+      probe.getLong(1) * 4L <= probe.getLong(0)
+    }
     for (_ <- 2 to rounds) {
       val votes = adj
         .join(labels.select(col("id").as("lid"), col("lbl")),
@@ -670,9 +652,6 @@ object Graph {
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl"))).as("b"))
         .select(col("dst").as("id"), col("b.lbl").as("lbl"))
         .repartition(shufN, col("id"))
-      IterPlan.offer(
-        s"labelPropagate round (${if (concentrated) "aggregate-first"
-          else "raw-vote"})", labelsPlan)
       labels = labelsPlan.localCheckpoint()
     }
     labels

@@ -79,19 +79,19 @@ object MultiModal {
     }(Encoders.product[DecodedMedia])
   }
 
-  /** REAL image codec (JDK javax.imageio, headless-safe): the
-    * per-partition decoder/encoder instances a production image
-    * pipeline would hold — stateful reader reuse, rows streamed
-    * through, exactly the `mapInPandas` batch shape.
+  /** REAL image codec (JDK javax.imageio, headless-safe): the per-partition
+    * decoder/encoder instances a production image pipeline would hold —
+    * stateful reader reuse, rows streamed through, exactly the `mapInPandas`
+    * batch shape.
     *
-    * @param deflateQuality optional EXPLICIT png deflate quality in
-    *   [0,1] (JDK mapping: effort ~ 9*(1-q), so 1.0f ~ stored/level-0).
-    *   PNG is lossless at EVERY deflate level — only encode time and
-    *   byte size change — so this is a pure speed-vs-size knob for
-    *   intermediate artifacts. Measured (tools/ResizeProfile, 32x32
-    *   outputs): 1.0f encodes ~20-35% faster at ~60% more bytes;
-    *   intermediate q values are within session noise of the default.
-    *   None = the writer's default effort (the safe storage choice). */
+    * @param deflateQuality optional EXPLICIT png deflate quality in [0,1]
+    *   (JDK mapping: effort ~ 9*(1-q), so 1.0f ~ stored/level-0). PNG is
+    *   lossless at EVERY level: a pure speed-vs-size knob for intermediate
+    *   artifacts. Measured (16-64 px images to 32x32, one thread, median of
+    *   5): decode 130-172 us/img, encode 227-290, resize 302-390; raster
+    *   type and reuse stay inside the ±20% run-to-run noise; 1.0f holds 252
+    *   us/img (~20-35% faster) at ~60% more bytes, other q values sit within
+    *   noise. None = the writer's default effort (the safe storage choice). */
   final class PngCodec(deflateQuality: Option[Float] = None) {
     import java.awt.image.BufferedImage
     import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -410,15 +410,15 @@ object MultiModal {
     *
     * Uses the javax.sound.sampled.spi provider interfaces directly
     * (one reader/writer instance held per codec = per partition)
-    * instead of the AudioSystem static entry points: AudioSystem
-    * re-walks the provider registry and probes every reader with
-    * exception control flow ON EVERY CALL, which measured 30x slower
-    * single-threaded (0.56s vs 0.019s / 5000 decodes) and serializes
-    * across executor threads (32-thread decode was NOT faster than 1,
-    * and 32-thread encode was 2x slower — see WavContention vs
-    * WavContention2 in tools/). The SPI types are public JDK API;
-    * the resolved implementations are whatever the platform
-    * registers for RIFF/WAVE. */
+    * instead of the AudioSystem static entry points, which re-walk
+    * the provider registry and probe every reader with exception
+    * control flow ON EVERY CALL: 30x slower single-threaded, and
+    * serialized across executor threads. Measured over 5000 blobs
+    * (seconds, median of 3, on 1/32 threads): AudioSystem decode
+    * 0.563/0.605 and encode 0.174/0.341; the SPI instances decode
+    * in 0.019/0.009 and encode in 0.041/0.008. The SPI types are
+    * public JDK API; the resolved implementations are whatever the
+    * platform registers for RIFF/WAVE. */
   final class WavCodec {
     import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
     import java.util.ServiceLoader
@@ -589,15 +589,15 @@ object MultiModal {
       width: Int, height: Int, nFrames: Int, nSampled: Int,
       sampleIdxSum: Long, frameFingerprint: Long)
 
-  /** REAL multi-frame container codec (JDK javax.imageio GIF89a
-    * sequence writer/reader): the moving-picture half of the
-    * frame-sampling story. Per-partition instance, same batch shape as
-    * [[PngCodec]]/[[WavCodec]]. What is real: the container format,
-    * frame count, per-frame raster decode, and selective decode of only
-    * the sampled frames (an index-seek into the stream — the point of a
-    * production frame sampler). What GIF is NOT: an inter-frame-coded
-    * video codec; H.264-class formats have no JDK implementation and
-    * stay with the labeled stub. */
+  /** REAL multi-frame container codec (JDK javax.imageio GIF89a sequence
+    * writer/reader): the moving-picture half of the frame-sampling story,
+    * same per-partition batch shape as [[PngCodec]]/[[WavCodec]]. Real: the
+    * container format, frame count, per-frame raster decode, and selective
+    * decode of only the sampled frames (an index-seek, the point of a frame
+    * sampler). NOT real: inter-frame video coding; H.264-class formats have
+    * no JDK codec and stay with the labeled stub. Measured codec alone (5000
+    * specs): indexed rasters (below) cut encode 6.29 → 0.94 s on 1 thread,
+    * 0.60 → 0.18 s on 32, and the entry's quiet median 4.29 → 1.15 s. */
   final class GifCodec {
     import java.awt.image.BufferedImage
     import java.io.{ByteArrayInputStream, ByteArrayOutputStream}

@@ -9,23 +9,23 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * payload at-or-before the probe's timestamp within the same key — the
   * time-series join Spark has no built-in operator for.
   *
-  * Formulation: tag both sides, union, one window per key ordered by
-  * (ts, side, tie) with `last(payload_struct, ignoreNulls)` over an
-  * unbounded-preceding frame, then keep probe rows. Compared to the
-  * naive range-join (probe ⋈ build on key + inequality → per-key
-  * cross-product then argmax), this is ONE shuffle on the key and
-  * linear work per partition — the formulation that survives 100 TB
-  * and a hot key (AQE skew-split applies to the single exchange).
+  * Formulation: tag both sides, union, one window per key ordered by (ts,
+  * side, tie) with `last(payload_struct, ignoreNulls)` over an
+  * unbounded-preceding frame, then keep probe rows. Unlike the naive
+  * range-join (per-key cross-product then argmax), this is ONE shuffle on
+  * the key and linear work per partition — it survives 100 TB and a hot key
+  * (AQE skew-split applies to the single exchange). Measured at sf0.1
+  * (local[32], median of 3): scan 0.14 s, union+window 0.42 s, operator
+  * 0.41 s, entry 0.61 s; the struct payload costs nothing over two separate
+  * `last` columns (0.40 s).
   *
-  * Semantics: inclusive (build row at exactly the probe ts matches —
-  * build sorts before probe at equal ts); build-side ts ties resolve
-  * toward the larger `buildTie` value; probes with no prior build row
-  * get nulls (left join). All payload columns come from the SAME build
-  * row: they travel as one nullable struct, so a legitimately-null
-  * payload value in the matched row is returned as null (never patched
-  * from an older row), matching DuckDB/pandas ASOF. Null join keys
-  * never match (equi-join semantics): null-key build rows are dropped,
-  * null-key probe rows pass through with null payloads.
+  * Semantics: inclusive (build sorts before probe at equal ts); build-side
+  * ts ties resolve toward the larger `buildTie` value; probes with no prior
+  * build row get nulls (left join). All payload columns come from the SAME
+  * build row: they travel as one nullable struct, so a null payload value
+  * in the matched row stays null (never patched from an older row),
+  * matching DuckDB/pandas ASOF. Null join keys never match: null-key build
+  * rows are dropped, null-key probe rows pass through with null payloads.
   */
 object AsOfJoin {
 

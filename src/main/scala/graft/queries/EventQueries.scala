@@ -1591,25 +1591,25 @@ object EventQueries {
       .orderBy($"event_type")
   }
 
-  /** DETERMINISTIC POISSON BOOTSTRAP of the per-series mean — the
-    * "how sure are we" companion every point estimate in this catalog
-    * lacks: 32 bootstrap replicas of mean(value), each row weighted by
-    * a Poisson(1) draw keyed on md5(event_id, replica) (Poissonized
-    * resampling — the large-n limit of multinomial bootstrap, and the
-    * ONLY bootstrap that needs no global coordination: each row knows
-    * its own replica weights, so a 100 TB bootstrap is one scan + one
-    * (series, replica) partial agg, no sampling shuffle, no RNG state,
-    * bit-reproducible across engines and re-runs). Emitted per series:
-    * the exact point mean, the replica count, the min/max replica
-    * means (the 1st/32nd order statistics — a ~94% band), and the
-    * unbiased between-replica variance, all in integer milli-cents via
-    * DECIMAL(38,0)/HUGEINT sums.
+  /** DETERMINISTIC POISSON BOOTSTRAP of the per-series mean — the "how
+    * sure are we" companion every point estimate in this catalog lacks: 32
+    * bootstrap replicas of mean(value), each row weighted by a Poisson(1)
+    * draw keyed on md5(event_id, replica) (Poissonized resampling — the
+    * large-n limit of multinomial bootstrap, and the ONLY bootstrap that
+    * needs no global coordination: each row knows its own replica weights,
+    * so a 100 TB bootstrap is one scan + one (series, replica) partial
+    * agg, no sampling shuffle, no RNG state, bit-reproducible across
+    * engines and re-runs). Emitted per series: the exact point mean, the
+    * replica count, the min/max replica means (the 1st/32nd order
+    * statistics — a ~94% band), and the unbiased between-replica variance,
+    * all in integer milli-cents via DECIMAL(38,0)/HUGEINT sums.
     *
     * Scale shape: `boot_pois_md5` is a row-local kernel (32 md5 calls
     * inside ONE compiled method — never an exploded md5 column, the
-    * r15/r17/r18 JIT trap); the posexplode carries (type, replica,
-    * wt·x) into a map-side partial agg that collapses to
-    * |series|·32 rows before the only exchange. */
+    * r15/r17/r18 JIT trap); the posexplode carries (type, replica, wt·x)
+    * into a map-side partial agg that collapses to |series|·32 rows before
+    * the only exchange. Timed per stage at sf0.1, a first 29 s reading was
+    * cold-JIT noise: warm, this entry and `events_theil_sen` run ~0.9 s. */
   val eventsBootstrapCi: CatalogEntry = CatalogEntry(
     "events_bootstrap_ci",
     """WITH c AS (SELECT event_type, event_id,

@@ -1779,7 +1779,6 @@ object SimilarityQueries {
         .groupBy($"pos")
         .agg(sum($"c0".cast("decimal(38,0)")).as("a"),
           sum($"bb").as("b0"))
-      graft.ext.IterPlan.offer("embedPcaDeflate fused A+B round", ab0)
       val ab = ab0.localCheckpoint()
       val b = ab.agg(sum($"b0").as("b"))
       val w = ab.join(v1, "pos")

@@ -1,0 +1,200 @@
+package graft.tools
+
+import java.lang.management.ManagementFactory
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Semaphore, TimeUnit}
+
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.{Session, SparkEntry}
+
+/** The one profiler for catalog entries, in a quiet session of its own.
+  *
+  * Timing mode: one untimed warm-up, then [[Reps]] timed runs, each split
+  * into construction (`fn(spark, sfDir)`; iterative entries run their
+  * rounds here) and execution (a noop-sink write) under job groups
+  * `profile-<entry>-construct|execute`. Per run: both wall times and job
+  * counts, driver GC/JIT deltas, and each stage of 0.5 s or more with
+  * tasks, CPU, run, GC, deserialize and fetch-wait seconds and operator
+  * scopes. Per entry: both medians and, per step, the per-run jobs,
+  * stages, tasks, shuffle bytes, spill, CPU and GC.
+  *
+  * `--plans` mode: the executed (post-AQE) plan of every `localCheckpoint`
+  * or `checkpoint` the construction ran, then the final formatted plan.
+  *
+  * Usage: runMain graft.tools.Profile <sfDir> [--plans] [entry ...]
+  *        (no entry: the whole catalog; cores: SPARK_GRAFT_CPUS)
+  */
+object Profile {
+  val Reps = 5
+  private val SettleGroup = "profile-settle"
+
+  /** Counters of one step: every job run under one job group. */
+  final class Step {
+    var jobs, stages, tasks, shufR, shufW, spill, cpuNs, gcMs = 0L
+    val slow = ArrayBuffer.empty[String]
+  }
+
+  /** One timed run: wall seconds and counters per step, driver deltas. */
+  final case class Run(constructS: Double, executeS: Double,
+      construct: Step, execute: Step, driverGcMs: Long, jitMs: Long)
+
+  /** The one `SparkListener` and `QueryExecutionListener`: counters per
+    * job group, and (with `keepPlans`) every checkpoint's query. Both
+    * sit on the listener bus's shared queue, so after [[settle]] every
+    * earlier event has been seen. */
+  final class Recorder(keepPlans: Boolean) extends SparkListener
+      with QueryExecutionListener {
+    private val steps = new ConcurrentHashMap[String, Step]()
+    private val stageGroup = new ConcurrentHashMap[Int, String]()
+    private val settleJobs = ConcurrentHashMap.newKeySet[Int]()
+    private[tools] val settled = new Semaphore(0)
+    private val plans = new ConcurrentLinkedQueue[(String, QueryExecution)]()
+
+    private def group(p: java.util.Properties): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+    private def step(g: String): Step = steps.computeIfAbsent(g, _ => new Step)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = group(e.properties)
+      .foreach(g => if (g == SettleGroup) settleJobs.add(e.jobId) else step(g).jobs += 1)
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (settleJobs.remove(e.jobId)) settled.release()
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      group(e.properties).foreach(stageGroup.put(e.stageInfo.stageId, _))
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      Option(stageGroup.remove(e.stageInfo.stageId)).map(step).foreach { s =>
+        val i = e.stageInfo
+        val m = i.taskMetrics
+        s.stages += 1; s.tasks += i.numTasks; s.spill += m.diskBytesSpilled
+        s.shufR += m.shuffleReadMetrics.totalBytesRead
+        s.shufW += m.shuffleWriteMetrics.bytesWritten
+        s.cpuNs += m.executorCpuTime; s.gcMs += m.jvmGCTime
+        val dur = i.completionTime.zip(i.submissionTime).fold(-1L) { case (a, b) => a - b }
+        if (dur >= 500) {
+          val ops = i.rddInfos.flatMap(_.scope).flatMap(_.name.split("\n")) // SQL operators
+            .distinct.take(8).mkString("|")
+          s.slow += f"stage ${i.stageId}%5d ${dur / 1e3}%6.2f s " +
+            f"tasks=${i.numTasks}%-4d cpu=${m.executorCpuTime / 1e9}%6.1f " +
+            f"run=${m.executorRunTime / 1e3}%6.1f gc=${m.jvmGCTime / 1e3}%5.1f " +
+            f"deser=${m.executorDeserializeTime / 1e3}%5.1f " +
+            f"fetchWait=${m.shuffleReadMetrics.fetchWaitTime / 1e3}%5.1f  $ops"
+        }
+      }
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      if (keepPlans && (f == "localCheckpoint" || f == "checkpoint")) plans.add(f -> qe)
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    /** Removes and returns the counters of `group` (empty if none ran). */
+    def take(group: String): Step = Option(steps.remove(group)).getOrElse(new Step)
+    /** Removes and returns the checkpoint queries seen so far, in order. */
+    def takePlans(): Seq[(String, QueryExecution)] =
+      Iterator.continually(plans.poll()).takeWhile(_ != null).toSeq
+  }
+
+  /** Runs `body` with `rec` on both listener buses, removed again however `body` ends. */
+  def recording[A](spark: SparkSession, rec: Recorder)(body: => A): A = {
+    spark.sparkContext.addSparkListener(rec)
+    spark.listenerManager.register(rec)
+    try body
+    finally { spark.sparkContext.removeSparkListener(rec); spark.listenerManager.unregister(rec) }
+  }
+
+  /** Blocks until `rec` has seen every event posted so far: a one-task
+    * marker job's end arrives after all of them on the same queue. */
+  def settle(spark: SparkSession, rec: Recorder): Unit = {
+    inGroup(spark, SettleGroup)(spark.sparkContext.parallelize(Seq(0), 1).count())
+    require(rec.settled.tryAcquire(60, TimeUnit.SECONDS), "listener bus did not drain in 60 s")
+  }
+
+  /** `body` under job group `group`, with its wall seconds. */
+  def inGroup[A](spark: SparkSession, group: String)(body: => A): (A, Double) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    val t0 = System.nanoTime()
+    try (body, (System.nanoTime() - t0) / 1e9) finally sc.clearJobGroup()
+  }
+
+  private def gcMs: Long = ManagementFactory.getGarbageCollectorMXBeans
+    .stream().mapToLong(_.getCollectionTime).sum
+  private def jitMs: Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
+
+  /** One untimed warm-up of catalog entry `name`, then [[Reps]] timed
+    * runs; `rec` must be [[recording]]. */
+  def timeEntry(spark: SparkSession, rec: Recorder, sfDir: String,
+      name: String): Seq[Run] = {
+    val fn = SparkEntry.queries(name)
+    val (cg, eg) = (s"profile-$name-construct", s"profile-$name-execute")
+    def once(): Run = {
+      val (gc0, jit0) = (gcMs, jitMs)
+      val (df, tc) = inGroup(spark, cg)(fn(spark, sfDir))
+      val te = inGroup(spark, eg)(df.write.format("noop").mode("overwrite").save())._2
+      val (gc, jit) = (gcMs - gc0, jitMs - jit0)
+      settle(spark, rec)
+      Run(tc, te, rec.take(cg), rec.take(eg), gc, jit)
+    }
+    once()
+    Seq.fill(Reps)(once())
+  }
+
+  private def printTiming(spark: SparkSession, rec: Recorder, sfDir: String,
+      name: String): Unit = {
+    val runs = timeEntry(spark, rec, sfDir, name)
+    runs.zipWithIndex.foreach { case (r, i) =>
+      println(f"[profile] $name rep ${i + 1}  construct ${r.constructS}%7.3f s " +
+        f"(${r.construct.jobs} jobs)  execute ${r.executeS}%7.3f s " +
+        f"(${r.execute.jobs} jobs)  driverGC ${r.driverGcMs} ms  jit ${r.jitMs} ms")
+      r.construct.slow.foreach(s => println(s"[profile]   construct $s"))
+      r.execute.slow.foreach(s => println(s"[profile]   execute   $s"))
+    }
+    val n = runs.size.toDouble
+    def median(xs: Seq[Double]): Double = xs.sorted.apply((xs.size - 1) / 2)
+    def per(xs: Seq[Long], scale: Double = 1.0): Double = xs.sum / n / scale
+    println(f"[profile] $name%-28s construct median " +
+      f"${median(runs.map(_.constructS))}%7.3f s  execute median " +
+      f"${median(runs.map(_.executeS))}%7.3f s  (n=${runs.size}, $sfDir)  driver " +
+      f"gc ${per(runs.map(_.driverGcMs))}%.0f ms  jit ${per(runs.map(_.jitMs))}%.0f ms")
+    for ((label, ss) <- Seq("construct" -> runs.map(_.construct),
+        "execute" -> runs.map(_.execute)))
+      println(f"[profile]   $label%-9s per rep: jobs ${per(ss.map(_.jobs))}%5.1f  " +
+        f"stages ${per(ss.map(_.stages))}%5.1f  tasks ${per(ss.map(_.tasks))}%6.1f  " +
+        f"shufR ${per(ss.map(_.shufR), 1048576)}%8.2f MB  " +
+        f"shufW ${per(ss.map(_.shufW), 1048576)}%8.2f MB  " +
+        f"spill ${per(ss.map(_.spill), 1048576)}%8.2f MB  " +
+        f"cpu ${per(ss.map(_.cpuNs), 1e9)}%7.2f s  gc ${per(ss.map(_.gcMs), 1e3)}%6.2f s")
+  }
+
+  private def printPlans(spark: SparkSession, rec: Recorder, sfDir: String,
+      name: String): Unit = {
+    val group = s"profile-$name-construct"
+    val finalPlan = try inGroup(spark, group)(SparkEntry.queries(name)(spark, sfDir))
+      ._1.queryExecution.explainString(FormattedMode)
+    catch { case NonFatal(e) => s"FAILED: ${e.getMessage}" }
+    settle(spark, rec)
+    rec.take(group)
+    println(s"\n========== $name ==========")
+    rec.takePlans().zipWithIndex.foreach { case ((fn, qe), i) =>
+      println(s"\n----- $name :: $fn #${i + 1} -----\n${qe.explainString(FormattedMode)}")
+    }
+    println(s"\n----- $name :: final plan -----\n$finalPlan")
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: Profile <sfDir> [--plans] [entry ...]")
+    val (sfDir, plans) = (args.head, args.tail.contains("--plans"))
+    val named = args.tail.filterNot(_ == "--plans").toSeq
+    val names = if (named.isEmpty) SparkEntry.queries.keys.toSeq.sorted else named
+    val spark = Session.builder(Session.cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val rec = new Recorder(keepPlans = plans)
+    try recording(spark, rec)(names.foreach { name =>
+      try if (plans) printPlans(spark, rec, sfDir, name)
+      else printTiming(spark, rec, sfDir, name)
+      catch { case NonFatal(e) => println(s"[profile] $name FAILED: ${e.getMessage}") }
+    }) finally spark.stop()
+  }
+}

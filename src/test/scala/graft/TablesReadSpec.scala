@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.{IntegerType, StructField, TimestampType}
 import graft.streaming.MicroBatch
 
 /** `Tables.read` opens a parquet table from a driver-side footer read:
-  * the same schema and rows as `spark.read.parquet`, and no Spark job. */
+  * the same schema and rows as `spark.read.parquet`, and no Spark job.
+  * The source-tree lints keep one table reader, one session factory and
+  * one profiling main. */
 class TablesReadSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -123,16 +125,33 @@ class TablesReadSpec extends SparkTestBase {
     assert(micros == nanos.map(_ / 1000))
   }
 
-  test("lint: Tables.scala is the only program file calling .read.parquet(") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"${root.toAbsolutePath} is not the source tree")
-    val call = """\.read\s*\.parquet\(""".r
-    val offenders = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "Tables.scala")
-      .filter(p => call.findFirstIn(Files.readString(p)).isDefined)
-      .toSeq
-    assert(offenders.isEmpty,
-      s"open parquet tables through Tables.read, not .read.parquet: $offenders")
+  /** One source-tree lint: `pattern` may appear only in `owner`, in the
+    * `.scala` files under `roots`. */
+  private case class Lint(name: String, roots: Seq[String], pattern: String,
+      owner: String, advice: String)
+
+  private val lints = Seq(
+    Lint("lint: Tables.scala is the only program file calling .read.parquet(",
+      Seq("src/main/scala"), """\.read\s*\.parquet\(""", "Tables.scala",
+      "open parquet tables through Tables.read"),
+    Lint("lint: Session.scala is the only source file building a session",
+      Seq("src/main/scala", "src/test/scala"), """SparkSession\s*\.builder""",
+      "Session.scala", "build sessions through graft.Session.builder"),
+    Lint("lint: Profile.scala is the only main under graft/tools",
+      Seq("src/main/scala/graft/tools"), """def\s+main\s*\(""", "Profile.scala",
+      "fold diagnostics into graft.tools.Profile"))
+
+  lints.foreach { lint =>
+    test(lint.name) {
+      val call = lint.pattern.r
+      val offenders = lint.roots.map(Paths.get(_)).flatMap { root =>
+        assert(Files.isDirectory(root), s"${root.toAbsolutePath} is not a source tree")
+        Files.walk(root).iterator().asScala
+          .filter(p => p.toString.endsWith(".scala"))
+          .filterNot(_.getFileName.toString == lint.owner)
+          .filter(p => call.findFirstIn(Files.readString(p)).isDefined)
+      }
+      assert(offenders.isEmpty, s"${lint.advice}: $offenders")
+    }
   }
 }

@@ -1,9 +1,16 @@
 package graft.ext
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
 import graft.SparkTestBase
+import graft.tools.Profile
 
 /** Connected components: closure correctness, multi-round convergence,
   * and the refuse-dont-truncate guard on the round budget. */
@@ -236,5 +243,32 @@ class GraphSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L),
       s"self-looped isolated node must be peeled, got $got")
+  }
+
+  test("label propagation with rounds = 1 runs no concentration probe") {
+    import spark.implicits._
+    // the probe steers only rounds 2+, so a 1-round run must not pay its
+    // approx_count_distinct job; round 1 labels each node with its
+    // smallest neighbor
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (7L, 8L), (8L, 9L),
+      (7L, 9L), (3L, 7L)).toDF("src", "dst")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val rec = new Profile.Recorder(keepPlans = false)
+    spark.listenerManager.register(listener)
+    val got = try Profile.recording(spark, rec) {
+      val out = Graph.labelPropagate(edges, "src", "dst", rounds = 1)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      Profile.settle(spark, rec)
+      out
+    } finally spark.listenerManager.unregister(listener)
+    assert(got == Map(1L -> 2L, 2L -> 1L, 3L -> 1L, 7L -> 3L, 8L -> 7L, 9L -> 7L))
+    assert(!plans.asScala.exists(_.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[HyperLogLogPlusPlus])))),
+      "a rounds = 1 run executed an approx_count_distinct probe")
   }
 }
