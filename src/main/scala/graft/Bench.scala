@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.obs.RunMetrics
+
 /** Benchmark main: times the catalog on SPARK_GRAFT_SF_DIR.
   *
   * Measurement rules (accreted round 1 → 12; each clause names the
@@ -53,21 +55,12 @@ import org.apache.spark.sql.SparkSession
   *     from the baseline are always timed (fresh code gets a number
   *     the round it lands). SPARK_GRAFT_BENCH_ALL=1 times everything
   *     (used to re-record the baseline);
-  *   - DEGRADED-SWEEP self-exclusion (round-13 verdict item 2): each
-  *     sweep's calibration is checked against the baseline calibn_sec
-  *     both before AND after the sweep (the r13 run degraded mid-run:
-  *     sweep 2 calibrated 13x baseline, silently turning min-of-2
-  *     into min-of-1). A sweep reading >1.5x on either probe has its
-  *     samples flagged and listed under "degraded_sweeps"; a
-  *     replacement sweep runs if the feasibility arithmetic fits (at
-  *     most one). Published per-entry numbers prefer healthy samples,
-  *     falling back to flagged ones only when no sweep was healthy;
   *   - budget arithmetic, closed by construction (round-12): with the
   *     470 s default budget, worst-case healthy-session spend is
   *     warm-up (hard cap 100) + restart/settle/quiesce (≤ 75) +
-  *     calib (~6) + sweep 1 (~70) + inter-sweep (≤ 30) + sweep 2
-  *     (~70) ≈ 350 s. A degraded host (the r11 1.8x bandwidth-starved
-  *     session) inflates sweeps to ~130 s each: the pre-sweep-2
+  *     sweep 1 (~70) + inter-sweep (≤ 20) + sweep 2 (~70) ≈ 335 s. A
+  *     degraded host (the r11 1.8x bandwidth-starved session)
+  *     inflates sweeps to ~130 s each: the pre-sweep-2
   *     feasibility check then stops cleanly after ONE complete sweep —
   *     every timed entry still sampled, partial stays false — instead
   *     of blowing the budget mid-sweep into an alphabetically-biased
@@ -75,20 +68,14 @@ import org.apache.spark.sql.SparkSession
   *   - System.gc() + unpersist between sweeps: stops heap growth from
   *     biasing sweep 2 and drops sweep 1's localCheckpoint blocks
   *     where nothing is being timed;
-  *   - fixed CPU calibration probes (single-thread + all-thread LCG)
-  *     and a memory-BANDWIDTH probe before each sweep, reported as
-  *     calib1/calibn/calibm (medians) plus the per-sweep readings
-  *     under "sweep_cals": the probes' cost is machine-constant, so a
-  *     reading far above its baseline identifies a slow SESSION (r7
-  *     read 1.478x on a commit that changed no plans; the r11 session
-  *     read 1.8x on both LCG probes before any repo code ran) — and
-  *     the per-sweep readings let a reader separate session noise
-  *     from code in one glance without cross-referencing logs;
-  *   - single-task stage detector: any timed entry whose execution
-  *     contains a ≥ 3 s stage with tasks = 1 is listed under
-  *     "single_task" — the r10/r11 class of scale defect (AQE or a
-  *     1-file input collapsing a hot stage onto one core) becomes a
-  *     machine-checkable artifact field instead of a log forensic;
+  *   - per-entry counters from [[graft.obs.RunMetrics]], attributed by
+  *     job group (one `bench-<entry>-<seq>` group per run): the last
+  *     timed run's jobs, stages, tasks, shuffle, spill, CPU and GC are
+  *     published under "metrics" — load-independent numbers next to
+  *     the wall times. Any timed entry whose run contains a ≥ 3 s stage
+  *     with tasks = 1 is listed under "single_task" — the r10/r11
+  *     class of scale defect (AQE or a 1-file input collapsing a hot
+  *     stage onto one core) as a machine-checkable artifact field;
   *   - `vs_baseline` excludes `deadlined` entries; raw numbers stay in
   *     `queries` (a deadlined sample is the lower bound of a run that
   *     never finished, not a plan measurement);
@@ -103,14 +90,16 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** Timed sweeps per run (see the TWO-sweeps rule above). */
+  private val Sweeps = 2
+
   /** Catalog entries that exist solely to oracle a sketch algorithm
-    * with a cross-engine-portable (md5-prefix) hash; production twins
+    * with a cross-engine-portable (md5-prefix) hash: the `_portable`
+    * suffix, the rule `tools/make_baseline.py` records as the
+    * baseline's `verification_only`. Production twins
     * (`dedup_minhash_lsh`, `doc_winnow_fingerprint`, `text_simhash`)
     * keep xxhash64 and are counted as production. */
-  val verificationOnly: Set[String] =
-    Set("doc_winnow_portable", "dedup_minhash_portable",
-      "text_simhash_portable", "dedup_simhash_portable",
-      "heavy_hitters_mg_portable")
+  def verificationOnly(name: String): Boolean = name.endsWith("_portable")
 
   /** Parse (rotation_group, slice-was-timed) from ONE committed bench
     * artifact's RAW text. Committed artifacts come in two shapes: the
@@ -191,95 +180,6 @@ object Bench {
     kept
   }
 
-  /** Pure post-hoc single-task attribution (r15 verdict item 4 →
-    * r16 item 6): assign each recorded ≥ 3 s one-task stage event to
-    * the TIMED run whose [start, end] wall-clock window contains the
-    * stage's midpoint. Windows come only from `attribute = true` runs
-    * (the serial timed sweeps), so stages from the concurrent warm-up,
-    * the settle pass, or inter-sweep gaps fall outside every window
-    * and are dropped — the r15 failure mode was exactly a warm-up
-    * stage blamed on `date_functions`' 0.245 s timed run. Extracted
-    * pure so `BenchRotationSpec` can pin the scoping on a synthetic
-    * stage log. */
-  private[graft] def attributeSingleTask(
-      windows: Seq[(String, Long, Long)],
-      events: Seq[(Long, String)]): Set[String] =
-    events.flatMap { case (midMs, _) =>
-      windows.collectFirst { case (n, a, b) if midMs >= a && midMs <= b => n }
-    }.toSet
-
-  @volatile private var calibSink = 0L // defeats dead-code elimination
-
-  private def lcgSpin(iters: Long): Long = {
-    var h = 0L
-    var i = 0L
-    while (i < iters) {
-      h = h * 6364136223846793005L + 1442695040888963407L
-      i += 1
-    }
-    h
-  }
-
-  /** Fixed-cost CPU probe: `threads` concurrent LCG spins of 2e8 steps
-    * each. Pure integer ALU work — no allocation, no I/O — so its wall
-    * time moves ONLY with machine load/contention, never with any code
-    * in this repo. */
-  private def calibrate(threads: Int): Double = {
-    val t0 = System.nanoTime()
-    val ts = (1 to threads).map { _ =>
-      new Thread(() => { calibSink = lcgSpin(200000000L) })
-    }
-    ts.foreach(_.start())
-    ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Fixed-cost MEMORY-BANDWIDTH probe: `threads` concurrent strided
-    * sums over per-thread 64 MB long arrays (touched at allocation, so
-    * steady-state reads, not page faults). Exists because the ALU
-    * probe is CACHE-RESIDENT and therefore BLIND to the dominant
-    * co-location hazard on a shared host: memory-bandwidth
-    * saturation. A starved session shows the exact signature the r10
-    * verdict called "transient session pressure" — normal LCG
-    * calibration, yet the same stages at ~10x executorCpuTime (cycles
-    * stalled on memory bill as CPU) and heavy jvmGCTime (GC is
-    * bandwidth-bound) — measured on this box: an idle-VM steady-state
-    * read rate of 0.1-1.9 GB/s (vs the >10 GB/s a healthy host
-    * gives) while the LCG probes read within 15% of baseline.
-    * calibm_sec makes that session state machine-detectable in the
-    * artifact. */
-  private lazy val memProbeArrays: IndexedSeq[Array[Long]] =
-    (1 to 8).map { _ =>
-      val a = new Array[Long](8 * 1024 * 1024) // 64 MB
-      var i = 0
-      // stride 512 longs = 4 KB — one write per PAGE. The first cut
-      // strode 1024 longs (8 KB), leaving every other page untouched,
-      // so the session's first calibrateMem() billed soft faults as
-      // bandwidth and inflated sweep 1's calibm_sec.
-      while (i < a.length) { a(i) = i; i += 512 } // touch every page
-      a
-    }
-
-  private def calibrateMem(): Double = {
-    val arrays = memProbeArrays // allocated once, reused every sweep
-    val t0 = System.nanoTime()
-    val ts = arrays.map { a =>
-      new Thread(() => {
-        var s = 0L
-        var pass = 0
-        while (pass < 4) {
-          var i = 0
-          while (i < a.length) { s += a(i); i += 8 } // one read/cacheline
-          pass += 1
-        }
-        calibSink = s
-      })
-    }
-    ts.foreach(_.start())
-    ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Session.cpus.toString
@@ -313,21 +213,7 @@ object Bench {
     def elapsedSec: Double = (System.nanoTime() - t0Wall) / 1e9
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "470").toDouble
-    val nSweeps = sys.env.getOrElse("SPARK_GRAFT_BENCH_SWEEPS", "2").toInt
-
-    // SPARK_GRAFT_BENCH_SKIP: comma-separated entries excluded from the
-    // run entirely (warm-up AND sweeps) — the A/B attribution knob for
-    // correlated-drift hunts (r17 verdict item 1: does the portable-md5
-    // elevation band clear when the md5-dense column entries sit out a
-    // sweep?). Diagnostic only: a skip run is marked in the artifact
-    // ("skip_list") and is NOT a valid baseline-record input.
-    val skipList: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    val names = SparkEntry.queries.keys.toSeq.filterNot(skipList).sorted
-    if (skipList.nonEmpty)
-      System.err.println(s"[bench] SKIP list active (${skipList.size}): " +
-        skipList.toSeq.sorted.mkString(","))
+    val names = SparkEntry.queries.keys.toSeq.sorted
 
     // ----- baseline record (parsed once: ratios + the core shard list).
     // The baseline file is a flat JSON object; scrape it with regexes
@@ -350,11 +236,11 @@ object Bench {
       """"rotation_k":\s*([0-9]+)""".r.findFirstMatchIn(text)
         .map(_.group(1).toInt)
     }.getOrElse(3).max(1)
-    // Every baseline-driven DECISION (degradation shrink, sweep-cost
+    // Every baseline-driven DECISION (budget shrink, sweep-cost
     // prediction, vs_baseline) requires the run's config to match what
-    // the baseline recorded — calibn measured on different core counts
-    // or per-entry times from a different SF predict nothing. One flag,
-    // checked everywhere baseKv feeds a decision.
+    // the baseline recorded — per-entry times from a different SF or
+    // core count predict nothing. One flag, checked everywhere baseKv
+    // feeds a decision.
     val baselineConfigMatches: Boolean = baselineText.exists { text =>
       val baseSf = """"sf":\s*"([^"]+)"""".r
         .findFirstMatchIn(text).map(_.group(1))
@@ -432,27 +318,6 @@ object Bench {
     }
     System.err.println(
       s"[bench] rotation group $rotationG derived via $rotationSrc")
-    // Startup probe, published as "calib0": the session's host reading
-    // before any repo code runs, and the drift that scales the warm
-    // budget's sweep reserve. MIN of two probes 3 s apart: a one-off
-    // startup blip (an sbt-host GC, a compile-daemon tail) inflates one
-    // reading and passes; a real bandwidth-starved window persists for
-    // minutes and inflates both.
-    val calib0 = {
-      // FRESH-JVM BIAS FIX (r22): a cold JVM's first calibrateMem
-      // readings run 1.5-2.2x the warmed value (probe-array
-      // allocation/paging and GC settling bill as bandwidth; r21:
-      // startup 0.045 vs in-sweep 0.022). Two discarded warm-up
-      // triples bring the instruments to the steady state the sweep
-      // probes read; the measured min-of-two pair below is unchanged.
-      calibrate(1); calibrate(cpus.toInt); calibrateMem()
-      calibrateMem()
-      Thread.sleep(1000)
-      val a = (calibrate(1), calibrate(cpus.toInt), calibrateMem())
-      Thread.sleep(3000)
-      val b = (calibrate(1), calibrate(cpus.toInt), calibrateMem())
-      (math.min(a._1, b._1), math.min(a._2, b._2), math.min(a._3, b._3))
-    }
     def inRotation(n: String): Boolean =
       math.floorMod(
         scala.util.hashing.MurmurHash3.stringHash(n), rotationK) == rotationG
@@ -472,80 +337,18 @@ object Bench {
       if (benchAll || baseCore.isEmpty) Seq.empty
       else names.filter(n => !baseCore.contains(n) &&
         baseKv.contains(n) && inRotation(n))
-    val baseCalN: Option[Double] =
-      if (baselineConfigMatches) baseKv.get("calibn_sec").filter(_ > 0)
-      else None
-    val baseCalM: Option[Double] =
-      if (baselineConfigMatches) baseKv.get("calibm_sec").filter(_ > 0)
-      else None
-    // ratio vs the baseline's probe; 1.0 (always healthy) when no
-    // config-matched baseline exists to compare against
-    def calNRatio(c: Double): Double = baseCalN.map(c / _).getOrElse(1.0)
-    def calMRatio(c: Double): Double = baseCalM.map(c / _).getOrElse(1.0)
-    // A probe triple reads degraded when EITHER the ALU probe (>1.5x)
-    // or the bandwidth probe (>1.6x) is off baseline (r19: the mem
-    // check is new — the r18 mode was ALU-flat/bandwidth-2x and every
-    // ALU-only health gate passed while sweeps measured starvation)
-    def probeDegraded(c: (Double, Double, Double)): Boolean =
-      calNRatio(c._2) > 1.5 || calMRatio(c._3) > 1.6
-    def probeCal(): (Double, Double, Double) = {
-      val a = (calibrate(1), calibrate(cpus.toInt), calibrateMem())
-      Thread.sleep(2000)
-      val b = (calibrate(1), calibrate(cpus.toInt), calibrateMem())
-      (math.min(a._1, b._1), math.min(a._2, b._2), math.min(a._3, b._3))
-    }
     System.err.println(f"[bench] round $roundIdx: timing " +
       f"${timedNames.size}/${names.size} entries (core ${baseCore.size}, " +
       f"rotation group $rotationG/$rotationK" +
       (if (benchAll) ", BENCH_ALL" else "") + ")")
 
-    // Stage-attribution listener: when a timed query stalls, the log
-    // must say WHERE (driver wait vs task CPU vs task count) — the
-    // session-pressure windows move between runs and are unreproducible
-    // in quiet profiling, so the evidence has to come from the run
-    // that hit them.
-    val stageLog =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // Single-task scale-defect detector: entries recorded here had a
-    // ≥ 3 s stage running as ONE task during their timed run — the
-    // shape that cannot scale out (r10's 466 s CC stage, r11's 1-file
-    // CSV write). Reported as "single_task" in the artifact.
-    // Attribution is POST-HOC by wall-clock window, not by reading a
-    // current-entry variable at event time: listener events arrive on
-    // the AsyncEventQueue thread, which can lag the driver past the
-    // end of a run — an event-time lookup can blame the NEXT entry
-    // (or drop the finding) exactly when a heavy final stage is the
-    // thing being reported. The listener records (midpointMs, raw
-    // line); timed runs record their [start, end] windows; the
-    // artifact joins the two at the end, when the bus has drained.
-    val singleTaskEvents =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
-    val timedWindows =
-      new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
+    // One recorder for the whole run, on each session: counters per
+    // `bench-<entry>-<seq>` job group, read after the last sweep.
+    val rec = new RunMetrics.Recorder(keepPlans = false)
     def newSession(): SparkSession = {
       val s = buildSession()
       s.sparkContext.setLogLevel("WARN")
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val i = sc.stageInfo
-            val dur = (for { a <- i.completionTime; b <- i.submissionTime }
-              yield a - b).getOrElse(-1L)
-            if (dur >= 2000) {
-              val m = i.taskMetrics
-              stageLog.add(f"stage ${i.stageId} real ${dur / 1000.0}%.1f s " +
-                f"tasks=${i.numTasks} cpu=${m.executorCpuTime / 1e9}%.1f " +
-                f"run=${m.executorRunTime / 1e3}%.1f " +
-                f"gc=${m.jvmGCTime / 1e3}%.1f")
-            }
-            if (dur >= 3000 && i.numTasks == 1)
-              i.completionTime.foreach(end =>
-                singleTaskEvents.add((end - dur / 2,
-                  f"stage ${i.stageId} ${dur / 1000.0}%.1f s")))
-          }
-        })
+      s.sparkContext.addSparkListener(rec)
       s
     }
     var spark = newSession()
@@ -564,20 +367,20 @@ object Bench {
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val watchdog = new java.util.Timer("bench-deadline", true)
     val groupSeq = new java.util.concurrent.atomic.AtomicLong()
-    // `attribute`: stage-attribution diagnostics share ONE queue, so
-    // they are only meaningful when queries run serially — the timed
-    // sweeps. The 8-thread warm-up passes false (clears would race
-    // with other threads' appends and misattribute stages).
-    // `cancelSink`: when a NON-attributed (warm) run is deadline-
+    // Every run as (entry, job group, seconds, timed), read against
+    // the recorder once the bus has settled after the last sweep.
+    val runs =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Double, Boolean)]()
+    // `timed`: a run of the serial timed sweeps; the 8-thread warm-up
+    // and the settle pass are untimed.
+    // `cancelSink`: when an untimed (warm) run is deadline-
     // cancelled, its name lands here — the warm pass's caller must
     // treat a cancelled warm as NOT warmed (r19 ADVICE: an entry whose
     // warm runOnce was cancelled mid-execution is partially warmed yet
     // was absent from the skipped list, a residual cold-timed path).
-    def runOnce(name: String, attribute: Boolean,
+    def runOnce(name: String, timed: Boolean,
         deadlineSec: Double = queryDeadlineSec,
         cancelSink: java.util.Set[String] = null): Double = {
-      if (attribute) stageLog.clear()
-      val wall0 = System.currentTimeMillis()
       val group = s"bench-$name-${groupSeq.incrementAndGet()}"
       spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
       @volatile var killed = false
@@ -589,39 +392,31 @@ object Bench {
       }
       watchdog.schedule(killer, (deadlineSec * 1000).toLong, 2000L)
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        killer.cancel()
-        spark.sparkContext.clearJobGroup()
-        if (attribute)
-          timedWindows.add((name, wall0, System.currentTimeMillis()))
+      val sec = try {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
         if (killed) {
           // Only a TIMED run's cancellation is a reportable deadline:
           // the concurrent warm-up runs 8 heavy entries at once, so a
           // warm-up cancellation measures contention, not the query
           // (r11: a 2.4 s entry was flagged from its warm-up run).
-          if (attribute) deadlined.add(name)
+          if (timed) deadlined.add(name)
           else if (cancelSink != null) cancelSink.add(name)
           System.err.println(f"[bench] $name hit the per-query deadline " +
             f"($deadlineSec%.0f s): cancelled" +
-            (if (attribute) ", recording lower bound" else " (warm-up)"))
-          return (System.nanoTime() - t0) / 1e9
+            (if (timed) ", recording lower bound" else " (warm-up)"))
+          (System.nanoTime() - t0) / 1e9
+        } else {
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          -1.0
         }
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
+      } finally {
+        killer.cancel()
+        spark.sparkContext.clearJobGroup()
       }
-      killer.cancel()
-      spark.sparkContext.clearJobGroup()
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (attribute) {
-        timedWindows.add((name, wall0, System.currentTimeMillis()))
-        if (sec >= 3.0) {
-          System.err.println(
-            s"[bench] slow $name ${math.rint(sec * 10) / 10} s: " +
-              stageLog.asScala.mkString("; "))
-        }
-      }
+      runs.add((name, group, sec, timed))
       sec
     }
 
@@ -678,12 +473,10 @@ object Bench {
     // different subsets; the one that missed dedup_cluster_cc paid
     // 55 s for it in sweep 1 and the sweep blew the budget).
     // Per-entry OBSERVED warm wall-times (r19 verdict item 1a): the
-    // probes are blind to the block-manager/IO stall mode (ALU and
-    // bandwidth read near-baseline while task threads park — the
-    // driver's r19 run published drift 1.05/1.29 around 50-145x entry
-    // samples), so the only instrument that sees a stall window is
-    // the work itself. The warm pass IS that instrument: its per-entry
-    // costs feed the post-warm fit-shrink.
+    // block-manager/IO stall mode (task threads park while the host
+    // reads healthy) shows only in the work itself, so the warm pass
+    // is the instrument: its per-entry costs feed the post-warm
+    // fit-shrink.
     val warmObserved =
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
     def warmConcurrent(entries: Seq[String], budget: Double,
@@ -726,7 +519,7 @@ object Bench {
             // entries that matter still warm fully.
             val remain = budget - (System.nanoTime() - w0) / 1e9
             val e0 = System.nanoTime()
-            runOnce(n, attribute = false,
+            runOnce(n, timed = false,
               deadlineSec = math.min(queryDeadlineSec,
                 math.max(40.0, remain + 30.0)),
               cancelSink = cancelled)
@@ -768,10 +561,9 @@ object Bench {
       // skipped entries' first-run cost is paid anyway, serially,
       // INSIDE the measured sweep. So give the warm pass every second
       // the sweep arithmetic does not need: reserve restart + settle +
-      // quiesce (~75 s), calibration (~6 s), two predicted sweeps
-      // (baseline-driven with the same 1.3x headroom as the
-      // feasibility check, scaled by the startup probe's session
-      // factor), the inter-sweep gap (~30 s) and 25 s slack; the
+      // quiesce (~75 s), two predicted sweeps (baseline-driven with
+      // the same 1.3x headroom as the feasibility check), the
+      // inter-sweep gap (~30 s) and 25 s slack; the
       // remainder is the warm budget, floored at the old 100 s and
       // capped at 240 s (~the 8-thread cost of warming a full
       // 236-entry catalog; beyond that a warm pass is soaking up a
@@ -791,18 +583,7 @@ object Bench {
             else known.toSeq.sorted.apply(known.size / 2)
           val baseSum = known.sum + (timedNames.size - known.size) * median
           if (covered && baseSum > 0) {
-            // worst of the ALU and bandwidth probe drifts (r19): the
-            // r18 host was ALU-flat / bandwidth-2x, and a CPU-only
-            // factor under-reserved the sweeps by the same 2x. The
-            // 0.8 floor sits OUTSIDE the max (r19 ADVICE: with calibn
-            // absent and a faster-than-baseline bandwidth probe, an
-            // inner-floored CPU branch of 1.0 vs a mem branch of 0.6
-            // still combined below the floor's intent)
-            val sessionFactor = math.max(0.8, math.max(
-              baseCalN.map(calib0._2 / _).getOrElse(1.0),
-              baseCalM.map(calib0._3 / _).getOrElse(1.0)))
-            val reserved =
-              75.0 + 6.0 + 2 * 1.3 * sessionFactor * baseSum + 30.0 + 25.0
+            val reserved = 75.0 + 2 * 1.3 * baseSum + 30.0 + 25.0
             math.max(100.0, math.min(240.0, budgetSec - elapsedSec - reserved))
           } else 100.0
         }
@@ -889,44 +670,36 @@ object Bench {
       val settle =
         timedNames.sortBy(costRank).drop(timedNames.size / 2).take(3)
       settle.foreach(n =>
-        runOnce(n, attribute = false, deadlineSec = 15.0))
+        runOnce(n, timed = false, deadlineSec = 15.0))
     }
     // Post-warm budget fit (r19, verdict item 2b): even a fully-warmed
     // timed set can blow the budget on a degraded host — warmed
     // entries on the r18 bandwidth-starved box ran 1.2-2x their
     // baseline, so two sweeps of 158 entries could not fit where the
     // startup arithmetic (healthy-host costs) said they would. Predict
-    // the two sweeps from the baseline per-entry costs scaled by the
-    // WORST current probe drift (ALU and bandwidth — the r18 mode was
-    // ALU-flat/bandwidth-2x, invisible to a CPU-only factor) and, when
-    // they don't fit, drop entries rotation-first / costliest-first
-    // until they do. The artifact stays COMPLETE over what it times;
-    // "budget_dropped" records what it chose not to cover.
+    // the two sweeps per entry from the worse of the baseline cost and
+    // what the warm pass just observed and, when they don't fit, drop
+    // entries rotation-first / costliest-first until they do. The
+    // artifact stays COMPLETE over what it times; "budget_dropped"
+    // records what it chose not to cover.
     if (!benchAll && baselineConfigMatches) {
-      val fit = probeCal()
-      val fCpu = baseCalN.map(fit._2 / _).getOrElse(1.0)
-      val fMem = baseCalM.map(fit._3 / _).getOrElse(1.0)
-      val factor = math.max(0.8, math.max(fCpu, fMem))
       val known = timedNames.filter(baseKv.contains)
       if (known.size >= timedNames.size * 0.9 && known.nonEmpty) {
         val costs = known.map(baseKv).sorted
         val median = costs(costs.size / 2)
         def cost(n: String): Double = baseKv.getOrElse(n, median)
-        // OBSERVED-cost arm (r19 verdict item 1a): the probes are
-        // blind to the block-manager stall mode (the r19 driver run
-        // published drift 1.05/1.29 around 50-145x entry samples), so
-        // the predictor also reads what the warm pass just MEASURED.
-        // Divide the 8-way-contended warm wall-time by 3 (healthy
-        // contention inflates 2-4x, so /3 ~ solo cost; a stalled 60 s
-        // warm still predicts 20 s >> baseline) and take the worse of
-        // the probe-scaled baseline and the observed estimate.
-        def effCost(n: String): Double = math.max(factor * cost(n),
+        // OBSERVED-cost arm (r19 verdict item 1a): divide the 8-way-
+        // contended warm wall-time by 3 (healthy contention inflates
+        // 2-4x, so /3 ~ solo cost; a stalled 60 s warm still predicts
+        // 20 s >> baseline) and take the worse of the baseline and the
+        // observed estimate.
+        def effCost(n: String): Double = math.max(cost(n),
           Option(warmObserved.get(n)).map(_.doubleValue / 3.0)
             .getOrElse(0.0))
-        // 45 s overhead: pre-sweep quiesce + both sweeps' pre/post
-        // probe pairs + the inter-sweep unpersist/gc/quiesce gap
+        // 30 s overhead: pre-sweep quiesce + the inter-sweep
+        // unpersist/gc/quiesce gap
         def fits(set: Seq[String]): Boolean =
-          elapsedSec + 45.0 + 2 * 1.3 * set.map(effCost).sum <=
+          elapsedSec + 30.0 + 2 * 1.3 * set.map(effCost).sum <=
             budgetSec
         if (!fits(timedNames)) {
           val rotationSet = rotationSlice.toSet
@@ -934,8 +707,7 @@ object Bench {
             isCore = n => !rotationSet(n), cost = effCost, fits = fits)
           budgetDropped = timedNames.size - kept.size
           System.err.println(f"[bench] predicted 2-sweep cost exceeds " +
-            f"remaining budget (probe drift $factor%.2fx, observed-warm " +
-            f"arm armed, elapsed " +
+            f"remaining budget (elapsed " +
             f"$elapsedSec%.0f/$budgetSec%.0f s): dropping $budgetDropped " +
             f"entries (rotation-first) -> ${kept.size} timed")
           timedNames = kept
@@ -973,107 +745,48 @@ object Bench {
       }
     }
 
-    // Degraded-sweep self-exclusion (round-13 verdict item 2): the r13
-    // artifact's sweep 2 calibrated at 13x baseline (co-located load
-    // began mid-run), silently turning min-of-2 into min-of-1 — a
-    // startup probe cannot see degradation that begins mid-run.
-    // Every sweep is health-checked against the baseline
-    // calibn_sec both BEFORE and AFTER it runs (degradation can begin
-    // mid-sweep); a sweep reading >1.5x on either probe has its
-    // samples FLAGGED, is listed under "degraded_sweeps", and a
-    // replacement sweep runs if the feasibility arithmetic says it
-    // fits (at most one — the budget bounds retries). Published
-    // numbers prefer healthy samples; if NO sweep is healthy the
-    // flagged samples are still published (marked) rather than
-    // publishing nothing.
-    val samples =
-      scala.collection.mutable.Map.empty[String, List[(Double, Boolean)]]
-    val sweepCals =
-      scala.collection.mutable.ArrayBuffer.empty[(Double, Double, Double)]
-    val sweepCalsPost =
-      scala.collection.mutable.ArrayBuffer.empty[(Double, Double, Double)]
-    val sweepHealthy = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    val degradedSweeps = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     var sweepsCompleted = 0
-    var healthySweeps = 0
     var partial = false
     var lastSweepSec = 0.0
-    val maxAttempts = nSweeps + 1 // at most ONE replacement sweep
-    // Warm-sweep cost predictor, shared by the pre-sweep feasibility
-    // check and the post-degradation-wait recheck. BASELINE-driven,
-    // not last-sweep-driven (round-12): sweep 1 absorbs the first-run
-    // cost of every entry the warm-up deadline skipped, so
-    // `1.2 x lastSweepSec` over-predicts a WARM sweep 2 by 2-3x. A
-    // warm sweep's best predictor is the baseline's per-entry sum over
-    // the timed set, scaled by how much slower THIS session runs the
-    // fixed CPU probe, with 1.3x headroom; falls back to 1.2x last
-    // sweep when the baseline doesn't cover the timed set.
+    // Warm-sweep cost predictor for the pre-sweep feasibility check.
+    // BASELINE-driven, not last-sweep-driven (round-12): sweep 1
+    // absorbs the first-run cost of every entry the warm-up deadline
+    // skipped (~1.4 s/entry observed, much more for heavies), so
+    // `1.2 x lastSweepSec` over-predicts a WARM sweep 2 by 2-3x and
+    // cancelled runs that had ample budget (the full-catalog
+    // shakedown: sweep 1 cold 344 s, warm sweep cost ~110 s, 345 s
+    // remaining — stopped). A warm sweep's best predictor is the
+    // baseline's per-entry sum over the timed set with 1.3x headroom;
+    // falls back to 1.2 x last sweep when the baseline doesn't cover
+    // the timed set (pre-re-record artifacts, BENCH_ALL runs on a
+    // stale baseline).
     def predictNextSweepSec(): Double = {
       val baseSum = timedNames.flatMap(baseKv.get).sum
       val covered = baselineConfigMatches &&
         timedNames.count(baseKv.contains) >= timedNames.size * 0.9
-      // session factor from the last HEALTHY pre-sweep probe when one
-      // exists: a mid-sweep degradation window (post-probe flagged)
-      // must not veto the replacement sweep that exists to redo its
-      // samples
-      val lastGoodCal = sweepCals.zip(sweepHealthy)
-        .collect { case (c, true) => c }.lastOption
-        .orElse(sweepCals.lastOption)
-      // worst of the ALU and bandwidth drifts (r19): a CPU-only factor
-      // under-predicted the r18 bandwidth-starved sweeps by ~2x
-      val sessionFactor = math.max(
-        baseCalN.flatMap(b => lastGoodCal.map(c => c._2 / b))
-          .getOrElse(1.0),
-        baseCalM.flatMap(b => lastGoodCal.map(c => c._3 / b))
-          .getOrElse(1.0)).max(0.8)
-      if (covered && baseSum > 0) 1.3 * sessionFactor * baseSum
+      if (covered && baseSum > 0) 1.3 * baseSum
       else lastSweepSec * 1.2
     }
-    // Attempts that ran NO samples (persistent pre-sweep degradation
-    // with a healthy sweep in hand) are reported separately from
-    // degraded_sweeps: a skipped attempt has no row in sweep_cals /
-    // sweep_cals_post, so listing it under degraded_sweeps would
-    // mis-index readers correlating the three arrays (r14 ADVICE).
-    val skippedSweeps = scala.collection.mutable.ArrayBuffer.empty[Int]
     val sweepLoop = new scala.util.control.Breaks
     sweepLoop.breakable {
-      for (s <- 1 to maxAttempts) {
-        if (healthySweeps >= nSweeps) sweepLoop.break()
+      for (s <- 1 to Sweeps) {
         // Pre-sweep feasibility FIRST (round-12 review fix): the
         // inter-sweep unpersist + gc + quiesce costs ~20-35 s — paying
         // it for a sweep the check then cancels wastes exactly the
-        // budget the check exists to protect, and the +15 s overhead
-        // term below accounts for the quiesce that follows a GO
-        // decision, not one already spent.
-        // Pre-sweep feasibility: starting a sweep that cannot finish
+        // budget the check exists to protect, and the overhead term
+        // below accounts for the quiesce that follows a GO decision,
+        // not one already spent. Starting a sweep that cannot finish
         // only produces an alphabetically-biased partial — if the next
         // sweep's predicted cost doesn't fit in the remaining budget,
         // stop cleanly with the sweeps already collected (r11: sweep 3
         // was started with 97 s left against an 89.5 s previous sweep
         // and overran the budget mid-sweep — a partial artifact where
         // stopping at 2 clean sweeps was strictly better).
-        //
-        // The predictor is BASELINE-driven, not last-sweep-driven
-        // (round-12): sweep 1 absorbs the first-run cost of every
-        // entry the warm-up deadline skipped (~1.4 s/entry observed,
-        // much more for heavies), so `1.2 x lastSweepSec` over-
-        // predicts a WARM sweep 2 by 2-3x and cancelled runs that had
-        // ample budget (the full-catalog shakedown: sweep 1 cold
-        // 344 s, warm sweep cost ~110 s, 345 s remaining — stopped).
-        // A warm sweep's best predictor is the baseline's per-entry
-        // sum over the timed set, scaled by how much slower THIS
-        // session runs the fixed CPU probe, with 1.3x headroom. Falls
-        // back to 1.2 x last sweep when the baseline doesn't cover
-        // the timed set (pre-re-record artifacts, BENCH_ALL runs on
-        // a stale baseline).
         if (s > 1) {
           val estNext = predictNextSweepSec()
-          // 30 s overhead term: inter-sweep quiesce (~15) + the pre
-          // AND post probeCal() pairs (~8-14) that run inside every
-          // sweep since the r14 self-exclusion change — the old 15 s
-          // constant predated them and let a thin-slack run overshoot
-          // into a partial (r14 ADVICE)
-          if (elapsedSec + 30.0 + estNext > budgetSec) {
+          // 20 s overhead term: the inter-sweep gc + quiesce (≤ 19 s)
+          if (elapsedSec + 20.0 + estNext > budgetSec) {
             System.err.println(f"[bench] remaining budget " +
               f"${budgetSec - elapsedSec}%.0f s < overhead + predicted " +
               f"sweep ($estNext%.0f s): stopping after " +
@@ -1092,50 +805,6 @@ object Bench {
           System.gc()
           jitQuiesce(15.0)
         }
-        // MIN of two probes ~2 s apart (same estimator as calib0): the
-        // per-sweep calibration runs right after System.gc() + quiesce,
-        // and a concurrent-GC tail of the 32 GB heap inflates a single
-        // reading 7-30x (observed: sweep-2 cals [2.01, 2.11, 0.97] vs
-        // [0.285, 0.32, 0.033] on a healthy session whose sweep then
-        // ran FASTER than sweep 1). A one-off tail passes; sustained
-        // session degradation inflates both readings and is still
-        // detected.
-        var preCal = probeCal()
-        if (probeDegraded(preCal)) {
-          // degraded RIGHT NOW: co-located-load windows last minutes —
-          // wait one out once instead of spending ~90 s measuring
-          // samples that would only be flagged
-          System.err.println(f"[bench] pre-sweep calibration " +
-            f"${calNRatio(preCal._2)}%.2fx cpu / " +
-            f"${calMRatio(preCal._3)}%.2fx mem baseline: waiting 30 s " +
-            "for the window to pass")
-          Thread.sleep(30000)
-          preCal = probeCal()
-          // the 30 s wait + two probe pairs ran AFTER the feasibility
-          // check above — re-verify the budget before committing to a
-          // sweep, or a run that passed with thin slack overshoots
-          // into a partial artifact (r14 ADVICE)
-          if (s > 1 &&
-              elapsedSec + 10.0 + predictNextSweepSec() > budgetSec) {
-            System.err.println(f"[bench] budget no longer fits after " +
-              f"degradation wait (elapsed $elapsedSec%.0f s): stopping " +
-              f"after $sweepsCompleted sweeps")
-            sweepLoop.break()
-          }
-        }
-        if (probeDegraded(preCal) && healthySweeps > 0) {
-          // still degraded with a healthy sweep already in hand: a
-          // flagged sweep's samples would be excluded anyway — stop
-          // instead of burning the budget on them. Reported under
-          // skipped_sweeps (NOT degraded_sweeps): no samples ran, so
-          // there is no sweep_cals row to correlate with
-          skippedSweeps += s
-          System.err.println(f"[bench] sweep attempt $s skipped: " +
-            f"calibration ${calNRatio(preCal._2)}%.2fx cpu / " +
-            f"${calMRatio(preCal._3)}%.2fx mem baseline persists")
-          sweepLoop.break()
-        }
-        sweepCals += preCal
         val sw0 = System.nanoTime()
         // Budget shard (round-11): the `*_portable` verification twins
         // exist only to hash-oracle the sketch entries — their md5-as-
@@ -1151,15 +820,8 @@ object Bench {
         // heavies still run at the sweep's end, a COMPLETED sweep
         // times the identical set either way, and a partial stays
         // marked partial.
-        // verification twins are timed until a HEALTHY sample exists
-        // (on the standard run: once, in sweep 1 — identical to the
-        // old `s == 1` rule; a replacement for a degraded sweep 1
-        // re-times them so their only number isn't a flagged one)
-        val sweepNames = timedNames.filter(n => !verificationOnly(n) ||
-            !samples.getOrElse(n, Nil).exists(_._2))
+        val sweepNames = timedNames.filter(n => s == 1 || !verificationOnly(n))
           .sortBy(costRank)
-        val sweepSamples =
-          scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
         val inner = new scala.util.control.Breaks
         inner.breakable {
           for (n <- sweepNames) {
@@ -1179,30 +841,13 @@ object Bench {
             // `deadlined` and is therefore ratio-excluded.
             val clamp = math.min(queryDeadlineSec,
               math.max(20.0, budgetSec - elapsedSec - 10.0))
-            sweepSamples +=
-              ((n, runOnce(n, attribute = true, deadlineSec = clamp)))
+            samples(n) = runOnce(n, timed = true, deadlineSec = clamp) ::
+              samples.getOrElse(n, Nil)
             // NO per-query unpersist here: spreading the cleaner's RPCs
             // through the sweep cost ~100 s/sweep of untimed gaps; the
             // between-sweep unpersist + gc absorbs the same work where
             // nothing is being timed.
           }
-        }
-        // post-sweep probe: catches degradation that BEGAN mid-sweep
-        // (the r13 failure mode — pre-probe healthy, samples garbage).
-        // A budget-partial sweep skips it (nothing left to protect).
-        val postCal = if (partial) preCal else probeCal()
-        sweepCalsPost += postCal
-        val healthy = !probeDegraded(preCal) && !probeDegraded(postCal)
-        sweepHealthy += healthy
-        if (!healthy) {
-          degradedSweeps += s
-          System.err.println(f"[bench] sweep $s DEGRADED (cal pre " +
-            f"${calNRatio(preCal._2)}%.2fx/${calMRatio(preCal._3)}%.2fx " +
-            f"/ post ${calNRatio(postCal._2)}%.2fx/" +
-            f"${calMRatio(postCal._3)}%.2fx baseline): samples flagged")
-        } else if (!partial) healthySweeps += 1
-        sweepSamples.foreach { case (n, v) =>
-          samples(n) = (v, healthy) :: samples.getOrElse(n, Nil)
         }
         if (partial) sweepLoop.break()
         sweepsCompleted += 1
@@ -1213,40 +858,33 @@ object Bench {
     }
     // Lower-median over however many samples survived the budget (= min
     // for the standard 2-sweep run — the warmed-up reading, biased
-    // against one-off noise). HEALTHY samples only when any exist for
-    // the entry; a flagged sweep's samples are the fallback, never the
-    // preference.
+    // against one-off noise). A -1.0 (hard failure) in ANY sweep
+    // publishes -1.0: a load-sensitive crash must surface, never be
+    // shed with the noise.
     val results = names.flatMap { n =>
-      samples.get(n).map { all =>
-        val good = all.filter(_._2)
-        val t = (if (good.nonEmpty) good else all).map(_._1)
-        // a -1.0 (hard failure) in ANY sweep publishes -1.0, healthy
-        // or not: healthy-preferred selection must surface a
-        // load-sensitive crash, never shed it with the noise (r14
-        // ADVICE — the old code only checked the preferred pool)
-        n -> (if (all.exists(_._1 == -1.0)) -1.0
-              else t.sorted.apply((t.length - 1) / 2))
+      samples.get(n).map { t =>
+        n -> (if (t.contains(-1.0)) -1.0 else t.sorted.apply((t.length - 1) / 2))
       }
     }
-    def medCal(sel: ((Double, Double, Double)) => Double): Double = {
-      // healthy sweeps' probes only when any exist: a flagged sweep's
-      // inflated calibration must not feed vs_baseline_cal
-      val pool =
-        if (sweepHealthy.contains(true))
-          sweepCals.zip(sweepHealthy).collect { case (c, true) => c }.toSeq
-        else sweepCals.toSeq
-      val v = pool.map(sel).sorted
-      if (v.isEmpty) -1.0 else v((v.length - 1) / 2)
-    }
-    val calib1 = medCal(_._1)
-    val calibN = medCal(_._2)
-    val calibM = medCal(_._3)
 
-    // Post-hoc single-task attribution (give the async listener bus a
-    // moment to drain first).
-    Thread.sleep(1000)
-    val singleTask: Set[String] = attributeSingleTask(
-      timedWindows.asScala.toSeq, singleTaskEvents.asScala.toSeq)
+    // Counters: once the bus has settled, take every run's job group.
+    // An entry keeps its last timed run's counters; untimed runs (warm,
+    // settle) are taken and dropped. A bus that does not drain costs
+    // the counters, never the artifact.
+    try RunMetrics.settle(spark, rec)
+    catch { case e: Exception =>
+      System.err.println(s"[bench] metrics incomplete: ${e.getMessage}") }
+    val metrics = scala.collection.mutable.Map.empty[String, RunMetrics.Step]
+    runs.asScala.foreach { case (n, group, sec, timed) =>
+      val step = rec.take(group)
+      if (timed) {
+        metrics(n) = step
+        if (sec >= 3.0)
+          System.err.println(s"[bench] slow $n ${math.rint(sec * 10) / 10} s: " +
+            step.slow.mkString("; "))
+      }
+    }
+    val singleTask = metrics.collect { case (n, m) if m.singleTask > 0 => n }
     // Deadlined samples are lower bounds of runs that never finished:
     // they stay in "queries" but are kept out of vs_baseline.
     val ratioExcluded: Set[String] = deadlined.asScala.toSet
@@ -1268,98 +906,41 @@ object Bench {
     // test would match sf0.12 against the sf0.1 record) and the same
     // core/shuffle-partition count (a local[4] run against a local[32]
     // record would compare different parallelism).
-    val (vsBaseline, vsBaselineCal, vsBaselineCalm):
-        (Option[Double], Option[Double], Option[Double]) =
-      baselineText match {
-        case None => (None, None, None)
-        case Some(_) =>
-          if (!baselineConfigMatches)
-            (None, None, None)
-          else {
-            val shared = results.collect {
-              case (k, v) if v >= 0 && baseKv.contains(k) &&
-                !verificationOnly(k) && !ratioExcluded(k) => (v, baseKv(k)) }
-            val baseSum = shared.map(_._2).sum
-            val raw =
-              if (baseSum > 0) Some(shared.map(_._1).sum / baseSum) else None
-            // Session-speed-normalized ratio: divide out how much slower
-            // this session ran the fixed CPU probe than the baseline
-            // session did. raw answers "is this run slower than the
-            // recorded one"; calibrated answers "did the PLANS get
-            // slower". Both are reported — neither replaces the other.
-            val cal = for {
-              r <- raw
-              b <- baseKv.get("calibn_sec") if b > 0 && calibN > 0
-            } yield r * b / calibN
-            // Substrate-normalized ratio: divide out the WORST of the
-            // ALU and memory-bandwidth probe drifts. The r18 sessions
-            // showed the mode cal is blind to — calibn flat while
-            // calibm read 1.25-1.33x baseline (shared-host bandwidth
-            // starvation) and the median code-untouched entry tracked
-            // calibm, not calibn. A calm near 1.0 under an elevated
-            // vs_baseline says "substrate, not plans" from the
-            // artifact alone; a calm elevation is real code drift no
-            // probe excuses.
-            val calm = for {
-              r <- raw
-              bn <- baseKv.get("calibn_sec") if bn > 0 && calibN > 0
-              bm <- baseKv.get("calibm_sec") if bm > 0 && calibM > 0
-            } yield r / math.max(calibN / bn, calibM / bm)
-            (raw, cal, calm)
-          }
+    val vsBaseline: Option[Double] =
+      if (!baselineConfigMatches) None
+      else {
+        val shared = results.collect {
+          case (k, v) if v >= 0 && baseKv.contains(k) &&
+            !verificationOnly(k) && !ratioExcluded(k) => (v, baseKv(k)) }
+        val baseSum = shared.map(_._2).sum
+        if (baseSum > 0) Some(shared.map(_._1).sum / baseSum) else None
       }
-    def ratio3(name: String, v: Option[Double]): String =
-      v.map(r => s""","$name":${math.rint(r * 1000) / 1000}""").getOrElse("")
-    // The probe-drift factors calm divides out, published alongside it
-    // (r18 ADVICE): calm is DIAGNOSTIC — it attributes, it does not
-    // gate — and a reader must see how much was divided out to weigh
-    // it. Gate on raw/cal; read calm with drift_cpu/drift_mem beside.
-    val (driftCpu, driftMem): (Option[Double], Option[Double]) =
-      if (!baselineConfigMatches) (None, None)
-      else (baseKv.get("calibn_sec").filter(_ > 0)
-              .map(calibN / _).filter(_ > 0),
-            baseKv.get("calibm_sec").filter(_ > 0)
-              .map(calibM / _).filter(_ > 0))
-    val extra = ratio3("vs_baseline", vsBaseline) +
-      ratio3("vs_baseline_cal", vsBaselineCal) +
-      ratio3("vs_baseline_calm", vsBaselineCalm) +
-      ratio3("drift_cpu", driftCpu) +
-      ratio3("drift_mem", driftMem)
+    def num(x: Double): Double = math.rint(x * 1000) / 1000
     // Per-entry outliers, pre-digested: entries reading >= 3x their
     // baseline AND >= 1 s absolute — the rows a cross-round reader
     // would otherwise have to dig out of the 130+-entry queries map
-    // by hand. Together with calib0/sweep_cals this makes the artifact
-    // answer "was it the session or an entry?" in one glance.
+    // by hand.
     val regressions = results.collect {
       case (k, v) if baselineConfigMatches && v >= 1.0 &&
           baseKv.get(k).exists(b => b > 0 && v / b >= 3.0) =>
-        s"""{"q":"$k","sec":${math.rint(v * 1000) / 1000},""" +
+        s"""{"q":"$k","sec":${num(v)},""" +
           s""""base":${baseKv(k)}}"""
     }
     def strArr(xs: Iterable[String]): String =
       xs.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def calsJson(
-        cs: scala.collection.Seq[(Double, Double, Double)]): String = cs
-      .map { case (a, b, c) =>
-        s"[${math.rint(a * 1000) / 1000},${math.rint(b * 1000) / 1000}," +
-          s"${math.rint(c * 1000) / 1000}]" }
-      .mkString("[", ",", "]")
-    val sweepCalsJson = calsJson(sweepCals)
+    // "metrics" sits right after "queries": the driver keeps only a
+    // suffix of a long line, and the rotation fields must stay in it.
+    val metricsJson = metrics.toSeq.sortBy(_._1).map { case (n, m) =>
+      s""""$n":{"jobs":${m.jobs},"stages":${m.stages},"tasks":${m.tasks},""" +
+        s""""shuffle_read_bytes":${m.shufR},"shuffle_write_bytes":${m.shufW},""" +
+        s""""spill_bytes":${m.spill},"cpu_s":${num(m.cpuNs / 1e9)},""" +
+        s""""gc_s":${num(m.gcMs / 1e3)},"single_task":${m.singleTask}}"""
+    }.mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+        s""""metrics":$metricsJson,""" +
         s""""production_sec":$prod,"verification_sec":${total - prod},""" +
-        s""""calib1_sec":${math.rint(calib1 * 1000) / 1000},""" +
-        s""""calibn_sec":${math.rint(calibN * 1000) / 1000},""" +
-        s""""calibm_sec":${math.rint(calibM * 1000) / 1000},""" +
-        s""""sweep_cals":$sweepCalsJson,""" +
-        s""""calib0":[${math.rint(calib0._1 * 1000) / 1000},""" +
-        s"""${math.rint(calib0._2 * 1000) / 1000},""" +
-        s"""${math.rint(calib0._3 * 1000) / 1000}],""" +
         s""""partial":$partial,"sweeps_completed":$sweepsCompleted,""" +
-        s""""healthy_sweeps":$healthySweeps,""" +
-        s""""degraded_sweeps":${degradedSweeps.sorted.mkString("[", ",", "]")},""" +
-        s""""skipped_sweeps":${skippedSweeps.sorted.mkString("[", ",", "]")},""" +
-        s""""sweep_cals_post":${calsJson(sweepCalsPost)},""" +
         s""""unwarmed":$unwarmed,""" +
         s""""warm_dropped":$warmDropped,""" +
         s""""budget_dropped":$budgetDropped,""" +
@@ -1368,11 +949,11 @@ object Bench {
         s""""rotation_group":$rotationG,"rotation_k":$rotationK,""" +
         s""""rotation_timed":${rotationSlice.forall(samples.contains)},""" +
         s""""rotation_age":$rotAge,""" +
-        s""""skip_list":${strArr(skipList.toSeq.sorted)},""" +
         s""""single_task":${strArr(singleTask)},""" +
         s""""regressions":${regressions.mkString("[", ",", "]")},""" +
         s""""deadlined":${strArr(deadlined.asScala)}""" +
-        s"""$extra,"sf":"$sfDir"}"""
+        vsBaseline.map(r => s""","vs_baseline":${num(r)}""").getOrElse("") +
+        s""","sf":"$sfDir"}"""
     println(line)
     Files.writeString(Paths.get("bench_out.json"), line)
     spark.stop()

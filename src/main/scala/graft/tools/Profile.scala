@@ -1,17 +1,14 @@
 package graft.tools
 
 import java.lang.management.ManagementFactory
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Semaphore, TimeUnit}
 
-import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.execution.FormattedMode
 
 import graft.{Session, SparkEntry}
+import graft.obs.RunMetrics.{Recorder, Step, inGroup, recording, settle}
 
 /** The one profiler for catalog entries, in a quiet session of its own.
   *
@@ -32,99 +29,17 @@ import graft.{Session, SparkEntry}
   */
 object Profile {
   val Reps = 5
-  private val SettleGroup = "profile-settle"
-
-  /** Counters of one step: every job run under one job group. */
-  final class Step {
-    var jobs, stages, tasks, shufR, shufW, spill, cpuNs, gcMs = 0L
-    val slow = ArrayBuffer.empty[String]
-  }
 
   /** One timed run: wall seconds and counters per step, driver deltas. */
   final case class Run(constructS: Double, executeS: Double,
       construct: Step, execute: Step, driverGcMs: Long, jitMs: Long)
-
-  /** The one `SparkListener` and `QueryExecutionListener`: counters per
-    * job group, and (with `keepPlans`) every checkpoint's query. Both
-    * sit on the listener bus's shared queue, so after [[settle]] every
-    * earlier event has been seen. */
-  final class Recorder(keepPlans: Boolean) extends SparkListener
-      with QueryExecutionListener {
-    private val steps = new ConcurrentHashMap[String, Step]()
-    private val stageGroup = new ConcurrentHashMap[Int, String]()
-    private val settleJobs = ConcurrentHashMap.newKeySet[Int]()
-    private[tools] val settled = new Semaphore(0)
-    private val plans = new ConcurrentLinkedQueue[(String, QueryExecution)]()
-
-    private def group(p: java.util.Properties): Option[String] =
-      Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-    private def step(g: String): Step = steps.computeIfAbsent(g, _ => new Step)
-
-    override def onJobStart(e: SparkListenerJobStart): Unit = group(e.properties)
-      .foreach(g => if (g == SettleGroup) settleJobs.add(e.jobId) else step(g).jobs += 1)
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      if (settleJobs.remove(e.jobId)) settled.release()
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      group(e.properties).foreach(stageGroup.put(e.stageInfo.stageId, _))
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      Option(stageGroup.remove(e.stageInfo.stageId)).map(step).foreach { s =>
-        val i = e.stageInfo
-        val m = i.taskMetrics
-        s.stages += 1; s.tasks += i.numTasks; s.spill += m.diskBytesSpilled
-        s.shufR += m.shuffleReadMetrics.totalBytesRead
-        s.shufW += m.shuffleWriteMetrics.bytesWritten
-        s.cpuNs += m.executorCpuTime; s.gcMs += m.jvmGCTime
-        val dur = i.completionTime.zip(i.submissionTime).fold(-1L) { case (a, b) => a - b }
-        if (dur >= 500) {
-          val ops = i.rddInfos.flatMap(_.scope).flatMap(_.name.split("\n")) // SQL operators
-            .distinct.take(8).mkString("|")
-          s.slow += f"stage ${i.stageId}%5d ${dur / 1e3}%6.2f s " +
-            f"tasks=${i.numTasks}%-4d cpu=${m.executorCpuTime / 1e9}%6.1f " +
-            f"run=${m.executorRunTime / 1e3}%6.1f gc=${m.jvmGCTime / 1e3}%5.1f " +
-            f"deser=${m.executorDeserializeTime / 1e3}%5.1f " +
-            f"fetchWait=${m.shuffleReadMetrics.fetchWaitTime / 1e3}%5.1f  $ops"
-        }
-      }
-    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-      if (keepPlans && (f == "localCheckpoint" || f == "checkpoint")) plans.add(f -> qe)
-    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-
-    /** Removes and returns the counters of `group` (empty if none ran). */
-    def take(group: String): Step = Option(steps.remove(group)).getOrElse(new Step)
-    /** Removes and returns the checkpoint queries seen so far, in order. */
-    def takePlans(): Seq[(String, QueryExecution)] =
-      Iterator.continually(plans.poll()).takeWhile(_ != null).toSeq
-  }
-
-  /** Runs `body` with `rec` on both listener buses, removed again however `body` ends. */
-  def recording[A](spark: SparkSession, rec: Recorder)(body: => A): A = {
-    spark.sparkContext.addSparkListener(rec)
-    spark.listenerManager.register(rec)
-    try body
-    finally { spark.sparkContext.removeSparkListener(rec); spark.listenerManager.unregister(rec) }
-  }
-
-  /** Blocks until `rec` has seen every event posted so far: a one-task
-    * marker job's end arrives after all of them on the same queue. */
-  def settle(spark: SparkSession, rec: Recorder): Unit = {
-    inGroup(spark, SettleGroup)(spark.sparkContext.parallelize(Seq(0), 1).count())
-    require(rec.settled.tryAcquire(60, TimeUnit.SECONDS), "listener bus did not drain in 60 s")
-  }
-
-  /** `body` under job group `group`, with its wall seconds. */
-  def inGroup[A](spark: SparkSession, group: String)(body: => A): (A, Double) = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    val t0 = System.nanoTime()
-    try (body, (System.nanoTime() - t0) / 1e9) finally sc.clearJobGroup()
-  }
 
   private def gcMs: Long = ManagementFactory.getGarbageCollectorMXBeans
     .stream().mapToLong(_.getCollectionTime).sum
   private def jitMs: Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
 
   /** One untimed warm-up of catalog entry `name`, then [[Reps]] timed
-    * runs; `rec` must be [[recording]]. */
+    * runs; `rec` must be [[graft.obs.RunMetrics.recording]]. */
   def timeEntry(spark: SparkSession, rec: Recorder, sfDir: String,
       name: String): Seq[Run] = {
     val fn = SparkEntry.queries(name)

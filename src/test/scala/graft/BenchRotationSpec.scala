@@ -71,32 +71,11 @@ class BenchRotationSpec extends AnyFunSuite {
     assert(Bench.nextRotationGroup(Seq.empty, 3) === None)
   }
 
-  test("single-task attribution: an event is blamed on exactly the " +
-      "timed run whose window contains its midpoint") {
-    // synthetic stage log around two timed runs:
-    //   warm-up stage at t=500 (before any window), q_a [1000,2000],
-    //   gap stage at t=2500, q_b [3000,6000], settle stage at t=9000
-    val windows = Seq(("q_a", 1000L, 2000L), ("q_b", 3000L, 6000L))
-    val events = Seq(
-      (500L, "warm-up stage"),   // concurrent warm-up: no window
-      (1500L, "stage 12 4.0 s"), // inside q_a
-      (2500L, "inter-run gap"),  // between windows
-      (4000L, "stage 40 3.5 s"), // inside q_b
-      (9000L, "settle stage"))   // after the last window
-    assert(Bench.attributeSingleTask(windows, events) === Set("q_a", "q_b"))
-    // the r15 failure mode: ONLY out-of-window events -> no blame.
-    // (date_functions' 0.245 s timed run was flagged for a warm-up
-    // stage recorded before its window even opened)
-    assert(Bench.attributeSingleTask(windows,
-      Seq((500L, "w"), (2500L, "g"), (9000L, "s"))) === Set.empty[String])
-    // window bounds are inclusive on both ends
-    assert(Bench.attributeSingleTask(windows, Seq((1000L, "e"))) ===
-      Set("q_a"))
-    assert(Bench.attributeSingleTask(windows, Seq((6000L, "e"))) ===
-      Set("q_b"))
-    // no windows at all (e.g. every run failed before timing): no blame
-    assert(Bench.attributeSingleTask(Seq.empty, events) ===
-      Set.empty[String])
+  test("verification-only entries are exactly the _portable catalog " +
+      "entries, the set make_baseline.py records") {
+    val names = SparkEntry.queries.keySet
+    assert(names.filter(Bench.verificationOnly) ===
+      names.filter(_.endsWith("_portable")))
   }
 
   test("post-warm budget shrink: rotation entries drop first, " +

@@ -21,8 +21,8 @@ import graft.streaming.MicroBatch
 
 /** `Tables.read` opens a parquet table from a driver-side footer read:
   * the same schema and rows as `spark.read.parquet`, and no Spark job.
-  * The source-tree lints keep one table reader, one session factory and
-  * one profiling main. */
+  * The source-tree lints keep one table reader, one session factory,
+  * one profiling main and one metrics listener. */
 class TablesReadSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -139,7 +139,10 @@ class TablesReadSpec extends SparkTestBase {
       "Session.scala", "build sessions through graft.Session.builder"),
     Lint("lint: Profile.scala is the only main under graft/tools",
       Seq("src/main/scala/graft/tools"), """def\s+main\s*\(""", "Profile.scala",
-      "fold diagnostics into graft.tools.Profile"))
+      "fold diagnostics into graft.tools.Profile"),
+    Lint("lint: RunMetrics.scala is the only program file with a SparkListener",
+      Seq("src/main/scala"), """\bSparkListener\b""", "RunMetrics.scala",
+      "read run counters through graft.obs.RunMetrics"))
 
   lints.foreach { lint =>
     test(lint.name) {

@@ -10,7 +10,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
 import graft.SparkTestBase
-import graft.tools.Profile
+import graft.obs.RunMetrics
 
 /** Connected components: closure correctness, multi-round convergence,
   * and the refuse-dont-truncate guard on the round budget. */
@@ -258,12 +258,12 @@ class GraphSpec extends SparkTestBase {
         plans.add(qe.optimizedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val rec = new Profile.Recorder(keepPlans = false)
+    val rec = new RunMetrics.Recorder(keepPlans = false)
     spark.listenerManager.register(listener)
-    val got = try Profile.recording(spark, rec) {
+    val got = try RunMetrics.recording(spark, rec) {
       val out = Graph.labelPropagate(edges, "src", "dst", rounds = 1)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      Profile.settle(spark, rec)
+      RunMetrics.settle(spark, rec)
       out
     } finally spark.listenerManager.unregister(listener)
     assert(got == Map(1L -> 2L, 2L -> 1L, 3L -> 1L, 7L -> 3L, 8L -> 7L, 9L -> 7L))

@@ -4,10 +4,12 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 import graft.SparkTestBase
 import graft.ext.Graph
+import graft.obs.RunMetrics
 
-/** `Profile`'s one listener pair: it sees every round checkpoint of an
-  * iterative operator, leaves the session when the profiled work throws,
-  * and attributes jobs to the step that ran them. */
+/** The one listener pair (`RunMetrics.Recorder`) as `Profile` uses it: it
+  * sees every round checkpoint of an iterative operator, leaves the
+  * session when the profiled work throws, and attributes jobs and
+  * single-task stages to the step that ran them. */
 class ProfileSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -16,10 +18,10 @@ class ProfileSpec extends SparkTestBase {
   test("--plans capture: every connectedComponents round on a 9-edge chain " +
       "records its localCheckpoint plan") {
     val chain = (0L until 9L).map(i => (i, i + 1)).toDF("src", "dst")
-    val rec = new Profile.Recorder(keepPlans = true)
-    val labels = Profile.recording(spark, rec) {
+    val rec = new RunMetrics.Recorder(keepPlans = true)
+    val labels = RunMetrics.recording(spark, rec) {
       val out = Graph.connectedComponents(chain, "src", "dst").collect()
-      Profile.settle(spark, rec)
+      RunMetrics.settle(spark, rec)
       out
     }
     assert(labels.map(_.getLong(1)).toSet == Set(0L))
@@ -35,26 +37,42 @@ class ProfileSpec extends SparkTestBase {
   }
 
   test("the listeners are removed when the profiled entry throws") {
-    val rec = new Profile.Recorder(keepPlans = true)
-    intercept[NoSuchElementException](Profile.recording(spark, rec) {
+    val rec = new RunMetrics.Recorder(keepPlans = true)
+    intercept[NoSuchElementException](RunMetrics.recording(spark, rec) {
       Profile.timeEntry(spark, rec, sf, "no_such_entry")
     })
-    val live = new Profile.Recorder(keepPlans = true)
-    Profile.recording(spark, live) {
-      Profile.inGroup(spark, "profile-after-construct")(spark.range(4).localCheckpoint())
-      Profile.settle(spark, live)
+    val live = new RunMetrics.Recorder(keepPlans = true)
+    RunMetrics.recording(spark, live) {
+      RunMetrics.inGroup(spark, "profile-after-construct")(spark.range(4).localCheckpoint())
+      RunMetrics.settle(spark, live)
     }
     assert(live.takePlans().size == 1 && live.take("profile-after-construct").jobs >= 1)
     assert(rec.takePlans().isEmpty && rec.take("profile-after-construct").jobs == 0)
   }
 
   test("a Tables.read-only entry constructs with no job and executes with some") {
-    val rec = new Profile.Recorder(keepPlans = false)
-    val runs = Profile.recording(spark, rec)(
+    val rec = new RunMetrics.Recorder(keepPlans = false)
+    val runs = RunMetrics.recording(spark, rec)(
       Profile.timeEntry(spark, rec, sf, "count_rows"))
     assert(runs.size == Profile.Reps)
     assert(runs.forall(_.construct.jobs == 0), runs.map(_.construct.jobs))
     assert(runs.forall(r => r.execute.jobs >= 1 && r.execute.stages >= 1),
       runs.map(_.execute.jobs))
+  }
+
+  test("RunMetrics: a 3 s one-task stage counts as single-task in its own " +
+      "group, a 3 s two-task stage does not") {
+    val sc = spark.sparkContext
+    def sleepy(parts: Int): Long =
+      sc.parallelize(1 to parts, parts).map { x => Thread.sleep(3100); x }.count()
+    val rec = new RunMetrics.Recorder(keepPlans = false)
+    RunMetrics.recording(spark, rec) {
+      RunMetrics.inGroup(spark, "metrics-a")(sleepy(1))
+      RunMetrics.inGroup(spark, "metrics-b")(sleepy(2))
+      RunMetrics.settle(spark, rec)
+    }
+    val (a, b) = (rec.take("metrics-a"), rec.take("metrics-b"))
+    assert(a.stages == 1 && a.tasks == 1 && a.singleTask == 1)
+    assert(b.stages == 1 && b.tasks == 2 && b.singleTask == 0)
   }
 }
