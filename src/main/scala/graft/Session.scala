@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The one local-session factory: every main and the test base build
   * their session here and add only their own documented `.config` on
-  * top (Bench: cleaner off; SkewBench: AQE and broadcast off).
+  * top (Bench: cleaner off).
   */
 object Session {
 

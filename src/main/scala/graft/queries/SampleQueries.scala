@@ -631,10 +631,10 @@ object SampleQueries {
     * boundary picks a different center. Oracle replays the identical
     * unrolled rounds as chained CTEs.
     *
-    * Scale shape: each round is ONE corpus pass against the ≤5-row
-    * broadcast selected set (row-local codegen'd distance, min over
-    * ≤5 values per row) + a TakeOrdered(1) argmax — no shuffle
-    * beyond the 1-row reduction; per-round lineage truncated. At
+    * Scale shape: each round is ONE corpus pass against the ≤5
+    * selected centers as a literal (row-local distance, min over ≤5
+    * values per row) + a TakeOrdered(1) argmax collected to the
+    * driver — no shuffle, no join, no per-round checkpoint. At
     * 100 TB the k·n work is the known cost of k-center greedy — for
     * large k the standard move is the same pass over an
     * `embedding_centroids` summary instead of raw vectors. */
@@ -675,32 +675,25 @@ object SampleQueries {
       import s.implicits._
       import org.apache.spark.sql.Column
       val embT = graft.Tables.embeddings(s, d)
-        .select($"vec_id", $"embedding")
       val d2q = (a: Column, b: Column) => aggregate(
         zip_with(a, b, (x, y) => {
           val diff = x.cast("double") - y.cast("double")
           round(diff * diff * lit(1e9), 0).cast("long")
         }),
         lit(0L), (acc, t) => acc + t)
-      var sel = embT.where($"vec_id" === 0)
-        .select(lit(0).as("rnk"), $"vec_id", $"embedding".as("v"),
-          lit(0L).as("d2q_sel"))
-        .localCheckpoint()
-      for (r <- 1 to 4) {
-        val next = embT
-          .join(sel.select($"vec_id".as("sid")), $"vec_id" === $"sid",
-            "left_anti")
-          .crossJoin(broadcast(sel.select($"v".as("sv"))))
-          .select($"vec_id", $"embedding", d2q($"embedding", $"sv").as("d2"))
-          .groupBy($"vec_id").agg(min($"d2").as("dmin"))
+      // selected centers (rnk, vec_id, embedding, d2q_sel), in pick order
+      val sel0 = embT.where($"vec_id" === 0).select($"vec_id", $"embedding")
+        .collect().map(r => (0, r.getLong(0), r.getSeq[Float](1), 0L))
+      val sel = (1 to 4).foldLeft(sel0.toSeq) { (sel, r) =>
+        if (sel.isEmpty) sel
+        else sel ++ embT.where(!$"vec_id".isin(sel.map(_._2): _*))
+          .select($"vec_id", $"embedding", array_min(transform(
+            typedLit(sel.map(_._3)), c => d2q($"embedding", c))).as("dmin"))
           .orderBy($"dmin".desc, $"vec_id").limit(1)
-          .join(embT, "vec_id")
-          .select(lit(r).as("rnk"), $"vec_id", $"embedding".as("v"),
-            $"dmin".as("d2q_sel"))
-        sel = sel.unionByName(next).localCheckpoint()
+          .collect().map(c => (r, c.getLong(0), c.getSeq[Float](1), c.getLong(2)))
       }
-      sel.select($"rnk".cast("int").as("rnk"), $"vec_id", $"d2q_sel")
-        .orderBy($"rnk")
+      sel.map { case (rnk, id, _, d2) => (rnk, id, d2) }
+        .toDF("rnk", "vec_id", "d2q_sel")
     }
   }
 

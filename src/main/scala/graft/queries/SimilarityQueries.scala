@@ -154,10 +154,10 @@ object SimilarityQueries {
     * Scale shape: MMR's O(k²) greedy is ALWAYS run on a shortlist,
     * and the shortlist build is the scale path — TakeOrdered top-10
     * here, any ANN entry (`sim_ann_lsh` / `sim_ivf`) at 100 TB. The
-    * iterative part touches 10 rows × 5 rounds of vocab-sized plans
-    * (lineage truncated per round, the BPE-learner device); in
-    * production with a query BATCH the same rounds run per query key
-    * in parallel. */
+    * iterative part runs on the driver over the collected 10 rows: the
+    * 10×10 similarities are one local projection and the greedy rounds
+    * are integer compares; in production with a query BATCH the same
+    * rounds run per query key in parallel. */
   val retrievalMmrDiversify: CatalogEntry = {
     val head =
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
@@ -200,41 +200,30 @@ object SimilarityQueries {
       import s.implicits._
       GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
-      val q = emb.filter($"vec_id" === 0).select($"embedding".as("qe"))
-      val sl = emb.where($"vec_id" =!= 0)
-        .crossJoin(broadcast(q))
-        .select($"vec_id", $"embedding",
-          round(Similarity.cosineNative($"embedding", $"qe") * lit(1e6), 0)
-            .cast("long").as("rel6"))
-        .orderBy($"rel6".desc, $"vec_id").limit(10)
-        .localCheckpoint()
-      val pairs = sl.select($"vec_id".as("i"), $"embedding".as("ea"))
-        .crossJoin(broadcast(sl.select($"vec_id".as("j"), $"embedding".as("eb"))))
-        .where($"i" =!= $"j")
-        .select($"i", $"j",
-          round(Similarity.cosineNative($"ea", $"eb") * lit(1e6), 0)
-            .cast("long").as("sim6"))
-        .localCheckpoint()
-      var selected = sl.orderBy($"rel6".desc, $"vec_id").limit(1)
-        .select($"vec_id", lit(1).as("rnk")).localCheckpoint()
-      for (r <- 2 to 5) {
-        val maxsim = pairs
-          .join(selected.select($"vec_id".as("j")), "j")
-          .groupBy($"i").agg(max($"sim6").as("ms"))
-          .withColumnRenamed("i", "vec_id")
-        val next = sl
-          .join(selected.select($"vec_id"), Seq("vec_id"), "left_anti")
-          .join(maxsim, Seq("vec_id"))
-          .select($"vec_id",
-            (lit(7L) * $"rel6" - lit(3L) * $"ms").as("score"))
-          .orderBy($"score".desc, $"vec_id").limit(1)
-          .select($"vec_id", lit(r).as("rnk"))
-        selected = selected.unionByName(next).localCheckpoint()
+      val sim6 = (a: Column, b: Column) =>
+        round(Similarity.cosineNative(a, b) * lit(1e6), 0).cast("long")
+      // the 10-row shortlist (vec_id, embedding, rel6), best first
+      val sl = emb.filter($"vec_id" === 0).select($"embedding")
+        .collect().headOption.toSeq.flatMap { q =>
+          emb.where($"vec_id" =!= 0)
+            .select($"vec_id", $"embedding",
+              sim6($"embedding", typedLit(q.getSeq[Float](0))).as("rel6"))
+            .orderBy($"rel6".desc, $"vec_id").limit(10)
+            .collect().map(r => (r.getLong(0), r.getSeq[Float](1), r.getLong(2)))
+        }
+      val pairs = (for ((i, ea, _) <- sl; (j, eb, _) <- sl if i != j)
+          yield (i, j, ea, eb)).toDF("i", "j", "ea", "eb")
+        .select($"i", $"j", sim6($"ea", $"eb"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      // greedy rounds 2..5: argmax of 7·rel6 − 3·maxsim, vec_id breaks ties
+      val picked = (2 to 5).foldLeft(sl.take(1)) { (sel, _) =>
+        val rest = sl.filterNot(c => sel.exists(_._1 == c._1))
+        def score(c: (Long, Seq[Float], Long)) =
+          7L * c._3 - 3L * sel.map(p => pairs((c._1, p._1))).max
+        sel ++ rest.sortBy(c => (-score(c), c._1)).take(1)
       }
-      selected.join(sl, "vec_id")
-        .select($"rnk".cast("int").as("rnk"), $"vec_id",
-          $"rel6".as("rel_ppm"))
-        .orderBy($"rnk")
+      picked.zipWithIndex.map { case ((id, _, rel6), k) => (k + 1, id, rel6) }
+        .toDF("rnk", "vec_id", "rel_ppm")
     }
   }
 
@@ -244,9 +233,9 @@ object SimilarityQueries {
     * cosine) and the first step of any PCA-whitening pass. Four
     * unrolled rounds of v ← Σₓ x·(x·v), renormalized each round; the
     * covariance matrix is never materialized — each round is ONE
-    * corpus pass (row-local dot against the broadcast direction, then
-    * a 64-cell partial aggregate), which is the only formulation that
-    * exists at 100 TB.
+    * corpus pass (row-local dot against the direction literal, then a
+    * 64-cell partial aggregate collected to the driver), which is the
+    * only formulation that exists at 100 TB.
     *
     * Cross-engine exactness at every step (the kmeans/EMA discipline):
     * the direction lives as micro-quantized BIGINTs; per-row dot
@@ -289,40 +278,26 @@ object SimilarityQueries {
   }
 
   /** Spark side of the same four rounds: the converged micro-quantized
-    * direction as (pos, v_micro), localCheckpointed. Any consumer must
+    * direction, v_micro by pos, renormalized on the driver after each
+    * round's pass and fed to the next as a literal. Any consumer must
     * walk the identical integer lattice as [[pcaOracleChain]]'s `v5`. */
   private def pcaDirection(s: org.apache.spark.sql.SparkSession,
-                           d: String): org.apache.spark.sql.DataFrame = {
+                           d: String): Array[Long] = {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
-    var v = s.range(64)
-      .select($"id".cast("int").as("pos"), lit(125000L).as("v_micro"))
-      .localCheckpoint()
-    for (_ <- 1 to 4) {
-      val va = v
-        .select(struct($"pos", ($"v_micro" / lit(1e6)).as("vd")).as("pv"))
-        .agg(transform(array_sort(collect_list($"pv")),
-          p => p.getField("vd")).as("v"))
-      val w = emb.crossJoin(broadcast(va))
-        .withColumn("sq", aggregate(
-          zip_with($"embedding", $"v", (x, vi) =>
-            round(x.cast("double") * vi * lit(1e9), 0).cast("long")),
-          lit(0L), (acc, t) => acc + t))
-        .select(($"sq" / lit(1e9)).as("sd"),
-          posexplode($"embedding").as(Seq("pos", "x")))
+    (1 to 4).foldLeft(Array.fill(64)(125000L)) { (v, _) =>
+      // sd before the posexplode: beside it, it runs once per element
+      DriverMath.unitMicro(emb
+        .select((DriverMath.dotNano($"embedding", DriverMath.microLit(v))
+          / lit(1e9)).as("sd"), $"embedding")
+        .select($"sd", posexplode($"embedding").as(Seq("pos", "x")))
         .select($"pos",
           round($"x".cast("double") * $"sd" * lit(1e6), 0)
             .cast("long").as("c"))
         .groupBy($"pos")
         .agg(sum($"c".cast("decimal(38,0)")).as("w"))
-      val n2 = w.agg(sum($"w" * $"w").as("n2"))
-      v = w.crossJoin(broadcast(n2))
-        .select($"pos",
-          round($"w".cast("double") / sqrt($"n2".cast("double"))
-            * lit(1e6), 0).cast("long").as("v_micro"))
-        .localCheckpoint()
+        .collect().sortBy(_.getInt(0)).map(_.getDecimal(1)).toSeq)
     }
-    v
   }
 
   val embedPcaPowerIter: CatalogEntry =
@@ -330,7 +305,7 @@ object SimilarityQueries {
       pcaOracleChain + "\nSELECT pos, v_micro FROM v5 ORDER BY pos") {
       (s, d) =>
         import s.implicits._
-        pcaDirection(s, d).orderBy($"pos")
+        pcaDirection(s, d).toSeq.zipWithIndex.map(_.swap).toDF("pos", "v_micro")
     }
 
   /** ALL-BUT-THE-TOP residual census (Mu & Viswanath, ICLR 2018): for
@@ -344,7 +319,7 @@ object SimilarityQueries {
     *
     * Scale shape: consumes [[pcaDirection]] (four corpus passes), then
     * ONE more pass — dot and norm² are row-local folds against the
-    * broadcast direction; no shuffle beyond the output sort. Exactness:
+    * direction literal; no shuffle beyond the output sort. Exactness:
     * `dot_nano` is the order-free integer dot sum (no transformation
     * emitted at all), and cos²_ppm is a pure integer ratio
     * (10⁶·sq²) div (10⁹·nx) in DECIMAL(38,0)/HUGEINT — sq² ≤ ~10²⁰
@@ -368,17 +343,9 @@ object SimilarityQueries {
         |   // (1000000000::HUGEINT * nx::HUGEINT))::BIGINT AS cos2_ppm
         |FROM fin ORDER BY vec_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val va = pcaDirection(s, d)
-      .select(struct($"pos", ($"v_micro" / lit(1e6)).as("vd")).as("pv"))
-      .agg(transform(array_sort(collect_list($"pv")),
-        p => p.getField("vd")).as("v"))
-    emb.crossJoin(broadcast(va))
-      .select($"vec_id",
-        aggregate(
-          zip_with($"embedding", $"v", (x, vi) =>
-            round(x.cast("double") * vi * lit(1e9), 0).cast("long")),
-          lit(0L), (acc, t) => acc + t).as("sq"),
+    val va = DriverMath.microLit(pcaDirection(s, d))
+    Tables.embeddings(s, d)
+      .select($"vec_id", DriverMath.dotNano($"embedding", va).as("sq"),
         aggregate(
           transform($"embedding", x =>
             round(x.cast("double") * x.cast("double") * lit(1e9), 0)
@@ -1695,8 +1662,8 @@ object SimilarityQueries {
     * — expanded by linearity to u' = A − v₁·B/|v₁|² with
     * A_j = Σₓ x_j·t'ₓ and B = Σₓ (x·v₁)·t'ₓ, so the deflated corpus is
     * NEVER materialized: each round stays one corpus pass of row-local
-    * folds against broadcast 64-cell tables (the only formulation that
-    * exists at 100 TB), plus 64-row metadata algebra.
+    * folds against 64-cell direction literals (the only formulation that
+    * exists at 100 TB), plus 64-cell metadata algebra on the driver.
     *
     * Exactness: same integer lattice as the v₁ chain (micro-quantized
     * directions, nano-quantized per-row dots, DECIMAL(38,0)/HUGEINT
@@ -1723,47 +1690,21 @@ object SimilarityQueries {
       |FROM v5m v JOIN u5 u USING (pos), ray r, orto o
       |ORDER BY v.pos""".stripMargin) { (s, d) =>
     import s.implicits._
+    import java.math.{BigDecimal => JBigDecimal}
     val emb = Tables.embeddings(s, d)
     val v1 = pcaDirection(s, d)
-    val nrm = v1.agg(sum($"v_micro" * $"v_micro").as("n1"))
-    val vaf = v1
-      .select(struct($"pos", ($"v_micro" / lit(1e6)).as("vd")).as("pv"))
-      .agg(transform(array_sort(collect_list($"pv")),
-        p => p.getField("vd")).as("v"))
-    def dotNano(vecs: org.apache.spark.sql.Column,
-                dir: org.apache.spark.sql.Column) =
-      aggregate(zip_with(vecs, dir, (x, vi) =>
-        round(x.cast("double") * vi * lit(1e9), 0).cast("long")),
-        lit(0L), (acc, t) => acc + t)
-    var u = s.range(64)
-      .select($"id".cast("int").as("pos"), lit(125000L).as("u_micro"))
-      .localCheckpoint()
-    for (_ <- 1 to 4) {
-      val ua = u
-        .select(struct($"pos", ($"u_micro" / lit(1e6)).as("ud")).as("pu"))
-        .agg(transform(array_sort(collect_list($"pu")),
-          p => p.getField("ud")).as("u"))
-      val c = u.join(v1, "pos").agg(sum($"v_micro" * $"u_micro").as("c"))
-      // r22 fusion (r21 verdict item 3; guide §1.2 step 1 / §5): the
-      // r21 plan materialized a CORPUS-sized (vec_id, embedding, dq,
-      // tp) localCheckpoint every round and read it back twice (the
-      // A- and B-aggregates). A and B are sums over the same per-row
-      // quantities, so ONE corpus pass computes both: B's addend
-      // rides the pos = 0 slot of A's posexplode (each source row
-      // contributes its bb exactly once — a row whose embedding is
-      // empty/null contributes nothing, exactly the NULL bb it
-      // contributed before), and the per-round checkpoint shrinks
-      // from the corpus to the fused 64-row aggregate. Same integers:
-      // A's and B's addends are unchanged expressions, only their
-      // grouping differs, and DECIMAL(38,0) sums commute exactly.
-      // Per round this removes one corpus-scale job, the corpus-sized
-      // checkpoint write, and both checkpoint re-reads.
-      val ab0 = emb
-        .crossJoin(broadcast(vaf)).crossJoin(broadcast(ua))
-        .crossJoin(broadcast(c)).crossJoin(broadcast(nrm))
+    val va = DriverMath.microLit(v1)
+    val n1 = v1.map(x => x * x).sum
+    def dot(a: Array[Long], b: Array[Long]): Long = a.zip(b).map { case (x, y) => x * y }.sum
+    val u = (1 to 4).foldLeft(Array.fill(64)(125000L)) { (u, _) =>
+      // A and B are sums over the same per-row quantities, so ONE corpus
+      // pass computes both: B's addend rides the pos = 0 slot of A's
+      // posexplode (each source row contributes its bb exactly once).
+      val ab = emb
         .select($"embedding",
-          dotNano($"embedding", $"v").as("dq"),
-          dotNano($"embedding", $"u").as("tq"), $"n1", $"c")
+          DriverMath.dotNano($"embedding", va).as("dq"),
+          DriverMath.dotNano($"embedding", DriverMath.microLit(u)).as("tq"),
+          lit(n1).as("n1"), lit(dot(v1, u)).as("c"))
         .select($"embedding", $"dq", expr(
           "cast(tq as decimal(38,0)) - (cast(dq as decimal(38,0))" +
             " * cast(c as decimal(38,0))) div cast(n1 as decimal(38,0))")
@@ -1777,43 +1718,30 @@ object SimilarityQueries {
           when($"pos" === 0, expr("(cast(dq as decimal(38,0)) * tp)" +
             " div 1000000000000")).as("bb"))
         .groupBy($"pos")
-        .agg(sum($"c0".cast("decimal(38,0)")).as("a"),
-          sum($"bb").as("b0"))
-      val ab = ab0.localCheckpoint()
-      val b = ab.agg(sum($"b0").as("b"))
-      val w = ab.join(v1, "pos")
-        .crossJoin(broadcast(b)).crossJoin(broadcast(nrm))
-        .select($"pos", expr(
-          "a - (cast(v_micro as decimal(38,0)) * b)" +
-            " div cast(n1 as decimal(38,0))").as("w"))
-      val n2 = w.agg(sum($"w" * $"w").as("n2"))
-      u = w.crossJoin(broadcast(n2))
-        .select($"pos",
-          round($"w".cast("double") / sqrt($"n2".cast("double"))
-            * lit(1e6), 0).cast("long").as("u_micro"))
-        .localCheckpoint()
+        .agg(sum($"c0".cast("decimal(38,0)")).as("a"), sum($"bb").as("b0"))
+        .collect().sortBy(_.getInt(0))
+      val b = JBigDecimal.valueOf(ab.filterNot(_.isNullAt(2)).map(_.getLong(2)).sum)
+      // w = A − v₁·B div |v₁|², truncating like Spark's decimal `div`
+      DriverMath.unitMicro(ab.toSeq.map { r =>
+        val vb = JBigDecimal.valueOf(v1(r.getInt(0))).multiply(b)
+        r.getDecimal(1).subtract(JBigDecimal.valueOf(DriverMath.div(vb, JBigDecimal.valueOf(n1))))
+      })
     }
-    val uaf = u
-      .select(struct($"pos", ($"u_micro" / lit(1e6)).as("ud")).as("pu"))
-      .agg(transform(array_sort(collect_list($"pu")),
-        p => p.getField("ud")).as("u"))
-    val ray = emb.crossJoin(broadcast(vaf)).crossJoin(broadcast(uaf))
-      .select(dotNano($"embedding", $"v").as("dq"),
-        dotNano($"embedding", $"u").as("uq"))
-      .agg(
-        sum(($"dq".cast("decimal(19,0)") * $"dq".cast("decimal(19,0)"))
-          .cast("decimal(38,0)")).as("r1"),
-        sum(($"uq".cast("decimal(19,0)") * $"uq".cast("decimal(19,0)"))
-          .cast("decimal(38,0)")).as("r2"))
-    val orto = u.join(v1, "pos")
-      .agg(sum($"v_micro" * $"u_micro").as("ortho_micro2"))
-    v1.join(u.select($"pos", $"u_micro".as("v2_micro")), "pos")
-      .crossJoin(broadcast(ray)).crossJoin(broadcast(orto))
-      .select($"pos", $"v_micro".as("v1_micro"), $"v2_micro",
-        expr("cast((cast(1000000 as decimal(38,0)) * r2) div r1 as bigint)")
-          .as("lam2_ppm"),
-        $"ortho_micro2")
-      .orderBy($"pos")
+    val rows = if (v1.isEmpty) Nil else {
+      val ray = emb
+        .select(DriverMath.dotNano($"embedding", va).as("dq"),
+          DriverMath.dotNano($"embedding", DriverMath.microLit(u)).as("uq"))
+        .agg(
+          sum(($"dq".cast("decimal(19,0)") * $"dq".cast("decimal(19,0)"))
+            .cast("decimal(38,0)")).as("r1"),
+          sum(($"uq".cast("decimal(19,0)") * $"uq".cast("decimal(19,0)"))
+            .cast("decimal(38,0)")).as("r2"))
+        .collect().head
+      val lam2 = DriverMath.div(
+        JBigDecimal.valueOf(1000000L).multiply(ray.getDecimal(1)), ray.getDecimal(0))
+      v1.indices.map(i => (i, v1(i), u(i), lam2, dot(v1, u)))
+    }
+    rows.toDF("pos", "v1_micro", "v2_micro", "lam2_ppm", "ortho_micro2")
   }
 
   def entries: Seq[CatalogEntry] = Seq(

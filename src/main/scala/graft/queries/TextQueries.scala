@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -3646,10 +3646,11 @@ object TextQueries {
     *
     * Scale shape: THE textbook reason BPE scales — learning runs on
     * the WORD-FREQUENCY table, not the corpus. The corpus-sized
-    * shuffle happens exactly once (the word count); all 6 rounds are
-    * vocab-sized: a tiny pair aggregate, a 1-row broadcast argmax,
-    * and a row-local merge apply, with lineage truncated per round.
-    * At 100 TB only the word count grows. */
+    * shuffle happens exactly once (the word count); each of the 6
+    * rounds is one vocab-sized pass, the pair census, whose argmax is
+    * collected to the driver; the merges learned so far reach the next
+    * census as a chain of literal replaces, so no round broadcasts or
+    * checkpoints anything. At 100 TB only the word count grows. */
   val vocabBpeMerges: CatalogEntry = CatalogEntry(
     "vocab_bpe_merges",
     bpeOracleChain(6) +
@@ -3662,59 +3663,55 @@ object TextQueries {
         |UNION ALL SELECT 6::BIGINT AS round, pr AS pair, cnt FROM m6)
         |ORDER BY round""".stripMargin) { (s, d) =>
     import s.implicits._
-    val (rounds, _) = bpeLearn(s, d, nRounds = 6)
-    rounds.reduce(_ unionByName _)
-      .select($"round", $"pr".as("pair"), $"cnt")
-      .orderBy($"round")
+    val (merges, _) = bpeLearn(s, d, nRounds = 6)
+    merges.zipWithIndex.map { case ((pr, cnt), i) => (i + 1L, pr, cnt) }
+      .toDF("round", "pair", "cnt")
   }
 
   /** Shared BPE learning pipeline (see [[vocabBpeMerges]] for the full
-    * semantics + scale rationale): returns the per-round argmax winner
-    * tables AND the final word → symbol-sequence table after all
-    * merges — the learned tokenizer state [[vocabBpeApply]] encodes
+    * semantics + scale rationale): returns the learned merges in round
+    * order as (pair, count) AND the word → symbol-sequence table after
+    * all of them — the learned tokenizer state [[vocabBpeApply]] encodes
     * with. Extracted so the apply entry can never drift from the
-    * learner the oracle verifies. */
-  private def bpeLearn(s: org.apache.spark.sql.SparkSession, d: String,
-      nRounds: Int)
-      : (Seq[org.apache.spark.sql.DataFrame], org.apache.spark.sql.DataFrame) = {
+    * learner the oracle verifies. A round whose census finds no pair
+    * ends the learning; the table then carries the merges learned. */
+  private def bpeLearn(s: SparkSession, d: String, nRounds: Int)
+      : (Seq[(String, Long)], DataFrame) = {
     import s.implicits._
     val words = Tables.documents(s, d)
       .where($"text".isNotNull)
       .select(explode(TextOps.tokens($"text")).as("word"))
       .where($"word" =!= "")
       .groupBy($"word").agg(count(lit(1)).as("freq"))
-    var sym = words
-      .withColumn("sym", trim(regexp_replace($"word", "(.)", "$1 ")))
-      .localCheckpoint()
-    val rounds = (1 to nRounds).map { r =>
-      val winner = sym
-        .select($"freq", split($"sym", " ").as("sy"))
+      // vocab-sized and read by every census; lazy, so the first census
+      // writes it instead of a job of its own
+      .localCheckpoint(eager = false)
+    // Boundary-safe merge apply (see docstring): doubling the separators
+    // gives every symbol its own flanking spaces, so the padded pattern
+    // ' a  b ' can only match WHOLE symbols (a plain replace of 'a b'
+    // also fires where a symbol merely ENDS with 'a', e.g. 'xa b' ->
+    // 'xab' — a pair the census never counted) and adjacent occurrences
+    // still chain because each match consumes only its own padding.
+    def pad(c: Column) = concat(lit(" "), replace(c, lit(" "), lit("  ")), lit(" "))
+    def symAfter(merges: Seq[(String, Long)]): Column =
+      merges.foldLeft(trim(regexp_replace($"word", "(.)", "$1 "))) { case (sym, (pr, _)) =>
+        trim(replace(replace(pad(sym), pad(lit(pr)),
+          concat(lit(" "), replace(lit(pr), lit(" "), lit("")), lit(" "))),
+          lit("  "), lit(" ")))
+      }
+    val merges = (1 to nRounds).foldLeft(Vector.empty[(String, Long)]) { (won, r) =>
+      if (won.size < r - 1) won
+      else won ++ words
+        .select($"freq", split(symAfter(won), " ").as("sy"))
         .select($"freq", explode(when(size($"sy") >= 2, expr(
           "transform(sequence(1, size(sy) - 1)," +
             " i -> concat(element_at(sy, i), ' ', element_at(sy, i + 1)))"))
           .otherwise(array().cast("array<string>"))).as("pr"))
         .groupBy($"pr").agg(sum($"freq").as("cnt"))
         .orderBy($"cnt".desc, $"pr").limit(1)
-        .withColumn("round", lit(r.toLong))
-        .localCheckpoint() // argmax pinned; reused by output AND apply
-      sym = sym
-        .crossJoin(broadcast(winner.select($"pr".as("mpr"))))
-        // Boundary-safe merge apply (see docstring): doubling the
-        // separators gives every symbol its own flanking spaces, so
-        // the padded pattern ' a  b ' can only match WHOLE symbols
-        // (a plain replace of 'a b' also fires where a symbol merely
-        // ENDS with 'a', e.g. 'xa b' -> 'xab' — a pair the census
-        // never counted) and adjacent occurrences still chain
-        // because each match consumes only its own padding.
-        .withColumn("sym", expr(
-          "trim(replace(replace(concat(' ', replace(sym, ' ', '  '), ' '), " +
-            "concat(' ', replace(mpr, ' ', '  '), ' '), " +
-            "concat(' ', replace(mpr, ' ', ''), ' ')), '  ', ' '))"))
-        .drop("mpr")
-        .localCheckpoint() // vocab-sized; truncates the 6-round lineage
-      winner
+        .collect().map(w => (w.getString(0), w.getLong(1)))
     }
-    (rounds, sym)
+    (merges, words.select($"word", symAfter(merges).as("sym")))
   }
 
   /** The s0→s6 merge-application CTE chain shared by the

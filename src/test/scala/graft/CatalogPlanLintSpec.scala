@@ -36,7 +36,6 @@ class CatalogPlanLintSpec extends SparkTestBase {
     "events_interarrival_histogram", // broadcast 1-row delta-total scalar
     "retrieval_hybrid_rrf",  // broadcast 1 query embedding (dense ranker)
     "curriculum_interleave", // broadcast 1-row percentile-cuts scalar
-    "vocab_bpe_merges",      // 6x broadcast 1-row argmax merge winners
     "sim_recall_at_k",       // composes sim_cosine_topk's 1-query cross
     "q22_global_sales",      // broadcast 1-row global-average scalar
     "corpus_kl_drift",       // broadcast 1-row (N1,N2,V) totals scalar
@@ -53,16 +52,12 @@ class CatalogPlanLintSpec extends SparkTestBase {
     "embed_outlier_centroid", // same coarse-assign shape as above
     "sim_hard_negatives",    // corpus x broadcast 5 query rows
     "doc_lm_bigram_score",   // broadcast 1-row vocabulary-size scalar
-    "retrieval_mmr_diversify", // 10-row shortlist x broadcast query/pairs
-    "embed_pca_power_iter",  // corpus x broadcast 1-row direction/norm
-    "embed_abtt_residual",   // corpus x broadcast 1-row direction
     "sample_dsir_weights",   // vocab x broadcast 1-row totals scalar
     "sample_ipf_raking",     // cells x broadcast 1-row mass/target scalars
     "quality_ppl_buckets",   // broadcast 1-row corpus token total
     "corpus_heaps_fit",      // gram vocab x broadcast 8 checkpoint rows
     "sim_ndcg_eval",         // composes sim_cosine_topk + IVF 1-query cross
     "decontam_semantic_embed", // corpus x broadcast eval-suite rows
-    "sample_kcenter_coreset", // corpus x broadcast <=5 selected centers
     "sim_pq_recall",         // composes sim_cosine_topk's 1-query cross
     "corpus_novelty_curve",  // gram stream x broadcast 1-row doc-count scalar
     "tfidf_per_doc_topk",    // broadcast 1-row corpus doc-count N
@@ -71,9 +66,6 @@ class CatalogPlanLintSpec extends SparkTestBase {
     "dedup_threshold_sensitivity", // composes dedup_semantic_embed's
                              // centroid cross + broadcast 1-row doc count
     "sketch_cms_bigram",     // broadcast 1-row corpus occurrence total N
-    "embed_pca_deflate",     // corpus x broadcast 1-row direction/norm
-                             // scalars (the embed_pca_power_iter shape,
-                             // twice per deflated round)
     "distinct_kmv_setops")   // 20-row theta table x broadcast 20-row
                              // theta table source-pair grid (the
                              // stats_chisq metadata-grid shape: pair

@@ -31,6 +31,16 @@ class BpeMergeSpec extends SparkTestBase {
     assert(rows.toSeq == Seq((1L, "a b", 5L), (2L, "ab c", 2L)))
   }
 
+  test("a corpus that runs out of pairs encodes with the merges it learned") {
+    // "a b" then "ab c": every word is one token after round 2
+    val perDoc = SparkEntry.queries("vocab_bpe_apply")(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    assert(perDoc.toSeq == Seq((0L, 5L, 5L, 12L, 416666L)))
+    val perLang = SparkEntry.queries("vocab_fertility_by_lang")(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(perLang.toSeq == Seq(("en", 5L, 5L, 12L)))
+  }
+
   test("merge application is greedy left-to-right (aaa -> [aa][a])") {
     // "aaa" alone: round-1 pair census sees "a a" twice (both adjacent
     // positions), but replace() merges non-overlapping left-to-right,
