@@ -374,10 +374,32 @@ object Dedup {
     * guarded, not clamped. */
   def tokenNgrams(textCol: Column, n: Int): Column = {
     val toks = TextOps.tokens(textCol)
-    when(size(toks) >= n,
-      array_distinct(transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " "))))
+    when(size(toks) >= n, array_distinct(TextOps.ngramWindows(toks, n)))
       .otherwise(array().cast("array<string>"))
+  }
+
+  /** Gram-overlap sizes of candidate pairs, the verify stage after
+    * every rare-gram blocker: each endpoint's distinct token n-grams
+    * ([[tokenNgrams]] over the non-null `textCol` of `docs`) are built
+    * for candidate endpoints only ([[pairEndpointSlice]]) and attached
+    * by two id-keyed joins; the intersection is one row-local
+    * `array_intersect` per pair. Output: (srcCol, dstCol, na, nb, ni) =
+    * |A|, |B|, |A ∩ B| as bigint — `size()` is 32-bit, and ppm
+    * arithmetic such as 10⁶·ni wraps it for documents with a few
+    * thousand grams. */
+  def pairGramOverlap(pairs: DataFrame, docs: DataFrame, idCol: String,
+      textCol: String, n: Int, srcCol: String = "src",
+      dstCol: String = "dst"): DataFrame = {
+    val perDoc = Tables.spreadScan(docs.where(col(textCol).isNotNull))
+      .select(col(idCol), tokenNgrams(col(textCol), n).as("gs"))
+    val (pairsC, gl) = pairEndpointSlice(pairs, perDoc, idCol, srcCol, dstCol)
+    pairsC
+      .join(gl.select(col(idCol).as(srcCol), col("gs").as("ga")), srcCol)
+      .join(gl.select(col(idCol).as(dstCol), col("gs").as("gb")), dstCol)
+      .select(col(srcCol), col(dstCol),
+        size(col("ga")).cast("bigint").as("na"),
+        size(col("gb")).cast("bigint").as("nb"),
+        size(array_intersect(col("ga"), col("gb"))).cast("bigint").as("ni"))
   }
 
   /** Train/eval contamination counts — the decontamination primitive of

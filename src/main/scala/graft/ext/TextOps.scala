@@ -91,10 +91,15 @@ object TextOps {
     * a doc with fewer than n tokens must short-circuit to the empty
     * array instead. */
   def tokenNgrams(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - lit(n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
+    when(size(toks) >= n, ngramWindows(toks, n))
       .otherwise(array().cast("array<string>"))
+
+  /** [[tokenNgrams]] without the short-doc guard, for rows already
+    * known to hold at least n tokens (or wrapped in a guard of the
+    * caller's own). The one definition of the n-gram window expression. */
+  def ngramWindows(toks: Column, n: Int): Column =
+    transform(sequence(lit(1), size(toks) - lit(n - 1)),
+      i => array_join(slice(toks, i, lit(n)), " "))
 
   /** Characters covered by the MOST FREQUENT n-gram of a doc —
     * `chars(g) * count(g)`, the numerator of the Gopher (Rae et al.

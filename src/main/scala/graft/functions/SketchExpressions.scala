@@ -58,6 +58,67 @@ object SketchAlgos {
     starts
   }
 
+  /** Token starts of `split(text, " ")` (empties kept: k separators give
+    * k+1 tokens) plus a virtual separator past the end, so token t is
+    * the byte slice [starts(t), starts(t+1)-1) and the space-joined gram
+    * of tokens [p, p+n) is the slice [starts(p), starts(p+n)-1) of the
+    * text, separators included: grams hash, sort and compare without a
+    * join allocation. Null when there are fewer than `minTok` tokens —
+    * the count pass runs first, so a short document allocates nothing. */
+  def tokenStarts(bytes: Array[Byte], minTok: Int): Array[Int] = {
+    var nTok = 1
+    var b = 0
+    while (b < bytes.length) { if (bytes(b) == 0x20) nTok += 1; b += 1 }
+    if (nTok < minTok) return null
+    val starts = new Array[Int](nTok + 1)
+    var t = 1
+    b = 0
+    while (b < bytes.length) {
+      if (bytes(b) == 0x20) { starts(t) = b + 1; t += 1 }
+      b += 1
+    }
+    starts(nTok) = bytes.length + 1
+    starts
+  }
+
+  /** Start positions 0 until m of the n-token grams over [[tokenStarts]],
+    * sorted by gram bytes compared unsigned (the UTF8String /
+    * `array_sort` binary order), so equal grams are adjacent. */
+  def sortedGrams(bytes: Array[Byte], starts: Array[Int], n: Int,
+      m: Int): Array[Integer] = {
+    val idx = new Array[Integer](m)
+    var p = 0
+    while (p < m) { idx(p) = Integer.valueOf(p); p += 1 }
+    java.util.Arrays.sort(idx, new java.util.Comparator[Integer] {
+      override def compare(a: Integer, b: Integer): Int = {
+        val sa = starts(a.intValue); val ea = starts(a.intValue + n) - 1
+        val sb = starts(b.intValue); val eb = starts(b.intValue + n) - 1
+        var pa = sa; var pb = sb
+        while (pa < ea && pb < eb) {
+          val d = (bytes(pa) & 0xFF) - (bytes(pb) & 0xFF)
+          if (d != 0) return d
+          pa += 1; pb += 1
+        }
+        (ea - sa) - (eb - sb)
+      }
+    })
+    idx
+  }
+
+  /** Byte equality of the n-token grams starting at tokens a and b. */
+  def gramEq(bytes: Array[Byte], starts: Array[Int], n: Int, a: Int,
+      b: Int): Boolean = {
+    val la = starts(a + n) - 1 - starts(a)
+    if (la != starts(b + n) - 1 - starts(b)) return false
+    var pa = starts(a); var pb = starts(b)
+    val ea = pa + la
+    while (pa < ea) {
+      if (bytes(pa) != bytes(pb)) return false
+      pa += 1; pb += 1
+    }
+    true
+  }
+
   /** MinHash signature: mins(i) = min over DISTINCT shingles of
     * xxhash64(shingle ++ "#i"). Positions replicate
     * `transform(sequence(1, greatest(len-(n-1), 1)), i => substr(i, n))`:
@@ -246,19 +307,10 @@ object SketchAlgos {
   def minhashWordsData(text: UTF8String, k: Int, n: Int): ArrayData = {
     require(k <= MaxK, s"k=$k must be <= $MaxK")
     val bytes = text.getBytes
-    var nTok = 1
-    var b = 0
-    while (b < bytes.length) { if (bytes(b) == 0x20) nTok += 1; b += 1 }
-    if (nTok < n)
+    val tokStart = tokenStarts(bytes, n)
+    if (tokStart == null)
       return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
-    val tokStart = new Array[Int](nTok + 1)
-    var t = 1
-    b = 0
-    while (b < bytes.length) {
-      if (bytes(b) == 0x20) { tokStart(t) = b + 1; t += 1 }
-      b += 1
-    }
-    tokStart(nTok) = bytes.length + 1 // virtual separator past the end
+    val nTok = tokStart.length - 1
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue)
     val m = nTok - n + 1
@@ -303,19 +355,10 @@ object SketchAlgos {
   def minhashOphData(text: UTF8String, k: Int, n: Int): ArrayData = {
     require(k <= MaxK, s"k=$k must be <= $MaxK")
     val bytes = text.getBytes
-    var nTok = 1
-    var b = 0
-    while (b < bytes.length) { if (bytes(b) == 0x20) nTok += 1; b += 1 }
-    if (nTok < n)
+    val tokStart = tokenStarts(bytes, n)
+    if (tokStart == null)
       return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
-    val tokStart = new Array[Int](nTok + 1)
-    var t = 1
-    b = 0
-    while (b < bytes.length) {
-      if (bytes(b) == 0x20) { tokStart(t) = b + 1; t += 1 }
-      b += 1
-    }
-    tokStart(nTok) = bytes.length + 1 // virtual separator past the end
+    val nTok = tokStart.length - 1
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue) // empty-bin sentinel;
     // md5Prefix60 < 2^60, so a real min never equals the sentinel
@@ -364,19 +407,10 @@ object SketchAlgos {
     require(m >= 2 && (m & (m - 1)) == 0, s"m=$m must be a power of 2")
     val bits = 60 - java.lang.Integer.numberOfTrailingZeros(m)
     val bytes = text.getBytes
-    var nTok = 1
-    var b = 0
-    while (b < bytes.length) { if (bytes(b) == 0x20) nTok += 1; b += 1 }
-    if (nTok < n)
+    val tokStart = tokenStarts(bytes, n)
+    if (tokStart == null)
       return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
-    val tokStart = new Array[Int](nTok + 1)
-    var t = 1
-    b = 0
-    while (b < bytes.length) {
-      if (bytes(b) == 0x20) { tokStart(t) = b + 1; t += 1 }
-      b += 1
-    }
-    tokStart(nTok) = bytes.length + 1 // virtual separator past the end
+    val nTok = tokStart.length - 1
     val regs = new Array[Long](m)
     val gramCount = nTok - n + 1
     var p = 0
@@ -407,19 +441,10 @@ object SketchAlgos {
     * reason as [[hllRegsData]]. */
   def kminHashData(text: UTF8String, k: Int, n: Int): ArrayData = {
     val bytes = text.getBytes
-    var nTok = 1
-    var b = 0
-    while (b < bytes.length) { if (bytes(b) == 0x20) nTok += 1; b += 1 }
-    if (nTok < n)
+    val tokStart = tokenStarts(bytes, n)
+    if (tokStart == null)
       return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
-    val tokStart = new Array[Int](nTok + 1)
-    var t = 1
-    b = 0
-    while (b < bytes.length) {
-      if (bytes(b) == 0x20) { tokStart(t) = b + 1; t += 1 }
-      b += 1
-    }
-    tokStart(nTok) = bytes.length + 1 // virtual separator past the end
+    val nTok = tokStart.length - 1
     val gramCount = nTok - n + 1
     val hs = new Array[Long](gramCount)
     var p = 0
@@ -1109,22 +1134,11 @@ object RepStatsAlgo {
 
   def repStats(text: UTF8String): Array[Long] = {
     val bytes = text.getBytes
-    // token boundaries of split(text, " "): empties kept, k separators
-    // -> k+1 tokens
-    var nTok = 1
-    var i = 0
-    while (i < bytes.length) { if (bytes(i) == 0x20) nTok += 1; i += 1 }
-    val tokStart = new Array[Int](nTok + 1)
-    var t = 1
-    i = 0
-    while (i < bytes.length) {
-      if (bytes(i) == 0x20) { tokStart(t) = i + 1; t += 1 }
-      i += 1
-    }
-    tokStart(nTok) = bytes.length + 1 // virtual separator past the end
+    val tokStart = SketchAlgos.tokenStarts(bytes, 0)
+    val nTok = tokStart.length - 1
     // char-count prefix sums: chars of token t = charPre(t+1) - charPre(t)
     val charPre = new Array[Int](nTok + 1)
-    t = 0
+    var t = 0
     while (t < nTok) {
       val end = tokStart(t + 1) - 1
       var c = 0
@@ -1139,39 +1153,11 @@ object RepStatsAlgo {
       val n = Ns(ni)
       if (nTok >= n) {
         val m = nTok - n + 1
-        // gram p = tokens [p, p+n) joined with ' ': as BYTES that is
-        // exactly the slice [tokStart(p), tokStart(p+n)-1) of the text
-        // (separators included), so grams sort/compare without any
-        // join allocation
-        val idx = new Array[Integer](m)
-        var p = 0
-        while (p < m) { idx(p) = Integer.valueOf(p); p += 1 }
-        java.util.Arrays.sort(idx, new java.util.Comparator[Integer] {
-          override def compare(a: Integer, b: Integer): Int = {
-            val sa = tokStart(a.intValue); val ea = tokStart(a.intValue + n) - 1
-            val sb = tokStart(b.intValue); val eb = tokStart(b.intValue + n) - 1
-            var pa = sa; var pb = sb
-            while (pa < ea && pb < eb) {
-              val d = (bytes(pa) & 0xFF) - (bytes(pb) & 0xFF)
-              if (d != 0) return d
-              pa += 1; pb += 1
-            }
-            (ea - sa) - (eb - sb)
-          }
-        })
+        val idx = SketchAlgos.sortedGrams(bytes, tokStart, n, m)
         def gramChars(p: Int): Long =
           (charPre(p + n) - charPre(p)) + (n - 1).toLong
-        def gramEq(a: Int, b: Int): Boolean = {
-          val la = tokStart(a + n) - 1 - tokStart(a)
-          if (la != tokStart(b + n) - 1 - tokStart(b)) return false
-          var pa = tokStart(a); var pb = tokStart(b)
-          val ea = pa + la
-          while (pa < ea) {
-            if (bytes(pa) != bytes(pb)) return false
-            pa += 1; pb += 1
-          }
-          true
-        }
+        def gramEq(a: Int, b: Int): Boolean =
+          SketchAlgos.gramEq(bytes, tokStart, n, a, b)
         // one walk over the sorted grams: equal grams are adjacent, so
         // runs are count groups; strict > keeps the FIRST longest run,
         // which in sorted order IS the lexicographically smallest gram
@@ -1179,7 +1165,7 @@ object RepStatsAlgo {
         var bestRun = 0
         var bestChars = 0L
         var dupExtra = 0L
-        p = 0
+        var p = 0
         while (p < m) {
           var q = p + 1
           while (q < m && gramEq(idx(p).intValue, idx(q).intValue)) q += 1
@@ -1223,11 +1209,10 @@ case class RepStats(child: Expression) extends StringSketchExpression {
   * windows merge naturally ("a b c a b c a b c" at k=3 keeps exactly
   * "a b c").
   *
-  * One pass per row, no gram strings materialized: the RepStatsAlgo
-  * byte-slice discipline (a k-gram IS the byte range
-  * [tokStart(p), tokStart(p+k)-1) of the text), duplicate runs found
-  * by sorting gram indices (O(m log m)), coverage by a single rolling
-  * sweep. The naive formulation — explode tokens, window over
+  * One pass per row, no gram strings materialized: a k-gram is a
+  * [[SketchAlgos.tokenStarts]] byte slice of the text, duplicate runs
+  * are found by [[SketchAlgos.sortedGrams]] (O(m log m)), coverage by
+  * a single rolling sweep. The naive formulation — explode tokens, window over
   * (doc_id, gram) for first positions, range-window for coverage —
   * is what the DuckDB oracle runs; at 100 TB it would shuffle the
   * tokenized corpus twice where this kernel shuffles nothing. */
@@ -1235,19 +1220,8 @@ object StripSpansAlgo {
 
   def stripData(text: UTF8String, k: Int): ArrayData = {
     val bytes = text.getBytes
-    // token boundaries of split(text, " "): empties kept, n separators
-    // -> n+1 tokens (both engines' split semantics)
-    var nTok = 1
-    var i = 0
-    while (i < bytes.length) { if (bytes(i) == 0x20) nTok += 1; i += 1 }
-    val tokStart = new Array[Int](nTok + 1)
-    var t = 1
-    i = 0
-    while (i < bytes.length) {
-      if (bytes(i) == 0x20) { tokStart(t) = i + 1; t += 1 }
-      i += 1
-    }
-    tokStart(nTok) = bytes.length + 1 // virtual separator past the end
+    val tokStart = SketchAlgos.tokenStarts(bytes, 0)
+    val nTok = tokStart.length - 1
     def token(t0: Int): UTF8String = UTF8String.fromBytes(
       bytes, tokStart(t0), tokStart(t0 + 1) - 1 - tokStart(t0))
     if (nTok < k) { // no full window fits: nothing can repeat
@@ -1257,39 +1231,13 @@ object StripSpansAlgo {
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(all)
     }
     val m = nTok - k + 1
-    val idx = new Array[Integer](m)
-    var p = 0
-    while (p < m) { idx(p) = Integer.valueOf(p); p += 1 }
-    // sort gram start positions by gram BYTES (slice includes internal
-    // separators — unambiguous because the separator byte is fixed)
-    java.util.Arrays.sort(idx, new java.util.Comparator[Integer] {
-      override def compare(a: Integer, b: Integer): Int = {
-        val sa = tokStart(a.intValue); val ea = tokStart(a.intValue + k) - 1
-        val sb = tokStart(b.intValue); val eb = tokStart(b.intValue + k) - 1
-        var pa = sa; var pb = sb
-        while (pa < ea && pb < eb) {
-          val d = (bytes(pa) & 0xFF) - (bytes(pb) & 0xFF)
-          if (d != 0) return d
-          pa += 1; pb += 1
-        }
-        (ea - sa) - (eb - sb)
-      }
-    })
-    def gramEq(a: Int, b: Int): Boolean = {
-      val la = tokStart(a + k) - 1 - tokStart(a)
-      if (la != tokStart(b + k) - 1 - tokStart(b)) return false
-      var pa = tokStart(a); var pb = tokStart(b)
-      val ea = pa + la
-      while (pa < ea) {
-        if (bytes(pa) != bytes(pb)) return false
-        pa += 1; pb += 1
-      }
-      true
-    }
+    val idx = SketchAlgos.sortedGrams(bytes, tokStart, k, m)
+    def gramEq(a: Int, b: Int): Boolean =
+      SketchAlgos.gramEq(bytes, tokStart, k, a, b)
     // equal grams are adjacent after the sort; in each run, every
     // occurrence except the EARLIEST start position is a duplicate
     val dup = new Array[Boolean](m)
-    p = 0
+    var p = 0
     while (p < m) {
       var q = p + 1
       while (q < m && gramEq(idx(p).intValue, idx(q).intValue)) q += 1
@@ -1314,7 +1262,7 @@ object StripSpansAlgo {
     val kept = new Array[AnyRef](nTok)
     var nKept = 0
     var lastDup = Int.MinValue / 2
-    i = 0
+    var i = 0
     while (i < nTok) {
       if (i < m && dup(i)) lastDup = i
       if (lastDup < i - k + 1) { kept(nKept) = token(i); nKept += 1 }

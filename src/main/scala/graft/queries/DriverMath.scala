@@ -45,4 +45,13 @@ object DriverMath {
     aggregate(zip_with(vecs, dir, (x, vi) =>
       round(x.cast("double") * vi * lit(1e9), 0).cast("long")),
       lit(0L), (acc, t) => acc + t)
+
+  /** Nano-quantized squared L2 distance of two `array<float>` columns:
+    * Σᵢ round((aᵢ − bᵢ)²·10⁹) in bigint, order-free — the k-means,
+    * k-center and product-quantizer distance. */
+  def l2Nano(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => {
+      val diff = x.cast("double") - y.cast("double")
+      round(diff * diff * lit(1e9), 0).cast("long")
+    }), lit(0L), (acc, t) => acc + t)
 }

@@ -673,22 +673,15 @@ object SampleQueries {
          |ORDER BY rnk""".stripMargin
     CatalogEntry("sample_kcenter_coreset", sql) { (s, d) =>
       import s.implicits._
-      import org.apache.spark.sql.Column
       val embT = graft.Tables.embeddings(s, d)
-      val d2q = (a: Column, b: Column) => aggregate(
-        zip_with(a, b, (x, y) => {
-          val diff = x.cast("double") - y.cast("double")
-          round(diff * diff * lit(1e9), 0).cast("long")
-        }),
-        lit(0L), (acc, t) => acc + t)
       // selected centers (rnk, vec_id, embedding, d2q_sel), in pick order
       val sel0 = embT.where($"vec_id" === 0).select($"vec_id", $"embedding")
         .collect().map(r => (0, r.getLong(0), r.getSeq[Float](1), 0L))
       val sel = (1 to 4).foldLeft(sel0.toSeq) { (sel, r) =>
         if (sel.isEmpty) sel
         else sel ++ embT.where(!$"vec_id".isin(sel.map(_._2): _*))
-          .select($"vec_id", $"embedding", array_min(transform(
-            typedLit(sel.map(_._3)), c => d2q($"embedding", c))).as("dmin"))
+          .select($"vec_id", $"embedding", array_min(transform(typedLit(sel.map(_._3)),
+            c => DriverMath.l2Nano($"embedding", c))).as("dmin"))
           .orderBy($"dmin".desc, $"vec_id").limit(1)
           .collect().map(c => (r, c.getLong(0), c.getSeq[Float](1), c.getLong(2)))
       }

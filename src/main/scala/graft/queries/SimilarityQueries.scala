@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,24 +29,54 @@ object SimilarityQueries {
     * inside the composite dedup entries). Same nano-quantized
     * integers, same (d2q, cid) tie-break — identical winners; zero
     * exchange, zero sort, and the assign rides the spread scan's
-    * parallelism at any corpus size (the broadcast is k rows).
+    * parallelism at any corpus size (the broadcast is k rows). The
+    * centroids are the k = 8 deterministic seeds: the eight lowest
+    * vec_ids, standing in for a production run's kmeans++ seeding.
     * Output: (vec_id, embedding, b{d2q, cid}). */
-  private def centroidAssign(emb: org.apache.spark.sql.DataFrame,
-      cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val centArr = cent
+  private[queries] def centroidAssign(emb: DataFrame): DataFrame = {
+    val centArr = emb.where(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       .agg(sort_array(collect_list(struct(col("cid"), col("cvec")))).as("cs"))
     emb.crossJoin(broadcast(centArr))
       .select(col("vec_id"), col("embedding"),
         array_min(transform(col("cs"), c =>
           struct(
-            aggregate(
-              zip_with(col("embedding"), c.getField("cvec"), (a, cc) => {
-                val diff = a.cast("double") - cc.cast("double")
-                round(diff * diff * lit(1e9), 0).cast("long")
-              }),
-              lit(0L), (acc, t) => acc + t).as("d2q"),
+            DriverMath.l2Nano(col("embedding"), c.getField("cvec")).as("d2q"),
             c.getField("cid").as("cid")))).as("b"))
   }
+
+  /** SemDeDup's within-cluster pairs over the [[centroidAssign]]
+    * clusters: every pair keep_id < prune_id sharing cluster `cid`,
+    * with the nano-quantized dot `dotq` and squared norms `naq`/`nbq`
+    * from the native [[graft.functions.VecDotQ9]] kernel. The keep side
+    * is broadcast (r22): the cluster key has only 8 distinct values, so
+    * a shuffled pair join caps at 8-way parallelism and AQE's
+    * byte-based coalescing then folded the whole within-cluster dot
+    * computation onto ONE core (measured: two ~0.6 s single-task
+    * stages). With the build side broadcast there is no exchange at all
+    * and the dots run at the spread scan's parallelism; at 100 TB the
+    * within-cluster pairing is salted/blocked upstream long before a
+    * broadcast would overflow. Output: (prune_id, cid, naq, nbq, dotq). */
+  private[queries] def clusterPairDots(emb: DataFrame): DataFrame = {
+    GraftFunctions.register(emb.sparkSession)
+    val n = centroidAssign(emb)
+      .select(col("vec_id"), col("b.cid").as("cid"), col("embedding").as("v"))
+      .withColumn("nq", expr("vec_dot_q9(v, v)"))
+    val x = n.select(col("vec_id").as("keep_id"), col("cid"),
+      col("v").as("xv"), col("nq").as("naq"))
+    val y = n.select(col("vec_id").as("prune_id"), col("cid").as("ycid"),
+      col("v").as("yv"), col("nq").as("nbq"))
+    broadcast(x).join(y, col("cid") === col("ycid") && col("keep_id") < col("prune_id"))
+      .select(col("prune_id"), col("cid"), col("naq"), col("nbq"),
+        expr("vec_dot_q9(xv, yv)").as("dotq"))
+  }
+
+  /** The exact cosine test of a [[clusterPairDots]] row, `cos > √(c/100)`
+    * cleared of floats by squaring: `dotq > 0 AND 100·dotq² > c·naq·nbq`,
+    * the squares widened to DECIMAL(38,0). */
+  private[queries] def cosAbove(c: Int): Column =
+    col("dotq") > 0 && lit(100).cast("decimal(38,0)") * col("dotq") * col("dotq") >
+      lit(c).cast("decimal(38,0)") * col("naq") * col("nbq")
 
   /** Exact cosine top-10 against the vec_id=0 query vector. All math in
     * double (floats widened) so the DuckDB list-algebra oracle matches
@@ -729,20 +759,15 @@ object SimilarityQueries {
         .select($"vec_id".cast("int").as("cid"),
           explode(subSlices($"embedding")).as("ms"))
         .select($"ms.m".as("m"), $"cid", $"ms.sub".as("csub"))
-      def qdist(a: Column, b: Column): Column = aggregate(
-        zip_with(a, b, (x, y) => {
-          val diff = x.cast("double") - y.cast("double")
-          round(diff * diff * lit(1e9), 0).cast("long")
-        }),
-        lit(0L), (acc, t) => acc + t)
       val codes = sub.join(broadcast(cb), "m")
-        .select($"vec_id", $"m", $"cid", qdist($"sub", $"csub").as("d2q"))
+        .select($"vec_id", $"m", $"cid",
+          DriverMath.l2Nano($"sub", $"csub").as("d2q"))
         .groupBy($"vec_id", $"m")
         .agg(min(struct($"d2q", $"cid")).as("b"))
         .select($"vec_id", $"m", $"b.cid".as("cid"))
       val qsub = sub.where($"vec_id" === 0).select($"m", $"sub".as("qs"))
       val dt = cb.join(broadcast(qsub), "m")
-        .select($"m", $"cid", qdist($"qs", $"csub").as("dtq"))
+        .select($"m", $"cid", DriverMath.l2Nano($"qs", $"csub").as("dtq"))
       codes.join(broadcast(dt), Seq("m", "cid"))
         .groupBy($"vec_id")
         .agg(
@@ -826,14 +851,15 @@ object SimilarityQueries {
     * the embedding space, then prune within-cluster pairs whose
     * cosine exceeds a threshold, keeping the lowest id — the
     * embedding-level near-dup pass that catches paraphrases exact and
-    * n-gram dedup cannot see. Clustering reuses the
-    * [[embedKmeansAssign]] pipeline (deterministic seed centroids,
-    * nano-quantized exact distances); the cosine test is cleared of
-    * floats entirely by squaring: `cos > 0.4` becomes
-    * `dotq > 0 AND 100·dotq² > 16·naq·nbq` over nano-quantized BIGINT
-    * dot/norm sums, widened to DECIMAL(38,0) for the squares (the
-    * Bollinger sqrt-elimination precedent) — no IEEE boundary can
-    * flip membership. The quantized sums come from the native
+    * n-gram dedup cannot see. The within-cluster pairs are
+    * [[clusterPairDots]] over the [[embedKmeansAssign]] clustering
+    * (deterministic seed centroids, nano-quantized exact distances);
+    * the cosine test [[cosAbove]] is cleared of floats entirely by
+    * squaring: `cos > 0.4` becomes `dotq > 0 AND 100·dotq² >
+    * 16·naq·nbq` over nano-quantized BIGINT dot/norm sums, widened to
+    * DECIMAL(38,0) for the squares (the Bollinger sqrt-elimination
+    * precedent) — no IEEE boundary can flip membership. The quantized
+    * sums come from the native
     * [[graft.functions.VecDotQ9]] kernel (one fused codegen loop;
     * HALF_EVEN per element ≡ DuckDB `roundbankers`) — the interpreted
     * zip_with+round+aggregate fold it replaced was the single largest
@@ -882,31 +908,8 @@ object SimilarityQueries {
       |GROUP BY prune_id, cid
       |ORDER BY vec_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val cent = emb.where($"vec_id" < 8)
-      .select($"vec_id".as("cid"), $"embedding".as("cvec"))
-    val asg = centroidAssign(emb, cent)
-      .select($"vec_id", $"b.cid".as("cid"), $"embedding".as("v"))
-    GraftFunctions.register(s)
-    val n = asg.withColumn("nq", expr("vec_dot_q9(v, v)"))
-    val x = n.select($"vec_id".as("keep_id"), $"cid",
-      $"v".as("xv"), $"nq".as("naq"))
-    val y = n.select($"vec_id".as("prune_id"), $"cid".as("ycid"),
-      $"v".as("yv"), $"nq".as("nbq"))
-    // broadcast the keep side (r22): the cluster key has only 8
-    // distinct values, so a shuffled pair join caps at 8-way
-    // parallelism and AQE's byte-based coalescing then folded the
-    // whole within-cluster dot computation onto ONE core (measured:
-    // two ~0.6 s single-task stages). With the build side broadcast
-    // there is no exchange at all and the dots run at the spread
-    // scan's parallelism; at 100 TB the within-cluster pairing is
-    // salted/blocked upstream long before a broadcast would overflow.
-    broadcast(x).join(y, $"cid" === $"ycid" && $"keep_id" < $"prune_id")
-      .select($"prune_id", $"cid", $"naq", $"nbq",
-        expr("vec_dot_q9(xv, yv)").as("dotq"))
-      .where($"dotq" > 0 &&
-        lit(100).cast("decimal(38,0)") * $"dotq" * $"dotq" >
-          lit(16).cast("decimal(38,0)") * $"naq" * $"nbq")
+    clusterPairDots(Tables.embeddings(s, d))
+      .where(cosAbove(16))
       .groupBy($"prune_id".as("vec_id"), $"cid".as("cluster"))
       .agg(count(lit(1)).as("n_dups"))
       .orderBy($"vec_id")
@@ -963,10 +966,7 @@ object SimilarityQueries {
       |SELECT vec_id, cluster, rnk::INT AS rnk, cluster_n, ratio_ppm
       |FROM r WHERE rnk <= 5 ORDER BY vec_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val cent = emb.where($"vec_id" < 8)
-      .select($"vec_id".as("cid"), $"embedding".as("cvec"))
-    val asg = centroidAssign(emb, cent)
+    val asg = centroidAssign(Tables.embeddings(s, d))
       .select($"vec_id", $"b.cid".as("cluster"), $"b.d2q".as("d2q"))
     val st = asg.groupBy($"cluster")
       .agg(count(lit(1)).as("cluster_n"), sum($"d2q").as("sum_d2q"))
@@ -1005,10 +1005,7 @@ object SimilarityQueries {
       |SELECT vec_id, cid AS cluster, round(d2q::DOUBLE / 1e9, 6) AS dist2
       |FROM best WHERE rn = 1 ORDER BY vec_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val cent = emb.where($"vec_id" < 8)
-      .select($"vec_id".as("cid"), $"embedding".as("cvec"))
-    centroidAssign(emb, cent)
+    centroidAssign(Tables.embeddings(s, d))
       .select($"vec_id", $"b.cid".as("cluster"),
         round($"b.d2q".cast("double") / lit(1e9), 6).as("dist2"))
       .orderBy($"vec_id")
@@ -1049,12 +1046,9 @@ object SimilarityQueries {
       |  round(sum(cq)::DOUBLE / (count(*) * 1e9), 6) AS coord
       |FROM coord GROUP BY cluster, dim ORDER BY cluster, dim""".stripMargin) { (s, d) =>
     import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val cent = emb.where($"vec_id" < 8)
-      .select($"vec_id".as("cid"), $"embedding".as("cvec"))
     // centroidAssign carries the vector through, so the r21 plan's
     // assign ⋈ emb re-attach join (a second corpus scan) is gone too
-    val assign = centroidAssign(emb, cent)
+    val assign = centroidAssign(Tables.embeddings(s, d))
       .select($"vec_id", $"embedding", $"b.cid".as("cluster"))
     assign
       .select($"cluster", posexplode($"embedding").as(Seq("pos", "v")))
@@ -1447,7 +1441,7 @@ object SimilarityQueries {
     * nano-quantized dot/norm sums from the codegen'd
     * [[graft.functions.VecDotQ9]] kernel, `cos > 0.4` squared to
     * `dotq > 0 AND 100·dotq² > 16·naq·nbq` in DECIMAL(38,0)/HUGEINT
-    * (the in-corpus prune's identical threshold algebra); no
+    * (the in-corpus prune's [[cosAbove]] test); no
     * IEEE boundary can flip a contamination verdict.
     *
     * Scale shape: the eval suite is SMALL by nature (thousands of
@@ -1495,9 +1489,7 @@ object SimilarityQueries {
     tr.crossJoin(broadcast(ev))
       .select($"vec_id", $"eid", $"naq", $"nbq",
         expr("vec_dot_q9(v, evec)").as("dotq"))
-      .where($"dotq" > 0 &&
-        lit(100).cast("decimal(38,0)") * $"dotq" * $"dotq" >
-          lit(16).cast("decimal(38,0)") * $"naq" * $"nbq")
+      .where(cosAbove(16))
       .groupBy($"vec_id")
       .agg(count(lit(1)).as("n_eval_hits"), min($"eid").as("closest_eval"))
       .orderBy($"vec_id")

@@ -114,10 +114,7 @@ object SketchQueries {
     // exact arm: the measurement (at 100 TB you'd keep only the sketch)
     val grams = docs
       .select($"source", TextOps.tokens($"text").as("toks"))
-      .select($"source", explode(when(size($"toks") >= 3,
-        transform(sequence(lit(1), size($"toks") - 2),
-          i => array_join(slice($"toks", i, lit(3)), " ")))
-        .otherwise(array().cast("array<string>"))).as("gram"))
+      .select($"source", explode(TextOps.tokenNgrams($"toks", 3)).as("gram"))
     val ex = grams.groupBy($"source")
       .agg(countDistinct($"gram").as("n_exact"))
     fin.join(ex, "source")
@@ -223,10 +220,7 @@ object SketchQueries {
     // exact arm: the measurement the sketches are judged against
     val grams = docs
       .select($"source", TextOps.tokens($"text").as("toks"))
-      .select($"source", explode(when(size($"toks") >= 3,
-        transform(sequence(lit(1), size($"toks") - 2),
-          i => array_join(slice($"toks", i, lit(3)), " ")))
-        .otherwise(array().cast("array<string>"))).as("gram"))
+      .select($"source", explode(TextOps.tokenNgrams($"toks", 3)).as("gram"))
       .distinct()
     val nd = grams.groupBy($"source").agg(count(lit(1)).as("n"))
     val inter = grams.as("a")
@@ -301,8 +295,7 @@ object SketchQueries {
     val g = docs
       .select(TextOps.tokens($"text").as("toks"))
       .where(size($"toks") >= 2)
-      .select(explode(transform(sequence(lit(1), size($"toks") - 1),
-        i => array_join(slice($"toks", i, lit(2)), " "))).as("w"))
+      .select(explode(TextOps.ngramWindows($"toks", 2)).as("w"))
     val cen = g.groupBy($"w").agg(count(lit(1)).as("c"))
     val tot = cen.agg(sum($"c").as("n"))
     val salted = cen
@@ -372,10 +365,7 @@ object SketchQueries {
     val docs = Tables.documents(s, d).where($"text".isNotNull)
     val cen = docs
       .select($"source", TextOps.tokens($"text").as("toks"))
-      .select($"source", explode(when(size($"toks") >= 3,
-        transform(sequence(lit(1), size($"toks") - 2),
-          i => array_join(slice($"toks", i, lit(3)), " ")))
-        .otherwise(array().cast("array<string>"))).as("gram"))
+      .select($"source", explode(TextOps.tokenNgrams($"toks", 3)).as("gram"))
       .groupBy($"source", $"gram").agg(count(lit(1)).as("n"))
     val sk = cen
       .select($"source", $"gram", $"n",

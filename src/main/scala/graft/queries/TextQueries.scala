@@ -662,9 +662,6 @@ object TextQueries {
     * keeps xxhash64 (several times cheaper per shingle). */
   val dedupMinhashPortable: CatalogEntry = {
     val k = 8
-    val mins = (0 until k).map(i =>
-      s"""    min(('0x' || substring(md5(sh || '#$i'), 1, 15))::BIGINT) AS mh$i""")
-      .mkString(",\n")
     val bands = (0 until k / 2).map(j =>
       s"""  SELECT doc_id, $j AS band,
          |    mh${2 * j}::VARCHAR || '_' || mh${2 * j + 1}::VARCHAR AS pair
@@ -678,7 +675,7 @@ object TextQueries {
          |  FROM documents),
          |h AS (
          |  SELECT doc_id,
-         |$mins
+         |${md5MinsSql(k, "sh")}
          |  FROM sh GROUP BY doc_id),
          |b AS (
          |$bands)
@@ -728,10 +725,21 @@ object TextQueries {
        |    d${2 * j}::VARCHAR || '_' || d${2 * j + 1}::VARCHAR AS sig
        |  FROM dns""".stripMargin).mkString("\n  UNION ALL\n")
 
-  /** k independent salted-md5 minhashes (the `minhash_words_md5`
-    * kernel's SQL replay). */
-  private def khashMinsSql(k: Int): String = (0 until k).map(i =>
-    s"""    min(('0x' || substring(md5(g || '#$i'), 1, 15))::BIGINT) AS mh$i""")
+  /** SimHash vote sums s0..s62 over the md5-prefix token hash `h` (the
+    * `simhash63_md5` kernel's SQL replay), and their assembly into the
+    * fingerprint. */
+  private def simhashSumsSql: String = (0 until TextOps.SimhashBits).map(i =>
+    s"""    sum(CASE WHEN (h & (1::BIGINT << $i)) != 0
+       |        THEN 1 ELSE -1 END) AS s$i""".stripMargin).mkString(",\n")
+  private def simhashAssembleSql: String = (0 until TextOps.SimhashBits).map(i =>
+    s"(CASE WHEN s$i >= 0 THEN (1::BIGINT << $i) ELSE 0 END)")
+    .mkString(" +\n  ")
+
+  /** k independent salted-md5 minhashes mh0..mh{k-1} over the `gram`
+    * column (the `minhash_words_md5` / `minhash_bands_md5` kernels' SQL
+    * replay). */
+  private def md5MinsSql(k: Int, gram: String): String = (0 until k).map(i =>
+    s"""    min(('0x' || substring(md5($gram || '#$i'), 1, 15))::BIGINT) AS mh$i""")
     .mkString(",\n")
 
   /** k/2 bands × 2 rows over the k-hash minhash columns. */
@@ -778,6 +786,21 @@ object TextQueries {
           element_at(col("ds"), 2 * j + 2).cast("string"))): _*))
       .as(Seq("band", "sig")))
   }
+
+  /** (doc_id, mhs): k salted-md5 minhashes of each document's word
+    * 3-grams from the row-local `minhash_words_md5` kernel — one call
+    * per doc, no gram explode, no k-min-agg exchange (bit-exactness with
+    * the explode + md5 column form is pinned by SketchExprSpec). Docs
+    * under 3 tokens are dropped, the docs the SQL replay's
+    * `len(toks) >= 3` guard drops. The guard is the TOKEN COUNT
+    * (size(split) = 1 + spaces = the kernel's own nTok, so the row set
+    * is identical), not size(mhs): a filter on the kernel's own output
+    * pushes to the scan WITH THE KERNEL INLINED, and every doc paid the
+    * k=8 salted-md5 pass twice (r22). */
+  private def khashSigs(docs: DataFrame, k: Int): DataFrame =
+    docs.where(size(split(col("text"), " ")) >= 3)
+      .select(col("doc_id"),
+        call_function("minhash_words_md5", col("text"), lit(k), lit(3)).as("mhs"))
 
   /** k-hash (doc_id, band, sig) rows over the kernel's signature
     * arrays. */
@@ -874,7 +897,7 @@ object TextQueries {
       s"""WITH $gramCtesSql,
          |hkh AS (
          |  SELECT doc_id,
-         |${khashMinsSql(k)}
+         |${md5MinsSql(k, "g")}
          |  FROM gr GROUP BY doc_id),
          |bkh AS (
          |${khashBandsSql(k, "hkh")}),
@@ -913,15 +936,8 @@ object TextQueries {
       graft.functions.GraftFunctions.register(s)
       val spread = gramInput(s, d).localCheckpoint()
       // k-hash surface: exactly dedup_bbit_minhash's kernel + bands
-      // token-count guard, not size(mhs) — a filter on the kernel's
-      // output re-inlines the kernel into the pushed scan condition
-      // and doubles the md5 pass (see dedup_layer_agreement, r22)
-      val mh = spread
-        .where(size(split($"text", " ")) >= 3)
-        .select($"doc_id",
-          call_function("minhash_words_md5", $"text", lit(k), lit(3))
-            .as("mhs"))
-      val pkh = bandPairs(khashBandRows(mh, k)).withColumn("in_k", lit(1L))
+      val pkh = bandPairs(khashBandRows(khashSigs(spread, k), k))
+        .withColumn("in_k", lit(1L))
       // OPH surface: exactly dedup_minhash_oph's pipeline
       val poph = bandPairs(ophBandRows(spread, k)).withColumn("in_o", lit(1L))
       pkh.join(poph, Seq("a", "b"), "full_outer")
@@ -971,7 +987,7 @@ object TextQueries {
       s"""WITH $gramCtesSql,
          |h AS (
          |  SELECT doc_id,
-         |${khashMinsSql(k)}
+         |${md5MinsSql(k, "g")}
          |  FROM gr GROUP BY doc_id),
          |b AS (
          |${khashBandsSql(k, "h")}),
@@ -1033,13 +1049,6 @@ object TextQueries {
     * fingerprint algorithm gets a cross-engine DuckDB hash check. The
     * production entry keeps xxhash64. */
   val textSimhashPortable: CatalogEntry = {
-    val bits = TextOps.SimhashBits
-    val sums = (0 until bits).map(i =>
-      s"""    sum(CASE WHEN (h & (1::BIGINT << $i)) != 0
-         |        THEN 1 ELSE -1 END) AS s$i""".stripMargin).mkString(",\n")
-    val assemble = (0 until bits).map(i =>
-      s"(CASE WHEN s$i >= 0 THEN (1::BIGINT << $i) ELSE 0 END)")
-      .mkString(" +\n  ")
     CatalogEntry(
       "text_simhash_portable",
       s"""WITH tok AS (
@@ -1051,10 +1060,10 @@ object TextQueries {
          |  FROM tok),
          |v AS (
          |  SELECT doc_id,
-         |$sums
+         |$simhashSumsSql
          |  FROM h GROUP BY doc_id)
          |SELECT doc_id,
-         |  $assemble AS simhash
+         |  $simhashAssembleSql AS simhash
          |FROM v ORDER BY doc_id""".stripMargin) { (s, d) =>
       import s.implicits._
       graft.functions.GraftFunctions.register(s)
@@ -1129,13 +1138,6 @@ object TextQueries {
     * production path keeps xxhash64; this twin is verification
     * overhead, excluded from the bench production subtotal. */
   val dedupSimhashPortable: CatalogEntry = {
-    val bits = TextOps.SimhashBits
-    val sums = (0 until bits).map(i =>
-      s"""    sum(CASE WHEN (h & (1::BIGINT << $i)) != 0
-         |        THEN 1 ELSE -1 END) AS s$i""".stripMargin).mkString(",\n")
-    val assemble = (0 until bits).map(i =>
-      s"(CASE WHEN s$i >= 0 THEN (1::BIGINT << $i) ELSE 0 END)")
-      .mkString(" +\n  ")
     CatalogEntry(
       "dedup_simhash_portable",
       s"""WITH aug AS (
@@ -1152,10 +1154,10 @@ object TextQueries {
          |      FROM tok),
          |v AS (
          |  SELECT doc_id,
-         |$sums
+         |$simhashSumsSql
          |  FROM h GROUP BY doc_id),
          |f AS (SELECT doc_id,
-         |  $assemble AS fp
+         |  $simhashAssembleSql AS fp
          |  FROM v),
          |b AS (
          |  SELECT doc_id, fp, band, ((fp >> (16 * band)) & 65535) AS bval
@@ -1602,6 +1604,52 @@ object TextQueries {
       .orderBy($"rank")
   }
 
+  /** Unigram LM log-probs (token, lp_q) over a (..., token) stream:
+    * the vocabulary census, its total broadcast back, and each token's
+    * ln(n / total) nano-quantized to bigint — the one LM table of
+    * [[docLmScore]], [[docLmExcessRank]] and [[qualityPplBuckets]]. */
+  private def unigramLp(tok: DataFrame): DataFrame = {
+    val vocab = tok.groupBy(col("token")).agg(count(lit(1)).as("n"))
+    val total = vocab.agg(sum(col("n")).as("t"))
+    vocab.crossJoin(broadcast(total))
+      .select(col("token"),
+        round(log(col("n").cast("double") / col("t").cast("double")) * lit(1e9), 0)
+          .cast("long").as("lp_q"))
+  }
+
+  /** (doc_id, bigram) rows of a (doc_id, text) frame, in the
+    * `concat(element_at ...)` form the bigram-LM oracles replay. */
+  private def lmBigrams(dd: DataFrame): DataFrame =
+    dd.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
+      .where(size(col("toks")) >= 2)
+      .select(col("doc_id"), explode(expr(
+        "transform(sequence(1, size(toks) - 1)," +
+          " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"))
+        .as("bigram"))
+
+  /** Add-one bigram LM log-probs (bigram, lp_q) over [[lmBigrams]] rows:
+    * the bigram census c12, the context counts c1 reduced from it, and
+    * ln((n12 + 1) / (n1 + vs)) nano-quantized to bigint, with the
+    * vocabulary size `vs` from the one-row frame `v` — the one table of
+    * [[docLmBigramScore]] and [[docLmExcessRank]]. */
+  private def bigramLp(bg: DataFrame, v: DataFrame): DataFrame = {
+    val c12 = bg.groupBy(col("bigram")).agg(count(lit(1)).as("n12"))
+    val c1 = c12
+      .groupBy(split(col("bigram"), " ").getItem(0).as("w1"))
+      .agg(sum(col("n12")).as("n1"))
+    c12
+      .withColumn("w1", split(col("bigram"), " ").getItem(0))
+      .join(c1, "w1")
+      .crossJoin(broadcast(v))
+      .select(col("bigram"),
+        round(log((col("n12") + 1).cast("double") / (col("n1") + col("vs")).cast("double"))
+          * lit(1e9), 0).cast("long").as("lp_q"))
+  }
+
+  /** Per-document average NLL of the summed nano log-probs `lp_q`. */
+  private def avgNll: Column =
+    round(-(sum(col("lp_q")).cast("double") / lit(1e9)) / count(lit(1)), 6)
+
   /** Unigram-LM cross-entropy scoring — the CCNet-family quality
     * signal: train a unigram language model on the corpus itself
     * (token frequencies), then score every document by its average
@@ -1644,15 +1692,7 @@ object TextQueries {
     val tok = Tables.documents(s, d)
       .where($"text".isNotNull && length($"text") > 0)
       .select($"doc_id", explode(TextOps.tokens($"text")).as("token"))
-    val vocab = tok.groupBy($"token").agg(count(lit(1)).as("n"))
-    val total = vocab.agg(sum($"n").as("t"))
-    val lp = vocab.crossJoin(broadcast(total))
-      .select($"token",
-        round(log($"n".cast("double") / $"t".cast("double")) * lit(1e9), 0)
-          .cast("long").as("lp_q"))
-    val avgNll =
-      round(-(sum($"lp_q").cast("double") / lit(1e9)) / count(lit(1)), 6)
-    tok.join(lp, Seq("token"))
+    tok.join(unigramLp(tok), Seq("token"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_tokens"),
         avgNll.as("avg_nll"),
@@ -1708,32 +1748,13 @@ object TextQueries {
       |  round(exp(round(-(sum(lp_q)::DOUBLE / 1e9) / count(*), 6)), 4) AS ppl
       |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    val t = Tables.documents(s, d)
-      .where($"text".isNotNull && length($"text") > 0)
-      .select($"doc_id", TextOps.tokens($"text").as("toks"))
-      .where(size($"toks") >= 2)
-    val bg = t.select($"doc_id", explode(expr(
-      "transform(sequence(1, size(toks) - 1)," +
-        " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"))
-      .as("bigram"))
-    val c12 = bg.groupBy($"bigram").agg(count(lit(1)).as("n12"))
-    val c1 = c12
-      .groupBy(split($"bigram", " ").getItem(0).as("w1"))
-      .agg(sum($"n12").as("n1"))
+    val bg = lmBigrams(Tables.documents(s, d)
+      .where($"text".isNotNull && length($"text") > 0))
     val v = Tables.documents(s, d)
       .where($"text".isNotNull && length($"text") > 0)
       .select(explode(TextOps.tokens($"text")).as("token"))
       .agg(count_distinct($"token").as("vs"))
-    val lp = c12
-      .withColumn("w1", split($"bigram", " ").getItem(0))
-      .join(c1, "w1")
-      .crossJoin(broadcast(v))
-      .select($"bigram",
-        round(log(($"n12" + 1).cast("double") / ($"n1" + $"vs").cast("double"))
-          * lit(1e9), 0).cast("long").as("lp_q"))
-    val avgNll =
-      round(-(sum($"lp_q").cast("double") / lit(1e9)) / count(lit(1)), 6)
-    bg.join(lp, Seq("bigram"))
+    bg.join(bigramLp(bg, v), Seq("bigram"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         avgNll.as("avg_nll"),
@@ -1750,12 +1771,12 @@ object TextQueries {
     * cheap deterministic analogue of reducible-holdout-loss selection
     * (Mindermann et al., ICML 2022: prioritize points whose training
     * loss exceeds an irreducible reference loss), with the pipeline's
-    * own unigram LM as the reference model. Both scoring chains are
-    * nested verbatim from their entries (the measurement cannot drift
-    * from the scorers), and the gap stays on the integer lattice —
-    * per-doc totals of the nano-quantized log-probs, one truncating
-    * division each — so the ranking is bit-stable where a
-    * difference-of-rounded-doubles would not be.
+    * own unigram LM as the reference model. Both scoring chains read
+    * their entries' own LM tables ([[unigramLp]], [[bigramLp]]), so
+    * the measurement cannot drift from the scorers, and the gap stays
+    * on the integer lattice — per-doc totals of the nano-quantized
+    * log-probs, one truncating division each — so the ranking is
+    * bit-stable where a difference-of-rounded-doubles would not be.
     *
     * Scale shape: the two LM chains are the existing scale-safe plans
     * (vocab/bigram censuses + broadcast totals); the composite adds
@@ -1807,34 +1828,12 @@ object TextQueries {
     val dd = Tables.documents(s, d)
       .where($"text".isNotNull && length($"text") > 0)
     val tok = dd.select($"doc_id", explode(TextOps.tokens($"text")).as("token"))
-    val vocab = tok.groupBy($"token").agg(count(lit(1)).as("n"))
-    val total = vocab.agg(sum($"n").as("t"))
-    val ulp = vocab.crossJoin(broadcast(total))
-      .select($"token",
-        round(log($"n".cast("double") / $"t".cast("double")) * lit(1e9), 0)
-          .cast("long").as("lp_q"))
-    val u = tok.join(ulp, Seq("token"))
+    val u = tok.join(unigramLp(tok), Seq("token"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_tok"), (-sum($"lp_q")).as("u_tot"))
-    val t = dd.select($"doc_id", TextOps.tokens($"text").as("toks"))
-      .where(size($"toks") >= 2)
-    val bg = t.select($"doc_id", explode(expr(
-      "transform(sequence(1, size(toks) - 1)," +
-        " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"))
-      .as("bigram"))
-    val c12 = bg.groupBy($"bigram").agg(count(lit(1)).as("n12"))
-    val c1 = c12
-      .groupBy(split($"bigram", " ").getItem(0).as("w1"))
-      .agg(sum($"n12").as("n1"))
-    val v = tok.agg(count_distinct($"token").as("vs"))
-    val blp = c12
-      .withColumn("w1", split($"bigram", " ").getItem(0))
-      .join(c1, "w1")
-      .crossJoin(broadcast(v))
-      .select($"bigram",
-        round(log(($"n12" + 1).cast("double") / ($"n1" + $"vs").cast("double"))
-          * lit(1e9), 0).cast("long").as("lp_q"))
-    val b = bg.join(blp, Seq("bigram"))
+    val bg = lmBigrams(dd)
+    val b = bg.join(bigramLp(bg, tok.agg(count_distinct($"token").as("vs"))),
+        Seq("bigram"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_big"), (-sum($"lp_q")).as("b_tot"))
     val sel = u.join(b, "doc_id")
@@ -3416,13 +3415,13 @@ object TextQueries {
     *
     * Scale shape: candidates come from the production blocker
     * ([[Dedup.sharedGramPairs]] — bounded postings, never all-pairs);
-    * the verify stage joins pairs back to per-doc gram sets on each
-    * endpoint (two hash joins keyed on doc id) and the Jaccard is one
-    * row-local `array_intersect` per pair — computed ONCE into a
-    * column before the arithmetic (projecting it k times re-inlines
-    * the intersection k times under CollapseProject). All-integer
-    * ppm: `(1e6·|∩|) div (|A|+|B|−|∩|)`, denominator ≥ 1 since a
-    * candidate shares ≥ 1 gram. At 100 TB the histogram runs on a
+    * the verify stage, [[Dedup.pairGramOverlap]], joins pairs back to
+    * per-doc gram sets on each endpoint (two hash joins keyed on doc
+    * id) and the intersection is one row-local `array_intersect` per
+    * pair — computed ONCE into a column before the arithmetic
+    * (projecting it k times re-inlines the intersection k times under
+    * CollapseProject). All-integer ppm: `(1e6·|∩|) div (|A|+|B|−|∩|)`,
+    * denominator ≥ 1 since a candidate shares ≥ 1 gram. At 100 TB the histogram runs on a
     * hash-sampled slice of the pairs; the plan is unchanged. */
   val dedupCandidateQuality: CatalogEntry = CatalogEntry(
     "dedup_candidate_quality",
@@ -3451,27 +3450,10 @@ object TextQueries {
       |FROM p GROUP BY 1 ORDER BY bucket""".stripMargin) { (s, d) =>
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val pairs0 = Dedup.sharedGramPairs(docs, "doc_id", "text",
+    val pairs = Dedup.sharedGramPairs(docs, "doc_id", "text",
       n = 13, maxDf = 50)
-    val gl0 = Tables.spreadScan(docs.where($"text".isNotNull))
-      .select($"doc_id", Dedup.tokenNgrams($"text", 13).as("gs"))
-    // candidate-endpoint slice (r21, guide §3.2/§8): the 13-gram
-    // arrays are computed and shuffled for candidate endpoints only —
-    // the r20 plan joined the FULL per-doc array table onto the pairs
-    // twice
-    val (pairs, gl) = Dedup.pairEndpointSlice(pairs0, gl0, "doc_id")
-    pairs
-      .join(gl.select($"doc_id".as("src"), $"gs".as("ga")), "src")
-      .join(gl.select($"doc_id".as("dst"), $"gs".as("gb")), "dst")
-      .select(size($"ga").as("na"), size($"gb").as("nb"),
-        size(array_intersect($"ga", $"gb")).as("ni"))
-      // size() yields IntegerType: 1000000*ni would wrap 32-bit for
-      // docs with >= 2148 distinct 13-grams (~2160 tokens) — silent at
-      // the test SFs (docs cap at 100 tokens) but live at corpus
-      // scale, and the DuckDB oracle's len() is already BIGINT.
-      // Promote before multiplying.
-      .select(expr("(1000000L * cast(ni as bigint)) div " +
-        "(cast(na as bigint) + nb - ni)").as("jac_ppm"))
+    Dedup.pairGramOverlap(pairs, docs, "doc_id", "text", 13)
+      .select(expr("(1000000L * ni) div (na + nb - ni)").as("jac_ppm"))
       .groupBy(expr("(jac_ppm * 10) div 1000000").cast("bigint")
         .as("bucket"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -3517,9 +3499,6 @@ object TextQueries {
     * curves are estimates by nature — with the plan unchanged. */
   val dedupLshScurve: CatalogEntry = {
     val k = 8
-    val mins = (0 until k).map(i =>
-      s"""    min(('0x' || substring(md5(sh || '#$i'), 1, 15))::BIGINT) AS mh$i""")
-      .mkString(",\n")
     val bandList = (0 until k / 2).map(j =>
       s"substring(sha256(mh${2 * j}::VARCHAR || '_' || " +
         s"mh${2 * j + 1}::VARCHAR), 1, 16)").mkString("[", ",\n     ", "]")
@@ -3547,7 +3526,7 @@ object TextQueries {
          |sh AS (SELECT doc_id, unnest(shg) AS sh FROM shl),
          |h AS (
          |  SELECT doc_id,
-         |$mins
+         |${md5MinsSql(k, "sh")}
          |  FROM sh GROUP BY doc_id),
          |bl AS (
          |  SELECT doc_id,
@@ -3735,11 +3714,11 @@ object TextQueries {
          |    FROM (SELECT freq, string_split(sym, ' ') AS sy FROM s${r - 1}))
          |  GROUP BY pr),
          |m$r AS (SELECT pr, cnt FROM p$r ORDER BY cnt DESC, pr LIMIT 1),
-         |s$r AS (SELECT word, freq, trim(replace(replace(
+         |s$r AS (SELECT word, freq, coalesce(trim(replace(replace(
          |           ' ' || replace(sym, ' ', '  ') || ' ',
          |           ' ' || replace((SELECT pr FROM m$r), ' ', '  ') || ' ',
          |           ' ' || replace((SELECT pr FROM m$r), ' ', '') || ' '),
-         |           '  ', ' ')) AS sym FROM s${r - 1})""".stripMargin
+         |           '  ', ' ')), sym) AS sym FROM s${r - 1})""".stripMargin
     }.mkString
   }
 
@@ -3877,10 +3856,7 @@ object TextQueries {
     Tables.documents(s, d)
       .where($"text".isNotNull)
       .select($"source", TextOps.tokens($"text").as("toks"))
-      .select($"source", explode(when(size($"toks") >= 3,
-        transform(sequence(lit(1), size($"toks") - 2),
-          i => array_join(slice($"toks", i, lit(3)), " ")))
-        .otherwise(array().cast("array<string>"))).as("gram"))
+      .select($"source", explode(TextOps.tokenNgrams($"toks", 3)).as("gram"))
       .groupBy($"source", $"gram")
       .agg(count(lit(1)).as("n"))
       .groupBy($"source")
@@ -3929,10 +3905,7 @@ object TextQueries {
     Tables.documents(s, d)
       .where($"text".isNotNull)
       .select($"source", TextOps.tokens($"text").as("toks"))
-      .select($"source", explode(when(size($"toks") >= 3,
-        transform(sequence(lit(1), size($"toks") - 2),
-          i => array_join(slice($"toks", i, lit(3)), " ")))
-        .otherwise(array().cast("array<string>"))).as("gram"))
+      .select($"source", explode(TextOps.tokenNgrams($"toks", 3)).as("gram"))
       .groupBy($"source", $"gram")
       .agg(count(lit(1)).as("cnt"))
       .groupBy($"source")
@@ -3952,11 +3925,11 @@ object TextQueries {
     * every candidate pair at containment ≥ 0.5 with both measures, so
     * the gap column IS the quote/subset signal. Candidates come from
     * the production blocker ([[Dedup.sharedGramPairs]], df-capped,
-    * never all-pairs); the verify stage is the `dedup_candidate_
-    * quality` shape — two id-keyed hash joins, one row-local
-    * `array_intersect` per pair computed once into a column,
-    * all-BIGINT ppm arithmetic (sizes promoted before multiplying —
-    * the 32-bit-wrap class the candidate census hit). */
+    * never all-pairs); the verify stage is [[Dedup.pairGramOverlap]],
+    * shared with `dedup_candidate_quality` — two id-keyed hash joins,
+    * one row-local `array_intersect` per pair, all-BIGINT ppm
+    * arithmetic (sizes promoted before multiplying — the 32-bit-wrap
+    * class the candidate census hit). */
   val dedupContainment: CatalogEntry = CatalogEntry(
     "dedup_containment",
     """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
@@ -3984,20 +3957,9 @@ object TextQueries {
       |ORDER BY src, dst""".stripMargin) { (s, d) =>
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val pairs0 = Dedup.sharedGramPairs(docs, "doc_id", "text",
+    val pairs = Dedup.sharedGramPairs(docs, "doc_id", "text",
       n = 5, maxDf = 25)
-    val gl0 = Tables.spreadScan(docs.where($"text".isNotNull))
-      .select($"doc_id", Dedup.tokenNgrams($"text", 5).as("gs"))
-    // candidate-endpoint slice (r21, guide §3.2/§8): gram arrays are
-    // computed and shuffled for candidate endpoints only
-    val (pairs, gl) = Dedup.pairEndpointSlice(pairs0, gl0, "doc_id")
-    pairs
-      .join(gl.select($"doc_id".as("src"), $"gs".as("ga")), "src")
-      .join(gl.select($"doc_id".as("dst"), $"gs".as("gb")), "dst")
-      .select($"src", $"dst",
-        size($"ga").cast("bigint").as("na"),
-        size($"gb").cast("bigint").as("nb"),
-        size(array_intersect($"ga", $"gb")).cast("bigint").as("ni"))
+    Dedup.pairGramOverlap(pairs, docs, "doc_id", "text", 5)
       .where(expr("(1000000L * ni) div least(na, nb)") >= 500000L)
       .select($"src", $"dst", $"na", $"nb", $"ni",
         expr("(1000000L * ni) div least(na, nb)").as("cont_ppm"),
@@ -4082,21 +4044,10 @@ object TextQueries {
       .select(
         when($"src" % 3 === 0, $"src").otherwise($"dst").as("nid"),
         when($"src" % 3 === 0, $"dst").otherwise($"src").as("rid"))
-    val gl0 = Tables.spreadScan(docs)
-      .select($"doc_id", Dedup.tokenNgrams($"text", 5).as("gs"))
-    // candidate-endpoint slice (r21, guide §3.2/§8), taken AFTER the
-    // new/ref boundary filter so the endpoint universe is the oriented
-    // cross-boundary one: gram arrays are computed and shuffled for
-    // candidate endpoints only
-    val (pairs, gl) = Dedup.pairEndpointSlice(pairs0, gl0, "doc_id",
-      srcCol = "nid", dstCol = "rid")
-    val cand = pairs
-      .join(gl.select($"doc_id".as("nid"), $"gs".as("ga")), "nid")
-      .join(gl.select($"doc_id".as("rid"), $"gs".as("gb")), "rid")
-      .select($"nid",
-        size($"ga").cast("bigint").as("na"),
-        size($"gb").cast("bigint").as("nb"),
-        size(array_intersect($"ga", $"gb")).cast("bigint").as("ni"))
+    // the overlap's endpoint slice is taken AFTER the new/ref boundary
+    // filter, so the endpoint universe is the oriented cross-boundary one
+    val cand = Dedup.pairGramOverlap(pairs0, docs, "doc_id", "text", 5,
+        srcCol = "nid", dstCol = "rid")
       .select($"nid", expr("(1000000L * ni) div (na + nb - ni)").as("jac"))
       .groupBy($"nid")
       .agg(max($"jac").as("best_jac_ppm"),
@@ -4222,15 +4173,7 @@ object TextQueries {
     val tok = docs
       .where($"text".isNotNull && length($"text") > 0)
       .select($"doc_id", explode(TextOps.tokens($"text")).as("token"))
-    val vocab = tok.groupBy($"token").agg(count(lit(1)).as("n"))
-    val total = vocab.agg(sum($"n").as("t"))
-    val lp = vocab.crossJoin(broadcast(total))
-      .select($"token",
-        round(log($"n".cast("double") / $"t".cast("double")) * lit(1e9), 0)
-          .cast("long").as("lp_q"))
-    val avgNll =
-      round(-(sum($"lp_q").cast("double") / lit(1e9)) / count(lit(1)), 6)
-    val scored = tok.join(lp, Seq("token"))
+    val scored = tok.join(unigramLp(tok), Seq("token"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_tokens"), avgNll.as("avg_nll"))
     val binned = scored
@@ -4376,10 +4319,7 @@ object TextQueries {
     val docs = Tables.documents(s, d)
     val fs = docs.where($"text".isNotNull)
       .select($"doc_id", TextOps.tokens($"text").as("toks"))
-      .select($"doc_id", explode(when(size($"toks") >= 3,
-        transform(sequence(lit(1), size($"toks") - 2),
-          i => array_join(slice($"toks", i, lit(3)), " ")))
-        .otherwise(array().cast("array<string>"))).as("gram"))
+      .select($"doc_id", explode(TextOps.tokenNgrams($"toks", 3)).as("gram"))
       .groupBy($"gram").agg(min($"doc_id").as("fd"))
     val cps = docs.agg((max($"doc_id") + 1).as("n"))
       .select(explode(sequence(lit(1), lit(8))).as("k"), $"n")
@@ -4609,10 +4549,7 @@ object TextQueries {
     val docs = Tables.documents(s, d)
     val g = docs.where($"text".isNotNull)
       .select($"doc_id", TextOps.tokens($"text").as("toks"))
-      .select($"doc_id", explode(when(size($"toks") >= 3,
-        transform(sequence(lit(1), size($"toks") - 2),
-          i => array_join(slice($"toks", i, lit(3)), " ")))
-        .otherwise(array().cast("array<string>"))).as("gram"))
+      .select($"doc_id", explode(TextOps.tokenNgrams($"toks", 3)).as("gram"))
     val nd = docs.agg((max($"doc_id") + 1).as("n"))
     val occ = g.crossJoin(broadcast(nd))
       .groupBy(expr("(doc_id * 8) div n").as("octile"))
@@ -4727,20 +4664,6 @@ object TextQueries {
     * dominate. */
   val dedupLayerAgreement: CatalogEntry = {
     val k = 8
-    val mins = (0 until k).map(i =>
-      s"""    min(('0x' || substring(md5(sh || '#$i'), 1, 15))::BIGINT) AS mh$i""")
-      .mkString(",\n")
-    val mbands = (0 until k / 2).map(j =>
-      s"""  SELECT doc_id, $j AS band,
-         |    mh${2 * j}::VARCHAR || '_' || mh${2 * j + 1}::VARCHAR AS sig
-         |  FROM mh""".stripMargin).mkString("\n  UNION ALL\n")
-    val bits = TextOps.SimhashBits
-    val sums = (0 until bits).map(i =>
-      s"""    sum(CASE WHEN (h & (1::BIGINT << $i)) != 0
-         |        THEN 1 ELSE -1 END) AS s$i""".stripMargin).mkString(",\n")
-    val assemble = (0 until bits).map(i =>
-      s"(CASE WHEN s$i >= 0 THEN (1::BIGINT << $i) ELSE 0 END)")
-      .mkString(" +\n  ")
     CatalogEntry(
       "dedup_layer_agreement",
       s"""WITH dd AS (SELECT doc_id, text FROM documents WHERE text IS NOT NULL),
@@ -4752,10 +4675,10 @@ object TextQueries {
          |  FROM tt WHERE len(toks) >= 3),
          |mh AS (
          |  SELECT doc_id,
-         |$mins
+         |${md5MinsSql(k, "sh")}
          |  FROM msh GROUP BY doc_id),
          |mb AS (
-         |$mbands),
+         |${khashBandsSql(k, "mh")}),
          |dmh AS (
          |  SELECT DISTINCT b2.doc_id AS did
          |  FROM mb a JOIN mb b2 ON a.band = b2.band AND a.sig = b2.sig
@@ -4766,10 +4689,10 @@ object TextQueries {
          |        FROM stok),
          |sv AS (
          |  SELECT doc_id,
-         |$sums
+         |$simhashSumsSql
          |  FROM sh2 GROUP BY doc_id),
          |sfp AS (SELECT doc_id,
-         |  $assemble AS fp
+         |  $simhashAssembleSql AS fp
          |  FROM sv),
          |sb AS (
          |  SELECT doc_id, fp, band, ((fp >> (16 * band)) & 65535) AS bval
@@ -4866,28 +4789,9 @@ object TextQueries {
       val dd = docs.where($"text".isNotNull)
 
       // MinHash layer: word-3-gram shingles -> 8 portable md5
-      // minhashes via the single-pass `minhash_words_md5` kernel (one
-      // row-local call per doc — no gram explode, no 8-min-agg
-      // exchange; bit-exactness with the explode+md5 column
-      // formulation is pinned by SketchExprSpec) -> 4 bands x 2 rows,
-      // band equi-join (never all-pairs). Kernel returns the EMPTY
-      // array for docs with < 3 tokens — the same docs the SQL
-      // replay's `len(toks) >= 3` guard drops. r22: the guard is the
-      // TOKEN COUNT (size(split) = 1 + spaces = exactly the kernel's
-      // nTok, so the row set is identical), not size(mhs) — a filter
-      // on the kernel's own output pushes to the scan WITH THE KERNEL
-      // INLINED, so every doc paid the k=8 salted-md5 pass twice
-      // (pushed filter + projection; the before-plan's scan Condition
-      // shows `size(minhash_words_md5(..)) > 0`).
-      val mh = dd.where(size(split($"text", " ")) >= 3)
-        .select($"doc_id",
-          call_function("minhash_words_md5", $"text", lit(k), lit(3))
-            .as("mhs"))
-      val bands = mh.select($"doc_id", posexplode(array(
-        (0 until k / 2).map(j => concat_ws("_",
-          element_at($"mhs", 2 * j + 1).cast("string"),
-          element_at($"mhs", 2 * j + 2).cast("string"))): _*))
-        .as(Seq("band", "sig")))
+      // minhashes ([[khashSigs]]) -> 4 bands x 2 rows, band equi-join
+      // (never all-pairs)
+      val bands = khashBandRows(khashSigs(dd, k), k)
       val dropMinhash = bands.as("a").join(bands.as("b"),
           col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
             col("a.doc_id") < col("b.doc_id"))
@@ -4901,21 +4805,9 @@ object TextQueries {
         .select($"id_b".as("did")).distinct()
 
       // Containment layer: the dedup_containment pipeline, drop = dst
-      // (candidate-endpoint slice r21, guide §3.2/§8: gram arrays
-      // computed/shuffled for candidate endpoints only)
-      val ctCand0 = graft.ext.Dedup.sharedGramPairs(
+      val ctCand = Dedup.sharedGramPairs(
         docs, "doc_id", "text", n = 5, maxDf = 25)
-      val gl0 = Tables.spreadScan(dd)
-        .select($"doc_id", graft.ext.Dedup.tokenNgrams($"text", 5).as("gs"))
-      val (ctCand, gl) = graft.ext.Dedup.pairEndpointSlice(
-        ctCand0, gl0, "doc_id")
-      val dropContainment = ctCand
-        .join(gl.select($"doc_id".as("src"), $"gs".as("ga")), "src")
-        .join(gl.select($"doc_id".as("dst"), $"gs".as("gb")), "dst")
-        .select($"dst",
-          size($"ga").cast("bigint").as("na"),
-          size($"gb").cast("bigint").as("nb"),
-          size(array_intersect($"ga", $"gb")).cast("bigint").as("ni"))
+      val dropContainment = Dedup.pairGramOverlap(ctCand, dd, "doc_id", "text", 5)
         .where(expr("(1000000L * ni) div least(na, nb)") >= 500000L)
         .select($"dst".as("did")).distinct()
 
@@ -4985,26 +4877,18 @@ object TextQueries {
     * candidate pass per layer plus a ≤|dropped|-row flag aggregate,
     * never a per-threshold rescan. The only setting that widens a
     * candidate set (8×1 banding) reuses the already-computed
-    * signature. The DuckDB oracle replays all four layers as CTEs
-    * (the [[dedupLayerAgreement]] pattern) with the same
-    * once-then-filter structure. */
+    * signature. Each layer's expensive stage is the one
+    * [[dedupLayerAgreement]] runs ([[khashSigs]],
+    * `Dedup.simhashNearDupPairs`, `Dedup.pairGramOverlap`,
+    * `SimilarityQueries.clusterPairDots`); the DuckDB oracle replays
+    * all four layers as CTEs with the same once-then-filter structure. */
   val dedupThresholdSensitivity: CatalogEntry = {
     val k = 8
-    val mins = (0 until k).map(i =>
-      s"""    min(('0x' || substring(md5(sh || '#$i'), 1, 15))::BIGINT) AS mh$i""")
-      .mkString(",\n")
     def mbands(rows: Int): String = (0 until k / rows).map { j =>
       val sig = (0 until rows).map(r => s"mh${rows * j + r}::VARCHAR")
         .mkString(" || '_' || ")
       s"""  SELECT doc_id, $j AS band, $sig AS sig FROM mh"""
     }.mkString("\n  UNION ALL\n")
-    val bits = TextOps.SimhashBits
-    val sums = (0 until bits).map(i =>
-      s"""    sum(CASE WHEN (h & (1::BIGINT << $i)) != 0
-         |        THEN 1 ELSE -1 END) AS s$i""".stripMargin).mkString(",\n")
-    val assemble = (0 until bits).map(i =>
-      s"(CASE WHEN s$i >= 0 THEN (1::BIGINT << $i) ELSE 0 END)")
-      .mkString(" +\n  ")
     def cosFlag(coef: Int, name: String): String =
       s"""    max(CASE WHEN dotq > 0 AND
          |      100::HUGEINT * dotq::HUGEINT * dotq::HUGEINT >
@@ -5021,7 +4905,7 @@ object TextQueries {
          |  FROM tt WHERE len(toks) >= 3),
          |mh AS (
          |  SELECT doc_id,
-         |$mins
+         |${md5MinsSql(k, "sh")}
          |  FROM msh GROUP BY doc_id),
          |mb1 AS (
          |${mbands(1)}),
@@ -5053,10 +4937,10 @@ object TextQueries {
          |        FROM stok),
          |sv AS (
          |  SELECT doc_id,
-         |$sums
+         |$simhashSumsSql
          |  FROM sh2 GROUP BY doc_id),
          |sfp AS (SELECT doc_id,
-         |  $assemble AS fp
+         |  $simhashAssembleSql AS fp
          |  FROM sv),
          |sb AS (
          |  SELECT doc_id, fp, band, ((fp >> (16 * band)) & 65535) AS bval
@@ -5180,14 +5064,7 @@ object TextQueries {
       // at sf0.1); this keeps re-evaluation and shrinks its
       // multiplier. At production scale the signature table would be
       // persisted once and all layouts read it.
-      // token-count guard, not size(mhs) — a filter on the kernel's
-      // output pushes to the scan with the kernel inlined and doubles
-      // the md5 pass (same fix as dedup_layer_agreement; identical
-      // row set: size(split) = 1 + spaces = the kernel's own nTok)
-      val mh = dd.where(size(split($"text", " ")) >= 3)
-        .select($"doc_id",
-          call_function("minhash_words_md5", $"text", lit(k), lit(3))
-            .as("mhs"))
+      val mh = khashSigs(dd, k)
       val bandStructs = Seq(1, 2, 4).flatMap { rows =>
         (0 until k / rows).map(j =>
           struct(lit(rows).as("s"), lit(j).as("band"),
@@ -5222,68 +5099,25 @@ object TextQueries {
           lit(1).as("f_h3"))
 
       // Containment: rare-gram candidate pairs ONCE; per-doc MAX
-      // containment, thresholds as flag bits (candidate-endpoint
-      // slice r21, guide §3.2/§8: gram arrays computed/shuffled for
-      // candidate endpoints only)
-      val ctCand0 = graft.ext.Dedup.sharedGramPairs(
+      // containment, thresholds as flag bits
+      val ctCand = Dedup.sharedGramPairs(
         docs, "doc_id", "text", n = 5, maxDf = 25)
-      val gl0 = Tables.spreadScan(dd)
-        .select($"doc_id", graft.ext.Dedup.tokenNgrams($"text", 5).as("gs"))
-      val (ctCand, gl) = graft.ext.Dedup.pairEndpointSlice(
-        ctCand0, gl0, "doc_id")
-      val cflag = ctCand
-        .join(gl.select($"doc_id".as("src"), $"gs".as("ga")), "src")
-        .join(gl.select($"doc_id".as("dst"), $"gs".as("gb")), "dst")
+      val cflag = Dedup.pairGramOverlap(ctCand, dd, "doc_id", "text", 5)
         .select($"dst".as("did"),
-          expr("(1000000L * cast(size(array_intersect(ga, gb)) AS BIGINT))" +
-            " div least(cast(size(ga) AS BIGINT), cast(size(gb) AS BIGINT))")
-            .as("cont_ppm"))
+          expr("(1000000L * ni) div least(na, nb)").as("cont_ppm"))
         .groupBy($"did").agg(max($"cont_ppm").as("cm"))
         .select($"did",
           when($"cm" >= 500000L, 1).otherwise(0).as("f_c50"),
           when($"cm" >= 700000L, 1).otherwise(0).as("f_c70"),
           when($"cm" >= 900000L, 1).otherwise(0).as("f_c90"))
 
-      // Semantic: within-cluster pair dots ONCE (the SemDeDup assign +
-      // vec_dot_q9 machinery of dedup_semantic_embed), three cos
-      // thresholds as exact-integer bits over the same quantized dots
-      // r22 row-local assign (the dedup_semantic_embed change, same
-      // rationale): centroids fold into one broadcast array and the
-      // argmin is a row-local array_min over (d2q, cid) structs —
-      // the corpus-wide struct-min exchange (AQE-coalescible onto one
-      // core; SortAggregate) disappears; identical winner per vector.
-      val emb = Tables.embeddings(s, d)
-      val centArr = emb.where($"vec_id" < 8)
-        .select($"vec_id".as("cid"), $"embedding".as("cvec"))
-        .agg(sort_array(collect_list(struct($"cid", $"cvec"))).as("cs"))
-      val asg = emb.crossJoin(broadcast(centArr))
-        .select($"vec_id", $"embedding".as("v"),
-          array_min(transform($"cs", c =>
-            struct(
-              aggregate(
-                zip_with($"embedding", c.getField("cvec"), (a, cc) => {
-                  val diff = a.cast("double") - cc.cast("double")
-                  round(diff * diff * lit(1e9), 0).cast("long")
-                }),
-                lit(0L), (acc, t) => acc + t).as("d2q"),
-              c.getField("cid").as("cid")))).as("b"))
-        .select($"vec_id", $"b.cid".as("cid"), $"v")
-      val nrm = asg.withColumn("nq", expr("vec_dot_q9(v, v)"))
-      // broadcast the build side (r22, the dedup_semantic_embed fix):
-      // 8 distinct cluster keys cap a shuffled pair join at 8-way
-      // parallelism and AQE coalescing then serializes the dots
-      val pairs = broadcast(nrm.select($"vec_id".as("ida"), $"cid",
-          $"v".as("xv"), $"nq".as("naq")))
-        .join(nrm.select($"vec_id".as("did"), $"cid".as("ycid"),
-          $"v".as("yv"), $"nq".as("nbq")),
-          $"cid" === $"ycid" && $"ida" < $"did")
-        .select($"did", expr("vec_dot_q9(xv, yv)").as("dotq"),
-          $"naq", $"nbq")
-      def cosBit(coef: Int) = max(when($"dotq" > 0 &&
-        lit(100).cast("decimal(38,0)") * $"dotq" * $"dotq" >
-          lit(coef).cast("decimal(38,0)") * $"naq" * $"nbq", 1)
-        .otherwise(0))
-      val eflag = pairs.groupBy($"did")
+      // Semantic: within-cluster pair dots ONCE
+      // (SimilarityQueries.clusterPairDots), three cos thresholds as
+      // exact-integer bits over the same quantized dots
+      def cosBit(coef: Int) =
+        max(when(SimilarityQueries.cosAbove(coef), 1).otherwise(0))
+      val eflag = SimilarityQueries.clusterPairDots(Tables.embeddings(s, d))
+        .groupBy($"prune_id".as("did"))
         .agg(cosBit(9).as("f_cos30"), cosBit(16).as("f_cos40"),
           cosBit(25).as("f_cos50"))
 

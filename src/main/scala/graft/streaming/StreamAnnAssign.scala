@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.queries.DriverMath
+
 /** Nearest-centroid assignment of one streamed query vector. */
 case class AnnAssigned(qid: Long, cluster: Int, d2q: Long)
 
@@ -45,14 +47,8 @@ case class AnnAssignedVec(qid: Long, cluster: Int, d2q: Long,
   */
 object StreamAnnAssign {
 
-  /** Spark SQL `round(x, 0)` semantics (BigDecimal HALF_UP) on the
-    * nano-quantized product — the shared scalar of the assign d2q. */
-  private[streaming] def rintHalfUpQ(x: Double): Long =
-    java.math.BigDecimal.valueOf(x * 1e9)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
-
-  /** Deterministic integer nearest-centroid: per-dim HALF_UP
-    * round(diff²·1e9) summed, argmin over the (cid-sorted) centroid
+  /** Deterministic integer nearest-centroid: per-dim Spark
+    * round(diff²·1e9) ([[DriverMath.roundHalfUp]]) summed, argmin over the (cid-sorted) centroid
     * array, ties to the lowest cid — value-identical to the batch
     * `embed_kmeans_assign` column fold (`zip_with` + `round` +
     * `aggregate`, min(struct(d2q, cid))). Single source of truth for
@@ -67,7 +63,7 @@ object StreamAnnAssign {
       var i = 0
       while (i < n) {
         val diff = v(i).toDouble - cv(i).toDouble
-        d2 += rintHalfUpQ(diff * diff)
+        d2 += DriverMath.roundHalfUp(diff * diff * 1e9)
         i += 1
       }
       if (d2 < bestD2) { bestD2 = d2; bestCid = cid } // ties: lowest cid

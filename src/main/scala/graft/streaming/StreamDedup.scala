@@ -175,8 +175,8 @@ object StreamDedup {
     * entry's pairs BIT-FOR-BIT, so every float touchpoint mirrors the
     * batch/oracle algebra exactly:
     *   - assignment distance: Σ round_half_up((aᵢ-cᵢ)²·1e9) as BIGINT
-    *     (Spark SQL `round(x, 0)` is BigDecimal HALF_UP; mirrored here
-    *     via BigDecimal, argmin tie-broken on centroid id);
+    *     (Spark SQL `round(x, 0)`: `DriverMath.roundHalfUp` via
+    *     nearestCentroid, argmin tie-broken on centroid id);
     *   - dot/norm sums: Σ rint(aᵢ·bᵢ·1e9) as BIGINT — `Math.rint` is
     *     HALF_EVEN, the [[graft.functions.VecDotQ9]] kernel's exact
     *     per-element rule;

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
+import graft.queries.DriverMath
+
 /** One streamed value observation (cents already extracted, like the
   * batch `events_psi_drift` entry's first projection). */
 case class ValueArrival(series: String, cents: Long)
@@ -59,7 +61,8 @@ object StreamPsi {
   /** The batch entry's nano-quantized PSI between the frozen reference
     * counts and the current counts: observed bins only (a bin empty on
     * BOTH sides carries no term, matching the batch entry's cell
-    * relation), Laplace +1/+10, HALF_UP rounding per term. */
+    * relation), Laplace +1/+10, Spark's `round(term, 0)` per term
+    * ([[DriverMath.roundHalfUp]]). */
   private[streaming] def psiNano(ref: Array[Long], cur: Array[Long]): Long = {
     val na = ref.sum
     val nb = cur.sum
@@ -73,8 +76,7 @@ object StreamPsi {
         val db = (nb + 10).toDouble
         val term = (1e9 * (ca / da - cb / db)) *
           math.log((ca * db) / (cb * da))
-        s += java.math.BigDecimal.valueOf(term)
-          .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+        s += DriverMath.roundHalfUp(term)
       }
       i += 1
     }

@@ -22,7 +22,8 @@ import graft.streaming.MicroBatch
 /** `Tables.read` opens a parquet table from a driver-side footer read:
   * the same schema and rows as `spark.read.parquet`, and no Spark job.
   * The source-tree lints keep one table reader, one session factory,
-  * one profiling main and one metrics listener. */
+  * one profiling main, one metrics listener and one copy of each shared
+  * query kernel. */
 class TablesReadSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -142,7 +143,17 @@ class TablesReadSpec extends SparkTestBase {
       "fold diagnostics into graft.tools.Profile"),
     Lint("lint: RunMetrics.scala is the only program file with a SparkListener",
       Seq("src/main/scala"), """\bSparkListener\b""", "RunMetrics.scala",
-      "read run counters through graft.obs.RunMetrics"))
+      "read run counters through graft.obs.RunMetrics"),
+    Lint("lint: DriverMath.scala is the only program file folding a nano-quantized zip_with",
+      Seq("src/main/scala"), """(?s)aggregate\(\s*zip_with\(.{0,300}?lit\(1e9\)""",
+      "DriverMath.scala", "use DriverMath.l2Nano or DriverMath.dotNano"),
+    Lint("lint: SimilarityQueries.scala is the only program file folding centroids into an array",
+      Seq("src/main/scala"), """collect_list\(struct\(\s*(?:col\("cid"\)|\$"cid")""",
+      "SimilarityQueries.scala", "assign clusters through SimilarityQueries.centroidAssign"),
+    Lint("lint: TextOps.scala is the only program file building token n-grams inline",
+      Seq("src/main/scala"),
+      """(?s)transform\(\s*sequence\(lit\(1\),\s*size\([^)]*\)\s*-[^,]*,\s*\w+\s*=>\s*array_join\(slice\(""",
+      "TextOps.scala", "use TextOps.tokenNgrams or TextOps.ngramWindows"))
 
   lints.foreach { lint =>
     test(lint.name) {

@@ -391,6 +391,29 @@ class SketchExprSpec extends SparkTestBase with Matchers {
     natRepStats(df) shouldBe refRepStats(df)
   }
 
+  test("tokenStarts, sortedGrams and gramEq agree with split(text, ' ') " +
+      "and the joined grams; a short doc gets no token starts") {
+    val utf8 = (g: String) => org.apache.spark.unsafe.types.UTF8String.fromString(g)
+    (edgeTexts ++ Seq("b a b a c", "é漢 é漢 x é漢")).foreach { t =>
+      val bytes = t.getBytes("UTF-8")
+      val toks = t.split(" ", -1).toSeq
+      val st = SketchAlgos.tokenStarts(bytes, toks.size)
+      toks.indices.map(i => new String(bytes, st(i), st(i + 1) - 1 - st(i), "UTF-8")) shouldBe toks
+      SketchAlgos.tokenStarts(bytes, toks.size + 1) shouldBe null
+      for (n <- 1 to toks.size) {
+        val grams = toks.sliding(n).map(_.mkString(" ")).toIndexedSeq
+        val idx = SketchAlgos.sortedGrams(bytes, st, n, grams.size).map(_.intValue).toSeq
+        idx.sorted shouldBe grams.indices
+        idx.map(grams).sliding(2).foreach {
+          case Seq(a, b) => assert(utf8(a).compareTo(utf8(b)) <= 0, s"$a > $b in $t")
+          case _ => ()
+        }
+        for (a <- grams.indices; b <- grams.indices)
+          SketchAlgos.gramEq(bytes, st, n, a, b) shouldBe (grams(a) == grams(b))
+      }
+    }
+  }
+
   test("property: rep_stats agrees with the column algebra on random " +
       "small-alphabet corpora") {
     val prop = Prop.forAll(Gen.listOfN(25, genText)) { texts =>

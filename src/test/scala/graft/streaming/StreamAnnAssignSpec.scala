@@ -76,6 +76,31 @@ class StreamAnnAssignSpec extends SparkTestBase {
     assert(d2Got == d2Want, "stream d2q differs from the column fold")
   }
 
+  test("stream d2q equals the Spark column fold above 2^53") {
+    implicit val sqlCtx = spark.sqlContext
+    // diff² · 1e9 = 9.000150000625e17: Spark rounds it HALF_UP and goes
+    // back through double, which moves the integer by 2
+    val v = Array(30000.25f)
+    val want = Seq((v, Array(0f))).toDF("v", "c")
+      .select(aggregate(zip_with($"v", $"c", (a, c) => {
+          val diff = a.cast("double") - c.cast("double")
+          round(diff * diff * lit(1e9), 0).cast("long")
+        }), lit(0L), (acc, t) => acc + t))
+      .as[Long].head()
+    assert(want == 900015000062499968L)
+    val source = MemoryStream[(Long, Array[Float])]
+    val q = StreamAnnAssign.assign(source.toDF().toDF("vec_id", "embedding"),
+        "vec_id", "embedding", Seq((0, Array(0f))))
+      .writeStream.format("memory").queryName("ann_assign_2p53")
+      .outputMode("append").start()
+    try {
+      source.addData((1L, v))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(spark.table("ann_assign_2p53").select($"d2q").as[Long].collect()
+      .toSeq == Seq(want))
+  }
+
   test("probe candidates equal the batch within-cluster pair set with " +
       "exact vec_dot_q9 scores") {
     implicit val sqlCtx = spark.sqlContext
