@@ -14,6 +14,29 @@ import graft.Tables
   */
 object Load {
 
+  /** `df` coalesced to `ceil(sizeInBytes / spark.sql.files.maxPartitionBytes)`
+    * partitions, so a writer makes one file per `maxPartitionBytes` of
+    * data instead of one per upstream partition. `sizeInBytes` is the
+    * optimizer's estimate; for a persisted batch that is the cached
+    * size, so sizing launches no job. A count at or above the current
+    * partition count changes nothing, so a large input keeps its
+    * parallelism, and one partition satisfies every clustering a
+    * window asks for, so a small window is planned with no exchange.
+    *
+    * Why the writers are sized: without the native `libhadoop`,
+    * Hadoop's local file system forks a `chmod` for every file, `.crc`
+    * and directory it creates (12-13 ms per create in a new directory
+    * on a 4-vCPU host, against 0.1 ms for a plain Java write), so a
+    * micro-batch's cost is set by its file count, not its rows. A
+    * 1,700-row batch wrote 9.5 history files and shuffled 40 KB into
+    * its MERGE; sized, it writes one history file and one snapshot file
+    * with no shuffle, and forks 18.5 `chmod`s instead of 44. */
+  private[graft] def sizedByBytes(df: DataFrame): DataFrame = {
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    df.coalesce(((bytes + target - 1) / target).max(1).min(Int.MaxValue).toInt)
+  }
+
   /** Append-only fact sink (`WRITE_APPEND`, load_to_bigquery.py:81). */
   def appendHistorical(df: DataFrame, path: String): Unit =
     df.write.mode("append").parquet(path)
@@ -50,16 +73,20 @@ object Load {
     * the batch's newest first, so dedup-then-merge and merge-directly
     * agree.
     *
-    * Scale: one shuffle, partitioned by the merge keys; no driver
-    * round-trip; AQE handles a skewed key. `current` is assumed
-    * key-unique (it is, inductively: this function's output is).
+    * Scale: the union is [[sizedByBytes]], so inputs under
+    * `spark.sql.files.maxPartitionBytes` merge in one task with no
+    * exchange (one job, one output file); larger ones take one shuffle,
+    * partitioned by the merge keys. No driver round-trip; AQE handles a
+    * skewed key. `current` is assumed key-unique (it is, inductively:
+    * this function's output is).
     */
   def upsertLatest(current: DataFrame, incoming: DataFrame,
       keys: Seq[String], tsCol: String, tieCol: String): DataFrame = {
     val cols = current.columns
-    val tagged = current.select(cols.toIndexedSeq.map(col): _*).withColumn("__prec", lit(0))
-      .unionByName(
-        incoming.select(cols.toIndexedSeq.map(col): _*).withColumn("__prec", lit(1)))
+    val tagged = sizedByBytes(
+      current.select(cols.toIndexedSeq.map(col): _*).withColumn("__prec", lit(0))
+        .unionByName(
+          incoming.select(cols.toIndexedSeq.map(col): _*).withColumn("__prec", lit(1))))
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol).desc, col("__prec").asc, col(tieCol).desc)
     tagged.withColumn("__rn", row_number().over(w))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.FsUtil
 
 /** Join / set-op / grouped-aggregate extensions (SURVEY.md §2.3, §2.7,
   * plus the §2.4 extension aggregates). The reference's only join is the
@@ -642,8 +643,7 @@ object JoinQueries {
     // overwrite their own table, never another dataset's.
     val ds = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(d))
-    val base =
-      s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_${app}_$ds"
+    val base = FsUtil.scratchDir(s"graft_bucketed_${app}_$ds")
     val (tblO, tblL) = (s"graft_bko_${app}_$ds", s"graft_bkl_${app}_$ds")
     Tables.orders(s, d)
       .select($"o_orderkey", $"o_orderpriority")

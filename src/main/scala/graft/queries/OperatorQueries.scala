@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{AsOfJoin, RangeJoin, SaltedAgg, SaltedJoin}
 import graft.plans.{SummaryRegistry, SummaryRewrite, SummarySpec}
+import graft.sources.FsUtil
 
 /** Catalog entries for the custom whole-operator semantics
   * (operators/): as-of join and skew-salted aggregation.
@@ -385,8 +386,7 @@ object OperatorQueries {
       |GROUP BY lang
       |ORDER BY lang""".stripMargin) { (s, d) =>
     import s.implicits._
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_summary_nav_" +
-      s.sparkContext.applicationId
+    val tmp = FsUtil.scratchDir(s"graft_summary_nav_${s.sparkContext.applicationId}")
     val basePath = s"$tmp/base"
     val summaryPath = s"$tmp/summary"
     val docs = Tables.documents(s, d)

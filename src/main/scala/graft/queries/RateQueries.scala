@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.etl.Load
+import graft.sources.FsUtil
 
 /** Reference-parity rate queries (SURVEY.md §2.4–§2.6), recast over the
   * testdata star schema: `orders` stands in for `historical_rates`
@@ -395,8 +396,8 @@ object RateQueries {
        |  (o_custkey % 16)::INT AS bucket
        |FROM m ORDER BY o_custkey""".stripMargin) { (s, d) =>
     import s.implicits._
-    val tablePath = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_upsert_part_${s.sparkContext.applicationId}"
+    val tablePath =
+      FsUtil.scratchDir(s"graft_upsert_part_${s.sparkContext.applicationId}")
     val o = Tables.orders(s, d)
     // base snapshot rebuilt from scratch each run (static overwrite
     // wipes every partition), so repeated executions are deterministic

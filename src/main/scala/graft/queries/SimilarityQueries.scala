@@ -830,23 +830,6 @@ object SimilarityQueries {
       .orderBy($"label", $"pos")
   }
 
-  /** Lloyd's k-means ASSIGNMENT step, deterministic across engines:
-    * seeds are the k=8 lowest-vec_id embeddings (no RNG — the
-    * kmeans++-style seeding of production runs replaces this fixture
-    * choice), each vector goes to the argmin-L2 centroid with ties
-    * broken on centroid id. Cross-engine float discipline: each
-    * per-dimension squared difference is QUANTIZED to integer
-    * nano-units before summing, so the distance is an order-free BIGINT
-    * sum both engines agree on bit-for-bit (the doc_lm_score
-    * discipline; a raw double sum is partial-agg-order dependent).
-    *
-    * Scale shape: centroids broadcast (k·dim floats), distances
-    * computed row-local in one codegen'd pass over the corpus, argmin
-    * via min(struct) partial-agg — the only shuffle is k·|corpus keys|
-    * argmin rows. At 100 TB with k in the thousands this is exactly
-    * the IVF coarse-assign pass (`sim_ann_ivf`); reference scope:
-    * app.py:44-49 charts per-currency aggregates, the analogous
-    * group-then-summarize shape over a derived key. */
   /** Semantic dedup (the SemDeDup shape, arXiv:2303.09540): cluster
     * the embedding space, then prune within-cluster pairs whose
     * cosine exceeds a threshold, keeping the lowest id — the
@@ -986,6 +969,24 @@ object SimilarityQueries {
       .orderBy($"vec_id")
   }
 
+  /** Lloyd's k-means ASSIGNMENT step, deterministic across engines:
+    * seeds are the k=8 lowest-vec_id embeddings (no RNG — the
+    * kmeans++-style seeding of production runs replaces this fixture
+    * choice), each vector goes to the argmin-L2 centroid with ties
+    * broken on centroid id. Cross-engine float discipline: each
+    * per-dimension squared difference is QUANTIZED to integer
+    * nano-units before summing, so the distance is an order-free BIGINT
+    * sum both engines agree on bit-for-bit (the doc_lm_score
+    * discipline; a raw double sum is partial-agg-order dependent).
+    *
+    * Scale shape ([[centroidAssign]]): centroids broadcast as one
+    * array (k·dim floats), distances and the argmin (`array_min` over
+    * (d2q, cid) structs) computed row-local in one codegen'd pass over
+    * the corpus — the corpus is never shuffled. At 100 TB with k in
+    * the thousands this is exactly the IVF coarse-assign pass
+    * (`sim_ann_ivf`); reference scope:
+    * app.py:44-49 charts per-currency aggregates, the analogous
+    * group-then-summarize shape over a derived key. */
   val embedKmeansAssign: CatalogEntry = CatalogEntry(
     "embed_kmeans_assign",
     """WITH cent AS (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.etl.Transform
+import graft.sources.FsUtil
 
 /** The reference's ETL transform chain (SURVEY.md §2.2) as catalog
   * queries over testdata. Every step is a narrow, codegen'd column
@@ -75,8 +76,7 @@ object TransformQueries {
     import s.implicits._
     // per-session dir: concurrent Verify/bench runs must not clobber
     // each other mid-read (stable within a session so re-runs reuse it)
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_csv_roundtrip_" +
-      s.sparkContext.applicationId
+    val tmp = FsUtil.scratchDir(s"graft_csv_roundtrip_${s.sparkContext.applicationId}")
     // `part` at sf0.1 is ONE parquet file, so without a repartition
     // the CSV write — and therefore the inferSchema read-back over the
     // single file it produces — each run as ONE task (r11 bench:
@@ -201,8 +201,7 @@ object TransformQueries {
       |ORDER BY s_nationkey""".stripMargin) { (s, d) =>
     import s.implicits._
     val src = Tables.supplier(s, d)
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_json_roundtrip_" +
-      s.sparkContext.applicationId
+    val tmp = FsUtil.scratchDir(s"graft_json_roundtrip_${s.sparkContext.applicationId}")
     src.write.mode("overwrite").json(tmp)
     s.read.schema(src.schema).json(tmp)
       .groupBy($"s_nationkey")
@@ -221,8 +220,7 @@ object TransformQueries {
       |FROM nation GROUP BY n_regionkey
       |ORDER BY n_regionkey""".stripMargin) { (s, d) =>
     import s.implicits._
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_orc_roundtrip_" +
-      s.sparkContext.applicationId
+    val tmp = FsUtil.scratchDir(s"graft_orc_roundtrip_${s.sparkContext.applicationId}")
     Tables.nation(s, d).write.mode("overwrite").orc(tmp)
     s.read.orc(tmp)
       .groupBy($"n_regionkey")
@@ -248,8 +246,7 @@ object TransformQueries {
     import s.implicits._
     val src = Tables.customer(s, d)
       .select($"c_custkey", $"c_mktsegment", $"c_acctbal")
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_xml_roundtrip_" +
-      s.sparkContext.applicationId
+    val tmp = FsUtil.scratchDir(s"graft_xml_roundtrip_${s.sparkContext.applicationId}")
     src.write.mode("overwrite").option("rowTag", "customer").xml(tmp)
     s.read.schema(src.schema).option("rowTag", "customer").xml(tmp)
       .groupBy($"c_mktsegment")

@@ -37,13 +37,11 @@ object Fetch {
     val pivoted = Transform.pivotMapToRows(
       parsed.select(col("r.timestamp").as("api_ts"), col("r.quotes").as("quotes")),
       "quotes", "pair", "rate")
-      .withColumn("base_currency", lit(base))
-      .withColumn("target_currency",
-        Transform.targetFromPair(col("pair"), base.length))
-      .withColumn("timestamp", timestamp_seconds(col("api_ts")))
-      .withColumn("retrieved_at", now)
-      .select("base_currency", "target_currency", "rate", "timestamp",
-        "retrieved_at")
+      .select(lit(base).as("base_currency"),
+        Transform.targetFromPair(col("pair"), base.length).as("target_currency"),
+        col("rate"),
+        timestamp_seconds(col("api_ts")).as("timestamp"),
+        now.as("retrieved_at"))
     target.fold(pivoted)(t => pivoted.filter(col("target_currency") === t))
   }
 }

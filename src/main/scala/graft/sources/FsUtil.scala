@@ -1,13 +1,35 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileUtil, Path}
 
 import org.apache.spark.sql.SparkSession
 
-/** Storage-listing utilities (dags/scritps/transform.py:12-25): the
-  * reference lists blobs under a prefix, sorts by update time and takes
-  * the newest — the argmax over modification time. */
+/** Storage utilities: the reference's listing
+  * (dags/scritps/transform.py:12-25) lists blobs under a prefix, sorts
+  * by update time and takes the newest — the argmax over modification
+  * time; and the scratch directories of steps that write files and
+  * read them back. */
 object FsUtil {
+
+  private val deleteAtExit = ConcurrentHashMap.newKeySet[String]()
+  private lazy val exitHook =
+    sys.addShutdownHook(deleteAtExit.forEach(d => FileUtil.fullyDelete(new java.io.File(d))))
+
+  /** `<java.io.tmpdir>/<name>`, for a program step that writes files and
+    * reads them back: registered for deletion, with its contents, when
+    * the JVM exits, so runs leave no directories behind. Repeated calls
+    * with one name return the same path. */
+  def scratchDir(name: String): String = {
+    val dir = s"${System.getProperty("java.io.tmpdir")}/$name"
+    exitHook
+    deleteAtExit.add(dir)
+    dir
+  }
+
+  /** Whether `dir` is deleted when the JVM exits. */
+  def deletedAtExit(dir: String): Boolean = deleteAtExit.contains(dir)
 
   /** Newest file under `dir` whose name starts with `prefix`; None if
     * the directory is empty/absent. */

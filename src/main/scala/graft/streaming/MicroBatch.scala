@@ -23,6 +23,16 @@ import graft.sources.AtomicSwap
   * that a replay detects and skips, and the current-snapshot upsert is
   * a semantic no-op when re-applied. With the checkpointed batch ids,
   * the pipeline is effectively exactly-once end-to-end.
+  *
+  * Both sinks are sized by bytes ([[Load.sizedByBytes]]): a batch under
+  * `spark.sql.files.maxPartitionBytes` writes one history file and one
+  * snapshot file, and its MERGE runs in one task with no shuffle. File
+  * count, not row count, sets a small batch's cost here: without the
+  * native `libhadoop`, every file, `.crc` and directory Hadoop's local
+  * file system creates forks a `chmod`. History therefore grows by one
+  * file per batch (one per `maxPartitionBytes` of a large batch);
+  * compact a long-lived table's closed `batch_id` partitions with
+  * `graft.sources.Layout.compact`.
   */
 object MicroBatch {
 
@@ -30,13 +40,15 @@ object MicroBatch {
     * `batch_id=<id>` hive partition (readers see a `batch_id` column —
     * also the pruning key for reprocessing windows at scale). A replay
     * of a batch whose partition already committed (`_SUCCESS`) skips,
-    * so at-least-once redelivery cannot duplicate history rows. */
+    * so at-least-once redelivery cannot duplicate history rows. The
+    * batch is [[Load.sizedByBytes]] first: one file per
+    * `maxPartitionBytes`, not one per upstream partition. */
   def appendHistoricalBatch(batch: DataFrame, path: String,
       batchId: Long): Unit = {
     val dir = new Path(path, s"batch_id=$batchId")
     val fs = dir.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(dir, "_SUCCESS")))
-      batch.write.mode("overwrite").parquet(dir.toString)
+      Load.sizedByBytes(batch).write.mode("overwrite").parquet(dir.toString)
   }
 
   /** Upsert one batch into the parquet snapshot at `currentPath`:
@@ -44,7 +56,10 @@ object MicroBatch {
     * fully materialized into staging while the old one stays readable,
     * then swapped in; a leftover crash window is rolled forward/back by
     * `AtomicSwap.recover` before the read, so a half-finished previous
-    * swap can never make this batch rebuild the table from itself. */
+    * swap can never make this batch rebuild the table from itself.
+    * The first batch's `latestPerKey` runs on the [[Load.sizedByBytes]]
+    * batch, as every later batch's `upsertLatest` sizes its union, so a
+    * small batch merges in one task with no exchange. */
   def upsertParquet(spark: SparkSession, batch: DataFrame, currentPath: String,
       keys: Seq[String], tsCol: String, tieCol: String): Unit = {
     val dest = new Path(currentPath)
@@ -56,7 +71,7 @@ object MicroBatch {
           .select(batch.columns.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*),
           batch, keys, tsCol, tieCol)
       else
-        Load.latestPerKey(batch, keys, tsCol, tieCol)
+        Load.latestPerKey(Load.sizedByBytes(batch), keys, tsCol, tieCol)
     AtomicSwap.swapIn(fs, dest) { stg =>
       next.write.mode("overwrite").parquet(stg.toString)
     }

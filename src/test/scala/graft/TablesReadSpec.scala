@@ -153,7 +153,10 @@ class TablesReadSpec extends SparkTestBase {
     Lint("lint: TextOps.scala is the only program file building token n-grams inline",
       Seq("src/main/scala"),
       """(?s)transform\(\s*sequence\(lit\(1\),\s*size\([^)]*\)\s*-[^,]*,\s*\w+\s*=>\s*array_join\(slice\(""",
-      "TextOps.scala", "use TextOps.tokenNgrams or TextOps.ngramWindows"))
+      "TextOps.scala", "use TextOps.tokenNgrams or TextOps.ngramWindows"),
+    Lint("lint: FsUtil.scala is the only program file naming a java.io.tmpdir path",
+      Seq("src/main/scala"), """java\.io\.tmpdir""", "FsUtil.scala",
+      "write scratch files under FsUtil.scratchDir, which deletes them at JVM exit"))
 
   lints.foreach { lint =>
     test(lint.name) {

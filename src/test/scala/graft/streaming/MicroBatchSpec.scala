@@ -3,17 +3,55 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import scala.jdk.CollectionConverters._
 
-import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
+
+import graft.{SparkTestBase, Tables}
+import graft.etl.Load
+import graft.obs.RunMetrics
 
 /** End-to-end micro-batch parity: streamed batches must leave the two
   * sinks exactly as the batch pipeline would (append-only history;
   * current = latest per key with the strict late-data guard). */
-class MicroBatchSpec extends SparkTestBase {
+class MicroBatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  private val Keys = Seq("base", "target")
+
+  /** `rows` rate rows over 200 keys in `parts` partitions, persisted
+    * and counted like a micro-batch before its two sinks. */
+  private def rateBatch(from: Long, rows: Long, parts: Int): DataFrame = {
+    val b = spark.range(from, from + rows, 1, parts)
+      .select(concat(lit("B"), ($"id" % 8).cast("string")).as("base"),
+        concat(lit("T"), ($"id" % 50).cast("string")).as("target"),
+        ($"id" / 7).as("rate"), timestamp_seconds($"id" % 1000).as("ts"),
+        $"id".as("uid"))
+      .persist()
+    b.count()
+    b
+  }
+
+  private def dataFiles(dir: String): Int = {
+    val files = Files.walk(java.nio.file.Paths.get(dir))
+    try files.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+    finally files.close()
+  }
+
+  private def withMaxPartitionBytes[A](bytes: Long)(body: => A): A = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, bytes)
+    try body finally spark.conf.unset(key)
+  }
+
+  private def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
 
   test("foreachBatch: history appends; current upserts with late-data guard") {
     implicit val sqlCtx = spark.sqlContext
@@ -85,6 +123,70 @@ class MicroBatchSpec extends SparkTestBase {
     assert(out == Map("EGP" -> 48.0, "EUR" -> 0.92, "JPY" -> 148.0))
     assert(!fs.exists(new Path(cur + "__staging")))
     assert(!fs.exists(new Path(cur + "__old")))
+  }
+
+  test("sized sinks: a small multi-partition batch writes one file per sink") {
+    val dir = Files.createTempDirectory("graft_sized").toString
+    val (hist, cur) = (s"$dir/hist", s"$dir/cur")
+    for (id <- 0L to 1L) { // first batch: latestPerKey; second: upsertLatest
+      val b = rateBatch(id * 400, 400, 4)
+      assert(b.rdd.getNumPartitions == 4)
+      MicroBatch.appendHistoricalBatch(b, hist, id)
+      MicroBatch.upsertParquet(spark, b, cur, Keys, "ts", "uid")
+      b.unpersist()
+      assert(dataFiles(s"$hist/batch_id=$id") == 1, s"history files of batch $id")
+      assert(dataFiles(cur) == 1, s"snapshot files after batch $id")
+    }
+    assert(Tables.read(spark, hist).count() == 800)
+    assert(Tables.read(spark, cur).count() == 200) // lcm(8, 50) keys
+  }
+
+  test("sized sinks: a batch above spark.sql.files.maxPartitionBytes keeps " +
+      "more than one partition and history file") {
+    val hist = Files.createTempDirectory("graft_sized_big").toString + "/hist"
+    val b = rateBatch(0, 20000, 4)
+    val bytes = b.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    withMaxPartitionBytes(bytes / 3 + 1) { // ceil(bytes / max) = 3
+      assert(Load.sizedByBytes(b).rdd.getNumPartitions == 3)
+      MicroBatch.appendHistoricalBatch(b, hist, 0L)
+    }
+    b.unpersist()
+    assert(dataFiles(s"$hist/batch_id=0") == 3)
+  }
+
+  test("sized upsert: small inputs merge with no shuffle exchange; above " +
+      "maxPartitionBytes the merge shuffles on the keys") {
+    val current = rateBatch(0, 200, 3) // key-unique: ids 0-199 hit 200 keys once
+    val incoming = rateBatch(100, 300, 3)
+    def merged = Load.upsertLatest(current, incoming, Keys, "ts", "uid")
+    val small = merged
+    val got = small.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(4)).toMap
+    assert(shuffles(small).isEmpty, small.queryExecution.executedPlan.toString)
+    // ts = id here, so each key keeps its largest id
+    assert(got == (0L until 400L).groupBy(id => (s"B${id % 8}", s"T${id % 50}"))
+      .map { case (k, ids) => k -> ids.max })
+    withMaxPartitionBytes(64) {
+      val big = merged
+      big.collect()
+      assert(shuffles(big).nonEmpty, big.queryExecution.executedPlan.toString)
+    }
+    current.unpersist(); incoming.unpersist()
+  }
+
+  test("sizing a persisted batch or a parquet union launches no Spark job") {
+    val cur = Files.createTempDirectory("graft_sized_jobs").toString + "/cur"
+    val b = rateBatch(0, 400, 4)
+    MicroBatch.upsertParquet(spark, b, cur, Keys, "ts", "uid")
+    val rec = new RunMetrics.Recorder(false)
+    RunMetrics.recording(spark, rec) {
+      RunMetrics.inGroup(spark, "sizing") {
+        Load.sizedByBytes(b)
+        Load.sizedByBytes(Tables.read(spark, cur).unionByName(b))
+      }
+      RunMetrics.settle(spark, rec)
+    }
+    b.unpersist()
+    assert(rec.take("sizing").jobs == 0)
   }
 
   test("streaming tumbling window + watermark: closed windows emit, late rows drop") {
