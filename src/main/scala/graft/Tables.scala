@@ -143,9 +143,10 @@ object Tables {
     * dedup_graph_triangles at sf0.1). At warehouse scale the scan
     * already has ≥ shufN splits and this is a NO-OP — the condition,
     * not the caller, decides, so the guard never adds an exchange to
-    * a plan that is already parallel. The partition-count probe reads
-    * plan metadata only (no job). */
-  def spreadScan(df: DataFrame): DataFrame = {
+    * a plan that is already parallel. Readers only: the partition-count
+    * probe reads plan metadata (no job) on a bare scan, but on a frame
+    * holding an exchange it runs that exchange's map stage to answer. */
+  private def spreadScan(df: DataFrame): DataFrame = {
     val shufN =
       df.sparkSession.sessionState.conf.numShufflePartitions
     if (df.rdd.getNumPartitions >= shufN) df

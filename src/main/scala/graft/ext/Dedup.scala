@@ -3,8 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
 /** Deduplication for document corpora at training-data scale.
   *
   * Exact: group on a content hash (32-byte digest, not the full text —
@@ -226,7 +224,8 @@ object Dedup {
     * posting, no join). At 100 TB the ok-hash set outgrows broadcast
     * and the P2 semi plans as a shuffle — the decontam bloom_agg
     * machinery slots in front as a scan-local prefilter if that
-    * exchange ever dominates (hashes, not text, either way). */
+    * exchange ever dominates (hashes, not text, either way). `docs`
+    * arrives already spread across the cores by [[graft.Tables.documents]]. */
   def sharedGramPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int, maxDf: Int): DataFrame = {
     require(maxDf >= 2, s"maxDf=$maxDf cannot link any pair")
@@ -239,11 +238,9 @@ object Dedup {
     // dedup_cluster_cc). repartition(n, key) is REPARTITION_BY_NUM,
     // exempt from coalescing, and the groupBy/distinct reuse it.
     val shufN = docs.sparkSession.sessionState.conf.numShufflePartitions
-    // spreadScan: the tokenize+explode CPU must not inherit the scan's
-    // byte-sized (possibly single-task) parallelism. A def: each pass
-    // plans its own subtree (P3/P4's collapse at runtime when their
-    // semi sets are empty).
-    def grams: DataFrame = Tables.spreadScan(docs.where(col(textCol).isNotNull))
+    // A def: each pass plans its own subtree (P3/P4's collapse at
+    // runtime when their semi sets are empty).
+    def grams: DataFrame = docs.where(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("doc_id"),
         explode(tokenNgrams(col(textCol), n)).as("gram"))
     // per-doc grams are already distinct (tokenNgrams array_distinct),
@@ -386,11 +383,12 @@ object Dedup {
     * `array_intersect` per pair. Output: (srcCol, dstCol, na, nb, ni) =
     * |A|, |B|, |A ∩ B| as bigint — `size()` is 32-bit, and ppm
     * arithmetic such as 10⁶·ni wraps it for documents with a few
-    * thousand grams. */
+    * thousand grams. `docs` arrives already spread by
+    * [[graft.Tables.documents]]. */
   def pairGramOverlap(pairs: DataFrame, docs: DataFrame, idCol: String,
       textCol: String, n: Int, srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val perDoc = Tables.spreadScan(docs.where(col(textCol).isNotNull))
+    val perDoc = docs.where(col(textCol).isNotNull)
       .select(col(idCol), tokenNgrams(col(textCol), n).as("gs"))
     val (pairsC, gl) = pairEndpointSlice(pairs, perDoc, idCol, srcCol, dstCol)
     pairsC
@@ -431,14 +429,12 @@ object Dedup {
     * and the string-building CPU runs post-exchange on the session's
     * full parallelism. Per-doc gram dedup moves AFTER the broadcast
     * join, where it touches only the (rare) hits instead of the
-    * corpus. */
+    * corpus. `docs` and `evalDocs` arrive already spread by
+    * [[graft.Tables.documents]]. */
   def ngramOverlapCounts(docs: DataFrame, evalDocs: DataFrame,
       idCol: String, textCol: String, n: Int = 13): DataFrame = {
-    // spreadScan on both legs: the gram-build CPU must not inherit the
-    // scan's byte-sized (possibly single-task) parallelism — the eval
-    // leg is small in BYTES but its gram explode is the same CPU shape
     def gramRows(df: DataFrame): DataFrame =
-      Tables.spreadScan(df.where(col(textCol).isNotNull))
+      df.where(col(textCol).isNotNull)
         .select(col(idCol), split(col(textCol), " ").as("toks"))
         .select(col(idCol), col("toks"),
           explode(when(size(col("toks")) >= n,

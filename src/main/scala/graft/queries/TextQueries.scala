@@ -749,11 +749,11 @@ object TextQueries {
          |    mh${2 * j}::VARCHAR || '_' || mh${2 * j + 1}::VARCHAR AS sig
          |  FROM $from""".stripMargin).mkString("\n  UNION ALL\n")
 
-  /** Spread (doc_id, text) input for the minhash surfaces. */
+  /** (doc_id, text) input for the minhash surfaces, spread by
+    * [[Tables.documents]]. */
   private def gramInput(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Tables.spreadScan(Tables.documents(s, d).where($"text".isNotNull)
-      .select($"doc_id", $"text"))
+    Tables.documents(s, d).where($"text".isNotNull).select($"doc_id", $"text")
   }
 
   /** OPH (doc_id, band, sig) rows via the row-local `minhash_oph_md5`
@@ -1007,10 +1007,10 @@ object TextQueries {
          |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
       import s.implicits._
       graft.functions.GraftFunctions.register(s)
-      // spreadScan + checkpoint BARRIER: k=16 md5 per gram is the
-      // densest kernel in the dedup family and the test-SF parquet is
-      // a single split. A bare spread is not enough — column pruning
-      // pushes the kernel projection BELOW the repartition (fewer
+      // checkpoint BARRIER over the reader's spread: k=16 md5 per
+      // gram is the densest kernel in the dedup family and the test-SF
+      // parquet is a single split. A bare spread is not enough — column
+      // pruning pushes the kernel projection BELOW the repartition (fewer
       // shuffle bytes), putting all the md5 work back on the one
       // pre-exchange task; checkpointing the spread rows first pins
       // the kernel above the 32-way split. The second checkpoint
@@ -1454,7 +1454,7 @@ object TextQueries {
     import s.implicits._
     graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
-    Tables.spreadScan(docs.where($"text".isNotNull))
+    docs.where($"text".isNotNull)
       .select($"doc_id", explode(Dedup.tokenNgrams($"text", 13)).as("gram"))
       .createOrReplaceTempView("graft_bloom_corpus")
     docs.where($"text".isNotNull && $"doc_id" % 97 === 0)
@@ -2814,9 +2814,10 @@ object TextQueries {
     * approximation a 100 TB pass runs first.
     *
     * Scale shape: the window explode is CPU-dense over a byte-light
-    * scan (spreadScan); ONE shuffle groups (gram, doc) pairs with
-    * map-side partial aggregation; the ≥2-docs filter drops the
-    * overwhelmingly-unique tail before the tiny determinism sort.
+    * scan (spread by `Tables.documents`); ONE shuffle groups (gram,
+    * doc) pairs with map-side partial aggregation; the ≥2-docs filter
+    * drops the overwhelmingly-unique tail before the tiny determinism
+    * sort.
     * Production hashes windows to int64 before the exchange
     * (xxhash64), shrinking shuffle bytes ~5x; gram TEXT rides the
     * shuffle here so the DuckDB oracle replays the pipeline verbatim
@@ -2837,8 +2838,8 @@ object TextQueries {
       |HAVING count(DISTINCT doc_id) >= 2
       |ORDER BY gram_md5""".stripMargin) { (s, d) =>
     import s.implicits._
-    Tables.spreadScan(Tables.documents(s, d)
-        .where($"text".isNotNull && length($"text") >= 40))
+    Tables.documents(s, d)
+      .where($"text".isNotNull && length($"text") >= 40)
       .select($"doc_id", explode(expr(
         "transform(sequence(1, length(text) - 39, 20)," +
           " i -> substring(text, i, 40))")).as("gram"))
@@ -2929,7 +2930,8 @@ object TextQueries {
 
   /** [[dedupSubstringSuffix]]'s operator over any (doc_id, text)
     * frame — extracted so the spec can plant embedded-duplicate
-    * fixtures. Output: one row per MAXIMAL duplicated run ≥ L chars,
+    * fixtures; the catalog's `docs` arrives spread by [[Tables.documents]].
+    * Output: one row per MAXIMAL duplicated run ≥ L chars,
     * (doc_id, start_pos 1-based, run_len, n_windows), ordered. */
   private[queries] def substringSuffixRuns(docs: DataFrame,
       L: Int): DataFrame = {
@@ -2942,8 +2944,7 @@ object TextQueries {
     // first cut's Window-sort polluted at 10×, the substring+xxhash64
     // column rewrite still at 1.4-1.7×; the kernel isolates the dense
     // byte work in one compiled method)
-    val wh = Tables.spreadScan(dd)
-      .select(col("doc_id"), posexplode(
+    val wh = dd.select(col("doc_id"), posexplode(
         call_function("win_hash_x64", col("text"), lit(L)))
         .as(Seq("p0", "h")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("h"))
@@ -3063,7 +3064,8 @@ object TextQueries {
   }
 
   /** [[dedupStripSpans]]' operator over any (doc_id, text) frame —
-    * extracted so the spec can plant cross-doc duplicate fixtures.
+    * extracted so the spec can plant cross-doc duplicate fixtures; the
+    * catalog's `docs` arrives spread by [[Tables.documents]].
     * Output per doc (text non-null, non-empty): (doc_id, n_chars,
     * n_runs, n_removed, clean_text), ordered by doc_id. */
   private[queries] def stripCrossDocSpans(docs: DataFrame,
@@ -3081,8 +3083,7 @@ object TextQueries {
     // hash census and the candidate prefilter) — without it each
     // consumer re-ran the win_hash_x64 kernel over the whole corpus;
     // the checkpointed rows are 24-byte (doc, pos, hash) triples.
-    val wh = Tables.spreadScan(dd)
-      .select($"doc_id", posexplode(
+    val wh = dd.select($"doc_id", posexplode(
         call_function("win_hash_x64", $"text", lit(L)))
         .as(Seq("p0", "h")))
       .select($"doc_id", ($"p0" + 1).cast("long").as("pos"), $"h")
@@ -3257,7 +3258,8 @@ object TextQueries {
 
   /** [[dedupStripIncremental]]' operator over any (doc_id, text)
     * frame — extracted so the spec can plant cross-batch duplicate
-    * fixtures. New batch = doc_id % 3 = 0; reference = the rest. */
+    * fixtures; the catalog's `docs` arrives spread by [[Tables.documents]].
+    * New batch = doc_id % 3 = 0; reference = the rest. */
   private[queries] def stripIncremental(docs: DataFrame,
       L: Int): DataFrame = {
     val s = docs.sparkSession
@@ -3282,7 +3284,7 @@ object TextQueries {
     // (within-batch dup census, store probe, keep-first confirm) and
     // rw TWO (store build, ref confirm) — window strings never
     // shuffle or checkpoint.
-    val wh = Tables.spreadScan(docs0.where(length($"text") >= L))
+    val wh = docs0.where(length($"text") >= L)
       .select($"doc_id", ($"doc_id" % 3 === 0).as("is_new"),
         posexplode(call_function("win_hash_x64", $"text", lit(L)))
           .as(Seq("p0", "h")))
@@ -3564,7 +3566,7 @@ object TextQueries {
       val pairs0 = Dedup.sharedGramPairs(docs, "doc_id", "text",
         n = 5, maxDf = 25)
       graft.functions.GraftFunctions.register(s)
-      val base0 = Tables.spreadScan(docs.where($"text".isNotNull))
+      val base0 = docs.where($"text".isNotNull)
         .select($"doc_id", TextOps.shingles($"text", 3).as("shg"),
           call_function("minhash_bands_md5", $"text", lit(k), lit(3))
             .as("bands"))

@@ -87,10 +87,10 @@ class CatalogPlanLintSpec extends SparkTestBase {
     }
 
   /** KEYED shuffle exchanges only: round-robin repartitions (the
-    * documents reader's spreadScan — pure scan-parallelism, a no-op on
+    * documents reader's scan spread — pure scan-parallelism, a no-op on
     * a warehouse-scale multi-file scan) are excluded, so a budget
     * stated in keyed shuffles can stay tight: loosening the TOTAL
-    * count to absorb spreadScan would also absorb a genuine keyed
+    * count to absorb the spread would also absorb a genuine keyed
     * shuffle regressing into a sketch kernel. */
   private def keyedShuffleCount(plan: String): Int =
     plan.linesIterator.count { line =>
@@ -115,7 +115,7 @@ class CatalogPlanLintSpec extends SparkTestBase {
     val rawAsOf = graft.operators.AsOfJoin.leftAsOf(
       ev.select($"event_id", $"user_id", $"ts"), purchases,
       "user_id", "user_id", "ts", "ts", Seq("event_id", "value"), "event_id")
-    // KEYED exchanges only: the events reader's spreadScan round-robin
+    // KEYED exchanges only: the events reader's round-robin spread
     // (pure scan parallelism, a no-op at warehouse scale) is excluded,
     // same rationale as the sketch-kernel budget below
     val rawPlan = rawAsOf.queryExecution.executedPlan.toString
@@ -155,7 +155,7 @@ class CatalogPlanLintSpec extends SparkTestBase {
       val df = SparkEntry.catalog(name).query(spark, sf)
       val physical = df.queryExecution.executedPlan.toString
       // Exactly ONE keyed exchange — the determinism sort. The
-      // documents reader's spreadScan round-robin is excluded by
+      // documents reader's round-robin spread is excluded by
       // keyedShuffleCount, so a future keyed shuffle sneaking into a
       // sketch kernel still fails here (a total-count budget of 2
       // would have absorbed it unnoticed).
@@ -190,7 +190,7 @@ class CatalogPlanLintSpec extends SparkTestBase {
     // SCD2: same single-exchange claim (+1 asof exchange for the
     // point-in-time composition).
     val sf = "/root/testdata/sf0.001"
-    // KEYED exchanges only (the readers' spreadScan round-robins are
+    // KEYED exchanges only (the readers' round-robin spreads are
     // scan parallelism, not shuffle volume — excluded so the budgets
     // can stay tight)
     for ((name, maxShuffles) <- Seq(
@@ -233,7 +233,7 @@ class CatalogPlanLintSpec extends SparkTestBase {
       val parts = df.rdd.getNumPartitions
       assert(parts >= shufN,
         s"Tables.$t must spread its scan to >= $shufN partitions " +
-          s"(got $parts) — the spreadScan guard is missing")
+          s"(got $parts) — the reader's scan spread is missing")
     }
     // the cheap-consumer default stays the raw byte-sized scan — a
     // future blanket re-spread re-introduces the r14 tax silently, so

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** 100 TB layout mechanics, asserted on the physical plan: partition
@@ -11,7 +9,7 @@ class ScaleLayoutSpec extends SparkTestBase {
   import spark.implicits._
 
   test("partitioned layout: a partition-column filter prunes at plan time") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part")
     graft.sources.Layout.writePartitioned(
       Tables.orders(spark, "/root/testdata/sf0.001"), dir, Seq("o_orderstatus"))
     val q = spark.read.parquet(dir).filter($"o_orderstatus" === "O")
@@ -88,7 +86,7 @@ class ScaleLayoutSpec extends SparkTestBase {
 
   test("compact: many small append files rewrite to few, data intact") {
     import graft.etl.Load
-    val dir = Files.createTempDirectory("graft_compact").toString + "/hist"
+    val dir = tempDir("graft_compact") + "/hist"
     val orders = Tables.orders(spark, "/root/testdata/sf0.001")
     (1 to 5).foreach { i => // five streaming-style appends
       Load.appendHistorical(orders.filter($"o_orderkey" % 5 === i % 5), dir)
@@ -104,7 +102,7 @@ class ScaleLayoutSpec extends SparkTestBase {
   }
 
   test("dynamic partition overwrite rewrites only the touched partition") {
-    val dir = Files.createTempDirectory("graft_dynpart").toString
+    val dir = tempDir("graft_dynpart")
     val orders = Tables.orders(spark, "/root/testdata/sf0.001")
     graft.sources.Layout.writePartitioned(orders, dir, Seq("o_orderstatus"))
     val beforeF = spark.read.parquet(dir)
@@ -132,7 +130,7 @@ class ScaleLayoutSpec extends SparkTestBase {
     // joined to the fact's partition key — DPP pushes the dim's
     // qualifying keys into the fact scan as a runtime subquery filter,
     // reading only the matching partitions
-    val dir = Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp")
     graft.sources.Layout.writePartitioned(
       Tables.orders(spark, "/root/testdata/sf0.001"), dir, Seq("o_orderstatus"))
     // DPP fires only when the dim side carries a SELECTIVE predicate —
@@ -140,7 +138,7 @@ class ScaleLayoutSpec extends SparkTestBase {
     // relation gets its filter constant-folded away
     // (ConvertToLocalRelation), leaving no Filter node to derive the
     // pruning subquery from
-    val dimDir = Files.createTempDirectory("graft_dpp_dim").toString
+    val dimDir = tempDir("graft_dpp_dim")
     Seq(("O", "open"), ("F", "closed"), ("P", "pending"))
       .toDF("status", "label").write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir).filter($"label" === "open")

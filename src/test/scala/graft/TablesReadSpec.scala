@@ -13,7 +13,7 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, TimestampType}
 
@@ -28,7 +28,7 @@ class TablesReadSpec extends SparkTestBase {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
-  private val dir = Files.createTempDirectory("graft_tables_read").toString
+  private val dir = tempDir("graft_tables_read")
 
   /** Jobs started while `body` runs. The listener bus is asynchronous, so
     * earlier jobs' events are let drain before listening and this body's
@@ -103,7 +103,7 @@ class TablesReadSpec extends SparkTestBase {
 
   test("Tables.events: an INT64 TIMESTAMP(NANOS) ts opens with no job and " +
       "converts as ts div 1000 micros") {
-    val sfNanos = Files.createTempDirectory("graft_events_nanos").toString
+    val sfNanos = tempDir("graft_events_nanos")
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 event_id; " +
         "required int64 ts (TIMESTAMP(NANOS,false)); }")
@@ -124,6 +124,17 @@ class TablesReadSpec extends SparkTestBase {
     val micros = events.orderBy($"event_id")
       .select(unix_micros($"ts")).as[Long].collect().toSeq
     assert(micros == nanos.map(_ / 1000))
+  }
+
+  test("Tables.documents, embeddings and eventsDense: the spread readers " +
+      "open with no job") {
+    val readers = Seq[(String, (SparkSession, String) => DataFrame)](
+      "documents" -> Tables.documents, "embeddings" -> Tables.embeddings,
+      "eventsDense" -> Tables.eventsDense)
+    readers.foreach { case (name, open) =>
+      val jobs = jobsDuring(open(spark, sf))._2
+      assert(jobs == 0, s"opening Tables.$name launched $jobs job(s)")
+    }
   }
 
   /** One source-tree lint: `pattern` may appear only in `owner`, in the
@@ -156,7 +167,11 @@ class TablesReadSpec extends SparkTestBase {
       "TextOps.scala", "use TextOps.tokenNgrams or TextOps.ngramWindows"),
     Lint("lint: FsUtil.scala is the only program file naming a java.io.tmpdir path",
       Seq("src/main/scala"), """java\.io\.tmpdir""", "FsUtil.scala",
-      "write scratch files under FsUtil.scratchDir, which deletes them at JVM exit"))
+      "write scratch files under FsUtil.scratchDir, which deletes them at JVM exit"),
+    Lint("lint: SparkTestBase.scala is the only source file creating a temp directory",
+      Seq("src/main/scala", "src/test/scala"), """createTempDirectory\(""",
+      "SparkTestBase.scala",
+      "make fixture directories with SparkTestBase.tempDir, which deletes them at JVM exit"))
 
   lints.foreach { lint =>
     test(lint.name) {

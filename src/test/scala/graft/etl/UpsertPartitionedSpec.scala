@@ -42,7 +42,7 @@ class UpsertPartitionedSpec extends SparkTestBase {
 
   test("partition-scoped merge equals whole-table merge; untouched " +
       "partitions are physically untouched; reapplying is a no-op") {
-    val dir = Files.createTempDirectory("graft_upsert_part_spec")
+    val dir = Paths.get(tempDir("graft_upsert_part_spec"))
     val path = dir.toString
     val current = snap(
       (0L, 1.0, "2024-01-02 00:00:00"), // bucket 0 — untouched

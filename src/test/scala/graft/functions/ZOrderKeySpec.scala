@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -47,7 +45,7 @@ class ZOrderKeySpec extends SparkTestBase {
   test("z-ordered layout prunes files for single-dimension stripes and 2-D boxes") {
     val grid = (for { x <- 0 until 64; y <- 0 until 64 } yield (x.toLong, y.toLong))
       .toDF("x", "y")
-    val base = Files.createTempDirectory("zorder").toString
+    val base = tempDir("zorder")
 
     Layout.writeZOrdered(grid.withColumn("zk", z($"x", $"y")),
       s"$base/bz", nFiles = 16, zCol = "zk")

@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,7 +12,7 @@ import graft.streaming.IncrementalAgg
 class SummaryRewriteSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val dir = Files.createTempDirectory("graft_sumrw").toString
+  private val dir = tempDir("graft_sumrw")
   private val basePath = s"$dir/srw_fact_tbl"
   private val summaryPath = s"$dir/srw_summary_tbl"
 
@@ -122,7 +120,7 @@ class SummaryRewriteSpec extends SparkTestBase {
 
   test("decimal sum: the derived column is cast back to the original " +
       "widened type (summary sum-of-sums would otherwise widen twice)") {
-    val ddir = Files.createTempDirectory("graft_sumrw_dec").toString
+    val ddir = tempDir("graft_sumrw_dec")
     val dbase = s"$ddir/dec_base"
     val dsum = s"$ddir/dec_summary"
     rows.toDF("k", "v")

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkTestBase}
 
 /** vocab_bpe_merges on a hand-computable corpus: the merge sequence,
@@ -12,7 +10,7 @@ import graft.{SparkEntry, SparkTestBase}
 class BpeMergeSpec extends SparkTestBase {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("bpe-fixture").toString
+    val d = tempDir("bpe-fixture")
     val s = spark
     import s.implicits._
     // word frequencies: ab x3, abc x2 ->
@@ -45,7 +43,7 @@ class BpeMergeSpec extends SparkTestBase {
     // "aaa" alone: round-1 pair census sees "a a" twice (both adjacent
     // positions), but replace() merges non-overlapping left-to-right,
     // so round 2 sees exactly one "aa a" pair — the BPE definition.
-    val d = Files.createTempDirectory("bpe-greedy").toString
+    val d = tempDir("bpe-greedy")
     val s = spark
     import s.implicits._
     Seq((0L, "aaa", "en", "src0", 3L))
@@ -63,7 +61,7 @@ class BpeMergeSpec extends SparkTestBase {
     // (the 'a b' it contains starts mid-symbol), destroying the
     // "xa b" pair round 3 must still see. The boundary-safe apply
     // leaves it intact.
-    val d = Files.createTempDirectory("bpe-boundary").toString
+    val d = tempDir("bpe-boundary")
     val s = spark
     import s.implicits._
     Seq((0L, "xa xa xa xa xa xab ab ab ab", "en", "src0", 27L))

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkTestBase}
 
 /** dedup_candidate_quality on documents past the 32-bit gram budget:
@@ -14,7 +12,7 @@ class CandidateQualitySpec extends SparkTestBase {
 
   test("jaccard ppm is exact for pairs sharing more 13-grams than " +
       "a 32-bit ppm numerator can hold") {
-    val d = Files.createTempDirectory("candq-overflow").toString
+    val d = tempDir("candq-overflow")
     val s = spark
     import s.implicits._
     // 3000 distinct tokens -> 2988 distinct 13-grams per doc; B differs

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkTestBase}
 
 /** Fixtures + invariants for `corpus_ngram_diversity`,
@@ -10,7 +8,7 @@ class DiversityOutlierSpec extends SparkTestBase {
 
   test("diversity census: a boilerplate source collapses toward 0, a " +
       "unique-trigram source reads 1.0") {
-    val d = Files.createTempDirectory("divcensus").toString
+    val d = tempDir("divcensus")
     val s = spark
     import s.implicits._
     // srcA: "x x x x x x" -> 4 trigram occurrences, 1 distinct
@@ -54,7 +52,7 @@ class DiversityOutlierSpec extends SparkTestBase {
 
   test("outlier ratio survives a degenerate all-on-centroid cluster " +
       "(sum of distances zero) instead of dividing by zero") {
-    val d = Files.createTempDirectory("outlier-degen").toString
+    val d = tempDir("outlier-degen")
     val s = spark
     import s.implicits._
     // corpus = exactly the 8 seed centroids: every cluster's only

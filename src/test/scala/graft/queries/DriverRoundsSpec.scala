@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import scala.io.Source
 
 import graft.{SparkEntry, SparkTestBase, Tables}
@@ -57,7 +55,7 @@ class DriverRoundsSpec extends SparkTestBase {
     }
 
   test("empty embeddings and documents tables: no rows, the same schemas") {
-    val d = Files.createTempDirectory("driver-rounds-empty").toString
+    val d = tempDir("driver-rounds-empty")
     for (t <- Seq("embeddings", "documents"))
       Tables.table(spark, sf, t).limit(0).write.parquet(s"$d/$t.parquet")
     for ((name, (schema, _)) <- entries) {

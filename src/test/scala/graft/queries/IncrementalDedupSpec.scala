@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkTestBase}
 
 /** Crafted-corpus fixtures for `dedup_incremental_ref` and
@@ -12,7 +10,7 @@ import graft.{SparkEntry, SparkTestBase}
 class IncrementalDedupSpec extends SparkTestBase {
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
-    val d = Files.createTempDirectory("incdedup").toString
+    val d = tempDir("incdedup")
     val s = spark
     import s.implicits._
     rows.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }

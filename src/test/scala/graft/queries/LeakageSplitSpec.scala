@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, SparkTestBase}
@@ -14,7 +12,7 @@ import graft.{SparkEntry, SparkTestBase}
 class LeakageSplitSpec extends SparkTestBase {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("leak-fixture").toString
+    val d = tempDir("leak-fixture")
     val s = spark
     import s.implicits._
     // 40 distinct texts, each duplicated under two far-apart doc_ids

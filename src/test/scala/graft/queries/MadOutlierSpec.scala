@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkTestBase}
@@ -27,7 +26,7 @@ class MadOutlierSpec extends SparkTestBase {
     (-10 to 10).map(i => 100.0 + (i % 5)) // values in {98..102}
 
   test("a planted 1e6 outlier is flagged, and only it") {
-    val d = Files.createTempDirectory("mad-fixture").toString
+    val d = tempDir("mad-fixture")
     writeEvents(d, base :+ 1e6)
     val row = SparkEntry.queries("events_outlier_mad")(spark, d)
       .collect().head
@@ -37,8 +36,8 @@ class MadOutlierSpec extends SparkTestBase {
   }
 
   test("the band is breakdown-resistant: outlier barely moves median/MAD") {
-    val d1 = Files.createTempDirectory("mad-clean").toString
-    val d2 = Files.createTempDirectory("mad-dirty").toString
+    val d1 = tempDir("mad-clean")
+    val d2 = tempDir("mad-dirty")
     writeEvents(d1, base)
     writeEvents(d2, base :+ 1e6)
     def stats(dir: String): (Long, Long) = {

@@ -100,8 +100,7 @@ class RakingCompactionSpec extends SparkTestBase {
     // come out near -1
     val text = (1 to 200)
       .flatMap(i => Seq.fill(2000 / i)(s"w$i")).mkString(" ")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_zipf_fixture").toString
+    val dir = tempDir("graft_zipf_fixture")
     Seq((0L, text, "en", "src0", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

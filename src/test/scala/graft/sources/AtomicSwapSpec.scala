@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 
 import graft.SparkTestBase
@@ -21,7 +19,7 @@ class AtomicSwapSpec extends SparkTestBase {
   private def readVals(dir: String): Set[Int] =
     spark.read.parquet(dir).as[Int].collect().toSet
 
-  private def tmp() = Files.createTempDirectory("graft_swap").toString + "/snap"
+  private def tmp() = tempDir("graft_swap") + "/snap"
 
   test("crash after commit point: complete staging installs, __old is dropped") {
     val dest = tmp()

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, TimestampType}
@@ -24,7 +24,7 @@ class PipelineSpec extends SparkTestBase {
     "retrieved_at" -> TimestampType)
 
   test("fetch→transform→load: append grows, current keeps latest per pair") {
-    val dir = Files.createTempDirectory("graft_e2e").toString
+    val dir = tempDir("graft_e2e")
     val hist = s"$dir/historical_rates"
 
     def runOnce(json: String): org.apache.spark.sql.DataFrame = {
@@ -76,7 +76,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("latestFile returns the newest matching file (transform.py:12-25)") {
-    val dir = Files.createTempDirectory("graft_fs")
+    val dir = Paths.get(tempDir("graft_fs"))
     def write(name: String, mtime: Long): Unit = {
       val p = dir.resolve(name)
       Files.writeString(p, "x")

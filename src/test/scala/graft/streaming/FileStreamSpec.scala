@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -29,7 +28,7 @@ class FileStreamSpec extends SparkTestBase {
     StructField("uid", LongType)))
 
   test("directory-fed stream drains through MicroBatch with upsert semantics") {
-    val root = Files.createTempDirectory("filestream").toString
+    val root = tempDir("filestream")
     val in = s"$root/in"; val hist = s"$root/hist"; val cur = s"$root/cur"
 
     def drain(): Unit = {

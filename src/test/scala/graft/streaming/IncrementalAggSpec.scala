@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -22,7 +20,7 @@ class IncrementalAggSpec extends SparkTestBase {
 
   test("streamed summary == batch aggregate over the full history") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_incragg").toString
+    val dir = tempDir("graft_incragg")
     val (path, ckpt) = (s"$dir/summary", s"$dir/ckpt")
     val source = MemoryStream[(String, Double)]
     val q = IncrementalAgg.run(source.toDF().toDF("k", "v"), path, ckpt,
@@ -47,7 +45,7 @@ class IncrementalAggSpec extends SparkTestBase {
 
   test("a replayed batch id is skipped: no double counting; a crashed " +
       "un-published merge replays correctly") {
-    val dir = Files.createTempDirectory("graft_incragg2").toString
+    val dir = tempDir("graft_incragg2")
     val path = s"$dir/summary"
     val b0 = Seq("a" -> 1.0, "b" -> 2.0).toDF("k", "v")
     val b1 = Seq("a" -> 5.0).toDF("k", "v")
@@ -73,7 +71,7 @@ class IncrementalAggSpec extends SparkTestBase {
 
   test("a replay OLDER than the pruned marker tail is refused by the " +
       "high-water mark (checkpoint restored from backup / reset ids)") {
-    val dir = Files.createTempDirectory("graft_incragg3").toString
+    val dir = tempDir("graft_incragg3")
     val path = s"$dir/summary"
     val b0 = Seq("a" -> 1.0).toDF("k", "v")
     IncrementalAgg.applyBatch(spark, b0, path, "k", "v", 0L)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -30,7 +29,7 @@ class LateDataWindowSpec extends SparkTestBase {
   test("streamed windows == batch tumbling aggregate over on-time " +
       "rows; late rows routed, none dropped; replay is a no-op") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_latewin").toString
+    val dir = tempDir("graft_latewin")
     val (aggPath, latePath, ckpt) =
       (s"$dir/agg", s"$dir/late", s"$dir/ckpt")
     val source = MemoryStream[(Long, String, Timestamp, Double)]
@@ -93,7 +92,7 @@ class LateDataWindowSpec extends SparkTestBase {
   }
 
   test("first batch has no watermark: nothing can be late") {
-    val dir = Files.createTempDirectory("graft_latewin0").toString
+    val dir = tempDir("graft_latewin0")
     LateDataWindow.applyBatch(spark,
       Seq((1L, "a", ts("2024-01-01 00:00:00"), 1.0))
         .toDF("event_id", "event_type", "ts", "value"),

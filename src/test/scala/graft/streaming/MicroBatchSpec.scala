@@ -55,7 +55,7 @@ class MicroBatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("foreachBatch: history appends; current upserts with late-data guard") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     val (hist, cur, ckpt) = (s"$dir/hist", s"$dir/cur", s"$dir/ckpt")
 
     val source = MemoryStream[(String, String, Double, Timestamp, Long)]
@@ -85,7 +85,7 @@ class MicroBatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("history append is idempotent per batch id (at-least-once replay safe)") {
-    val hist = Files.createTempDirectory("graft_hist").toString + "/hist"
+    val hist = tempDir("graft_hist") + "/hist"
     val b1 = Seq(("USD", "EGP", 48.0, ts("2024-01-02 00:00:00"), 1L))
       .toDF("base", "target", "rate", "ts", "uid")
     val b2 = Seq(("USD", "EUR", 0.92, ts("2024-01-02 00:00:00"), 2L))
@@ -101,7 +101,7 @@ class MicroBatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("upsert after a crashed swap recovers all prior keys (never rebuilds " +
       "the snapshot from one batch)") {
     import org.apache.hadoop.fs.Path
-    val cur = Files.createTempDirectory("graft_crash").toString + "/cur"
+    val cur = tempDir("graft_crash") + "/cur"
     val fs = new Path(cur).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batch1 = Seq(
       ("USD", "EGP", 48.0, ts("2024-01-02 00:00:00"), 1L),
@@ -126,7 +126,7 @@ class MicroBatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("sized sinks: a small multi-partition batch writes one file per sink") {
-    val dir = Files.createTempDirectory("graft_sized").toString
+    val dir = tempDir("graft_sized")
     val (hist, cur) = (s"$dir/hist", s"$dir/cur")
     for (id <- 0L to 1L) { // first batch: latestPerKey; second: upsertLatest
       val b = rateBatch(id * 400, 400, 4)
@@ -143,7 +143,7 @@ class MicroBatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("sized sinks: a batch above spark.sql.files.maxPartitionBytes keeps " +
       "more than one partition and history file") {
-    val hist = Files.createTempDirectory("graft_sized_big").toString + "/hist"
+    val hist = tempDir("graft_sized_big") + "/hist"
     val b = rateBatch(0, 20000, 4)
     val bytes = b.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
     withMaxPartitionBytes(bytes / 3 + 1) { // ceil(bytes / max) = 3
@@ -174,7 +174,7 @@ class MicroBatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("sizing a persisted batch or a parquet union launches no Spark job") {
-    val cur = Files.createTempDirectory("graft_sized_jobs").toString + "/cur"
+    val cur = tempDir("graft_sized_jobs") + "/cur"
     val b = rateBatch(0, 400, 4)
     MicroBatch.upsertParquet(spark, b, cur, Keys, "ts", "uid")
     val rec = new RunMetrics.Recorder(false)

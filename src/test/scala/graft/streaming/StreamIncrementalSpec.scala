@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -35,7 +34,7 @@ class StreamIncrementalSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     // batch truth: the catalog entry over the same corpus on disk
-    val dir = Files.createTempDirectory("stream-inc").toString
+    val dir = tempDir("stream-inc")
     (refRows ++ newRows)
       .map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -38,7 +36,7 @@ class StreamRouterSpec extends SparkTestBase {
   test("streaming: both feeds land per batch; a replayed batch id is " +
       "absorbed, not duplicated") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_router").toString
+    val dir = tempDir("graft_router")
     val (cleanP, quarP, ckpt) = (s"$dir/clean", s"$dir/quar", s"$dir/ckpt")
 
     val source = MemoryStream[(Long, Long, String, Double)]

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-import graft.SparkTestBase
+import graft.{SparkEntry, SparkTestBase}
 import graft.ext.Graph
 import graft.obs.RunMetrics
 
@@ -58,6 +58,21 @@ class ProfileSpec extends SparkTestBase {
     assert(runs.forall(_.construct.jobs == 0), runs.map(_.construct.jobs))
     assert(runs.forall(r => r.execute.jobs >= 1 && r.execute.stages >= 1),
       runs.map(_.execute.jobs))
+  }
+
+  test("text entries over the spread documents reader construct with no job") {
+    // a partition-count probe on a frame that holds the documents
+    // reader's round-robin exchange runs that exchange to answer
+    val rec = new RunMetrics.Recorder(keepPlans = false)
+    val jobs = RunMetrics.recording(spark, rec)(Seq("decontam_bloom_prefilter",
+        "decontam_ngram_overlap", "decontam_substring_exact",
+        "dedup_substring_suffix").map { name =>
+      val group = s"profile-$name-construct"
+      RunMetrics.inGroup(spark, group)(SparkEntry.queries(name)(spark, sf))
+      RunMetrics.settle(spark, rec)
+      name -> rec.take(group).jobs
+    })
+    assert(jobs.forall(_._2 == 0), jobs)
   }
 
   test("RunMetrics: a 3 s one-task stage counts as single-task in its own " +
