@@ -25,4 +25,8 @@ object Session {
     // hold the whole catalog so timed runs measure execution, not
     // recompilation.
     .config("spark.sql.codegen.cache.maxEntries", "8192")
+    // older testdata generations store events.ts as INT64
+    // TIMESTAMP(NANOS), which Spark's parquet reader rejects unless it
+    // reads them as longs; Tables.events converts those to micros
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 }

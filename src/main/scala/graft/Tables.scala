@@ -26,13 +26,16 @@ import org.apache.spark.sql.functions._
   * `events.parquet` has shipped with two `ts` physical types across testdata
   * generations: nanosecond timestamps (pandas default), which Spark's parquet
   * reader rejects (`PARQUET_TYPE_ILLEGAL`), and plain microsecond
-  * `TIMESTAMP_NTZ`. [[events]] adapts to whichever shape is on disk:
-  *   - long nanos (via `spark.sql.legacy.parquet.nanosAsLong`) convert with
-  *     *integer* division (`div 1000`) to a microsecond timestamp. Floating
-  *     division would silently lose precision: epoch nanos (~1.7e18) exceed a
-  *     double's exact-integer range (2^53). The floor truncation matches what
-  *     DuckDB does when casting TIMESTAMP_NS to TIMESTAMP, keeping the oracle
-  *     comparison exact.
+  * `TIMESTAMP_NTZ`. Every file shipped today is microsecond. The nanosecond
+  * generation opens only on a session built by `graft.Session.builder`, which
+  * sets `spark.sql.legacy.parquet.nanosAsLong` so the column reads as longs;
+  * on any other session its open fails at schema conversion. [[events]]
+  * adapts to whichever shape is on disk:
+  *   - long nanos convert with *integer* division (`div 1000`) to a
+  *     microsecond timestamp. Floating division would silently lose
+  *     precision: epoch nanos (~1.7e18) exceed a double's exact-integer range
+  *     (2^53). The floor truncation matches what DuckDB does when casting
+  *     TIMESTAMP_NS to TIMESTAMP, keeping the oracle comparison exact.
   *   - `TIMESTAMP_NTZ` casts to session-local `TIMESTAMP` — a no-op on the
   *     instant under the catalog's pinned UTC session timezone, and it keeps
   *     every downstream query seeing one `ts` type regardless of generation.
@@ -197,9 +200,6 @@ object Tables {
 
   private def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    // Runtime-settable (not a static conf); the driver's Verify/Bench
-    // sessions don't set it at build time, so set it here idempotently.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = read(spark, s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType => // ns-int64 generation: exact integer ns -> us

@@ -95,7 +95,6 @@ object Dedup {
     * doc; the fingerprint stage itself plans zero shuffles. */
   def simhashBandIndex(df: DataFrame, idCol: String, textCol: String,
       kernel: String = "simhash63"): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // coalesce(kernel, 0): the kernel never returns null for non-null
     // text (guarded above), but its column is DECLARED nullable, so
     // the band equi-join used to INFER `isnotnull(fp)` and push it to

@@ -104,9 +104,8 @@ object MultiModal {
     // deletes a temp FILE. For in-memory byte[] codec work that is pure
     // overhead (and temp-dir contention across 32 executor threads made
     // the media entries the most jitter-prone in the whole bench), so
-    // this codec constructs MemoryCache streams directly and disables
-    // the JVM-global cache flag for any residual ImageIO entry points.
-    ImageIO.setUseCache(false)
+    // this codec constructs MemoryCache streams directly and never goes
+    // through those factories — it leaves the JVM-wide cache flag alone.
 
     // One writer/reader instance held per codec = per partition, reused
     // across that partition's rows. The ImageIO registry walk
@@ -606,11 +605,11 @@ object MultiModal {
       MemoryCacheImageOutputStream}
 
     // Same per-partition statefulness as [[PngCodec]]: memory-cached
-    // streams (no per-row temp files) and ONE writer/reader instance
-    // reused across the partition's rows instead of a synchronized
-    // registry walk + dispose per row — the per-row lookups made this
-    // codec the slowest, highest-variance entry in the whole bench.
-    ImageIO.setUseCache(false)
+    // streams built directly (no per-row temp files, no JVM-wide cache
+    // flag) and ONE writer/reader instance reused across the partition's
+    // rows instead of a synchronized registry walk + dispose per row —
+    // the per-row lookups made this codec the slowest, highest-variance
+    // entry in the whole bench.
     private val writer = ImageIO.getImageWritersByFormatName("gif").next()
     private val reader = ImageIO.getImageReadersByFormatName("gif").next()
 

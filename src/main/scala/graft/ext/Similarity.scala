@@ -27,8 +27,9 @@ object Similarity {
       lit(0.0), (acc, v) => acc + v)
 
   /** Codegen'd native path (graft.functions.VecDotProduct) — bit-exact
-    * with [[dot]], proven in VecDotProductSpec. Requires
-    * `GraftFunctions.register(spark)` (idempotent). */
+    * with [[dot]], proven in VecDotProductSpec. `vec_dot` resolves on
+    * sessions that graft.functions.GraftFunctions registered (every
+    * catalog entry's does). */
   def dotNative(a: Column, b: Column): Column =
     call_function("vec_dot", a, b)
 
@@ -59,9 +60,8 @@ object Similarity {
   /** Sign-bit bucket id: bit i set iff dot(v, plane_i) >= 0. Uses the
     * native codegen'd dot — this is the one pass that touches the whole
     * corpus, so it must not run interpreted lambdas per element.
-    * Requires GraftFunctions.register. Planes quantize to float to
-    * match the embedding element type (sign decisions stay
-    * deterministic). */
+    * Planes quantize to float to match the embedding element type
+    * (sign decisions stay deterministic). */
   def lshBucket(vec: Column, planes: Seq[Seq[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
       val planeCol = array(p.map(v => lit(v.toFloat)): _*)
@@ -110,7 +110,7 @@ object Similarity {
     * quantizer's geometry; raising `nProbe` trades linearly more
     * cluster reads for recall on boundary-straddling queries — the
     * standard IVF knob. See SimilaritySpec (well-clustered case +
-    * nProbe monotonicity). Requires GraftFunctions.register. */
+    * nProbe monotonicity). */
   def ivfTopK(emb: org.apache.spark.sql.DataFrame, idCol: String,
       vecCol: String, clusterCol: String, queryId: Long,
       k: Int, nProbe: Int = 1): org.apache.spark.sql.DataFrame = {

@@ -1,7 +1,6 @@
 package graft.functions
 
-// SQL registration of these expressions (`GraftFunctions`,
-// `GraftExtensions`) lives in GraftFunctions.scala.
+// SQL registration of these expressions lives in GraftFunctions.scala.
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}

@@ -21,9 +21,9 @@ import org.apache.spark.sql.types.LongType
   *     plans an equi-join and the rewrite would only add work;
   *   - point and both bounds are LongType (exact integer binning —
   *     the RangeJoin contract; timestamps arrive as `unix_micros`);
-  *   - enabled by setting `spark.graft.rangeJoin.binWidth` (> 0) —
-  *     the bin width is workload knowledge (≈ typical interval span),
-  *     not something the optimizer can infer.
+  *   - `binWidth` > 0 — the bin width is workload knowledge (≈ typical
+  *     interval span), not something the optimizer can infer; 0 or less
+  *     disables the rule.
   *
   * Equivalence argument (same as RangeJoin's): every point belongs to
   * exactly one bin, every qualifying interval covers that bin, the
@@ -31,10 +31,10 @@ import org.apache.spark.sql.types.LongType
   * filter, and null/inverted bounds are pre-filtered exactly as the
   * null-rejecting original condition would. The rewritten join output
   * is projected back to the original output attributes, so downstream
-  * operators are untouched. Registered via [[graft.functions.GraftExtensions]]
-  * (`injectOptimizerRule`) or `spark.experimental.extraOptimizations`.
+  * operators are untouched. A session opts in by installing the rule in
+  * its optimizer (the experimental `extraOptimizations` list).
   */
-case class AutoRangeJoin(binWidthConf: () => Long) extends Rule[LogicalPlan] {
+case class AutoRangeJoin(binWidth: Long) extends Rule[LogicalPlan] {
 
   private def floorDivBin(x: Expression, bw: Long): Expression = {
     val lit = Literal(bw, LongType)
@@ -82,8 +82,7 @@ case class AutoRangeJoin(binWidthConf: () => Long) extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val bw = binWidthConf()
-    if (bw <= 0) return plan
+    if (binWidth <= 0) return plan
     plan.transform {
       case j @ Join(left, right, Inner, Some(cond), hint) =>
         containment(cond, left, right) match {
@@ -93,13 +92,13 @@ case class AutoRangeJoin(binWidthConf: () => Long) extends Rule[LogicalPlan] {
             val pointsOnLeft = p.references.subsetOf(left.outputSet)
             val (points, intervals) = if (pointsOnLeft) (left, right) else (right, left)
 
-            val pbin = Alias(floorDivBin(p, bw), "__pbin")()
+            val pbin = Alias(floorDivBin(p, binWidth), "__pbin")()
             val newPoints = Project(points.output :+ pbin, points)
 
             val keep = And(And(IsNotNull(s), IsNotNull(e)), LessThanOrEqual(s, e))
             // Sequence is TimeZoneAware: an undefined zone id leaves the
             // expression unresolved and fails optimizer plan validation
-            val seq = new Sequence(floorDivBin(s, bw), floorDivBin(e, bw),
+            val seq = new Sequence(floorDivBin(s, binWidth), floorDivBin(e, binWidth),
               Some(Literal(1L, LongType)), Some(conf.sessionLocalTimeZone))
             val ibin = AttributeReference("__ibin", LongType, nullable = false)()
             val newIntervals = Generate(Explode(seq), Nil, outer = false,

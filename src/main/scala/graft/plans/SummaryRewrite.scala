@@ -2,49 +2,28 @@ package graft.plans
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, max, min, sum}
 
 import graft.Tables
 
-/** A registered materialized summary: `summaryPath` holds the per-dims
-  * mergeable partial (cnt, sum, min, max over `valCol`) of the table at
-  * `basePath` — the layout `streaming/IncrementalAgg` maintains. */
+/** A materialized summary: `summaryPath` holds the per-dims mergeable
+  * partial (cnt, sum, min, max over `valCol`) of the table at
+  * `basePath` — the layout `streaming/IncrementalAgg` maintains. Keeping
+  * it current with the base is the caller's contract, exactly as with
+  * any materialized view. */
 final case class SummarySpec(basePath: String, summaryPath: String,
     dims: Seq[String], valCol: String)
 
-/** Process-wide registry the [[SummaryRewrite]] rule consults. Register
-  * a summary AFTER it is built (and re-register after base-table
-  * rewrites that bypass the incremental maintainer — a stale summary is
-  * the caller's contract to keep, exactly as with any materialized
-  * view). */
-object SummaryRegistry {
-  @volatile private var specs: Map[String, SummarySpec] = Map.empty
-
-  private[plans] def normalize(p: String): String =
-    new Path(p).toUri.getPath
-
-  def register(spec: SummarySpec): Unit = synchronized {
-    specs += (normalize(spec.basePath) -> spec)
-  }
-  def unregister(basePath: String): Unit = synchronized {
-    specs -= normalize(basePath)
-  }
-  def clear(): Unit = synchronized { specs = Map.empty }
-  def lookup(path: String): Option[SummarySpec] = specs.get(normalize(path))
-  def isEmpty: Boolean = specs.isEmpty
-}
-
-/** Optimizer rule: the AGGREGATE NAVIGATOR of classic OLAP engines —
-  * an aggregate over a base table whose grouping keys are a subset of a
-  * registered summary's dims, and whose aggregates are all DERIVABLE
-  * from the summary's mergeable partial, is rewritten to aggregate the
-  * (many-orders-smaller) summary instead:
+/** The AGGREGATE NAVIGATOR of classic OLAP engines, as a per-query
+  * rewrite: an aggregate over the summary's base table whose grouping
+  * keys are a subset of the summary's dims, and whose aggregates are
+  * all DERIVABLE from the summary's mergeable partial, is rewritten to
+  * aggregate the (many-orders-smaller) summary instead:
   *
   *   count(*)      → sum(cnt)        sum(v) → sum(sum)
   *   min(v)        → min(min)        max(v) → max(max)
@@ -52,11 +31,15 @@ object SummaryRegistry {
   * At 100 TB this turns a full-corpus scan + shuffle into a scan of a
   * |dims|-cardinality table — the whole reason summary tables are
   * maintained (`streaming/IncrementalAgg` keeps one current per
-  * micro-batch; this rule makes dashboard aggregates actually USE it).
+  * micro-batch; this rewrite makes dashboard aggregates actually USE it).
+  *
+  * [[rewrite]] takes the query and the one summary it may use, and
+  * returns the rewritten query; nothing is registered and no optimizer
+  * rule is installed, so the session is left as it was found.
   *
   * Scope (narrow on purpose, like [[AutoRangeJoin]] — a rewrite must
   * never fire where it could be wrong):
-  *   - the aggregate's child is the registered relation under only
+  *   - the aggregate's child is the base relation under only
   *     column-pruning Projects and DIM-ONLY deterministic Filters — a
   *     dim predicate selects whole summary rows, so it commutes with
   *     the pre-aggregation and is re-applied (rebased by name) on the
@@ -75,7 +58,21 @@ object SummaryRegistry {
   * positive) counts equals it exactly; `count(col)` (null-skipping) is
   * NOT derivable from this partial and is deliberately not matched.
   */
-case class SummaryRewrite(session: SparkSession) extends Rule[LogicalPlan] {
+object SummaryRewrite {
+
+  /** `df` with every derivable aggregate over `spec`'s base table
+    * answered from the summary, or `df` itself when none is. The
+    * rewrite reads `df`'s optimized plan, where filters sit next to the
+    * scan and projections are pruned, and the result is re-planned as
+    * a new DataFrame. */
+  def rewrite(df: DataFrame, spec: SummarySpec): DataFrame = {
+    val plan = df.queryExecution.optimizedPlan
+    val rewritten = rewritePlan(df.sparkSession, spec, plan)
+    if (rewritten eq plan) df
+    else GraftSqlBridge.dataFrame(df.sparkSession, rewritten)
+  }
+
+  private def normalize(p: String): String = new Path(p).toUri.getPath
 
   /** Walk down pure column-pruning projections and DIM-ONLY filters to
     * the relation, collecting the filter conditions. A predicate that
@@ -105,34 +102,21 @@ case class SummaryRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** The registered spec plus any dim-only filters between the
-    * aggregate and the relation. Uses a permissive dims superset for
-    * the walk, then re-checks against the matched spec's dims. */
-  private def relationSpec(
-      plan: LogicalPlan): Option[(SummarySpec, Seq[Expression])] = {
-    // first locate the relation ignoring filters, to learn the dims...
-    def findRel(p: LogicalPlan): Option[LogicalPlan] = p match {
-      case Project(ps, c) if ps.forall(_.isInstanceOf[AttributeReference]) =>
-        findRel(c)
-      case org.apache.spark.sql.catalyst.plans.logical.Filter(_, c) =>
-        findRel(c)
-      case lr: LogicalRelation => Some(lr)
-      case _ => None
+  /** The dim-only filters between the aggregate and the relation, if
+    * that relation is `spec`'s base table. */
+  private def baseFilters(spec: SummarySpec,
+      plan: LogicalPlan): Option[Seq[Expression]] =
+    unwrap(plan, spec.dims).collect {
+      case (filters, rel)
+          if pathOf(rel).exists(normalize(_) == normalize(spec.basePath)) =>
+        filters
     }
-    for {
-      rel <- findRel(plan)
-      path <- pathOf(rel)
-      spec <- SummaryRegistry.lookup(path)
-      // ...then redo the walk strictly: every filter must be dim-only
-      (filters, _) <- unwrap(plan, spec.dims)
-    } yield (spec, filters)
-  }
 
   /** Rebase a base-relation predicate onto the summary by name: the
     * old attribute ids can't bind there, so they become unresolved
     * names for the summary Dataset's analyzer to re-resolve. */
   private def rebase(e: Expression): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftSqlBridge.column(e.transform {
+    GraftSqlBridge.column(e.transform {
       case a: AttributeReference =>
         org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(a.name)
     })
@@ -174,11 +158,11 @@ case class SummaryRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     * passthrough, Right(summary aggregate) for a derivable aggregate. */
   private type OutPart = scala.Either[String, org.apache.spark.sql.Column]
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (SummaryRegistry.isEmpty) plan
-    else plan transform {
-      case agg: Aggregate if relationSpec(agg.child).isDefined =>
-        val (spec, dimFilters) = relationSpec(agg.child).get
+  private def rewritePlan(session: SparkSession, spec: SummarySpec,
+      plan: LogicalPlan): LogicalPlan =
+    plan transform {
+      case agg: Aggregate if baseFilters(spec, agg.child).isDefined =>
+        val dimFilters = baseFilters(spec, agg.child).get
         val groupAttrs = agg.groupingExpressions.collect {
           case a: AttributeReference => a
         }

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.GraftFunctions
+
 /** One catalog operator: a Spark query over the testdata tables plus an
   * optional DuckDB oracle (equivalent ANSI SQL over the same parquet).
   *
@@ -18,8 +20,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class CatalogEntry(
     name: String,
-    query: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    build: (SparkSession, String) => DataFrame,
+    oracle: Option[String]) {
+
+  /** The entry's query over the tables in `sfDir`. Every path into the
+    * catalog comes through here, so this is where graft's native SQL
+    * functions are registered on `spark` (a few registry lookups once
+    * the session holds them); no entry registers them itself. */
+  def query(spark: SparkSession, sfDir: String): DataFrame = {
+    GraftFunctions.register(spark)
+    build(spark, sfDir)
+  }
+}
 
 object CatalogEntry {
   /** Entry with a DuckDB oracle. */

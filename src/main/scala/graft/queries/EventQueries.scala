@@ -1644,7 +1644,6 @@ object EventQueries {
       |FROM pt p JOIN bs b USING (event_type)
       |ORDER BY p.event_type""".stripMargin) { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val c = Tables.eventsDense(s, d)
       .select($"event_type", $"event_id",
         round($"value" * 100).cast("long").as("x"))

@@ -400,7 +400,6 @@ object JoinQueries {
       |FROM best WHERE rn = 1 AND jw >= 0.8
       |ORDER BY typo""".stripMargin) { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val names = Tables.part(s, d).select($"p_name".as("w")).distinct()
     val typos = names
       .withColumn("pos", (conv(substring(md5($"w"), 1, 15), 16, 10)

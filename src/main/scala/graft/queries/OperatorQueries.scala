@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{AsOfJoin, RangeJoin, SaltedAgg, SaltedJoin}
-import graft.plans.{SummaryRegistry, SummaryRewrite, SummarySpec}
+import graft.plans.{SummaryRewrite, SummarySpec}
 import graft.sources.FsUtil
 
 /** Catalog entries for the custom whole-operator semantics
@@ -173,7 +173,6 @@ object OperatorQueries {
       |            for i in range(0, 31)])::BIGINT AS zkey
       |FROM d ORDER BY zkey, o_orderkey LIMIT 20""".stripMargin) { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.orders(s, d)
       .select($"o_orderkey", $"o_custkey",
         unix_date(to_date($"o_orderdate")).cast("long").as("day_n"))
@@ -362,18 +361,19 @@ object OperatorQueries {
 
   /** The AGGREGATE NAVIGATOR end-to-end: a (lang, source)-keyed
     * (cnt, sum, min, max) summary of `documents` is materialized (the
-    * layout `streaming/IncrementalAgg` maintains per micro-batch),
-    * registered, and the dashboard aggregate — count/sum/min/max of
-    * n_chars by lang, under a dim-only source filter — is issued
-    * against the BASE table. The [[graft.plans.SummaryRewrite]] rule
-    * re-plans it onto the summary (the filter commutes and rebases; the
+    * layout `streaming/IncrementalAgg` maintains per micro-batch), and
+    * the dashboard aggregate — count/sum/min/max of n_chars by lang,
+    * under a dim-only source filter — is issued against the BASE table.
+    * [[graft.plans.SummaryRewrite]] re-plans it onto the summary given
+    * to it with the query (the filter commutes and rebases; the
     * rewrite is asserted scan-level in SummaryRewriteSpec), and the
     * oracle computes the same aggregate over the base table in DuckDB —
     * identical results IS the materialized-view contract. At 100 TB
     * this is the difference between a dashboard query scanning a
     * |langs×sources| summary and re-scanning the corpus. The base is
-    * snapshotted to a session-scoped dir so the registration can never
-    * leak onto other entries' scans of the shared documents table. */
+    * snapshotted to an application-scoped dir, and the rewrite sees
+    * only this entry's query, so no other entry's scan of the shared
+    * documents table can be re-planned. */
   val summaryRewriteAgg: CatalogEntry = CatalogEntry(
     "summary_rewrite_agg",
     """SELECT lang,
@@ -396,20 +396,14 @@ object OperatorQueries {
       .agg(count(lit(1)).as("cnt"), sum($"n_chars").as("sum"),
         min($"n_chars").as("min"), max($"n_chars").as("max"))
       .write.mode("overwrite").parquet(summaryPath)
-    SummaryRegistry.register(SummarySpec(basePath, summaryPath,
-      Seq("lang", "source"), "n_chars"))
-    // the rule stays installed for the session (execution is lazy — it
-    // must still be active when the driver materializes the plan); it
-    // is a no-op for every scan but the snapshot registered above
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[SummaryRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ SummaryRewrite(s)
-    Tables.read(s, basePath)
+    val dashboard = Tables.read(s, basePath)
       .where($"source" =!= "src0")
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"),
         min($"n_chars").as("min_chars"), max($"n_chars").as("max_chars"))
       .orderBy($"lang")
+    SummaryRewrite.rewrite(dashboard,
+      SummarySpec(basePath, summaryPath, Seq("lang", "source"), "n_chars"))
   }
 
   /** Market-basket co-occurrence with lift — association-rule mining's

@@ -149,7 +149,6 @@ object PipelineQueries {
     // quality moments from the one-pass token_stats kernel — the
     // curation gate shuffles no tokens (SketchExprSpec proves the
     // integer moments equal the explode + double-groupBy formulation)
-    graft.functions.GraftFunctions.register(s)
     val q = sdocs
       .select($"doc_id", call_function("token_stats", $"text", lit("")).as("ts"))
       .select($"doc_id",

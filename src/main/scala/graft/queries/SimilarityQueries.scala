@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ext.Similarity
-import graft.functions.GraftFunctions
 
 /** Similarity search over the `embeddings` table (array<float>, dim 64).
   *
@@ -58,7 +57,6 @@ object SimilarityQueries {
     * within-cluster pairing is salted/blocked upstream long before a
     * broadcast would overflow. Output: (prune_id, cid, naq, nbq, dotq). */
   private[queries] def clusterPairDots(emb: DataFrame): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     val n = centroidAssign(emb)
       .select(col("vec_id"), col("b.cid").as("cid"), col("embedding").as("v"))
       .withColumn("nq", expr("vec_dot_q9(v, v)"))
@@ -94,7 +92,6 @@ object SimilarityQueries {
       |FROM embeddings, q
       |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
     import s.implicits._
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val q = emb.filter($"vec_id" === 0).select($"embedding".as("qe"))
     emb.crossJoin(broadcast(q))
@@ -138,7 +135,6 @@ object SimilarityQueries {
       |SELECT q_id, rnk::INT AS rnk, neg_id, neg_label, cos_r
       |FROM r WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin) { (s, d) =>
     import s.implicits._
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val q = emb.where($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"label".as("q_label"),
@@ -228,7 +224,6 @@ object SimilarityQueries {
     }
     CatalogEntry("retrieval_mmr_diversify", sql) { (s, d) =>
       import s.implicits._
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val sim6 = (a: Column, b: Column) =>
         round(Similarity.cosineNative(a, b) * lit(1e6), 0).cast("long")
@@ -445,7 +440,6 @@ object SimilarityQueries {
          |FROM cand
          |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
     import s.implicits._
-    GraftFunctions.register(s)
     val (nTables, nPlanes) = (3, 4)
     val tabled = Tables.embeddings(s, d)
       .select($"vec_id", $"embedding",
@@ -504,7 +498,6 @@ object SimilarityQueries {
          |FROM m a JOIN m b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
          |ORDER BY cos_sim DESC, id_a, id_b LIMIT 10""".stripMargin) { (s, d) =>
     import s.implicits._
-    GraftFunctions.register(s)
     // corpus size from table STATISTICS (parquet footers read on the
     // driver) — plan sizing must not spend a Spark job per invocation;
     // at 100 TB this number comes from the metastore the same way
@@ -564,7 +557,6 @@ object SimilarityQueries {
       |                  for i in range(1, 65)]))), 6) AS cos_sim
       |FROM embeddings e JOIN nearest n ON e.label = n.c_label
       |ORDER BY cos_sim DESC, e.vec_id LIMIT 10""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     Similarity.ivfTopK(Tables.embeddings(s, d),
       "vec_id", "embedding", "label", queryId = 0, k = 10)
   }
@@ -583,7 +575,6 @@ object SimilarityQueries {
       |                       for i in range(1, len(embedding) + 1)])), 6) AS l2
       |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    GraftFunctions.register(s)
     val dbl = transform($"embedding", x => x.cast("double"))
     Tables.embeddings(s, d)
       .select($"vec_id",
@@ -670,7 +661,6 @@ object SimilarityQueries {
       |FROM embeddings, q
       |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
     import s.implicits._
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val q = emb.filter($"vec_id" === 0).select($"embedding".as("qe"))
     emb.crossJoin(broadcast(q))
@@ -1164,7 +1154,6 @@ object SimilarityQueries {
       |FROM dense d FULL OUTER JOIN lex l ON d.id = l.id
       |ORDER BY rrf_ppb DESC, doc_id LIMIT 15""".stripMargin) { (s, d) =>
     import s.implicits._
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val q = emb.filter($"vec_id" === 0).select($"embedding".as("qe"))
     val rankW = Window.orderBy($"key".desc, $"id".asc)
@@ -1321,7 +1310,6 @@ object SimilarityQueries {
         "SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY nprobe")) {
       (s, d) =>
         import s.implicits._
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         val exact = simCosineTopk.query(s, d).select($"vec_id".as("evid"))
         Seq(1, 2, 4).map { p =>
@@ -1403,7 +1391,6 @@ object SimilarityQueries {
          |FROM d, i""".stripMargin
     CatalogEntry("sim_ndcg_eval", sql) { (s, d) =>
       import s.implicits._
-      GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val rankW = Window.orderBy($"cos_sim".desc, $"vec_id")
       val gold = simCosineTopk.query(s, d)
@@ -1479,7 +1466,6 @@ object SimilarityQueries {
       |  16::HUGEINT * naq::HUGEINT * nbq::HUGEINT
       |GROUP BY vec_id ORDER BY vec_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val ev = emb.where($"vec_id" % 97 === 3)
       .select($"vec_id".as("eid"), $"embedding".as("evec"),
@@ -1540,7 +1526,6 @@ object SimilarityQueries {
         "SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY dim")) {
       (s, d) =>
         import s.implicits._
-        GraftFunctions.register(s)
         val emb = Tables.embeddings(s, d)
         // localCheckpoint: the exact side joins into all three arms —
         // without it each arm re-runs the full-width cosine scan,

@@ -90,7 +90,6 @@ object SketchQueries {
       |FROM fin f JOIN ex e ON e.source = f.source
       |ORDER BY f.source""".stripMargin) { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d).where($"text".isNotNull)
     // sketch arm: one kernel call per doc, 64-row state per source
     val regs = docs
@@ -189,7 +188,6 @@ object SketchQueries {
       |LEFT JOIN inter i ON i.sa = e.sa AND i.sb = e.sb
       |ORDER BY e.sa, e.sb""".stripMargin) { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d).where($"text".isNotNull)
     // sketch arm: per-doc bottom-k kernels, merged per source
     val hv = docs

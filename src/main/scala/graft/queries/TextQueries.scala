@@ -110,7 +110,6 @@ object TextQueries {
       |FROM sh, q
       |ORDER BY jaccard_r DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d).select($"doc_id", $"text")
     val q = docs.filter($"doc_id" === 0).select($"text".as("qtext"))
     docs.crossJoin(broadcast(q))
@@ -130,7 +129,6 @@ object TextQueries {
   val textSimhash: CatalogEntry = CatalogEntry.noOracle(
     "text_simhash") { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       // null text: match the explode formulation's row drop. Filtering
       // the INPUT column (not the sketch) keeps the predicate at the
@@ -170,7 +168,6 @@ object TextQueries {
   val dedupMinhashLsh: CatalogEntry = CatalogEntry.noOracle(
     "dedup_minhash_lsh") { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select($"doc_id", posexplode(
         call_function("minhash_bands", $"text", lit(16), lit(4), lit(3)))
@@ -190,7 +187,6 @@ object TextQueries {
   val docWinnowFingerprint: CatalogEntry = CatalogEntry.noOracle(
     "doc_winnow_fingerprint") { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select($"doc_id",
         call_function("winnow_fps", $"text", lit(5), lit(4)).as("fps"))
@@ -348,7 +344,6 @@ object TextQueries {
     * docs dropped like every tokenize-CTE oracle. */
   private def qualitySignals(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       // null text: the oracle's tokenize-CTE drops the row (unnest of a
       // NULL list); token_stats(null) would instead keep an all-null
@@ -457,7 +452,6 @@ object TextQueries {
     // top2,dup2,top3,dup3,top4,dup4,top5,dup5,top10,dup10) — the column
     // algebra over seven per-doc gram arrays measured 60 s at sf0.1;
     // the kernel is value-identical (SketchExprSpec) and row-local
-    graft.functions.GraftFunctions.register(s)
     def frac(slot: Int) = round(
       element_at($"rs", slot).cast("double") / $"nc", 4)
     Tables.documents(s, d)
@@ -683,7 +677,6 @@ object TextQueries {
          |  substring(sha256(pair), 1, 16) AS band_sha
          |FROM b ORDER BY doc_id, band""".stripMargin) { (s, d) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select($"doc_id", posexplode(
           call_function("minhash_bands_md5", $"text", lit(k), lit(3)))
@@ -770,7 +763,6 @@ object TextQueries {
     * kernel returns the EMPTY array for docs with < n tokens — the
     * same docs the SQL replay's `len(toks) >= 3` guard drops. */
   private def ophBandRows(spread: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spread.sparkSession)
     // token-count guard, not size(ds) — a filter on the kernel's own
     // output pushes to the scan with the kernel inlined and doubles
     // the md5 pass (r22; identical row set — the kernel goes empty
@@ -933,7 +925,6 @@ object TextQueries {
          |  END AS jaccard_ppm
          |FROM u""".stripMargin) { (s, d) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val spread = gramInput(s, d).localCheckpoint()
       // k-hash surface: exactly dedup_bbit_minhash's kernel + bands
       val pkh = bandPairs(khashBandRows(khashSigs(spread, k), k))
@@ -1006,7 +997,6 @@ object TextQueries {
          |JOIN h hb ON hb.doc_id = p.doc_b
          |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       // checkpoint BARRIER over the reader's spread: k=16 md5 per
       // gram is the densest kernel in the dedup family and the test-SF
       // parquet is a single split. A bare spread is not enough — column
@@ -1066,7 +1056,6 @@ object TextQueries {
          |  $simhashAssembleSql AS simhash
          |FROM v ORDER BY doc_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         // null text: the explode/unnest formulations drop the row in
         // both engines; filter the input column (scan-pushable, and the
@@ -1111,7 +1100,6 @@ object TextQueries {
       |FROM documents d LEFT JOIN p ON d.doc_id = p.doc_id
       |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select($"doc_id",
         call_function("winnow_fps_md5", $"text", lit(5), lit(4)).as("fps"))
@@ -1452,7 +1440,6 @@ object TextQueries {
       |GROUP BY h.doc_id
       |ORDER BY h.doc_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     docs.where($"text".isNotNull)
       .select($"doc_id", explode(Dedup.tokenNgrams($"text", 13)).as("gram"))
@@ -2077,7 +2064,6 @@ object TextQueries {
       |  CASE WHEN score_raw >= 0 THEN 1 ELSE 0 END AS kept
       |FROM scored ORDER BY doc_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select($"doc_id",
         call_function("bow_score_md5", $"text").as("bs"))
@@ -2935,7 +2921,6 @@ object TextQueries {
     * (doc_id, start_pos 1-based, run_len, n_windows), ordered. */
   private[queries] def substringSuffixRuns(docs: DataFrame,
       L: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val dd = docs.where(col("text").isNotNull && length(col("text")) >= L)
       .select(col("doc_id"), col("text"))
     // ALL window hashes from ONE row-local kernel call per doc — no
@@ -3072,7 +3057,6 @@ object TextQueries {
       L: Int): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val docs0 = docs
       .where($"text".isNotNull && length($"text") > 0)
       .select($"doc_id", $"text")
@@ -3264,7 +3248,6 @@ object TextQueries {
       L: Int): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val docs0 = docs
       .where($"text".isNotNull && length($"text") > 0)
       .select($"doc_id", $"text")
@@ -3565,7 +3548,6 @@ object TextQueries {
       val docs = Tables.documents(s, d)
       val pairs0 = Dedup.sharedGramPairs(docs, "doc_id", "text",
         n = 5, maxDf = 25)
-      graft.functions.GraftFunctions.register(s)
       val base0 = docs.where($"text".isNotNull)
         .select($"doc_id", TextOps.shingles($"text", 3).as("shg"),
           call_function("minhash_bands_md5", $"text", lit(k), lit(3))
@@ -4622,7 +4604,6 @@ object TextQueries {
       |    AS clean_text
       |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .where($"text".isNotNull && length($"text") > 0)
       .select($"doc_id",
@@ -4786,7 +4767,6 @@ object TextQueries {
          |FROM lv a JOIN lv b ON a.doc_id = b.doc_id AND a.layer <= b.layer
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, d)
       val dd = docs.where($"text".isNotNull)
 
@@ -5046,7 +5026,6 @@ object TextQueries {
          |GROUP BY b.layer, b.setting ORDER BY b.layer, b.setting""".stripMargin
     ) { (s, d) =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, d)
       val dd = docs.where($"text".isNotNull)
 

@@ -110,7 +110,6 @@ object StreamAnnAssign {
   def probeCandidates(stream: DataFrame, idCol: String, embCol: String,
       centroids: Seq[(Int, Array[Float])], index: DataFrame): DataFrame = {
     val spark = stream.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     assignVec(stream, idCol, embCol, centroids)
       .toDF()

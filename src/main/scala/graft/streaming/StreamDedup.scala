@@ -114,7 +114,6 @@ object StreamDedup {
       s"maxHamming=$maxHamming breaks the 4-band pigeonhole guarantee")
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val banded = df
       .where(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"),
@@ -288,7 +287,6 @@ object StreamDedup {
     require(ttlMs > 0, s"ttlMs must be positive: $ttlMs")
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // ts stays a TOP-LEVEL column through the fan-out: the event-time
     // watermark tag lives in the attribute's metadata, and a field
     // re-extracted from a struct is a fresh attribute without it

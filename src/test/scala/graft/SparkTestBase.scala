@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.GraftFunctions
 import graft.sources.FsUtil
 
 /** Shared local session for all specs (one JVM-wide session — ScalaTest
@@ -20,6 +21,12 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession =
-    Session.builder(2).appName("graft-test").getOrCreate()
+  /** Specs call query helpers and SQL functions directly, not only
+    * through `CatalogEntry.query`, so the native functions are
+    * registered once here. */
+  lazy val session: SparkSession = {
+    val spark = Session.builder(2).appName("graft-test").getOrCreate()
+    GraftFunctions.register(spark)
+    spark
+  }
 }

@@ -137,41 +137,54 @@ class TablesReadSpec extends SparkTestBase {
     }
   }
 
-  /** One source-tree lint: `pattern` may appear only in `owner`, in the
-    * `.scala` files under `roots`. */
+  /** One source-tree lint: `pattern` may appear only in `owners` (none:
+    * nowhere), in the `.scala` files under `roots`. */
   private case class Lint(name: String, roots: Seq[String], pattern: String,
-      owner: String, advice: String)
+      owners: Set[String], advice: String)
 
   private val lints = Seq(
     Lint("lint: Tables.scala is the only program file calling .read.parquet(",
-      Seq("src/main/scala"), """\.read\s*\.parquet\(""", "Tables.scala",
+      Seq("src/main/scala"), """\.read\s*\.parquet\(""", Set("Tables.scala"),
       "open parquet tables through Tables.read"),
     Lint("lint: Session.scala is the only source file building a session",
       Seq("src/main/scala", "src/test/scala"), """SparkSession\s*\.builder""",
-      "Session.scala", "build sessions through graft.Session.builder"),
+      Set("Session.scala"), "build sessions through graft.Session.builder"),
     Lint("lint: Profile.scala is the only main under graft/tools",
-      Seq("src/main/scala/graft/tools"), """def\s+main\s*\(""", "Profile.scala",
+      Seq("src/main/scala/graft/tools"), """def\s+main\s*\(""", Set("Profile.scala"),
       "fold diagnostics into graft.tools.Profile"),
     Lint("lint: RunMetrics.scala is the only program file with a SparkListener",
-      Seq("src/main/scala"), """\bSparkListener\b""", "RunMetrics.scala",
+      Seq("src/main/scala"), """\bSparkListener\b""", Set("RunMetrics.scala"),
       "read run counters through graft.obs.RunMetrics"),
     Lint("lint: DriverMath.scala is the only program file folding a nano-quantized zip_with",
       Seq("src/main/scala"), """(?s)aggregate\(\s*zip_with\(.{0,300}?lit\(1e9\)""",
-      "DriverMath.scala", "use DriverMath.l2Nano or DriverMath.dotNano"),
+      Set("DriverMath.scala"), "use DriverMath.l2Nano or DriverMath.dotNano"),
     Lint("lint: SimilarityQueries.scala is the only program file folding centroids into an array",
       Seq("src/main/scala"), """collect_list\(struct\(\s*(?:col\("cid"\)|\$"cid")""",
-      "SimilarityQueries.scala", "assign clusters through SimilarityQueries.centroidAssign"),
+      Set("SimilarityQueries.scala"), "assign clusters through SimilarityQueries.centroidAssign"),
     Lint("lint: TextOps.scala is the only program file building token n-grams inline",
       Seq("src/main/scala"),
       """(?s)transform\(\s*sequence\(lit\(1\),\s*size\([^)]*\)\s*-[^,]*,\s*\w+\s*=>\s*array_join\(slice\(""",
-      "TextOps.scala", "use TextOps.tokenNgrams or TextOps.ngramWindows"),
+      Set("TextOps.scala"), "use TextOps.tokenNgrams or TextOps.ngramWindows"),
     Lint("lint: FsUtil.scala is the only program file naming a java.io.tmpdir path",
-      Seq("src/main/scala"), """java\.io\.tmpdir""", "FsUtil.scala",
+      Seq("src/main/scala"), """java\.io\.tmpdir""", Set("FsUtil.scala"),
       "write scratch files under FsUtil.scratchDir, which deletes them at JVM exit"),
     Lint("lint: SparkTestBase.scala is the only source file creating a temp directory",
       Seq("src/main/scala", "src/test/scala"), """createTempDirectory\(""",
-      "SparkTestBase.scala",
-      "make fixture directories with SparkTestBase.tempDir, which deletes them at JVM exit"))
+      Set("SparkTestBase.scala"),
+      "make fixture directories with SparkTestBase.tempDir, which deletes them at JVM exit"),
+    Lint("lint: CatalogEntry.scala is the only program file registering graft functions",
+      Seq("src/main/scala"), """GraftFunctions\.register\(""", Set("CatalogEntry.scala"),
+      "every catalog entry is built through CatalogEntry.query, which registers them"),
+    Lint("lint: Session.scala is the only program file setting a conf or an optimizer rule",
+      Seq("src/main/scala"), """conf\.set\(|experimental\.""", Set("Session.scala"),
+      "configure sessions in graft.Session.builder; a query must leave its session as it found it"),
+    Lint("lint: no program file flips the JVM-wide ImageIO cache",
+      Seq("src/main/scala"), """setUseCache""", Set.empty,
+      "build MemoryCacheImage*Stream instances directly"),
+    Lint("lint: no query, extension, rule or function object holds @volatile state",
+      Seq("queries", "ext", "plans", "functions").map(d => s"src/main/scala/graft/$d"),
+      """@volatile""", Set.empty,
+      "keep state in the session or the query that owns it"))
 
   lints.foreach { lint =>
     test(lint.name) {
@@ -180,7 +193,7 @@ class TablesReadSpec extends SparkTestBase {
         assert(Files.isDirectory(root), s"${root.toAbsolutePath} is not a source tree")
         Files.walk(root).iterator().asScala
           .filter(p => p.toString.endsWith(".scala"))
-          .filterNot(_.getFileName.toString == lint.owner)
+          .filterNot(p => lint.owners(p.getFileName.toString))
           .filter(p => call.findFirstIn(Files.readString(p)).isDefined)
       }
       assert(offenders.isEmpty, s"${lint.advice}: $offenders")

@@ -129,7 +129,6 @@ class DedupSpec extends SparkTestBase {
     val got = Dedup.simhashNearDupPairs(df, "doc_id", "text", maxHamming = 3)
       .select($"id_a", $"id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    graft.functions.GraftFunctions.register(spark)
     val fps = df.select($"doc_id",
         call_function("simhash63", TextOps.tokens($"text")).as("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

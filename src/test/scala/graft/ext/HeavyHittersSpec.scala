@@ -2,7 +2,8 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, Tables}
+import graft.queries.TextQueries
 
 /** Misra-Gries guarantees: every item above the n/k threshold is
   * reported, weights are (true − n/k, true]-bounded lower bounds, and
@@ -41,6 +42,24 @@ class HeavyHittersSpec extends SparkTestBase {
     val got = run(k = 50, parts = 4) // threshold 20: hot and warm guaranteed
     assert(got.contains("hot") && got.contains("warm"), got.toString)
     assert(got.size <= 49, "buffer must respect the k-1 capacity")
+  }
+
+  test("the heavy_hitters_mg entry: every term above n/40 is present and " +
+      "no weight exceeds its term's true count") {
+    val sf = "/root/testdata/sf0.01"
+    val got = TextQueries.heavyHittersMg.query(spark, sf).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val counts = Tables.documents(spark, sf)
+      .select(explode(TextOps.tokens($"text")).as("term"))
+      .groupBy($"term").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val total = counts.values.sum
+    val heavy = counts.collect { case (t, c) if c * 40 > total => t }
+    assert(heavy.nonEmpty, s"no term above n/40 = ${total / 40}")
+    heavy.foreach(t => assert(got.contains(t), s"$t (${counts(t)} > n/40) missing"))
+    got.foreach { case (t, w) =>
+      assert(w <= counts.getOrElse(t, 0L), s"$t weight $w exceeds true ${counts.get(t)}")
+    }
   }
 
   test("capacity is validated") {

@@ -49,6 +49,21 @@ class MultiModalSpec extends SparkTestBase {
     assert(!java.util.Arrays.equals(bytes, codec.encode(8L, 33, 21)))
   }
 
+  test("PNG and GIF codecs leave the JVM-wide ImageIO cache flag as they " +
+      "found it") {
+    import javax.imageio.ImageIO
+    val before = ImageIO.getUseCache
+    // the JDK default; an earlier flip would hide a codec's own
+    ImageIO.setUseCache(true)
+    try {
+      val png = new MultiModal.PngCodec
+      val gif = new MultiModal.GifCodec
+      assert(png.decode(1L, png.encode(1L, 8, 8)).width == 8)
+      assert(gif.decodeSampled(1L, gif.encode(1L, 8, 8, 2), 2).nFrames == 2)
+      assert(ImageIO.getUseCache, "a codec flipped ImageIO.setUseCache")
+    } finally ImageIO.setUseCache(before)
+  }
+
   test("encode/decodeImagePartitions: distributed real-codec round-trip") {
     val meta = (0L until 24L).map(i => (i, (i % 13 + 5).toInt, (i % 7 + 3).toInt))
     val df = meta.toDF("doc_id", "w", "h")

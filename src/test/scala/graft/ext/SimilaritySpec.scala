@@ -36,7 +36,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("lshBucket: equal vectors share a bucket; buckets are stable") {
-    graft.functions.GraftFunctions.register(spark)
     val planes = Similarity.hyperplanes(4, 3)
     val df = Seq(
       (1L, Seq(1f, 2f, 3f)), (2L, Seq(1f, 2f, 3f)),
@@ -51,7 +50,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("ivfTopK: with a well-separated quantizer, probes the right cluster and ranks the query first") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(17)
     // three well-separated clusters around axis directions
     def around(axis: Int) = Seq.tabulate(8)(j =>
@@ -72,7 +70,6 @@ class SimilaritySpec extends SparkTestBase {
 
   test("ivfTopK nProbe: a boundary-straddling neighbor missed at nProbe=1 " +
       "is recovered at nProbe=2") {
-    graft.functions.GraftFunctions.register(spark)
     // cluster 0 along e1, cluster 1 along e2; the query leans toward e1
     // (assigned cluster 0) but its TRUE nearest neighbor sits in
     // cluster 1, angled toward the boundary
@@ -159,7 +156,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("ANN within query bucket contains the query itself at cosine 1") {
-    graft.functions.GraftFunctions.register(spark)
     val planes = Similarity.hyperplanes(4, 4)
     val rnd = new scala.util.Random(11)
     val vecs = (0L until 50L).map(i => (i, Seq.fill(4)(rnd.nextFloat() * 2 - 1)))

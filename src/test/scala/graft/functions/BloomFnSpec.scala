@@ -15,7 +15,6 @@ class BloomFnSpec extends SparkTestBase {
 
   test("bloom_agg / bloom_might_contain: zero false negatives, few FPs") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     spark.range(1000).select(xxhash64($"id").as("h"))
       .createOrReplaceTempView("graft_bloom_members")
     spark.range(5000).select($"id", xxhash64($"id").as("h"))

@@ -19,8 +19,6 @@ import graft.ext.{Dedup, TextOps}
 class SketchExprSpec extends SparkTestBase with Matchers {
   import spark.implicits._
 
-  GraftFunctions.register(spark)
-
   /** `functions.size` under a name Matchers' `size` word can't shadow. */
   private def fsize(c: org.apache.spark.sql.Column) =
     org.apache.spark.sql.functions.size(c)

@@ -36,7 +36,6 @@ class StringDistanceSpec extends SparkTestBase {
   }
 
   test("codegen and interpreted paths agree through the SQL surface") {
-    GraftFunctions.register(spark)
     val pairs = Seq(("martha", "marhta"), ("crate", "trace"), ("", ""),
       ("hello", "hallo"), ("aa", "aaaa"), ("prefix", "prefabricate"))
       .toDF("a", "b")

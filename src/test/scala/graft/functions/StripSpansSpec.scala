@@ -15,7 +15,6 @@ import graft.SparkTestBase
 class StripSpansSpec extends SparkTestBase {
 
   private def run(text: String, k: Int = 3): (Long, Long, String) = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val row = Seq(text).toDF("text")
       .select(size(split($"text", " ")).cast("long").as("n"),

@@ -9,7 +9,6 @@ class VecDotProductSpec extends SparkTestBase {
   import spark.implicits._
 
   test("vec_dot is bit-exact with the zip_with+aggregate fold on random vectors") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(5)
     val df = (0 until 200).map(i =>
       (i.toLong, Seq.fill(64)(rnd.nextFloat() * 2 - 1),
@@ -23,7 +22,6 @@ class VecDotProductSpec extends SparkTestBase {
   }
 
   test("vec_dot known values, null array, mismatched lengths") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (1L, Some(Seq(1f, 2f, 3f)), Some(Seq(4f, 5f, 6f))),
       (2L, None, Some(Seq(1f))),
@@ -38,7 +36,6 @@ class VecDotProductSpec extends SparkTestBase {
 
   test("vec_quant_score: self-score = |codes|, ranking tracks exact " +
       "cosine on random vectors, null propagates") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val vecs = (0 until 300).map(i =>
       (i.toLong, Seq.fill(64)(rnd.nextFloat() * 2 - 1)))
@@ -70,7 +67,6 @@ class VecDotProductSpec extends SparkTestBase {
   }
 
   test("vec_dot works in SQL text and inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     // row-dependent input so the expression can't be constant-folded away
     spark.range(1, 4).createOrReplaceTempView("v")
     val plan = spark.sql(
@@ -86,7 +82,6 @@ class VecDotProductSpec extends SparkTestBase {
   }
 
   test("vec_dot_q9 is bit-exact with the rint HOF fold on random vectors") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val df = (0 until 200).map(i =>
       (i.toLong, Seq.fill(64)(rnd.nextFloat() * 2 - 1),
@@ -106,7 +101,6 @@ class VecDotProductSpec extends SparkTestBase {
   }
 
   test("vec_dot_q9 known values, null array, mismatched lengths") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (1L, Some(Seq(1f, 2f, 3f)), Some(Seq(4f, 5f, 6f))),
       (2L, None, Some(Seq(1f))),

@@ -9,8 +9,6 @@ import graft.sources.Layout
 class ZOrderKeySpec extends SparkTestBase {
   import spark.implicits._
 
-  GraftFunctions.register(spark)
-
   private def z(x: Column, y: Column) = call_function("z_order2", x, y)
 
   /** Bit-by-bit reference interleave. */

@@ -17,7 +17,7 @@ class AutoRangeJoinSpec extends SparkTestBase {
 
   private def withRule[A](bw: Long)(f: => A): A = {
     spark.experimental.extraOptimizations =
-      Seq(AutoRangeJoin(() => bw))
+      Seq(AutoRangeJoin(bw))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try f
     finally {
@@ -88,13 +88,13 @@ class AutoRangeJoinSpec extends SparkTestBase {
     assert(!nd.deterministic)
     val cond = And(GreaterThanOrEqual(nd, s), LessThanOrEqual(nd, e))
     val j = Join(lp, rp, Inner, Some(cond), JoinHint.NONE)
-    val out = AutoRangeJoin(() => 64L)(j)
+    val out = AutoRangeJoin(64L)(j)
     assert(out eq j, s"nondeterministic condition must not be rewritten:\n$out")
     // identical shape with a deterministic point DOES rewrite — the
     // guard above is the only thing blocking it
     val det = And(GreaterThanOrEqual(x, s), LessThanOrEqual(x, e))
     val j2 = Join(lp, rp, Inner, Some(det), JoinHint.NONE)
-    assert(AutoRangeJoin(() => 64L)(j2).toString.contains("__pbin"))
+    assert(AutoRangeJoin(64L)(j2).toString.contains("__pbin"))
   }
 
   test("null and inverted intervals never match after the rewrite") {

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.streaming.IncrementalAgg
 
-/** The aggregate navigator: derivable aggregates over a registered base
-  * table re-plan onto its materialized summary; anything outside the
-  * derivable surface is left untouched; results are identical. */
+/** The aggregate navigator: derivable aggregates over a summary's base
+  * table re-plan onto the materialized summary given with the query;
+  * anything outside the derivable surface is left untouched; results
+  * are identical. */
 class SummaryRewriteSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -29,16 +30,12 @@ class SummaryRewriteSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(summaryPath)
   }
 
-  private def withRule[A](f: => A): A = {
+  private val spec = SummarySpec(basePath, summaryPath, Seq("k"), "v")
+
+  /** `q` rewritten against the base table's summary. */
+  private def navigated(q: DataFrame): DataFrame = {
     ready
-    SummaryRegistry.register(
-      SummarySpec(basePath, summaryPath, Seq("k"), "v"))
-    spark.experimental.extraOptimizations = Seq(SummaryRewrite(spark))
-    try f
-    finally {
-      spark.experimental.extraOptimizations = Nil
-      SummaryRegistry.clear()
-    }
+    SummaryRewrite.rewrite(q, spec)
   }
 
   private def base: DataFrame = { ready; spark.read.parquet(basePath) }
@@ -51,26 +48,22 @@ class SummaryRewriteSpec extends SparkTestBase {
       .agg(count(lit(1)).as("n"), sum($"v").as("s"),
         min($"v").as("lo"), max($"v").as("hi"))
       .orderBy($"k").collect().toSeq.toString
-    withRule {
-      val q = base.groupBy($"k")
-        .agg(count(lit(1)).as("n"), sum($"v").as("s"),
-          min($"v").as("lo"), max($"v").as("hi"))
-        .orderBy($"k")
-      val plan = scans(q)
-      assert(plan.contains("srw_summary_tbl") && !plan.contains("srw_fact_tbl"),
-        s"must scan the summary, not the base:\n$plan")
-      assert(q.collect().toSeq.toString == direct)
-    }
+    val q = navigated(base.groupBy($"k")
+      .agg(count(lit(1)).as("n"), sum($"v").as("s"),
+        min($"v").as("lo"), max($"v").as("hi"))
+      .orderBy($"k"))
+    val plan = scans(q)
+    assert(plan.contains("srw_summary_tbl") && !plan.contains("srw_fact_tbl"),
+      s"must scan the summary, not the base:\n$plan")
+    assert(q.collect().toSeq.toString == direct)
   }
 
   test("global (ungrouped) aggregate derives too") {
     val direct = base.agg(count(lit(1)).as("n"), sum($"v").as("s"))
       .collect().toSeq.toString
-    withRule {
-      val q = base.agg(count(lit(1)).as("n"), sum($"v").as("s"))
-      assert(scans(q).contains("srw_summary_tbl"), scans(q))
-      assert(q.collect().toSeq.toString == direct)
-    }
+    val q = navigated(base.agg(count(lit(1)).as("n"), sum($"v").as("s")))
+    assert(scans(q).contains("srw_summary_tbl"), scans(q))
+    assert(q.collect().toSeq.toString == direct)
   }
 
   test("a DIM-ONLY filter commutes: it rebases onto the summary scan " +
@@ -78,30 +71,31 @@ class SummaryRewriteSpec extends SparkTestBase {
     val direct = base.where($"k" =!= "b").groupBy($"k")
       .agg(count(lit(1)).as("n"), sum($"v").as("s"))
       .orderBy($"k").collect().toSeq.toString
-    withRule {
-      val q = base.where($"k" =!= "b").groupBy($"k")
-        .agg(count(lit(1)).as("n"), sum($"v").as("s"))
-        .orderBy($"k")
-      assert(scans(q).contains("srw_summary_tbl"), scans(q))
-      assert(q.collect().toSeq.toString == direct)
-    }
+    val q = navigated(base.where($"k" =!= "b").groupBy($"k")
+      .agg(count(lit(1)).as("n"), sum($"v").as("s"))
+      .orderBy($"k"))
+    assert(scans(q).contains("srw_summary_tbl"), scans(q))
+    assert(q.collect().toSeq.toString == direct)
   }
 
   test("out-of-scope shapes do NOT rewrite: value-column filter, avg, " +
       "count(col), distinct, foreign column, unregistered table") {
-    withRule {
-      for (q <- Seq(
-        base.where($"v" > 0).groupBy($"k").agg(sum($"v")), // value filter
-        base.groupBy($"k").agg(avg($"v")),                 // not derivable
-        base.groupBy($"k").agg(count($"v")),               // null-skipping
-        base.groupBy($"k").agg(countDistinct($"v")),       // distinct
-        base.groupBy($"v").agg(count(lit(1)))))            // non-dim group
-        assert(!scans(q).contains("srw_summary_tbl"),
-          s"must NOT rewrite:\n${q.queryExecution.optimizedPlan}")
-      SummaryRegistry.clear()
-      val q = base.groupBy($"k").agg(sum($"v"))
-      assert(!scans(q).contains("srw_summary_tbl"), "unregistered → untouched")
+    for (q <- Seq(
+      base.where($"v" > 0).groupBy($"k").agg(sum($"v")), // value filter
+      base.groupBy($"k").agg(avg($"v")),                 // not derivable
+      base.groupBy($"k").agg(count($"v")),               // null-skipping
+      base.groupBy($"k").agg(countDistinct($"v")),       // distinct
+      base.groupBy($"v").agg(count(lit(1))))) {          // non-dim group
+      val nq = navigated(q)
+      assert(!scans(nq).contains("srw_summary_tbl"),
+        s"must NOT rewrite:\n${nq.queryExecution.optimizedPlan}")
+      assert(nq eq q, "an untouched query comes back as itself")
     }
+    // the summary of another base table does not apply here
+    val q = base.groupBy($"k").agg(sum($"v"))
+    val other = SummaryRewrite.rewrite(q,
+      spec.copy(basePath = s"$dir/srw_other_tbl"))
+    assert(!scans(other).contains("srw_summary_tbl"), "unregistered → untouched")
   }
 
   test("dim filter matching NO rows: global count(*) derives 0, not " +
@@ -109,13 +103,11 @@ class SummaryRewriteSpec extends SparkTestBase {
     val direct = base.where($"k" === "zzz")
       .agg(count(lit(1)).as("n"), sum($"v").as("s"))
       .collect().toSeq.toString
-    withRule {
-      val q = base.where($"k" === "zzz")
-        .agg(count(lit(1)).as("n"), sum($"v").as("s"))
-      assert(scans(q).contains("srw_summary_tbl"), scans(q))
-      assert(q.collect().toSeq.toString == direct,
-        s"expected $direct got ${q.collect().toSeq}")
-    }
+    val q = navigated(base.where($"k" === "zzz")
+      .agg(count(lit(1)).as("n"), sum($"v").as("s")))
+    assert(scans(q).contains("srw_summary_tbl"), scans(q))
+    assert(q.collect().toSeq.toString == direct,
+      s"expected $direct got ${q.collect().toSeq}")
   }
 
   test("decimal sum: the derived column is cast back to the original " +
@@ -130,43 +122,32 @@ class SummaryRewriteSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(dsum)
     val direct = spark.read.parquet(dbase).groupBy($"k").agg(sum($"v").as("s"))
     val expect = direct.orderBy($"k").collect().toSeq.toString
-    SummaryRegistry.register(SummarySpec(dbase, dsum, Seq("k"), "v"))
-    spark.experimental.extraOptimizations = Seq(SummaryRewrite(spark))
-    try {
-      val q = spark.read.parquet(dbase).groupBy($"k")
-        .agg(sum($"v").as("s")).orderBy($"k")
-      assert(scans(q).contains("dec_summary"), scans(q))
-      assert(q.queryExecution.executedPlan.schema("s").dataType ==
-        direct.schema("s").dataType,
-        s"executed type ${q.queryExecution.executedPlan.schema("s").dataType}" +
-          s" != analyzed ${direct.schema("s").dataType}")
-      assert(q.collect().toSeq.toString == expect)
-    } finally {
-      spark.experimental.extraOptimizations = Nil
-      SummaryRegistry.clear()
-    }
+    val q = SummaryRewrite.rewrite(spark.read.parquet(dbase).groupBy($"k")
+      .agg(sum($"v").as("s")).orderBy($"k"),
+      SummarySpec(dbase, dsum, Seq("k"), "v"))
+    assert(scans(q).contains("dec_summary"), scans(q))
+    assert(q.queryExecution.executedPlan.schema("s").dataType ==
+      direct.schema("s").dataType,
+      s"executed type ${q.queryExecution.executedPlan.schema("s").dataType}" +
+        s" != analyzed ${direct.schema("s").dataType}")
+    assert(q.collect().toSeq.toString == expect)
   }
 
   test("catalog entry summary_rewrite_agg: the executed plan scans the " +
       "summary snapshot, never the base copy") {
     val q = graft.queries.OperatorQueries.summaryRewriteAgg
       .query(spark, "/root/testdata/sf0.001")
-    try {
-      val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains("graft_summary_nav"), plan)
-      assert(plan.contains("/summary"), s"must scan the summary:\n$plan")
-      assert(!plan.contains("/base"), s"must NOT scan the base:\n$plan")
-      val rows = q.collect()
-      assert(rows.nonEmpty && rows.forall(!_.isNullAt(1)))
-    } finally {
-      spark.experimental.extraOptimizations = Nil
-      SummaryRegistry.clear()
-    }
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("graft_summary_nav"), plan)
+    assert(plan.contains("/summary"), s"must scan the summary:\n$plan")
+    assert(!plan.contains("/base"), s"must NOT scan the base:\n$plan")
+    val rows = q.collect()
+    assert(rows.nonEmpty && rows.forall(!_.isNullAt(1)))
   }
 
   test("summary stays correct as IncrementalAgg maintains it") {
-    // fold one more batch through the maintainer, re-point the registry
-    // at the maintained snapshot, and the navigator serves the new total
+    // fold one more batch through the maintainer, point the spec at the
+    // maintained snapshot, and the navigator serves the new total
     val snap = s"$dir/maintained"
     IncrementalAgg.applyBatch(spark, rows.toDF("k", "v"), snap, "k", "v", 0L)
     IncrementalAgg.applyBatch(spark,
@@ -174,19 +155,13 @@ class SummaryRewriteSpec extends SparkTestBase {
     val all = (rows ++ Seq(("c", 100.0), ("d", 5.0))).toDF("k", "v")
     val allPath = s"$dir/base_all"
     all.write.mode("overwrite").parquet(allPath)
-    SummaryRegistry.register(SummarySpec(allPath, snap, Seq("k"), "v"))
-    spark.experimental.extraOptimizations = Seq(SummaryRewrite(spark))
-    try {
-      val q = spark.read.parquet(allPath).groupBy($"k")
-        .agg(count(lit(1)).as("n"), sum($"v").as("s")).orderBy($"k")
-      assert(scans(q).contains("maintained"), scans(q))
-      val direct = all.groupBy($"k")
-        .agg(count(lit(1)).as("n"), sum($"v").as("s")).orderBy($"k")
-        .collect().toSeq.toString
-      assert(q.collect().toSeq.toString == direct)
-    } finally {
-      spark.experimental.extraOptimizations = Nil
-      SummaryRegistry.clear()
-    }
+    val q = SummaryRewrite.rewrite(spark.read.parquet(allPath).groupBy($"k")
+      .agg(count(lit(1)).as("n"), sum($"v").as("s")).orderBy($"k"),
+      SummarySpec(allPath, snap, Seq("k"), "v"))
+    assert(scans(q).contains("maintained"), scans(q))
+    val direct = all.groupBy($"k")
+      .agg(count(lit(1)).as("n"), sum($"v").as("s")).orderBy($"k")
+      .collect().toSeq.toString
+    assert(q.collect().toSeq.toString == direct)
   }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, Tables}
 
 /** HLL approx distinct vs exact: the rows-only catalog entry
   * `agg_approx_distinct` has no SQL oracle (sketches are
@@ -18,5 +18,20 @@ class ApproxDistinctSpec extends SparkTestBase {
       .collect().head.getLong(0)
     assert(math.abs(approx - exact).toDouble / exact < 0.06, // 3 sigma
       s"approx=$approx exact=$exact")
+  }
+
+  test("the agg_approx_distinct entry: every o_orderstatus within 3 sigma " +
+      "of the exact distinct customer count") {
+    val sf = "/root/testdata/sf0.01"
+    val approx = JoinQueries.aggApproxDistinct.query(spark, sf).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val exact = Tables.orders(spark, sf).groupBy($"o_orderstatus")
+      .agg(countDistinct($"o_custkey")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(approx.keySet == exact.keySet && exact.nonEmpty, s"$approx vs $exact")
+    exact.foreach { case (status, n) =>
+      assert(math.abs(approx(status) - n).toDouble / n < 0.06, // 3 sigma
+        s"$status: approx=${approx(status)} exact=$n")
+    }
   }
 }

@@ -104,7 +104,6 @@ class StreamAnnAssignSpec extends SparkTestBase {
   test("probe candidates equal the batch within-cluster pair set with " +
       "exact vec_dot_q9 scores") {
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val cents = centroids()
     val emb = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding")

@@ -62,7 +62,6 @@ class StreamDedupSpec extends SparkTestBase {
       val got = spark.table("stream_neardup")
         .select($"id_a", $"id_b").distinct().collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      graft.functions.GraftFunctions.register(spark)
       val fps = docs.toDF("doc_id", "text")
         .select($"doc_id", org.apache.spark.sql.functions.call_function(
           "simhash63", graft.ext.TextOps.tokens($"text")).as("fp"))
