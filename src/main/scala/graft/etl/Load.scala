@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.NioLocalFileSystem
 
 /** Warehouse-load semantics of the reference
   * (dags/scritps/load_to_bigquery.py), re-expressed as Spark batch
@@ -17,33 +18,37 @@ object Load {
   /** `df` coalesced to `ceil(sizeInBytes / spark.sql.files.maxPartitionBytes)`
     * partitions, so a writer makes one file per `maxPartitionBytes` of
     * data instead of one per upstream partition. `sizeInBytes` is the
-    * optimizer's estimate; for a persisted batch that is the cached
-    * size, so sizing launches no job. A count at or above the current
+    * plan-statistics estimate of `df`'s analyzed plan with cached data
+    * substituted: no optimizer pass and no job, and for a persisted
+    * batch it is the cached size. A count at or above the current
     * partition count changes nothing, so a large input keeps its
     * parallelism, and one partition satisfies every clustering a
-    * window asks for, so a small window is planned with no exchange.
+    * window asks for, so a small window is planned with no exchange. A
+    * streaming frame is returned as it is: its micro-batches are sized
+    * where they are written.
     *
-    * Why the writers are sized: without the native `libhadoop`,
-    * Hadoop's local file system forks a `chmod` for every file, `.crc`
-    * and directory it creates (12-13 ms per create in a new directory
-    * on a 4-vCPU host, against 0.1 ms for a plain Java write), so a
-    * micro-batch's cost is set by its file count, not its rows. A
-    * 1,700-row batch wrote 9.5 history files and shuffled 40 KB into
+    * Why the writers are sized: a micro-batch's cost was set by its file
+    * count, not its rows. Every file is a task's output, a commit rename
+    * and a `.crc`, and without the native `libhadoop` Hadoop's local file
+    * system also forked a `chmod` for every file, `.crc` and directory it
+    * created (12-13 ms per create in a new directory on a 4-vCPU host).
+    * A 1,700-row batch wrote 9.5 history files and shuffled 40 KB into
     * its MERGE; sized, it writes one history file and one snapshot file
-    * with no shuffle, and forks 18.5 `chmod`s instead of 44. */
-  private[graft] def sizedByBytes(df: DataFrame): DataFrame = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    * with no shuffle, and forked 18.5 `chmod`s instead of 44. The sinks
+    * now fork none ([[graft.sources.NioLocalFileSystem]]). */
+  private[graft] def sizedByBytes(df: DataFrame): DataFrame = if (df.isStreaming) df else {
+    val bytes = df.queryExecution.withCachedData.stats.sizeInBytes
     val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
     df.coalesce(((bytes + target - 1) / target).max(1).min(Int.MaxValue).toInt)
   }
 
   /** Append-only fact sink (`WRITE_APPEND`, load_to_bigquery.py:81). */
   def appendHistorical(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
+    NioLocalFileSystem.writer(df.write.mode("append")).parquet(path)
 
   /** Truncate-load staging sink (`WRITE_TRUNCATE`, load_to_bigquery.py:92). */
   def overwriteStaging(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
+    NioLocalFileSystem.writer(df.write.mode("overwrite")).parquet(path)
 
   /** Collapse a batch to its latest row per key — used both to pre-dedup
     * an incoming batch (BigQuery MERGE errors on duplicate source keys;

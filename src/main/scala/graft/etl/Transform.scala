@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.DataType
   *
   * Everything here is a narrow transformation or a column expression:
   * no shuffles, no driver materialization — at 100 TB these fuse into
-  * the scan's whole-stage-codegen pass.
+  * the scan's whole-stage-codegen pass. [[alignSchema]] also sizes its
+  * output by bytes (a coalesce, still narrow).
   */
 object Transform {
 
@@ -54,9 +55,18 @@ object Transform {
   }
 
   /** Schema align + reorder before load (load_to_bigquery.py:44-54):
-    * project to the declared columns in order, coercing each. */
+    * project to the declared columns in order, coercing each.
+    *
+    * The result is the load-ready batch, so it leaves here
+    * [[Load.sizedByBytes]]: a batch under
+    * `spark.sql.files.maxPartitionBytes` is one partition, and caching
+    * and counting it needs no exchange: 2 jobs of one task each, where
+    * a 1,700-row micro-batch (`ingest_refresh`) took 3 jobs, 20 tasks
+    * and a 560 B shuffle. The trade-off: a batch above that size
+    * is built in `ceil(bytes / maxPartitionBytes)` tasks, the count the
+    * sinks write with anyway, not in its upstream partition count. */
   def alignSchema(df: DataFrame, schema: Seq[(String, DataType)]): DataFrame =
-    df.select(schema.map { case (n, t) => col(n).try_cast(t).as(n) }: _*)
+    Load.sizedByBytes(df.select(schema.map { case (n, t) => col(n).try_cast(t).as(n) }: _*))
 
   /** `validate_nonempty` (fetch.py:55-56): raise if nothing survived.
     * Deliberately an action — the reference's check is eager too. */

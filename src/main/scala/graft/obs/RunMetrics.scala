@@ -4,6 +4,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Semaphore
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
@@ -18,9 +19,11 @@ object RunMetrics {
 
   /** Counters of one step: every job run under one job group.
     * `singleTask` counts stages of 3 s or more that ran as one task, the
-    * shape that cannot scale out. */
+    * shape that cannot scale out. `compiles` counts the classes Janino
+    * compiled while the step ran ([[Recorder.inStep]]; 0 where the step
+    * reused generated code). */
   final class Step {
-    var jobs, stages, tasks, shufR, shufW, spill, cpuNs, gcMs, singleTask = 0L
+    var jobs, stages, tasks, shufR, shufW, spill, cpuNs, gcMs, singleTask, compiles = 0L
     val slow = ArrayBuffer.empty[String]
   }
 
@@ -69,6 +72,15 @@ object RunMetrics {
     override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
       if (keepPlans && (f == "localCheckpoint" || f == "checkpoint")) plans.add(f -> qe)
     override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    /** [[inGroup]], adding the codegen compiles `body` caused to the
+      * group's `compiles`. Spark's compile counter is JVM-wide, so the
+      * count is the step's own only while steps run one at a time. */
+    def inStep[A](spark: SparkSession, group: String)(body: => A): (A, Double) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      try inGroup(spark, group)(body)
+      finally step(group).compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
 
     /** Removes and returns the counters of `group` (empty if none ran). */
     def take(group: String): Step = Option(steps.remove(group)).getOrElse(new Step)

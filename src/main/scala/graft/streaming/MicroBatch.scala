@@ -8,7 +8,7 @@ import org.apache.spark.sql.Row
 
 import graft.Tables
 import graft.etl.Load
-import graft.sources.AtomicSwap
+import graft.sources.{AtomicSwap, NioLocalFileSystem}
 
 /** Structured-Streaming parity for the reference pipeline (SURVEY.md
   * §2.9): each DAG run is a micro-batch that appends to
@@ -27,12 +27,15 @@ import graft.sources.AtomicSwap
   * Both sinks are sized by bytes ([[Load.sizedByBytes]]): a batch under
   * `spark.sql.files.maxPartitionBytes` writes one history file and one
   * snapshot file, and its MERGE runs in one task with no shuffle. File
-  * count, not row count, sets a small batch's cost here: without the
+  * count, not row count, set a small batch's cost here: without the
   * native `libhadoop`, every file, `.crc` and directory Hadoop's local
-  * file system creates forks a `chmod`. History therefore grows by one
-  * file per batch (one per `maxPartitionBytes` of a large batch);
-  * compact a long-lived table's closed `batch_id` partitions with
-  * `graft.sources.Layout.compact`.
+  * file system creates forked a `chmod` (44 per 1,700-row batch with one
+  * file per upstream partition, 18.5 once sized). Both sinks now write
+  * through [[NioLocalFileSystem.writer]], which sets those permissions
+  * with a system call, so a batch forks no `chmod` at all. History
+  * grows by one file per batch (one per `maxPartitionBytes` of a large
+  * batch); compact a long-lived table's closed `batch_id` partitions
+  * with `graft.sources.Layout.compact`.
   */
 object MicroBatch {
 
@@ -48,7 +51,8 @@ object MicroBatch {
     val dir = new Path(path, s"batch_id=$batchId")
     val fs = dir.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(dir, "_SUCCESS")))
-      Load.sizedByBytes(batch).write.mode("overwrite").parquet(dir.toString)
+      NioLocalFileSystem.writer(Load.sizedByBytes(batch).write.mode("overwrite"))
+        .parquet(dir.toString)
   }
 
   /** Upsert one batch into the parquet snapshot at `currentPath`:
@@ -73,7 +77,7 @@ object MicroBatch {
       else
         Load.latestPerKey(Load.sizedByBytes(batch), keys, tsCol, tieCol)
     AtomicSwap.swapIn(fs, dest) { stg =>
-      next.write.mode("overwrite").parquet(stg.toString)
+      NioLocalFileSystem.writer(next.write.mode("overwrite")).parquet(stg.toString)
     }
   }
 

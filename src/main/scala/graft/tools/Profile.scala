@@ -15,11 +15,14 @@ import graft.obs.RunMetrics.{Recorder, Step, inGroup, recording, settle}
   * Timing mode: one untimed warm-up, then [[Reps]] timed runs, each split
   * into construction (`fn(spark, sfDir)`; iterative entries run their
   * rounds here) and execution (a noop-sink write) under job groups
-  * `profile-<entry>-construct|execute`. Per run: both wall times and job
-  * counts, driver GC/JIT deltas, and each stage of 0.5 s or more with
-  * tasks, CPU, run, GC, deserialize and fetch-wait seconds and operator
-  * scopes. Per entry: both medians and, per step, the per-run jobs,
-  * stages, tasks, shuffle bytes, spill, CPU and GC.
+  * `profile-<entry>-construct|execute`. Per run: both wall times, job
+  * counts and codegen compiles, driver GC/JIT deltas, and each stage of
+  * 0.5 s or more with tasks, CPU, run, GC, deserialize and fetch-wait
+  * seconds and operator scopes. Per entry: both medians and, per step,
+  * the per-run jobs, stages, tasks, shuffle bytes, spill, CPU, GC and
+  * compiles. A warm rep that compiles ran generated code no earlier rep
+  * ran: a per-run value inlined into it (see
+  * `graft.functions.BoundConstant`) or a plan that differs between reps.
   *
   * `--plans` mode: the executed (post-AQE) plan of every `localCheckpoint`
   * or `checkpoint` the construction ran, then the final formatted plan.
@@ -46,8 +49,8 @@ object Profile {
     val (cg, eg) = (s"profile-$name-construct", s"profile-$name-execute")
     def once(): Run = {
       val (gc0, jit0) = (gcMs, jitMs)
-      val (df, tc) = inGroup(spark, cg)(fn(spark, sfDir))
-      val te = inGroup(spark, eg)(df.write.format("noop").mode("overwrite").save())._2
+      val (df, tc) = rec.inStep(spark, cg)(fn(spark, sfDir))
+      val te = rec.inStep(spark, eg)(df.write.format("noop").mode("overwrite").save())._2
       val (gc, jit) = (gcMs - gc0, jitMs - jit0)
       settle(spark, rec)
       Run(tc, te, rec.take(cg), rec.take(eg), gc, jit)
@@ -61,8 +64,9 @@ object Profile {
     val runs = timeEntry(spark, rec, sfDir, name)
     runs.zipWithIndex.foreach { case (r, i) =>
       println(f"[profile] $name rep ${i + 1}  construct ${r.constructS}%7.3f s " +
-        f"(${r.construct.jobs} jobs)  execute ${r.executeS}%7.3f s " +
-        f"(${r.execute.jobs} jobs)  driverGC ${r.driverGcMs} ms  jit ${r.jitMs} ms")
+        f"(${r.construct.jobs} jobs, ${r.construct.compiles} compiles)  execute " +
+        f"${r.executeS}%7.3f s (${r.execute.jobs} jobs, ${r.execute.compiles} compiles)  " +
+        f"driverGC ${r.driverGcMs} ms  jit ${r.jitMs} ms")
       r.construct.slow.foreach(s => println(s"[profile]   construct $s"))
       r.execute.slow.foreach(s => println(s"[profile]   execute   $s"))
     }
@@ -80,7 +84,8 @@ object Profile {
         f"shufR ${per(ss.map(_.shufR), 1048576)}%8.2f MB  " +
         f"shufW ${per(ss.map(_.shufW), 1048576)}%8.2f MB  " +
         f"spill ${per(ss.map(_.spill), 1048576)}%8.2f MB  " +
-        f"cpu ${per(ss.map(_.cpuNs), 1e9)}%7.2f s  gc ${per(ss.map(_.gcMs), 1e3)}%6.2f s")
+        f"cpu ${per(ss.map(_.cpuNs), 1e9)}%7.2f s  gc ${per(ss.map(_.gcMs), 1e3)}%6.2f s  " +
+        f"compiles ${per(ss.map(_.compiles))}%5.1f")
   }
 
   private def printPlans(spark: SparkSession, rec: Recorder, sfDir: String,

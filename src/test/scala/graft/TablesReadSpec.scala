@@ -178,6 +178,10 @@ class TablesReadSpec extends SparkTestBase {
     Lint("lint: Session.scala is the only program file setting a conf or an optimizer rule",
       Seq("src/main/scala"), """conf\.set\(|experimental\.""", Set("Session.scala"),
       "configure sessions in graft.Session.builder; a query must leave its session as it found it"),
+    Lint("lint: NioLocalFileSystem.scala is the only program file naming fs.file.impl",
+      Seq("src/main/scala"), """fs\.file\.impl""", Set("NioLocalFileSystem.scala"),
+      "select the local file system per write with NioLocalFileSystem.writer; " +
+        "never in a session or SparkContext conf"),
     Lint("lint: no program file flips the JVM-wide ImageIO cache",
       Seq("src/main/scala"), """setUseCache""", Set.empty,
       "build MemoryCacheImage*Stream instances directly"),

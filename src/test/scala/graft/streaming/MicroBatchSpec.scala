@@ -1,19 +1,26 @@
 package graft.streaming
 
+import java.net.URI
 import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 import graft.{SparkTestBase, Tables}
-import graft.etl.Load
+import graft.etl.{Load, Transform}
 import graft.obs.RunMetrics
+import graft.sources.NioRawLocalFileSystem
 
 /** End-to-end micro-batch parity: streamed batches must leave the two
   * sinks exactly as the batch pipeline would (append-only history;
@@ -100,7 +107,6 @@ class MicroBatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("upsert after a crashed swap recovers all prior keys (never rebuilds " +
       "the snapshot from one batch)") {
-    import org.apache.hadoop.fs.Path
     val cur = tempDir("graft_crash") + "/cur"
     val fs = new Path(cur).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batch1 = Seq(
@@ -187,6 +193,94 @@ class MicroBatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
     b.unpersist()
     assert(rec.take("sizing").jobs == 0)
+  }
+
+  test("sized transform: alignSchema hands a small batch over as one partition, " +
+      "sized with no job, cached and counted in 2 jobs of one task each") {
+    val raw = spark.range(0, 2000, 1, 4)
+      .select(concat(lit("B"), ($"id" % 8).cast("string")).as("base"),
+        ($"id" / 7).cast("string").as("rate"), $"id".as("uid"))
+    val schema = Seq("base" -> StringType, "rate" -> DoubleType, "uid" -> LongType)
+    val rec = new RunMetrics.Recorder(false)
+    val aligned = RunMetrics.recording(spark, rec) {
+      val (df, _) = RunMetrics.inGroup(spark, "sizing")(Transform.alignSchema(raw, schema))
+      RunMetrics.inGroup(spark, "materialize") { df.persist(); df.count() }
+      RunMetrics.settle(spark, rec)
+      df
+    }
+    val (sizing, materialize) = (rec.take("sizing"), rec.take("materialize"))
+    aligned.unpersist()
+    assert(raw.rdd.getNumPartitions == 4)
+    assert(aligned.rdd.getNumPartitions == 1)
+    assert(sizing.jobs == 0)
+    assert(materialize.jobs == 2 && materialize.tasks == 2,
+      s"${materialize.jobs} jobs, ${materialize.tasks} tasks")
+    val bytes = aligned.queryExecution.withCachedData.stats.sizeInBytes.toLong
+    withMaxPartitionBytes(bytes / 3 + 1) { // ceil(bytes / max) = 3
+      assert(Transform.alignSchema(raw, schema).rdd.getNumPartitions == 3)
+    }
+    implicit val sqlCtx = spark.sqlContext // a stream aligns unsized
+    val stream = MemoryStream[(String, String, Long)].toDF().toDF("base", "rate", "uid")
+    assert(Transform.alignSchema(stream, schema).isStreaming)
+  }
+
+  test("fork-free sinks: both sinks write through NioLocalFileSystem with the " +
+      "permissions a plain parquet write gives, and leave the shared confs alone") {
+    val dir = tempDir("graft_nio")
+    val (hist, cur, plain) = (s"$dir/hist", s"$dir/cur", s"$dir/plain")
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val implBefore = hadoopConf.get("fs.file.impl")
+    val fsBefore = FileSystem.get(URI.create("file:///"), hadoopConf).getClass
+    val nioStats = FileSystem.getStatistics("file", classOf[NioRawLocalFileSystem])
+    def nioBytes(write: => Unit): Long = {
+      val w0 = nioStats.getBytesWritten
+      write
+      nioStats.getBytesWritten - w0
+    }
+    val b = rateBatch(0, 400, 4)
+    val written = Seq(
+      nioBytes(MicroBatch.appendHistoricalBatch(b, hist, 0L)),
+      nioBytes(MicroBatch.upsertParquet(spark, b, cur, Keys, "ts", "uid")),
+      nioBytes(Load.appendHistorical(b, s"$dir/append")),
+      nioBytes(Load.overwriteStaging(b, s"$dir/staging")))
+    assert(written.forall(_ > 0), written)
+    assert(nioBytes(b.write.parquet(plain)) == 0)
+
+    /** Permission bits per kind of entry under `root` (root included). */
+    def perms(root: String): Map[String, Set[String]] = {
+      val all = Files.walk(java.nio.file.Paths.get(root))
+      try all.iterator().asScala.toSeq.groupBy { p =>
+        val n = p.getFileName.toString
+        if (Files.isDirectory(p)) "dir" else if (n.endsWith(".crc")) "crc"
+        else if (n == "_SUCCESS") "success" else "data"
+      }.map { case (k, ps) =>
+        k -> ps.map(p => PosixFilePermissions.toString(Files.getPosixFilePermissions(p))).toSet
+      } finally all.close()
+    }
+    val expected = perms(plain)
+    assert(expected.keySet == Set("dir", "crc", "success", "data"), expected)
+    assert(perms(hist) == expected)
+    assert(perms(cur) == expected)
+
+    assert(Tables.read(spark, hist).drop("batch_id").orderBy("uid").collect().toSeq ==
+      spark.read.parquet(plain).orderBy("uid").collect().toSeq)
+    assert(Tables.read(spark, cur).count() == 200)
+    b.unpersist()
+    assert(hadoopConf.get("fs.file.impl") == implBefore)
+    assert(FileSystem.get(URI.create("file:///"), hadoopConf).getClass == fsBefore)
+  }
+
+  test("NioRawLocalFileSystem.setPermission sets the requested bits") {
+    val dir = java.nio.file.Paths.get(tempDir("graft_nio_perm"))
+    val file = Files.writeString(dir.resolve("f"), "x")
+    val fs = new NioRawLocalFileSystem
+    fs.initialize(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    def bits(p: java.nio.file.Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    fs.setPermission(new Path(file.toUri), new FsPermission("640"))
+    fs.setPermission(new Path(dir.toUri), new FsPermission("700"))
+    assert(bits(file) == "rw-r-----" && bits(dir) == "rwx------")
+    fs.setPermission(new Path(dir.toUri), new FsPermission("755"))
+    assert(bits(dir) == "rwxr-xr-x")
   }
 
   test("streaming tumbling window + watermark: closed windows emit, late rows drop") {

@@ -75,6 +75,22 @@ class ProfileSpec extends SparkTestBase {
     assert(jobs.forall(_._2 == 0), jobs)
   }
 
+  test("RunMetrics: inStep counts a new generated class in its own step, " +
+      "and none when the same plan runs again") {
+    // an int literal is inlined into the generated source, so a value no
+    // earlier test used makes a class the codegen cache has not seen
+    val q = spark.range(10).select(($"id" * (System.nanoTime() % 1000000 + 1000000)).as("x"))
+    val rec = new RunMetrics.Recorder(keepPlans = false)
+    RunMetrics.recording(spark, rec) {
+      rec.inStep(spark, "compile-first")(q.collect())
+      rec.inStep(spark, "compile-again")(q.collect())
+      RunMetrics.settle(spark, rec)
+    }
+    val (first, again) = (rec.take("compile-first"), rec.take("compile-again"))
+    assert(first.compiles >= 1 && first.jobs >= 1, first.compiles)
+    assert(again.compiles == 0, again.compiles)
+  }
+
   test("RunMetrics: a 3 s one-task stage counts as single-task in its own " +
       "group, a 3 s two-task stage does not") {
     val sc = spark.sparkContext
