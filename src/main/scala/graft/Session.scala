@@ -25,6 +25,13 @@ object Session {
     // hold the whole catalog so timed runs measure execution, not
     // recompilation.
     .config("spark.sql.codegen.cache.maxEntries", "8192")
+    // that cache is keyed by the generated source, which by default
+    // names each class after its whole-stage codegen stage id; AQE
+    // numbers those stages in the order it plans query stages, which
+    // moves between runs of the same plan, so a warm rep recompiled
+    // classes whose code was byte-identical (119.6 compiles per warm
+    // rep over the catalog at sf0.001)
+    .config("spark.sql.codegen.useIdInClassName", "false")
     // older testdata generations store events.ts as INT64
     // TIMESTAMP(NANOS), which Spark's parquet reader rejects unless it
     // reads them as longs; Tables.events converts those to micros

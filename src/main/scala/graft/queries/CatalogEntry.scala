@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.GraftFunctions
+import graft.plans.OnePartition
 
 /** One catalog operator: a Spark query over the testdata tables plus an
   * optional DuckDB oracle (equivalent ANSI SQL over the same parquet).
@@ -24,12 +25,24 @@ final case class CatalogEntry(
     oracle: Option[String]) {
 
   /** The entry's query over the tables in `sfDir`. Every path into the
-    * catalog comes through here, so this is where graft's native SQL
-    * functions are registered on `spark` (a few registry lookups once
-    * the session holds them); no entry registers them itself. */
+    * catalog (Bench, Verify, Profile, perfbench) comes through here, so
+    * this is where graft's native SQL functions are registered on
+    * `spark` (a few registry lookups once the session holds them); no
+    * entry registers them itself.
+    *
+    * It is also where a small query is planned as one partition
+    * ([[graft.plans.OnePartition]]). A query whose every plan node
+    * estimates at most `spark.sql.files.openCostInBytes` (4 MB), and
+    * that holds no shuffle repartition, gains nothing from its
+    * exchanges: it scans one split and AQE merges each shuffle into one
+    * reducer. Planned with no exchange, each such rate query runs as
+    * one job (plus one per broadcast) instead of one per stage. A query
+    * that would plan no exchange anyway is left as it is. The gate
+    * reads only the analyzed plan, so it costs no job and no optimizer
+    * pass; `build` stays the un-rewritten query. */
   def query(spark: SparkSession, sfDir: String): DataFrame = {
     GraftFunctions.register(spark)
-    build(spark, sfDir)
+    OnePartition.rewrite(build(spark, sfDir))
   }
 }
 

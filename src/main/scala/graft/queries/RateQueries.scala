@@ -12,7 +12,14 @@ import graft.sources.FsUtil
   * (o_custkey ≈ the currency pair key, o_orderdate ≈ observation
   * timestamp, o_totalprice ≈ rate), `events` for the timestamped feed.
   *
-  * Scale notes: the filter+top-1 family plans as a pushed-down filter +
+  * Scale notes: below `spark.sql.files.openCostInBytes` (4 MB) per plan
+  * node, `CatalogEntry.query` plans these queries as one partition
+  * with no exchange ([[graft.plans.OnePartition]]), so each runs as one
+  * job (`earliest_in_window` two, for its broadcast); at sf0.01 every
+  * one but `cdc_snapshot_diff`, whose join estimate is the product of
+  * its inputs, is that small; the three top-k queries plan no exchange
+  * either way and are left as built. Above the bound these shapes
+  * apply: the filter+top-1 family plans as a pushed-down filter +
   * `TakeOrderedAndProject` (no global sort, no shuffle of non-winners);
   * the per-key family shuffles once on the key; `latest_per_key_maxby`
   * is the 100 TB path — partial `max(struct)` aggregation map-side, so

@@ -4,8 +4,10 @@ import java.lang.management.ManagementFactory
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 import graft.{Session, SparkEntry}
 import graft.obs.RunMetrics.{Recorder, Step, inGroup, recording, settle}
@@ -20,8 +22,10 @@ import graft.obs.RunMetrics.{Recorder, Step, inGroup, recording, settle}
   * 0.5 s or more with tasks, CPU, run, GC, deserialize and fetch-wait
   * seconds and operator scopes. Per entry: both medians and, per step,
   * the per-run jobs, stages, tasks, shuffle bytes, spill, CPU, GC and
-  * compiles. A warm rep that compiles ran generated code no earlier rep
-  * ran: a per-run value inlined into it (see
+  * compiles, and whether the entry's final plan ran with no shuffle
+  * exchange (a query `CatalogEntry.query` planned as one partition, or
+  * one that needs none). A warm rep that compiles ran generated code no
+  * earlier rep ran: a per-run value inlined into it (see
   * `graft.functions.BoundConstant`) or a plan that differs between reps.
   *
   * `--plans` mode: the executed (post-AQE) plan of every `localCheckpoint`
@@ -35,7 +39,16 @@ object Profile {
 
   /** One timed run: wall seconds and counters per step, driver deltas. */
   final case class Run(constructS: Double, executeS: Double,
-      construct: Step, execute: Step, driverGcMs: Long, jitMs: Long)
+      construct: Step, execute: Step, driverGcMs: Long, jitMs: Long,
+      shuffleExchanges: Int)
+
+  /** Shuffle exchanges in `df`'s physical plan, subqueries and AQE's
+    * plan included (AQE can drop an exchange at run time, never add
+    * one). Read after the run it describes, so it is not timed. */
+  def shuffleExchanges(df: DataFrame): Int = new AdaptiveSparkPlanHelper {}
+    .collectWithSubqueries(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeLike => e
+    }.size
 
   private def gcMs: Long = ManagementFactory.getGarbageCollectorMXBeans
     .stream().mapToLong(_.getCollectionTime).sum
@@ -53,7 +66,7 @@ object Profile {
       val te = rec.inStep(spark, eg)(df.write.format("noop").mode("overwrite").save())._2
       val (gc, jit) = (gcMs - gc0, jitMs - jit0)
       settle(spark, rec)
-      Run(tc, te, rec.take(cg), rec.take(eg), gc, jit)
+      Run(tc, te, rec.take(cg), rec.take(eg), gc, jit, shuffleExchanges(df))
     }
     once()
     Seq.fill(Reps)(once())
@@ -86,6 +99,8 @@ object Profile {
         f"spill ${per(ss.map(_.spill), 1048576)}%8.2f MB  " +
         f"cpu ${per(ss.map(_.cpuNs), 1e9)}%7.2f s  gc ${per(ss.map(_.gcMs), 1e3)}%6.2f s  " +
         f"compiles ${per(ss.map(_.compiles))}%5.1f")
+    println(s"[profile]   final plan ran with no shuffle exchange: " +
+      runs.forall(_.shuffleExchanges == 0))
   }
 
   private def printPlans(spark: SparkSession, rec: Recorder, sfDir: String,

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
+
 /** Catalog-wide scale-killer lint: NO entry may plan a CartesianProduct,
   * and BroadcastNestedLoopJoin is allowed only where the build side is a
   * broadcast 1-row scalar / single query vector (the documented
@@ -7,7 +11,7 @@ package graft
   * introduces an all-pairs join fails this suite instead of surviving
   * until a 100 TB run.
   */
-class CatalogPlanLintSpec extends SparkTestBase {
+class CatalogPlanLintSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   /** Entries whose plan legitimately carries a BroadcastNestedLoopJoin:
     * every one is a crossJoin against a broadcast ≤1-row aggregate or a
@@ -72,6 +76,16 @@ class CatalogPlanLintSpec extends SparkTestBase {
                              // count is source-cardinality², corpus-
                              // size-independent)
 
+  /** Every catalog entry's query at sf0.001, as `CatalogEntry.query`
+    * returns it, with its executed plan already planned: built once
+    * and shared by the catalog-wide rows below. */
+  private lazy val catalogPlans: Seq[(String, QueryExecution)] =
+    SparkEntry.catalog.toSeq.sortBy(_._1).map { case (name, entry) =>
+      val qe = entry.query(spark, "/root/testdata/sf0.001").queryExecution
+      qe.executedPlan
+      name -> qe
+    }
+
   /** Shuffle (non-broadcast) Exchange nodes in an executed plan,
     * counted per tree line so only nodes whose operator IS a shuffle
     * `Exchange` count: `BroadcastExchange` isn't the full-shuffle cost
@@ -123,7 +137,8 @@ class CatalogPlanLintSpec extends SparkTestBase {
       s"AsOfJoin must plan exactly one keyed shuffle exchange:\n$rawPlan")
 
     // the catalog entries carry a global ORDER BY purely for oracle
-    // determinism — one extra range exchange, never more
+    // determinism — at most one extra range exchange (none where
+    // `CatalogEntry.query` plans a small query as one partition)
     for (name <- Seq("asof_join", "range_join_window_agg",
         "asof_join_tolerance", "asof_join_forward")) {
       val plan = SparkEntry.catalog(name).query(spark, sf)
@@ -154,8 +169,9 @@ class CatalogPlanLintSpec extends SparkTestBase {
         "doc_strip_repeated_spans" -> "strip_repeated_spans")) {
       val df = SparkEntry.catalog(name).query(spark, sf)
       val physical = df.queryExecution.executedPlan.toString
-      // Exactly ONE keyed exchange — the determinism sort. The
-      // documents reader's round-robin spread is excluded by
+      // At most ONE keyed exchange — the determinism sort (none where
+      // the query is planned as one partition). The documents
+      // reader's round-robin spread is excluded by
       // keyedShuffleCount, so a future keyed shuffle sneaking into a
       // sketch kernel still fails here (a total-count budget of 2
       // would have absorbed it unnoticed).
@@ -188,7 +204,8 @@ class CatalogPlanLintSpec extends SparkTestBase {
     // means the grouping stopped reusing the window partitioning and
     // the operator doubled its shuffle volume at scale. window nav and
     // SCD2: same single-exchange claim (+1 asof exchange for the
-    // point-in-time composition).
+    // point-in-time composition). Each budget is an upper bound: a
+    // small query planned as one partition has no exchange at all.
     val sf = "/root/testdata/sf0.001"
     // KEYED exchanges only (the readers' round-robin spreads are
     // scan parallelism, not shuffle volume — excluded so the budgets
@@ -250,9 +267,8 @@ class CatalogPlanLintSpec extends SparkTestBase {
       "token_stats", "rep_stats", "vec_dot", "sentences(",
       "bow_score", "boot_pois")
     val tablesRe = "(events|documents|embeddings)\\.parquet".r
-    val violations = SparkEntry.catalog.toSeq.sortBy(_._1).flatMap {
-      case (name, entry) =>
-        val qe = entry.query(spark, sf).queryExecution
+    val violations = catalogPlans.flatMap {
+      case (name, qe) =>
         val physical = qe.executedPlan.toString
         val optimized = qe.optimizedPlan.toString
         val dense = denseMarkers.exists(optimized.contains)
@@ -321,10 +337,9 @@ class CatalogPlanLintSpec extends SparkTestBase {
 
   test("no catalog entry plans a cartesian product; nested-loop joins " +
       "only against broadcast scalars") {
-    val sf = "/root/testdata/sf0.001"
-    val violations = SparkEntry.catalog.toSeq.sortBy(_._1).flatMap {
-      case (name, entry) =>
-        val plan = entry.query(spark, sf).queryExecution.executedPlan.toString
+    val violations = catalogPlans.flatMap {
+      case (name, qe) =>
+        val plan = qe.executedPlan.toString
         val cartesian = plan.contains("CartesianProduct")
         val bnlj = plan.contains("BroadcastNestedLoopJoin") &&
           !scalarBroadcastAllowlist(name)
@@ -333,5 +348,37 @@ class CatalogPlanLintSpec extends SparkTestBase {
         else None
     }
     assert(violations.isEmpty, violations.mkString("\n"))
+  }
+
+  /** Entries whose executed plan holds a window with no PARTITION BY,
+    * which Spark runs on ONE task over every row that reaches it. Each
+    * is listed with what reaches the window: safe where that is a
+    * small bounded table, a scale-killer where it is a whole table. */
+  private val unpartitionedWindows = Map(
+    "corpus_novelty_curve" -> "8 octile rows",
+    "corpus_zipf_fit" -> "the top-1000 token census",
+    "doc_lm_excess_rank" -> "the top-50 docs",
+    "events_cumulative_uniques" -> "one row per day",
+    "events_rolling_corr" -> "one row per day (4 windows)",
+    "ntile_buckets" -> "WHOLE orders table: exact ntile is one global sort",
+    "pareto_frontier_select" -> "one row per 2^20-wide score bucket",
+    "quality_calibration_bins" -> "one row per distinct classifier score",
+    "rank_distribution" -> "WHOLE orders table: exact percent_rank/cume_dist",
+    "retrieval_hybrid_rrf" -> "the two rankers' top-50 rows (2 windows)",
+    "scalar_pct_change" -> "the ~dozen rows of one filtered key",
+    "sim_ndcg_eval" -> "the top-10 rows of each arm (3 windows)",
+    "vocab_coverage" -> "the top-100 token slice",
+    "vocab_encode_docs" -> "the 16-row vocabulary")
+
+  test("unpartitioned windows: exactly the listed entries move every row " +
+      "of a window to one task") {
+    val found = catalogPlans.collect {
+      case (name, qe) if collectWithSubqueries(qe.executedPlan) {
+        case w: WindowExec if w.partitionSpec.isEmpty => w
+      }.nonEmpty => name
+    }.toSet
+    assert(found == unpartitionedWindows.keySet,
+      s"new: ${(found -- unpartitionedWindows.keySet).toSeq.sorted.mkString(", ")}; " +
+        s"gone: ${(unpartitionedWindows.keySet -- found).toSeq.sorted.mkString(", ")}")
   }
 }

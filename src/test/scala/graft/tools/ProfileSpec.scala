@@ -75,6 +75,14 @@ class ProfileSpec extends SparkTestBase {
     assert(jobs.forall(_._2 == 0), jobs)
   }
 
+  test("Profile.shuffleExchanges: none in a small rate query planned as " +
+      "one partition, some in one the gate keeps out") {
+    val exchanges = Seq("count_rows", "cdc_snapshot_diff").map { name =>
+      name -> Profile.shuffleExchanges(SparkEntry.queries(name)(spark, sf))
+    }.toMap
+    assert(exchanges("count_rows") == 0 && exchanges("cdc_snapshot_diff") > 0, exchanges)
+  }
+
   test("RunMetrics: inStep counts a new generated class in its own step, " +
       "and none when the same plan runs again") {
     // an int literal is inlined into the generated source, so a value no
