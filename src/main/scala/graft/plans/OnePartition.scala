@@ -35,6 +35,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Dist
   *     Where it would not, the coalesce removes nothing and only adds
   *     its own cost: `preview_head` (a top-5 over `orders`) read 0.056
   *     → 0.073 s at sf0.1 with it.
+  *
+  * Gate and rewrite both enter the plans of subquery expressions: an
+  * EXISTS becomes a join with its subquery's plan and a scalar subquery
+  * runs its own aggregate, so their nodes are sized like the outer
+  * query's and get the same coalesce.
   */
 object OnePartition {
 
@@ -42,16 +47,16 @@ object OnePartition {
   def rewrite(df: DataFrame): DataFrame = {
     val plan = df.queryExecution.analyzed
     if (!fires(plan, df.sparkSession.sessionState.conf.filesOpenCostInBytes)) df
-    else GraftSqlBridge.dataFrame(df.sparkSession, plan.transformUp {
+    else GraftSqlBridge.dataFrame(df.sparkSession, plan.transformUpWithSubqueries {
       case p if p.children.size != 1 => Repartition(1, shuffle = false, p)
     })
   }
 
   def fires(plan: LogicalPlan, bound: Long): Boolean =
-    !plan.isStreaming && plansExchange(plan) && !plan.exists {
-      case Repartition(_, true, _) | _: RepartitionByExpression | _: RebalancePartitions => true
-      case p => p.stats.sizeInBytes > bound
-    }
+    !plan.isStreaming && plansExchange(plan) && plan.collectFirstWithSubqueries {
+      case p @ (Repartition(_, true, _) | _: RepartitionByExpression | _: RebalancePartitions) => p
+      case p if p.stats.sizeInBytes > bound => p
+    }.isEmpty
 
   /** Whether `plan` holds an operator that needs its input clustered,
     * ordered or gathered across partitions, which Spark meets with an
@@ -62,6 +67,6 @@ object OnePartition {
     case Limit(_, Project(_, Sort(_, true, child, _))) => plansExchange(child)
     case _: Aggregate | _: Window | _: Join | _: Distinct | _: Deduplicate | _: SetOperation |
         Sort(_, true, _, _) => true
-    case p => p.children.exists(plansExchange)
+    case p => (p.children ++ p.subqueries).exists(plansExchange)
   }
 }

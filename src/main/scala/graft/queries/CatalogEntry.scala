@@ -31,9 +31,10 @@ final case class CatalogEntry(
     * entry registers them itself.
     *
     * It is also where a small query is planned as one partition
-    * ([[graft.plans.OnePartition]]). A query whose every plan node
-    * estimates at most `spark.sql.files.openCostInBytes` (4 MB), and
-    * that holds no shuffle repartition, gains nothing from its
+    * ([[graft.plans.OnePartition]]). A query whose every plan node,
+    * its subqueries' included, estimates at most
+    * `spark.sql.files.openCostInBytes` (4 MB), and that holds no
+    * shuffle repartition, gains nothing from its
     * exchanges: it scans one split and AQE merges each shuffle into one
     * reducer. Planned with no exchange, each such rate query runs as
     * one job (plus one per broadcast) instead of one per stage. A query

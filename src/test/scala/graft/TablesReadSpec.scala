@@ -182,6 +182,9 @@ class TablesReadSpec extends SparkTestBase {
       Seq("src/main/scala"), """fs\.file\.impl""", Set("NioLocalFileSystem.scala"),
       "select the local file system per write with NioLocalFileSystem.writer; " +
         "never in a session or SparkContext conf"),
+    Lint("lint: no program file steers Bench by bench history or a rotation shard",
+      Seq("src/main/scala"), """BENCH_r|SPARK_GRAFT_ROUND|SPARK_GRAFT_BENCH_ALL|rotation_""",
+      Set.empty, "Bench times the whole catalog; its only input file is BASELINE_BENCH.json"),
     Lint("lint: no program file flips the JVM-wide ImageIO cache",
       Seq("src/main/scala"), """setUseCache""", Set.empty,
       "build MemoryCacheImage*Stream instances directly"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.{SparkEntry, SparkTestBase}
 import graft.obs.RunMetrics
+import graft.tools.Profile
 
 /** The small-query rewrite applied by `CatalogEntry.query`: where its
   * gate fires, a rate query runs as one job with no shuffle and returns
@@ -102,6 +103,29 @@ class OnePartitionSpec extends SparkTestBase {
     val topk = SparkEntry.catalog("preview_head").build(spark, Sf001)
     assert(shuffles(topk) == 0 && !fires(topk))
     assert(fires(spark.range(10).toDF().orderBy($"id".desc)))
+  }
+
+  test("sql_exists_subquery at sf0.01: rewritten inside its EXISTS and " +
+      "scalar subqueries, it runs with no shuffle and returns its built rows") {
+    val entry = SparkEntry.catalog("sql_exists_subquery")
+    val one = entry.query(spark, Sf01)
+    val rows = one.collect().toSeq
+    assert(Profile.shuffleExchanges(one) == 0, one.queryExecution.executedPlan)
+    assert(rows == entry.build(spark, Sf01).collect().toSeq)
+  }
+
+  test("an EXISTS subquery over a table above the bound keeps the gate " +
+      "from firing") {
+    spark.range(10).createOrReplaceTempView("one_partition_outer")
+    spark.range(100).createOrReplaceTempView("one_partition_small")
+    // a range's estimate is 8 bytes a row: 80 MB here
+    spark.range(10000000).createOrReplaceTempView("one_partition_big")
+    def existsIn(view: String): DataFrame = spark.sql(
+      s"""SELECT id % 2 AS k, count(1) AS n FROM one_partition_outer o
+         |WHERE EXISTS (SELECT 1 FROM $view b WHERE b.id = o.id)
+         |GROUP BY id % 2""".stripMargin)
+    assert(fires(existsIn("one_partition_small")))
+    assert(!fires(existsIn("one_partition_big")))
   }
 
   test("filter_eq: rewritten with no exchange and its filter still pushed " +
